@@ -42,6 +42,22 @@ class PlanAuditSpec extends SparkSpec {
     assert(!plan.contains("Sort ["), plan.take(1200))
   }
 
+  test("topK hot-path shapes: per-doc shuffle count of each query class") {
+    import graft.query.QueryEngine.And
+    def exchanges(df: DataFrame): Int = "Exchange hashpartitioning".r.findAllIn(planOf(df)).size
+    val two = Seq("public", "import")
+    // single term: each posting IS the doc's score, no per-doc grouping
+    assert(exchanges(idx.topK(Seq("public"), 10)) == 0, planOf(idx.topK(Seq("public"), 10)))
+    // multi-term exhaustive: exactly the one groupBy(docId) shuffle
+    assert(exchanges(idx.topK(two, 10)) == 1, planOf(idx.topK(two, 10)))
+    assert(exchanges(idx.topK(two, 10, And)) == 1, planOf(idx.topK(two, 10, And)))
+    // pruned: theta is estimated by driver-side jobs; the final query keeps one shuffle
+    assert(exchanges(idx.topK(two, 10, prune = true)) == 1, planOf(idx.topK(two, 10, prune = true)))
+    // WAND: the docId-bucket groupByKey is the only shuffle
+    assert(exchanges(idx.topK(two, 10, wand = true)) == 1, planOf(idx.topK(two, 10, wand = true)))
+    assert(exchanges(idx.topK(two, 10, And, wand = true)) == 1, planOf(idx.topK(two, 10, And, wand = true)))
+  }
+
   test("docvalues scan reads ONLY the narrow columns (column pruning)") {
     val plan = planOf(idx.docvalues.select("docId", "lang"))
     val readSchema = "ReadSchema: struct<docId:bigint,lang:string"
