@@ -31,12 +31,17 @@ for t in glob.glob(f"{sf_dir}/*.parquet"):
     con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{src}'")
 
 oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-ok = fail = 0
+# a misspelled name would silently skip nothing / check nothing
+for var, names in (("ORACLE_SKIP", skip), ("ORACLE_ONLY", only)):
+    for unknown in sorted(names - set(oracle)):
+        print(f"WARNING  {var} names '{unknown}', which is not in oracle_sql.json")
+ok = fail = skipped = 0
 for name, sql in sorted(oracle.items()):
     if only and name not in only:
         continue
     if name in skip:
         print(f"SKIP     {name}: oracle marked infeasible at this scale")
+        skipped += 1
         continue
     spark_path = f"{out_dir}/{name}"
     if not os.path.isdir(spark_path):
@@ -71,5 +76,5 @@ for name, sql in sorted(oracle.items()):
         print(f"OK       {name} ({len(sr)} rows)")
         ok += 1
 
-print(f"\n{ok} ok, {fail} failed, {len(set(g.split('/')[-1] for g in glob.glob(out_dir + '/*') if os.path.isdir(g)) - set(oracle))} rows-only")
+print(f"\n{ok} ok, {fail} failed, {skipped} skipped, {len(set(g.split('/')[-1] for g in glob.glob(out_dir + '/*') if os.path.isdir(g)) - set(oracle))} rows-only")
 sys.exit(1 if fail else 0)

@@ -115,6 +115,30 @@ object SparkEntry {
     "de" -> Seq("der", "die", "und", "das"),
     "fr" -> Seq("le", "et", "les", "une"))
 
+  /** The planted-neighbor corpus of sim_ann_planted / sim_ivf_planted:
+    * (vec_id, embedding) with ten 2x-scaled copies of the `anchor`'s vector
+    * planted under the raw ids < 10 shifted by 2,000,000, plus the anchor's
+    * vector. Exact-duplicate vectors collapse to one canonical id first —
+    * the planted contract (top-k = anchor + the 10 copies) presumes
+    * DISTINCT corpus vectors, and a tiled rehearsal corpus carries
+    * bit-identical twins that tie at cos 1.0 and win the id tie-break. A
+    * group's canonical id is the anchor when the group holds it, else its
+    * min id, so the anchor survives whatever ids its twins carry. */
+  private def plantedEmbeddings(raw: DataFrame, anchor: Long): (DataFrame, Array[Float]) = {
+    val vecs = raw.select("vec_id", "embedding")
+    val q = vecs.filter(col("vec_id") === anchor).select("embedding").take(1).headOption
+      .getOrElse(throw new IllegalStateException(
+        s"planted-neighbor query: anchor vec_id $anchor is absent from embeddings"))
+      .getSeq[Float](0).toArray
+    val canonical = vecs.groupBy("embedding")
+      .agg(min_by(col("vec_id"), struct(col("vec_id") =!= anchor, col("vec_id"))).as("vec_id"))
+      .select("vec_id", "embedding")
+    val qScaled = array(q.toIndexedSeq.map(v => lit(v * 2.0f)): _*)
+    val planted = vecs.filter(col("vec_id") < 10)
+      .select((col("vec_id") + 2000000).as("vec_id"), qScaled.as("embedding"))
+    (canonical.unionByName(planted), q)
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- aggregation / rollup / facet (SURVEY §2.4-2.5) ----
     "q1_agg" -> ((s, d) => R.rollup(rd(s, d, "lineitem"),
@@ -514,7 +538,7 @@ object SparkEntry {
     }),
 
     "ft_engine_prefix" -> ((s, d) => docIndex(s, d)
-      .multiTermTopK(col("term").startsWith("s"), 1000000)
+      .run(QueryEngine.Request(QueryEngine.Expanded(col("term").startsWith("s")), 1000000))
       .select(col("docId").as("doc_id"))),
 
     // same derived-twin oracle through the block-max WAND kernel: pruning
@@ -575,7 +599,8 @@ object SparkEntry {
 
     // engine WildcardQuery against the dictionary (constant-score union)
     "ft_engine_wildcard" -> ((s, d) => docIndex(s, d)
-      .multiTermTopK(col("term").rlike(TextOps.wildcardToRegex("s?a*")), 1000000)
+      .run(QueryEngine.Request(
+        QueryEngine.Expanded(col("term").rlike(TextOps.wildcardToRegex("s?a*"))), 1000000))
       .select(col("docId").as("doc_id"))),
 
     // CoveringQuery: per-doc DYNAMIC minimum-should-match (1 + doc_id % 3
@@ -591,7 +616,7 @@ object SparkEntry {
 
     // engine TermRangeQuery against the dictionary
     "ft_engine_termrange" -> ((s, d) => docIndex(s, d)
-      .multiTermTopK(col("term") >= "m" && col("term") < "q", 1000000)
+      .run(QueryEngine.Request(QueryEngine.Expanded(col("term") >= "m" && col("term") < "q"), 1000000))
       .select(col("docId").as("doc_id"))),
 
     // facet counts over an engine term query's matches (Solr search+facet)
@@ -2021,37 +2046,15 @@ object SparkEntry {
     // surface exactly {query doc} ∪ {copies}, all at cos 1.0 — recall on
     // them is structural, and the full indexed pipelines run end-to-end
     "sim_ann_planted" -> ((s, d) => {
-      // canonicalize exact-duplicate vectors to their min id: the planted
-      // contract (top-k = self + the 10 planted copies) presumes DISTINCT
-      // corpus vectors — a tiled rehearsal corpus carries bit-identical
-      // twins that legitimately tie at cos 1.0 and win the id tie-break
-      val embs = rd(s, d, "embeddings").select("vec_id", "embedding")
-        .groupBy("embedding").agg(min("vec_id").as("vec_id"))
-        .select("vec_id", "embedding")
-      val q = embs.filter(col("vec_id") === 7)
-        .select("embedding").head().getSeq[Float](0).toArray
-      val qScaled = array(q.toIndexedSeq.map(v => lit(v * 2.0f)): _*)
-      val planted = embs.filter(col("vec_id") < 10)
-        .select((col("vec_id") + 2000000).as("vec_id"), qScaled.as("embedding"))
-      val idx = Similarity.signIndex(embs.unionByName(planted),
-        "vec_id", "embedding", planes = 8)
+      val (embs, q) = plantedEmbeddings(rd(s, d, "embeddings"), anchor = 7)
+      val idx = Similarity.signIndex(embs, "vec_id", "embedding", planes = 8)
       Similarity.annTopKIndexed(idx, "vec_id", "embedding", q, planes = 8, k = 11)
         .select(col("vec_id"), round(col("cos"), 5).as("cos"))
     }),
 
     "sim_ivf_planted" -> ((s, d) => {
-      // min-id canonicalization of exact-duplicate vectors (see
-      // sim_ann_planted)
-      val embs = rd(s, d, "embeddings").select("vec_id", "embedding")
-        .groupBy("embedding").agg(min("vec_id").as("vec_id"))
-        .select("vec_id", "embedding")
-      val q = embs.filter(col("vec_id") === 3)
-        .select("embedding").head().getSeq[Float](0).toArray
-      val qScaled = array(q.toIndexedSeq.map(v => lit(v * 2.0f)): _*)
-      val planted = embs.filter(col("vec_id") < 10)
-        .select((col("vec_id") + 2000000).as("vec_id"), qScaled.as("embedding"))
-      val (assign, cents) = Similarity.ivfIndex(embs.unionByName(planted),
-        "vec_id", "embedding", k = 16, iters = 2)
+      val (embs, q) = plantedEmbeddings(rd(s, d, "embeddings"), anchor = 3)
+      val (assign, cents) = Similarity.ivfIndex(embs, "vec_id", "embedding", k = 16, iters = 2)
       Similarity.ivfTopK(assign, cents, "vec_id", "embedding", q, 11, nprobe = 4)
         .select(col("vec_id"), round(col("cos"), 5).as("cos"))
     }),

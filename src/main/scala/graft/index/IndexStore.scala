@@ -223,7 +223,7 @@ object IndexStore {
    * lifecycle; the hot tier is the un-packed streaming sink of
    * StreamOps.hotIndexSink, schema (term, docId, tf, normByte, dl)).
    * After sealing + finalizeStats, plain topK over the index is
-   * score-identical to the federated topKWithHot over (old index + hot)
+   * score-identical to the federated `QueryEngine.WithHot` request over (old index + hot)
    * because collection stats merge the same way (tested). Streamed rows
    * carry no source text, so the per-row sha invariant is recorded as
    * absent (shaXor 0, source "sealHot").
@@ -741,18 +741,21 @@ object IndexStore {
     }
     private var warmed: Option[Dataset[BlockRow]] = None
 
+    /** Run a scored request ([[QueryEngine.run]]) over this index: its
+      * postings, dictionary, collection stats and df memo, with tombstones
+      * excluded inside the planner, before the limit. */
+    def run(req: QueryEngine.Request): DataFrame =
+      QueryEngine.run(spark, blocks, termstats, stats, req, deletes, Some(dfCache))
+
+    /** Drop this index's tombstoned docs from a docId-keyed frame. */
+    def liveDocs(docs: DataFrame): DataFrame = QueryEngine.liveDocs(docs, deletes)
+
+    /** BM25 (or `sim`) top-k over the query terms. */
     def topK(terms: Seq[String], k: Int, mode: QueryEngine.Mode = QueryEngine.Or,
              mustNot: Seq[String] = Nil, prune: Boolean = false,
              wand: Boolean = false,
              sim: graft.query.Similarity = null): DataFrame =
-      QueryEngine.topK(spark, blocks, termstats, stats, terms, k, mode, mustNot, prune, wand,
-        excludeDocs = deletes, dfCache = Some(dfCache), sim = sim)
-
-    /** [[QueryEngine.blendedTopK]] — BlendedTermQuery over this index. */
-    def blendedTopK(terms: Seq[(String, Float)], k: Int,
-                    tieBreaker: Float = 0.01f, dismax: Boolean = true): DataFrame =
-      QueryEngine.blendedTopK(spark, blocks, termstats, stats, terms, k,
-        tieBreaker, dismax, dfCache = Some(dfCache), excludeDocs = deletes)
+      run(QueryEngine.Request(QueryEngine.Terms(terms, sim), k, mode, mustNot, prune, wand))
 
     /** Solr queryResultCache analogue (solr/core .../search/SolrIndexSearcher
       * queryResultCache; Lucene LRUQueryCache is the filter-level cousin):
@@ -814,25 +817,13 @@ object IndexStore {
      * keyed by the filter alone — one fq serves every main query). A
      * doc's score here is bit-identical to its unfiltered topK score;
      * the filter is a join against the cached docId set, never a scoring
-     * clause. Ranking runs over the FULL filtered match set (scoresAll),
-     * so the filter can surface docs from outside the unfiltered top-k.
+     * clause. Ranking runs over the FULL filtered match set, so the
+     * filter can surface docs from outside the unfiltered top-k.
      */
-    /** [[QueryEngine.topKWithTotal]] — top-k plus the TotalHits counting
-      * contract (exact up to totalHitsThreshold, lower bound beyond). */
-    def topKWithTotal(terms: Seq[String], k: Int,
-                      mode: QueryEngine.Mode = QueryEngine.Or,
-                      totalHitsThreshold: Int = 1000): (Seq[(Long, Float)], QueryEngine.TotalHits) =
-      QueryEngine.topKWithTotal(spark, blocks, termstats, stats, terms, k, mode,
-        totalHitsThreshold, dfCache = Some(dfCache))
-
     def topKWithFilter(terms: Seq[String], k: Int, fq: IndexStore.Fq,
-                       mode: QueryEngine.Mode = QueryEngine.Or): DataFrame = {
-      val base = QueryEngine.scoresAll(spark, blocks, termstats, stats, terms,
-        mode, dfCache = Some(dfCache))
-      val filtered = base.join(cachedFilterDocs(fq), Seq("docId"))
-      val live = deletes.fold(filtered)(d => filtered.join(d, Seq("docId"), "left_anti"))
-      live.orderBy(desc("score"), asc("docId")).limit(k)
-    }
+                       mode: QueryEngine.Mode = QueryEngine.Or): DataFrame =
+      run(QueryEngine.Request(QueryEngine.Terms(terms), k, mode,
+        filter = Some(cachedFilterDocs(fq))))
 
     def topKCached(terms: Seq[String], k: Int, mode: QueryEngine.Mode = QueryEngine.Or,
                    mustNot: Seq[String] = Nil, prune: Boolean = false,
@@ -872,7 +863,8 @@ object IndexStore {
         -d.substring(d.lastIndexOf("seg=") + 4).toLong)
       for (sd <- segs if searched == 0 || System.nanoTime() < deadline) {
         val segBlocks = spark.read.parquet(s"$sd/postings").as[graft.index.BlockRow]
-        val rows = QueryEngine.topKWithInfos(spark, segBlocks, infos, k, excludeDocs = deletes)
+        val rows = QueryEngine.run(spark, segBlocks, termstats, stats,
+            QueryEngine.Request(QueryEngine.Infos(infos), k), deletes)
           .collect().map(r => (r.getLong(0), r.getFloat(1)))
         merged = (merged ++ rows).sortBy { case (id, s) => (-s, id) }.take(k)
         searched += 1
@@ -880,25 +872,9 @@ object IndexStore {
       (merged, searched < segs.size)
     }
 
-    /** Positional paging (IndexSearcher.searchAfter). Tombstones are
-      * excluded inside the engine (before the limit), so page
-      * concatenation equals one big topK over live docs even with deletes. */
-    def topKAfter(terms: Seq[String], k: Int, afterScore: Float, afterDocId: Long,
-                  mode: QueryEngine.Mode = QueryEngine.Or): DataFrame =
-      QueryEngine.topKAfter(spark, blocks, termstats, stats, terms, k, afterScore, afterDocId, mode,
-        excludeDocs = deletes, dfCache = Some(dfCache))
-
     /** Per-term score breakdown for one doc (IndexSearcher.explain). */
     def explain(terms: Seq[String], docId: Long): DataFrame =
       QueryEngine.explain(spark, blocks, termstats, stats, terms, docId)
-
-    /** Multi-term (prefix/wildcard/fuzzy/set) constant-score query against
-      * the dictionary — see QueryEngine.multiTermTopK. Tombstones are
-      * excluded inside the engine (before the limit) so k is never
-      * under-filled when deleted docs rank among the lowest matches. */
-    def multiTermTopK(termPred: org.apache.spark.sql.Column, k: Int): DataFrame =
-      QueryEngine.multiTermTopK(spark, blocks, termstats, termPred, k,
-        excludeDocs = deletes)
 
     /** Positions tier across the segments that HAVE one — a mixed index
       * (e.g. a sealed hot segment, which carries no positions) must not
@@ -946,7 +922,7 @@ object IndexStore {
       val (tfs, _) = graft.analysis.Analyzer.termFreqs(text)
       val candidates = tfs.filter(_._2 >= minTermFreq).keys.toSeq
       if (candidates.isEmpty)
-        return spark.range(0).select(col("id").as("docId"), lit(0f).as("score"))
+        return QueryEngine.noHits(spark)
       val dfs = QueryEngine.lookupDfs(termstats, candidates, Some(dfCache))
       // interestingness = tf * idf, ties broken by term for determinism
       val chosen = candidates
@@ -1069,16 +1045,10 @@ object IndexStore {
     /** MultiTermQuery SCORING_BOOLEAN_REWRITE (reference search/
       * MultiTermQuery.java + ScoringRewrite.java): dictionary expansion
       * whose terms keep REAL BM25 scores — the scoring twin of the
-      * constant-score [[multiTermTopK]]. Expansion capped at
+      * constant-score [[QueryEngine.Expanded]] request. Expansion capped at
       * MaxClauseCount highest-df terms (the TooManyClauses guard). */
-    def multiTermScoredTopK(termPred: org.apache.spark.sql.Column, k: Int): DataFrame = {
-      val expanded = termstats.filter(termPred)
-        .orderBy(desc("df"), asc("term")).limit(QueryEngine.MaxClauseCount)
-        .select("term").as[String].collect().toSeq
-      if (expanded.isEmpty)
-        spark.range(0).select($"id".as("docId"), lit(0f).as("score"))
-      else topK(expanded, k)
-    }
+    def multiTermScoredTopK(termPred: org.apache.spark.sql.Column, k: Int): DataFrame =
+      topK(QueryEngine.expand(termstats, termPred), k)
 
     /** TermsComponent dictionary enumeration (reference solr/core .../
       * handler/component/TermsComponent.java: terms.prefix / terms.regex /
@@ -1106,9 +1076,7 @@ object IndexStore {
     def suggestWithContexts(prefix: String, k: Int, contextCol: String,
                             contexts: Map[String, Float]): DataFrame = {
       require(contexts.nonEmpty)
-      val cands = termstats.filter(col("term").startsWith(prefix))
-        .orderBy(desc("df"), asc("term")).limit(QueryEngine.MaxClauseCount)
-        .select("term").as[String].collect().toSeq
+      val cands = QueryEngine.expand(termstats, col("term").startsWith(prefix))
       if (cands.isEmpty)
         return spark.range(0).select($"id".cast("string").as("term"), lit(0.0).as("score"))
       val pairs = blocks.filter($"term".isin(cands: _*))
@@ -1207,13 +1175,9 @@ object IndexStore {
     /** Fuzzy term expansion (FuzzyQuery rewrite): dictionary terms within
       * `maxEdits`, highest-df first, capped at MaxClauseCount — via the
       * gram-pruned candidate set, NOT a full-vocabulary levenshtein scan. */
-    def fuzzyExpand(word: String, maxEdits: Int): Seq[String] = {
-      import spark.implicits._
-      fuzzyCandidates(word, maxEdits)
-        .filter(levenshtein(col("term"), lit(word)) <= maxEdits)
-        .orderBy(desc("df"), asc("term")).limit(QueryEngine.MaxClauseCount)
-        .select("term").as[String].collect().toSeq
-    }
+    def fuzzyExpand(word: String, maxEdits: Int): Seq[String] =
+      QueryEngine.expand(fuzzyCandidates(word, maxEdits),
+        levenshtein(col("term"), lit(word)) <= maxEdits)
 
     /** Spell correction (reference lucene/suggest DirectSpellChecker
       * capability): dictionary terms within `maxEdits` of the input,
@@ -1322,7 +1286,7 @@ object IndexStore {
         case other => throw new IllegalArgumentException(
           s"blender '$other' (linear|reciprocal|exponential_reciprocal)")
       }
-      val live = deletes.fold(eligible)(d => eligible.join(d, Seq("docId"), "left_anti"))
+      val live = liveDocs(eligible)
       val weighted = weights match {
         case Some(w) => live.join(w, Seq("docId"), "left")
           .withColumn("__w", coalesce(col("weight").cast("double"), lit(1.0)))
@@ -1423,7 +1387,7 @@ object IndexStore {
           .select("term").as[String].collect().headOption.getOrElse(w)
       }
       val matched = QueryEngine.matchingDocs(spark, blocks, corrected, QueryEngine.And)
-      val live = deletes.fold(matched)(d => matched.join(d, Seq("docId"), "left_anti"))
+      val live = liveDocs(matched)
       val nHits = live.count()
       // "collated", not "collation" — COLLATION is a reserved SQL keyword
       Seq((corrected.mkString(" "), nHits)).toDF("collated", "n_hits")
@@ -1441,7 +1405,7 @@ object IndexStore {
     /** Exact-phrase docIds via the stored positions table. */
     def phrase(terms: Seq[String]): DataFrame = {
       val r = QueryEngine.phraseMatch(positions, terms)
-      deletes.fold(r)(d => r.join(d, Seq("docId"), "left_anti"))
+      liveDocs(r)
     }
 
     /** Doc-values tier (columnar per-doc sort/group fields); empty schema
@@ -1473,14 +1437,14 @@ object IndexStore {
     def dvInSet(field: String, values: Seq[Any]): DataFrame = {
       val m = docvalues.filter(col(field).isin(values: _*))
         .select(col("docId")).withColumn("score", lit(1f))
-      deletes.fold(m)(d => m.join(d, Seq("docId"), "left_anti"))
+      liveDocs(m)
     }
 
     def topKByField(terms: Seq[String], sortBys: Seq[(String, Boolean)], k: Int,
                     mode: QueryEngine.Mode = QueryEngine.And): DataFrame = {
       require(sortBys.nonEmpty)
       val matched = QueryEngine.matchingDocs(spark, blocks, terms, mode)
-      val live = deletes.fold(matched)(d => matched.join(d, Seq("docId"), "left_anti"))
+      val live = liveDocs(matched)
       val sortCols = sortBys.map { case (f, asc_) =>
         if (asc_) asc(f) else desc(f)
       } :+ asc("docId")
@@ -1499,7 +1463,7 @@ object IndexStore {
      * time — the reference's `freqBits >>> 15` pseudo-tf). Docs without
      * the feature keep their text score (a SHOULD clause that misses).
      * Clause sum is double-accumulated then cast float, the reference's
-     * boolean-sum shape. Ranking over scoresAll (not a text-only top-k
+     * boolean-sum shape. Ranking over the full text-score frame (not a text-only top-k
      * window) is what makes a large static boost able to promote a doc
      * ranked below any window boundary.
      */
@@ -1507,11 +1471,11 @@ object IndexStore {
                         fn: graft.query.FeatureFunction,
                         mode: QueryEngine.Mode = QueryEngine.Or,
                         sim: graft.query.Similarity = null): DataFrame = {
-      val base = QueryEngine.scoresAll(spark, blocks, termstats, stats, terms,
-        mode, dfCache = Some(dfCache), sim = sim)
-      val live = deletes.fold(base)(d => base.join(d, Seq("docId"), "left_anti"))
+      val text = QueryEngine.run(spark, blocks, termstats, stats,
+        QueryEngine.Request(QueryEngine.Terms(terms, sim), QueryEngine.All, mode),
+        dfCache = Some(dfCache))
       val feat = docvalues.select(col("docId"), col(featureCol).cast("int").as("__qtf"))
-      live.join(feat, Seq("docId"), "left")
+      val boosted = text.join(feat, Seq("docId"), "left")
         .select(col("docId"), col("score"), col("__qtf"))
         .as[(Long, Float, Option[Int])]
         .map { case (id, s, qtf) =>
@@ -1520,7 +1484,7 @@ object IndexStore {
           (id, (s.toDouble + fs.toDouble).toFloat)
         }
         .toDF("docId", "score")
-        .orderBy(desc("score"), asc("docId")).limit(k)
+      run(QueryEngine.Request(QueryEngine.Scored(boosted), k))
     }
 
     /**
@@ -1539,7 +1503,7 @@ object IndexStore {
       require(sortBys.nonEmpty)
       val after = graft.query.Cursor.parse(cursorMark)
       val matched = QueryEngine.matchingDocs(spark, blocks, terms, mode)
-      val live = deletes.fold(matched)(d => matched.join(d, Seq("docId"), "left_anti"))
+      val live = liveDocs(matched)
       val joined = live.join(docvalues, "docId")
       val filtered = after.fold(joined)(c =>
         joined.filter(graft.query.Cursor.afterPredicate(sortBys, c.values)))
@@ -1567,7 +1531,7 @@ object IndexStore {
                      mode: QueryEngine.Mode = QueryEngine.And): DataFrame = {
       require(sortBys.nonEmpty)
       val matched = QueryEngine.matchingDocs(spark, blocks, terms, mode)
-      val live = deletes.fold(matched)(d => matched.join(d, Seq("docId"), "left_anti"))
+      val live = liveDocs(matched)
       val sortCols = sortBys.map { case (f, asc_) =>
         if (asc_) asc(f) else desc(f)
       } :+ asc("docId")
@@ -1635,7 +1599,7 @@ object IndexStore {
     def facetByField(terms: Seq[String], field: String,
                      mode: QueryEngine.Mode = QueryEngine.And): DataFrame = {
       val matched = QueryEngine.matchingDocs(spark, blocks, terms, mode)
-      val live = deletes.fold(matched)(d => matched.join(d, Seq("docId"), "left_anti"))
+      val live = liveDocs(matched)
       live.join(docvalues.select(col("docId"), col(field)), "docId")
         .groupBy(field).agg(count("*").as("count"))
         .orderBy(desc("count"), asc(field))
@@ -1661,7 +1625,7 @@ object IndexStore {
                          sort: String = "count",
                          missing: Boolean = false): DataFrame = {
       val matched = QueryEngine.matchingDocs(spark, blocks, terms, mode)
-      val live = deletes.fold(matched)(d => matched.join(d, Seq("docId"), "left_anti"))
+      val live = liveDocs(matched)
       val joined = live.join(docvalues.select(col("docId"), col(field)), "docId")
       var vals = joined.filter(col(field).isNotNull)
       prefix.foreach(p => vals = vals.filter(col(field).startsWith(p)))
@@ -1703,11 +1667,8 @@ object IndexStore {
       val slots: Seq[Seq[String]] = parseComplexPhrase(body).map {
         case TermSlot(t)   => analyzeQuery(t)
         case GroupSlot(ts) => ts.flatMap(analyzeQuery)
-        case WildcardSlot(p) =>
-          termstats
-            .filter(col("term").rlike(graft.operators.TextOps.wildcardToRegex(p)))
-            .orderBy(desc("df"), asc("term")).limit(maxExpansions)
-            .select("term").as[String].collect().toSeq
+        case WildcardSlot(p) => QueryEngine.expand(termstats,
+          col("term").rlike(graft.operators.TextOps.wildcardToRegex(p)), maxExpansions)
         case FuzzySlot(t, e) => fuzzyExpand(t, e).take(maxExpansions)
       }
       if (slots.exists(_.isEmpty)) spark.range(0).select(col("id").as("docId"))
@@ -1716,7 +1677,7 @@ object IndexStore {
 
     def multiPhrase(slots: Seq[Seq[String]]): DataFrame = {
       val r = QueryEngine.multiPhraseMatch(positions, slots)
-      deletes.fold(r)(d => r.join(d, Seq("docId"), "left_anti"))
+      liveDocs(r)
     }
 
     /** SynonymQuery top-k: terms scored as one pseudo-term (df = max member
@@ -1724,12 +1685,6 @@ object IndexStore {
       * the engine, before the limit. */
     def synonymTopK(synonyms: Seq[String], k: Int): DataFrame =
       QueryEngine.synonymTopK(spark, blocks, termstats, stats, synonyms, k,
-        excludeDocs = deletes, dfCache = Some(dfCache))
-
-    /** DisjunctionMax top-k over real per-clause BM25 scores. Tombstones
-      * excluded inside the engine, before the limit. */
-    def disMaxTopK(terms: Seq[String], tiebreak: Float, k: Int): DataFrame =
-      QueryEngine.disMaxTopK(spark, blocks, termstats, stats, terms, tiebreak, k,
         excludeDocs = deletes, dfCache = Some(dfCache))
   }
 }

@@ -67,9 +67,9 @@ object MultiIndex {
       }
       if (ds.isEmpty) None else Some(ds.reduce(_ unionByName _))
     }
-    val hits = QueryEngine.topK(spark, rebasedBlocks(indexes),
-      mergedTermstats(indexes), mergedStats(indexes), terms, k, mode,
-      mustNot = mustNot, excludeDocs = deletes)
+    val hits = QueryEngine.run(spark, rebasedBlocks(indexes),
+      mergedTermstats(indexes), mergedStats(indexes),
+      QueryEngine.Request(QueryEngine.Terms(terms), k, mode, mustNot), deletes)
     // map global ids back to (shard, localDocId) — bases are a tiny literal
     val shardExpr = bases.zipWithIndex.tail.foldLeft(lit(0)) { case (acc, (b, i)) =>
       when(col("docId") >= b, lit(i)).otherwise(acc)

@@ -1,7 +1,6 @@
 package graft.index
 
-import graft.query.{BM25, QueryEngine}
-import graft.query.QueryEngine.TermInfo
+import graft.query.QueryEngine
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardCopyOption}
@@ -212,12 +211,6 @@ object TimeIndex {
   def dropBucket(dir: String, bucket: String): Unit =
     graft.util.Fs.rmTree(bucketDir(dir, bucket))
 
-  /**
-   * Top-k BM25 over the buckets intersecting [fromBucket, toBucket]
-   * (inclusive, bucket-id strings). Only selected buckets' parquet is read
-   * (bucket-level pruning = IVrixDB opening only relevant buckets);
-   * collection stats merge across them so scores match a monolithic index.
-   */
   /** Merged collection stats (docCount, sumDl) from the selected buckets'
     * manifests — no data read. */
   def mergedStats(dir: String, sel: Seq[String]): (Long, Long) = {
@@ -238,26 +231,26 @@ object TimeIndex {
     spark.read.parquet(sel.map(b => s"${bucketDir(dir, b)}/postings"): _*).as[BlockRow]
   }
 
+  /** The selected buckets' term dictionary (term, df) read off their
+    * postings: a (term, doc) pair lives in exactly one block. */
+  def termstats(blocks: org.apache.spark.sql.Dataset[BlockRow]): DataFrame =
+    blocks.groupBy("term").agg(sum("n").as("df"))
+
+  /**
+   * Top-k BM25 over the buckets intersecting [fromBucket, toBucket]
+   * (inclusive, bucket-id strings). Only selected buckets' parquet is read
+   * (bucket-level pruning = IVrixDB opening only relevant buckets);
+   * collection stats merge across them so scores match a monolithic index.
+   */
   def topK(spark: SparkSession, dir: String, terms: Seq[String], k: Int,
            fromBucket: String = "", toBucket: String = "￿"): DataFrame = {
-    import spark.implicits._
     // range-select on the TIME part: rolled sub-buckets `<ts>.<seq>` belong
     // to their hour/day regardless of the suffix
     val sel = buckets(dir).filter(b => { val t = baseId(b); t >= fromBucket && t <= toBucket })
-    if (sel.isEmpty)
-      return spark.range(0).select($"id".as("docId"), lit(0f).as("score"))
+    if (sel.isEmpty) return QueryEngine.noHits(spark)
     val (docCount, sumDl) = mergedStats(dir, sel)
     val blocks = readBlocks(spark, dir, sel)
-    val qs = terms.distinct
-    val dfs = blocks.filter($"term".isin(qs: _*))
-      .groupBy("term").agg(sum("n").as("df"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val infos = qs.zipWithIndex.collect { case (t, i) if dfs.contains(t) =>
-      val scorer = BM25.termScorer(1f, BM25.DefaultK1, BM25.DefaultB, dfs(t), docCount, sumDl)
-      TermInfo(t, i, scorer, scorer.score(Int.MaxValue.toFloat, 0.toByte))
-    }
-    if (infos.isEmpty)
-      return spark.range(0).select($"id".as("docId"), lit(0f).as("score"))
-    QueryEngine.topKWithInfos(spark, blocks, infos, k)
+    QueryEngine.run(spark, blocks, termstats(blocks), CorpusStats(docCount, sumDl),
+      QueryEngine.Request(QueryEngine.Terms(terms), k))
   }
 }

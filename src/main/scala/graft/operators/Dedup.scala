@@ -480,7 +480,8 @@ object Dedup {
    * band bits mean occupancy (and the all-pairs candidate work, and the
    * odds of tripping the skew cap) grow LINEARLY with the corpus. To hold
    * occupancy at `targetBucket` the bits must grow with log2(n):
-   * `bits = ceil(log2(n / targetBucket))`, clamped to [4, 16]. Recall
+   * `bits = ceil(log2(n / targetBucket))`, clamped to [4, 16] and to
+   * `64 / bands` (the whole sketch packs into one 64-bit long). Recall
    * cost is bounded: at cosine 0.999 (angle 2.56°) a 16-bit band still
    * collides with prob 0.986^16 ≈ 0.80, and identical-direction pairs
    * collide with probability 1 at ANY width, so planted/exact-dup recall
@@ -489,9 +490,10 @@ object Dedup {
    * queries, a 100 TB pipeline) should size via this law.
    */
   def signPlanesFor(n: Long, bands: Int, targetBucket: Int = 256): Int = {
+    require(bands >= 1 && bands <= 64, s"bands must be in [1, 64], got $bands")
     val bits = math.ceil(math.log(math.max(1.0, n.toDouble / targetBucket)) /
       math.log(2.0)).toInt
-    bands * math.min(16, math.max(4, bits))
+    bands * math.min(math.min(16, 64 / bands), math.max(4, bits))
   }
 
   /**

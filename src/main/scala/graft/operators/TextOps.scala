@@ -244,7 +244,7 @@ object TextOps {
     * SmallFloat-quantized `qdl` the engine actually scores with (norm byte
     * round-trip), while avgdl stays exact (sumTotalTermFreq/docCount, as
     * BM25Similarity computes it). Double arithmetic rounded to 5 — the
-    * rank-identical float path is [[graft.query.QueryEngine.topK]]; this
+    * rank-identical float path is [[graft.query.QueryEngine.run]]; this
     * twin exists so the driver oracle can hash-check the engine's top-k
     * doc set AND its scores (to 5 decimals) against DuckDB. */
   def bm25QuantizedNorms(docs: DataFrame, idCol: String, textCol: String,
@@ -518,7 +518,7 @@ object TextOps {
     * BlendedTermQuery.java:273-284: df = max over the terms' dfs so rare
     * variants aren't idf-over-rewarded; dismax combine with tie). Double
     * arithmetic rounded to 5 — the float-exact engine path is
-    * [[graft.query.QueryEngine.blendedTopK]]. */
+    * a [[graft.query.QueryEngine.Blended]] request. */
   def blendedBm25(docs: DataFrame, idCol: String, textCol: String,
                   terms: Seq[(String, Double)], tieBreaker: Double,
                   k1: Double = 1.2, b: Double = 0.75): DataFrame = {

@@ -51,7 +51,7 @@ object Bm25F {
     }
     val docFreq = perFieldDfs.flatMap(_.values).foldLeft(0L)(math.max)
     if (docFreq == 0L)
-      return spark.range(0).select($"id".as("docId"), lit(0f).as("score"))
+      return QueryEngine.noHits(spark)
 
     // pseudo collection statistics (BM25FWeight.mergeCollectionStatistics):
     // the long accumulator truncates after each double add, like Java +=
@@ -96,11 +96,7 @@ object Bm25F {
         (docId, SmallFloat.intToByte4(Math.round(nv)).toInt)
       }.toDF("docId", "cnb")
 
-    val live = fields.head._1.deletes match {
-      case Some(dead) => freq.join(dead, Seq("docId"), "left_anti")
-      case None => freq
-    }
-    live.join(combined, "docId")
+    fields.head._1.liveDocs(freq).join(combined, "docId")
       .as[(Long, Double, Int)]
       .map { case (docId, f, nb) => (docId, scorer.score(f.toFloat, nb.toByte)) }
       .toDF("docId", "score")

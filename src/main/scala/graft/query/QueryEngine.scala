@@ -30,6 +30,21 @@ final case class ScoredPosting(docId: Long, ti: Int, score: Float)
  *    identical to the exhaustive path (cf. reference WANDScorer.java:45,
  *    MaxScoreCache.java:61-105 — pruning only skips non-competitive docs).
  *
+ * Every scored top-k query is one [[Request]] run by one planner ([[run]],
+ * or [[runCounted]] for the top-k + hit count output), like Lucene's
+ * IndexSearcher.search(Query, Collector): query type, paging, filters and
+ * deletes are request fields, not separate search methods. The planner's
+ * stages, each written once:
+ *  1. term infos — through [[plan]], from blended dfs, caller-built, or with
+ *     the hot tier's stats merged in;
+ *  2. scored postings (theta-pruned when asked and safe);
+ *  3. per-doc combine — the single-term no-shuffle fast path, the ti-ordered
+ *     double sum, or DisjunctionMax;
+ *  4. exclusions — AND clause count, mustNot, filter DocSet, tombstones, the
+ *     `after` cursor;
+ *  5. output — orderBy(score DESC, docId ASC).limit(k), the unbounded score
+ *     frame, or the one-job bounded heap + count.
+ *
  * Summation contract for multi-term scores: per-term float scores are summed
  * in query-term order as double, cast to float at the end (the reference's
  * DisjunctionSumScorer sums sub-scorer floats into a double).
@@ -45,6 +60,12 @@ object QueryEngine {
   val MaxClauseCount = 1024
 
   final case class TermInfo(term: String, ti: Int, scorer: SimScorer, globalMaxScore: Float)
+  object TermInfo {
+    /** Global max score of a term: tf -> inf, shortest doc — conservative,
+      * the best possible impact (freq = Int.Max, norm byte 0). */
+    def apply(term: String, ti: Int, scorer: SimScorer): TermInfo =
+      TermInfo(term, ti, scorer, scorer.score(Int.MaxValue.toFloat, 0.toByte))
+  }
 
   /** Per-index term-dictionary memo: term -> Some(df) | None (term absent).
     * Lucene keeps the term dictionary hot in memory; here each queried
@@ -89,10 +110,7 @@ object QueryEngine {
       else lookupDfs(termstats, qs, dfCache).map { case (t, df) => t -> (df, 0L) }
     qs.zipWithIndex.collect { case (t, i) if found.contains(t) =>
       val (df, ttf) = found(t)
-      val scorer = similarity.scorer(boost, df, ttf, stats.docCount, stats.sumTotalTermFreq)
-      // global max score of a term: tf -> inf, shortest doc (norm byte 0..)
-      // conservative: score with the best possible impact (freq=Int.Max, norm=0)
-      TermInfo(t, i, scorer, scorer.score(Int.MaxValue.toFloat, 0.toByte))
+      TermInfo(t, i, similarity.scorer(boost, df, ttf, stats.docCount, stats.sumTotalTermFreq))
     }
   }
 
@@ -151,160 +169,298 @@ object QueryEngine {
       }
   }
 
+  /** The empty (docId LONG, score FLOAT) result. */
+  def noHits(spark: SparkSession): DataFrame =
+    spark.range(0).select(col("id").as("docId"), lit(0f).as("score"))
+
+  /** liveDocs: drop the tombstoned docIds (first column of `dead`). Lucene
+    * liveDocs semantics — deleted docs leave the results, but collection
+    * and term stats still count them until a merge reclaims, so surviving
+    * docs' scores are UNCHANGED by a delete. */
+  def liveDocs(docs: DataFrame, dead: Option[DataFrame]): DataFrame = dead match {
+    case Some(d) => docs.join(d.select(col(d.columns.head).cast("long").as("docId")), Seq("docId"), "left_anti")
+    case None => docs
+  }
+
+  /** Where a request's per-doc scores come from (planner stage 1). */
+  sealed trait Clauses
+  /** Query terms scored through [[plan]] (df memo; `sim` null = BM25). */
+  final case class Terms(terms: Seq[String], sim: Similarity = null) extends Clauses
+  /** BlendedTermQuery (reference lucene/core search/BlendedTermQuery.java:
+    * 265-295): the present terms score AS IF they shared one document
+    * frequency — df = max over their dfs, ttf = sum (:273-281,
+    * adjustFrequencies) — so cross-field/synonym variants with rarer
+    * spellings aren't over-rewarded by idf. Each term keeps its own boost.
+    * The reference's default DISJUNCTION_MAX_REWRITE is
+    * `tieBreaker = Some(0.01f)`; BOOLEAN_REWRITE is the summed combine. */
+  final case class Blended(terms: Seq[(String, Float)]) extends Clauses
+  /** Caller-built infos: collection stats merged elsewhere (time buckets,
+    * one segment of a budgeted search). */
+  final case class Infos(infos: Seq[TermInfo]) extends Clauses
+  /** The packed index PLUS un-packed HOT posting rows from the streaming
+    * sink (IVrixDB's HOT->WARM->COLD search order, reference
+    * MultipleBucketsSearchStream — results are independent of arrival
+    * order). Collection stats (N, avgdl, df) merge across both tiers before
+    * scorer construction, so scores are bit-identical to a from-scratch
+    * build over the combined corpus (asserted in tests). `hot` schema:
+    * (term, docId, tf, normByte, dl) — StreamOps.hotIndexSink. */
+  final case class WithHot(terms: Seq[String], hot: DataFrame) extends Clauses
+  /** Multi-term query rewrite (PrefixQuery / WildcardQuery / RegexpQuery /
+    * FuzzyQuery / TermInSetQuery — SURVEY §2.3) under the CONSTANT_SCORE
+    * rewrite: every doc matching ANY [[expand]]ed term scores 1, so the
+    * output order is docId ASC. */
+  final case class Expanded(termPred: Column) extends Clauses
+  /** A (docId, score) frame the caller already scored (composed boolean
+    * evaluation): only the exclusions and the output stage run. */
+  final case class Scored(frame: DataFrame) extends Clauses
+
+  /** `k` = [[All]]: the full per-doc score frame, unordered. */
+  val All: Int = Int.MaxValue
+
+  /**
+   * One scored query. `prune` (block-max theta) and `wand` (the [[Wand]]
+   * kernel) are the caller's physical choice; both are rank- and
+   * score-identical and apply only to a summed combine with nothing
+   * removed after scoring (no mustNot, filter, tombstones or cursor):
+   * theta estimated over all docs could exceed the surviving k-th score.
+   *
+   * @param tieBreaker DisjunctionMax combine with this tie (reference
+   *                   search/DisjunctionMaxScorer.java:58-70); None sums
+   * @param filter     Solr `fq` DocSet (docId): restricts the match set
+   *                   without contributing to scores
+   * @param after      searchAfter cursor (score, docId) of the previous
+   *                   page's last hit (reference TopScoreDocCollector.java:
+   *                   95-160): pages are disjoint and concatenate to one
+   *                   big top-k
+   */
+  final case class Request(clauses: Clauses, k: Int, mode: Mode = Or, mustNot: Seq[String] = Nil,
+                           prune: Boolean = false, wand: Boolean = false,
+                           tieBreaker: Option[Float] = None,
+                           filter: Option[DataFrame] = None,
+                           after: Option[(Float, Long)] = None)
+
+  /** Run a request: (docId LONG, score FLOAT) ordered (score DESC, docId
+    * ASC), at most `k` rows — or the unordered frame of every match when
+    * `k` is [[All]]. `excludeDocs` are live-docs tombstones; `dfCache` the
+    * index's term-dictionary memo. */
+  def run(spark: SparkSession, blocks: Dataset[BlockRow], termstats: DataFrame, stats: CorpusStats,
+          req: Request, excludeDocs: Option[DataFrame] = None,
+          dfCache: Option[DfCache] = None): DataFrame =
+    termInfos(termstats, stats, req, dfCache) match {
+      case None => noHits(spark)
+      case Some(infos) =>
+        val skippable = canSkip(req, infos, excludeDocs)
+        if (req.wand && skippable && req.k != All && !req.clauses.isInstanceOf[WithHot])
+          Wand.topK(spark, blocks, infos, req.k, requireAll = req.mode == And)
+        else {
+          val docs = liveScores(spark, blocks, termstats, stats, req, infos,
+            theta(spark, blocks, req, infos, req.prune && skippable), excludeDocs, dfCache)
+          if (req.k == All) docs else docs.orderBy(desc("score"), asc("docId")).limit(req.k)
+        }
+    }
+
+  /** Lucene TotalHits (reference search/TotalHits.java): `value` is the
+    * exact hit count when `exact`, else a valid lower bound (the
+    * GREATER_THAN_OR_EQUAL_TO relation). */
+  final case class TotalHits(value: Long, exact: Boolean)
+
+  /**
+   * Top-k AND its TotalHits in ONE job: each partition folds its scored
+   * docs into a bounded worst-out heap plus a counter, the driver merges
+   * the tiny per-partition states (a separate count() job would double the
+   * work — search-job previews need both per bucket). Same (score DESC,
+   * docId ASC) order as [[run]].
+   *
+   * TopScoreDocCollector's totalHitsThreshold contract (reference
+   * TopScoreDocCollector.java:49-95,233: hits are counted exactly while
+   * the count is within the threshold; beyond it the collector may skip
+   * non-competitive docs and the count degrades to a lower bound). The
+   * mapping onto block-max pruning decides UP FRONT from dictionary
+   * stats: a single term's count is its df (free, from the dictionary);
+   * multi-term counts are bounded by Σdf (Or) / min df (And), and when
+   * that bound fits the threshold (or threshold is [[All]]) the engine
+   * counts exhaustively and reports EXACT. Otherwise the Or path prunes
+   * with theta and reports the decoded-doc count as a GTE lower bound. The
+   * bound class is always sound; it equals Lucene's whenever the df bound
+   * is decisive (it is conservative-GTE where Lucene's per-hit counter
+   * could still prove EQ on overlapping multi-term matches). A threshold
+   * below [[All]] reads every term's df from `termstats`.
+   */
+  def runCounted(spark: SparkSession, blocks: Dataset[BlockRow], termstats: DataFrame,
+                 stats: CorpusStats, req: Request,
+                 totalHitsThreshold: Int = All): (Seq[(Long, Float)], TotalHits) = {
+    // one dictionary lookup serves both the term infos and the df bound
+    val memo = Some(newDfCache())
+    termInfos(termstats, stats, req, memo) match {
+      case None => (Nil, TotalHits(0L, exact = true))
+      case Some(infos) =>
+        import spark.implicits._
+        val dfBound: Option[Long] =
+          if (totalHitsThreshold == All || infos.isEmpty) None
+          else {
+            val dfs = lookupDfs(termstats, infos.map(_.term), memo)
+            val termDfs = infos.map(i => dfs(i.term))
+            Some(if (req.mode == And) termDfs.min else termDfs.sum)
+          }
+        val prune = dfBound.exists(_ > totalHitsThreshold) && canSkip(req, infos, None)
+        val th = theta(spark, blocks, req, infos, prune)
+        val k = req.k
+        // worst-first ordering: lowest score, then highest docId dequeues first
+        implicit val worstFirst: Ordering[(Long, Float)] =
+          Ordering.by { case (id, s) => (-s, id) }
+        val partials = liveScores(spark, blocks, termstats, stats, req, infos, th, None, memo)
+          .as[(Long, Float)]
+          .mapPartitions { it =>
+            var n = 0L
+            val heap = scala.collection.mutable.PriorityQueue.empty[(Long, Float)]
+            it.foreach { r =>
+              n += 1
+              heap.enqueue(r)
+              if (heap.size > k) heap.dequeue(): Unit
+            }
+            Iterator.single((n, heap.toArray))
+          }
+          .collect()
+        val hits = partials.iterator.flatMap(_._2)
+          .toArray.sortBy { case (id, s) => (-s, id) }.take(k).toSeq
+        val n = partials.iterator.map(_._1).sum
+        val total = dfBound match {
+          // the dictionary df IS a single term's count; the bound class
+          // still follows the reference rule (EQ iff the count fits)
+          case Some(df) if infos.size == 1 => TotalHits(df, exact = df <= totalHitsThreshold)
+          // theta == 0 means nothing was skipped: the count is exact even on
+          // the not-provably-small path (And mode, or an Or whose estimate was 0)
+          case _ => TotalHits(n, exact = th == 0f && (totalHitsThreshold == All || n <= totalHitsThreshold))
+        }
+        (hits, total)
+    }
+  }
+
+  /** Stage 1: the request's term infos — None when it can match nothing,
+    * empty for clauses that carry no term infos. */
+  private def termInfos(termstats: DataFrame, stats: CorpusStats, req: Request,
+                        dfCache: Option[DfCache]): Option[Seq[TermInfo]] = {
+    val (infos, required) = req.clauses match {
+      case Terms(ts, sim) => (plan(termstats, stats, ts, dfCache = dfCache, sim = sim), ts.distinct.size)
+      case Blended(ts) =>
+        val found = lookupDfs(termstats, ts.map(_._1), dfCache)
+        val present = ts.filter { case (t, _) => found.getOrElse(t, 0L) > 0L }
+        lazy val dfBlend = present.map { case (t, _) => found(t) }.max
+        (present.zipWithIndex.map { case ((t, boost), i) =>
+          TermInfo(t, i, Bm25Sim().scorer(boost, dfBlend, 0L, stats.docCount, stats.sumTotalTermFreq))
+        }, 0)
+      case Infos(is) => (is, 0)
+      case WithHot(ts, hot) =>
+        val qs = ts.distinct
+        // merged collection stats: hot docs counted once each
+        val hr = hot.select("docId", "dl").distinct()
+          .agg(count("*"), sum(col("dl").cast("long"))).head()
+        val docCount = stats.docCount + hr.getLong(0)
+        val sumTtf = stats.sumTotalTermFreq + (if (hr.isNullAt(1)) 0L else hr.getLong(1))
+        // merged per-term df
+        val mainDf = lookupDfs(termstats, qs, dfCache)
+        val hotDf = hot.filter(col("term").isin(qs: _*))
+          .groupBy("term").agg(count("*").as("df")).collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
+        (qs.zipWithIndex.collect { case (t, i) if mainDf.contains(t) || hotDf.contains(t) =>
+          val df = mainDf.getOrElse(t, 0L) + hotDf.getOrElse(t, 0L)
+          TermInfo(t, i, BM25.termScorer(1f, BM25.DefaultK1, BM25.DefaultB, df, docCount, sumTtf))
+        }, qs.size)
+      case _: Expanded | _: Scored => return Some(Nil)
+    }
+    if (infos.isEmpty || (req.mode == And && infos.size < required)) None else Some(infos)
+  }
+
+  /** Pruning and WAND skip docs by their summed score over ALL matches: a
+    * clause that removes docs after scoring (mustNot, filter, tombstones,
+    * cursor) could leave fewer than k survivors above theta, and theta's
+    * partial sums are no lower bound of a DisjunctionMax score. */
+  private def canSkip(req: Request, infos: Seq[TermInfo], excludeDocs: Option[DataFrame]): Boolean =
+    infos.nonEmpty && req.tieBreaker.isEmpty && req.mustNot.isEmpty && req.filter.isEmpty &&
+      req.after.isEmpty && excludeDocs.isEmpty
+
+  /** Stage 2's prune threshold: the estimated k-th score when pruning (Or,
+    * or a single term — an And doc's partial sums prove nothing), else 0. */
+  private def theta(spark: SparkSession, blocks: Dataset[BlockRow], req: Request,
+                    infos: Seq[TermInfo], prune: Boolean): Float =
+    if (prune && (req.mode == Or || infos.size == 1)) estimateTheta(spark, blocks, infos, req.k)
+    else 0f
+
+  /** Stages 2-4: scored postings, the per-doc combine, the exclusions. */
+  private def liveScores(spark: SparkSession, blocks: Dataset[BlockRow], termstats: DataFrame,
+                         stats: CorpusStats, req: Request, infos: Seq[TermInfo], theta: Float,
+                         excludeDocs: Option[DataFrame], dfCache: Option[DfCache]): DataFrame = {
+    import spark.implicits._
+    val combined = req.clauses match {
+      case Scored(frame) => frame
+      case Expanded(termPred) =>
+        multiTermDocs(spark, blocks, termstats, termPred).withColumn("score", lit(1f))
+      case clauses =>
+        val main = scoredPostings(spark, blocks, infos, theta)
+        val postings = clauses match {
+          // HOT rows are already columnar -> score with the codegen
+          // Bm25Score expression (the term filter pushes to the scan)
+          case WithHot(_, hot) => main.union(infos.map { info =>
+            hot.filter(col("term") === info.term)
+              .select(col("docId").cast("long").as("docId"), lit(info.ti).as("ti"),
+                graft.functions.Bm25Score(col("tf").cast("int"), col("normByte").cast("byte"),
+                  asBm25(info.scorer).weight, asBm25(info.scorer).cache).as("score"))
+          }.reduce(_.unionByName(_)).as[ScoredPosting])
+          case _ => main
+        }
+        // single-term fast path: each posting IS the doc's full score, so
+        // the per-doc groupBy (a full shuffle of matched postings) is
+        // skipped — bit-identical by the summation contract ((0.0 + s)
+        // cast float == s) and for DisjunctionMax (s + 0 * tie). The
+        // dominant query class costs one narrow scan + bounded heap.
+        if (infos.size == 1) postings.select($"docId", $"score")
+        else {
+          val grouped = postings.groupBy("docId")
+            .agg(collect_list(struct($"ti", $"score")).as("parts"))
+          val matched = req.mode match {
+            case Or  => grouped
+            case And => grouped.filter(size($"parts") === infos.size)
+          }
+          matched.select($"docId", req.tieBreaker.fold(summedScore)(disMaxScore))
+        }
+    }
+    val negInfos = if (req.mustNot.isEmpty) Nil else plan(termstats, stats, req.mustNot, dfCache = dfCache)
+    val kept =
+      if (negInfos.isEmpty) combined
+      else combined.join(scoredPostings(spark, blocks, negInfos, 0f).select("docId").distinct(),
+        Seq("docId"), "left_anti")
+    val filtered = req.filter.fold(kept)(fq => kept.join(fq, Seq("docId")))
+    // tombstones and the cursor apply BEFORE the limit: afterwards, pages
+    // over an index with deletes would under-fill k
+    val live = liveDocs(filtered, excludeDocs)
+    req.after.fold(live) { case (score, docId) =>
+      live.filter($"score" < score || ($"score" === score && $"docId" > docId))
+    }
+  }
+
   /** Sum per-term float scores in term order as double, cast float. */
-  private def combinedScore: Column =
+  private def summedScore: Column =
     aggregate(
       sort_array(col("parts")),
       lit(0.0d),
       (acc, x) => acc + x.getField("score").cast("double")
     ).cast("float").as("score")
 
-  /**
-   * Top-k BM25. Returns (docId LONG, score FLOAT), ordered
-   * (score DESC, docId ASC), exactly k rows or fewer.
-   */
-  /** `excludeDocs`: live-docs tombstones (Lucene liveDocs semantics —
-    * excluded from results, but collection/term stats still count them
-    * until a merge reclaims; so surviving docs' scores are UNCHANGED by a
-    * delete). Forces the exhaustive path (per-bucket WAND heaps would
-    * under-fill k if filtered after the fact). */
-  def topK(spark: SparkSession, blocks: Dataset[BlockRow], termstats: DataFrame, stats: CorpusStats,
-           terms: Seq[String], k: Int, mode: Mode = Or, mustNot: Seq[String] = Nil,
-           prune: Boolean = false, wand: Boolean = false,
-           excludeDocs: Option[DataFrame] = None,
-           dfCache: Option[DfCache] = None,
-           sim: Similarity = null): DataFrame = {
-    import spark.implicits._
-    val infos = plan(termstats, stats, terms, dfCache = dfCache, sim = sim)
-    if (infos.isEmpty || (mode == And && infos.size < terms.distinct.size))
-      return spark.range(0).select($"id".as("docId"), lit(0f).as("score"))
-    if (wand && mustNot.isEmpty && excludeDocs.isEmpty)
-      return Wand.topK(spark, blocks, infos, k, requireAll = mode == And)
-
-    // single-term fast path: each posting IS the doc's full score, so the
-    // per-doc groupBy (a full shuffle of matched postings) is skipped —
-    // bit-identical by the summation contract ((0.0 + s) cast float == s).
-    // The dominant query class costs one narrow scan + bounded heap.
-    if (infos.size == 1 && mustNot.isEmpty) {
-      // pruning must also be OFF under tombstones (excludeDocs): theta is
-      // estimated over ALL docs including deleted ones, so after the
-      // anti-join it could exceed the true live k-th score and prune blocks
-      // holding live top-k docs (same hazard the mustNot guard covers below)
-      val theta1 = if (prune && excludeDocs.isEmpty) estimateTheta(spark, blocks, infos, k) else 0f
-      val scored1 = scoredPostings(spark, blocks, infos, theta1)
-        .select($"docId", $"score")
-      val live1 = excludeDocs match {
-        case Some(dead) => scored1.join(
-          dead.select(col(dead.columns.head).cast("long").as("docId")), Seq("docId"), "left_anti")
-        case None => scored1
-      }
-      return live1.orderBy(desc("score"), asc("docId")).limit(k)
-    }
-
-    // pruning must be OFF when mustNot or tombstones are present: theta
-    // estimated over all docs includes ones the anti-join later removes, so
-    // it could exceed the true post-exclusion k-th score and prune surviving
-    // docs' blocks
-    val theta = if (prune && mode == Or && mustNot.isEmpty && excludeDocs.isEmpty)
-      estimateTheta(spark, blocks, infos, k) else 0f
-    val scored = scoredPostings(spark, blocks, infos, theta)
-
-    val grouped = scored
-      .groupBy("docId")
-      .agg(collect_list(struct($"ti", $"score")).as("parts"))
-    val filtered = mode match {
-      case Or  => grouped
-      case And => grouped.filter(size($"parts") === infos.size)
-    }
-    val withScore = filtered.select($"docId", combinedScore)
-
-    val excluded = if (mustNot.isEmpty) withScore else {
-      val negInfos = plan(termstats, stats, mustNot, dfCache = dfCache)
-      if (negInfos.isEmpty) withScore
-      else {
-        val negDocs = scoredPostings(spark, blocks, negInfos, 0f).select("docId").distinct()
-        withScore.join(negDocs, Seq("docId"), "left_anti")
-      }
-    }
-    val live = excludeDocs match {
-      case Some(dead) => excluded.join(
-        dead.select(col(dead.columns.head).cast("long").as("docId")), Seq("docId"), "left_anti")
-      case None => excluded
-    }
-    live.orderBy(desc("score"), asc("docId")).limit(k)
-  }
-
-  /**
-   * BlendedTermQuery (reference lucene/core search/BlendedTermQuery.java:
-   * 265-295): score several terms AS IF they shared one document frequency
-   * — df = max over the terms' dfs, ttf = sum (:273-281, adjustFrequencies)
-   * — so cross-field/synonym variants with rarer spellings aren't
-   * over-rewarded by idf. Each term keeps its own boost; sub-scores merge
-   * via DisjunctionMax with `tieBreaker` (DISJUNCTION_MAX_REWRITE, the
-   * default, tie 0.01) or as a SHOULD boolean sum (BOOLEAN_REWRITE,
-   * `dismax = false`). Same plan shape as topK's exhaustive path: one
-   * term-pruned postings scan, one per-doc group, bounded heap.
-   */
-  def blendedTopK(spark: SparkSession, blocks: Dataset[BlockRow], termstats: DataFrame,
-                  stats: CorpusStats, terms: Seq[(String, Float)], k: Int,
-                  tieBreaker: Float = 0.01f, dismax: Boolean = true,
-                  dfCache: Option[DfCache] = None,
-                  excludeDocs: Option[DataFrame] = None): DataFrame = {
-    import spark.implicits._
-    val found = lookupDfs(termstats, terms.map(_._1), dfCache)
-    val present = terms.filter { case (t, _) => found.getOrElse(t, 0L) > 0L }
-    if (present.isEmpty)
-      return spark.range(0).select($"id".as("docId"), lit(0f).as("score"))
-    val dfBlend = present.map { case (t, _) => found(t) }.max
-    val infos = present.zipWithIndex.map { case ((t, boost), i) =>
-      val scorer = Bm25Sim().scorer(boost, dfBlend, 0L, stats.docCount, stats.sumTotalTermFreq)
-      TermInfo(t, i, scorer, scorer.score(Int.MaxValue.toFloat, 0.toByte))
-    }
-    val grouped = scoredPostings(spark, blocks, infos, 0f)
-      .groupBy("docId")
-      .agg(collect_list(struct($"ti", $"score")).as("parts"))
-    val combined =
-      if (dismax) {
-        // DisjunctionMaxScorer.score: float max, double sum, then
-        // (float)(max + (sum - max) * tie)
-        val subs = transform(col("parts"), p => p.getField("score"))
-        val mx = array_max(subs).cast("double")
-        val sm = aggregate(sort_array(col("parts")), lit(0.0d),
-          (acc, x) => acc + x.getField("score").cast("double"))
-        grouped.select($"docId",
-          (mx + (sm - mx) * lit(tieBreaker.toDouble)).cast("float").as("score"))
-      } else grouped.select($"docId", combinedScore)
-    val live = excludeDocs match {
-      case Some(dead) => combined.join(
-        dead.select(col(dead.columns.head).cast("long").as("docId")), Seq("docId"), "left_anti")
-      case None => combined
-    }
-    live.orderBy(desc("score"), asc("docId")).limit(k)
-  }
-
-  /**
-   * Per-doc combined scores of the FULL match set — the topK grouped-sum
-   * path without order/limit. Feeds ranking stages where a second additive
-   * clause (e.g. a [[FeatureFunction]] static boost) can promote docs from
-   * outside any text-only top-k, so the base scores must not be truncated
-   * first. Same float arithmetic as topK's exhaustive path (ti-ordered
-   * double accumulation cast float).
-   */
-  def scoresAll(spark: SparkSession, blocks: Dataset[BlockRow], termstats: DataFrame,
-                stats: CorpusStats, terms: Seq[String], mode: Mode = Or,
-                dfCache: Option[DfCache] = None, sim: Similarity = null): DataFrame = {
-    import spark.implicits._
-    val infos = plan(termstats, stats, terms, dfCache = dfCache, sim = sim)
-    if (infos.isEmpty || (mode == And && infos.size < terms.distinct.size))
-      return spark.range(0).select($"id".as("docId"), lit(0f).as("score"))
-    val grouped = scoredPostings(spark, blocks, infos, 0f)
-      .groupBy("docId")
-      .agg(collect_list(struct($"ti", $"score")).as("parts"))
-    val filtered = mode match {
-      case Or  => grouped
-      case And => grouped.filter(size($"parts") === infos.size)
-    }
-    filtered.select($"docId", combinedScore)
+  /** DisjunctionMaxScorer.score over the ti-ordered parts: a running float
+    * max; the displaced max and every non-max sub-score accumulate into a
+    * double; (float)(max + others * tie). */
+  private def disMaxScore(tie: Float): Column = {
+    def acc(mx: Column, others: Column) = struct(mx.as("mx"), others.as("others"))
+    aggregate(
+      sort_array(col("parts")),
+      acc(lit(0f), lit(0.0d)),
+      (a, x) => {
+        val (mx, others, s) = (a.getField("mx"), a.getField("others"), x.getField("score"))
+        when(s >= mx, acc(s, others + mx.cast("double")))
+          .otherwise(acc(mx, others + s.cast("double")))
+      },
+      a => (a.getField("mx").cast("double") + a.getField("others") * lit(tie.toDouble)).cast("float")
+    ).as("score")
   }
 
   /** Phase A of the prune: fully score the single best block per term; the
@@ -336,204 +492,24 @@ object QueryEngine {
     if (partials.length < k) 0f else math.nextDown(partials.last.getFloat(1))
   }
 
-  /**
-   * Positional paging (IndexSearcher.searchAfter / TopScoreDocCollector
-   * paging, reference TopScoreDocCollector.java:95-160): page N+1 = the
-   * top-k among docs strictly AFTER the last hit of page N in the global
-   * (score DESC, docId ASC) order — i.e. score < after.score, or equal
-   * score and docId > after.docId. Pages are disjoint and their
-   * concatenation equals one big topK (tested).
-   */
-  def topKAfter(spark: SparkSession, blocks: Dataset[BlockRow], termstats: DataFrame,
-                stats: CorpusStats, terms: Seq[String], k: Int,
-                afterScore: Float, afterDocId: Long,
-                mode: Mode = Or, excludeDocs: Option[DataFrame] = None,
-                dfCache: Option[DfCache] = None): DataFrame = {
-    import spark.implicits._
-    val infos = plan(termstats, stats, terms, dfCache = dfCache)
-    if (infos.isEmpty || (mode == And && infos.size < terms.distinct.size))
-      return spark.range(0).select($"id".as("docId"), lit(0f).as("score"))
-    val grouped = scoredPostings(spark, blocks, infos, 0f)
-      .groupBy("docId")
-      .agg(collect_list(struct($"ti", $"score")).as("parts"))
-    val filtered = mode match {
-      case Or  => grouped
-      case And => grouped.filter(size($"parts") === infos.size)
-    }
-    // tombstones excluded BEFORE the limit(k): otherwise pages over an index
-    // with deletes would return deleted docs / under-fill (same invariant as
-    // topK — concatenation of pages must equal one big topK over live docs)
-    val live = excludeDocs match {
-      case Some(dead) => filtered.join(
-        dead.select(col(dead.columns.head).cast("long").as("docId")), Seq("docId"), "left_anti")
-      case None => filtered
-    }
-    live.select($"docId", combinedScore)
-      .filter($"score" < afterScore ||
-        ($"score" === afterScore && $"docId" > afterDocId))
-      .orderBy(desc("score"), asc("docId")).limit(k)
-  }
-
-  /** All matching docs scored with caller-built TermInfos: (docId, score),
-    * no order/limit — shared by [[topKWithInfos]] and the single-pass
-    * top-k+count used by search-job previews. */
-  def scoredDocsWithInfos(spark: SparkSession, blocks: Dataset[BlockRow],
-                          infos: Seq[TermInfo],
-                          excludeDocs: Option[DataFrame] = None): DataFrame = {
-    import spark.implicits._
-    val grouped = scoredPostings(spark, blocks, infos, 0f)
-      .groupBy("docId")
-      .agg(collect_list(struct($"ti", $"score")).as("parts"))
-    val live = excludeDocs match {
-      case Some(dead) => grouped.join(
-        dead.select(col(dead.columns.head).cast("long").as("docId")), Seq("docId"), "left_anti")
-      case None => grouped
-    }
-    live.select($"docId", combinedScore)
-  }
-
-  /** OR top-k with caller-built TermInfos (pre-merged stats — used by the
-    * time-bucketed index, where collection stats merge across buckets). */
-  def topKWithInfos(spark: SparkSession, blocks: Dataset[BlockRow],
-                    infos: Seq[TermInfo], k: Int,
-                    excludeDocs: Option[DataFrame] = None): DataFrame = {
-    import spark.implicits._
-    if (infos.isEmpty)
-      return spark.range(0).select($"id".as("docId"), lit(0f).as("score"))
-    scoredDocsWithInfos(spark, blocks, infos, excludeDocs)
-      .orderBy(desc("score"), asc("docId")).limit(k)
-  }
-
-  /** Top-k AND total matching-doc count in ONE job (search-job previews
-    * need both per bucket; a separate count() job would double per-bucket
-    * work): each partition folds its scored docs into a bounded worst-out
-    * heap plus a counter, the driver merges the tiny per-partition states.
-    * Same (score DESC, docId ASC) order as [[topKWithInfos]]. */
-  def topKWithInfosAndCount(spark: SparkSession, blocks: Dataset[BlockRow],
-                            infos: Seq[TermInfo], k: Int): (Seq[(Long, Float)], Long) = {
-    import spark.implicits._
-    if (infos.isEmpty) return (Nil, 0L)
-    // worst-first ordering: lowest score, then highest docId dequeues first
-    implicit val worstFirst: Ordering[(Long, Float)] =
-      Ordering.by { case (id, s) => (-s, id) }
-    val partials = scoredDocsWithInfos(spark, blocks, infos, None)
-      .as[(Long, Float)]
-      .mapPartitions { it =>
-        var n = 0L
-        val heap = scala.collection.mutable.PriorityQueue.empty[(Long, Float)]
-        it.foreach { r =>
-          n += 1
-          heap.enqueue(r)
-          if (heap.size > k) heap.dequeue(): Unit
-        }
-        Iterator.single((n, heap.toArray))
-      }
-      .collect()
-    val hits = partials.iterator.flatMap(_._2)
-      .toArray.sortBy { case (id, s) => (-s, id) }.take(k).toSeq
-    (hits, partials.iterator.map(_._1).sum)
-  }
-
-  /** Lucene TotalHits (reference search/TotalHits.java): `value` is the
-    * exact hit count when `exact`, else a valid lower bound (the
-    * GREATER_THAN_OR_EQUAL_TO relation). */
-  final case class TotalHits(value: Long, exact: Boolean)
-
-  /**
-   * TopScoreDocCollector's totalHitsThreshold contract (reference
-   * TopScoreDocCollector.java:49-95,233: hits are counted exactly while
-   * the count is within the threshold; beyond it the collector may skip
-   * non-competitive docs and the count degrades to a lower bound).
-   *
-   * The mapping onto block-max pruning decides UP FRONT from dictionary
-   * stats: a single term's count is its df (free, from the dictionary);
-   * multi-term counts are bounded by Σdf (Or) / min df (And), and when
-   * that bound fits the threshold (or threshold is Int.MaxValue) the
-   * engine counts exhaustively and reports EXACT. Otherwise the Or path
-   * prunes with theta and reports the decoded-doc count as a GTE lower
-   * bound. The bound class is always sound; it equals Lucene's whenever
-   * the df bound is decisive (it is conservative-GTE where Lucene's
-   * per-hit counter could still prove EQ on overlapping multi-term
-   * matches).
-   */
-  def topKWithTotal(spark: SparkSession, blocks: Dataset[BlockRow], termstats: DataFrame,
-                    stats: CorpusStats, terms: Seq[String], k: Int, mode: Mode = Or,
-                    totalHitsThreshold: Int = 1000,
-                    dfCache: Option[DfCache] = None): (Seq[(Long, Float)], TotalHits) = {
-    import spark.implicits._
-    val infos = plan(termstats, stats, terms, dfCache = dfCache)
-    if (infos.isEmpty || (mode == And && infos.size < terms.distinct.size))
-      return (Nil, TotalHits(0L, exact = true))
-    val noLimit = totalHitsThreshold == Int.MaxValue
-    val dfs = lookupDfs(termstats, infos.map(_.term), dfCache)
-    if (infos.size == 1) {
-      val df = dfs(infos.head.term)
-      val hits = topK(spark, blocks, termstats, stats, terms, k, mode,
-        prune = !noLimit && df > totalHitsThreshold, dfCache = dfCache)
-        .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
-      // the dictionary df IS the exact count; the bound class still follows
-      // the reference rule (EQ iff the count fits the threshold)
-      return (hits, TotalHits(df, exact = noLimit || df <= totalHitsThreshold))
-    }
-    val dfBound = mode match {
-      case Or  => infos.map(i => dfs(i.term)).sum
-      case And => infos.map(i => dfs(i.term)).min
-    }
-    val exhaustive = noLimit || dfBound <= totalHitsThreshold
-    val theta = if (!exhaustive && mode == Or) estimateTheta(spark, blocks, infos, k) else 0f
-    val scored = scoredPostings(spark, blocks, infos, theta)
-    val grouped = scored.groupBy("docId")
-      .agg(collect_list(struct($"ti", $"score")).as("parts"))
-    val filtered = mode match {
-      case Or  => grouped
-      case And => grouped.filter(size($"parts") === infos.size)
-    }
-    implicit val worstFirst: Ordering[(Long, Float)] =
-      Ordering.by { case (id, s) => (-s, id) }
-    val partials = filtered.select($"docId", combinedScore).as[(Long, Float)]
-      .mapPartitions { it =>
-        var n = 0L
-        val heap = scala.collection.mutable.PriorityQueue.empty[(Long, Float)]
-        it.foreach { r =>
-          n += 1
-          heap.enqueue(r)
-          if (heap.size > k) heap.dequeue(): Unit
-        }
-        Iterator.single((n, heap.toArray))
-      }
-      .collect()
-    val hits = partials.iterator.flatMap(_._2)
-      .toArray.sortBy { case (id, s) => (-s, id) }.take(k).toSeq
-    val n = partials.iterator.map(_._1).sum
-    // theta == 0 means nothing was skipped: the count is exact even on the
-    // not-provably-small path (And mode, or an Or whose estimate was 0)
-    (hits, TotalHits(n, exact = theta == 0f && (noLimit || n <= totalHitsThreshold)))
-  }
-
-  /** Single-term BM25 scores over all matching docs (no limit): the leaf
-    * frame of composed boolean evaluation ([[Searcher]]). (docId, score). */
-  def termScores(spark: SparkSession, blocks: Dataset[BlockRow], termstats: DataFrame,
-                 stats: CorpusStats, term: String,
-                 dfCache: Option[DfCache] = None): DataFrame = {
-    import spark.implicits._
-    val infos = plan(termstats, stats, Seq(term), dfCache = dfCache)
-    if (infos.isEmpty)
-      return spark.range(0).select($"id".as("docId"), lit(0f).as("score"))
-    scoredPostings(spark, blocks, infos, 0f).select($"docId", $"score")
-  }
+  /** Dictionary expansion of a term predicate (a pushed-down filter on the
+    * small termstats table), capped at the `cap` highest-df terms
+    * (TopTermsRewrite keeps top terms; overflow past [[MaxClauseCount]]
+    * raises in the reference — here the cap is applied deterministically). */
+  def expand(termstats: DataFrame, termPred: Column, cap: Int = MaxClauseCount): Seq[String] =
+    termstats.filter(termPred)
+      .orderBy(desc("df"), asc("term")).limit(cap)
+      .select("term").collect().map(_.getString(0)).toSeq
 
   /** Dictionary-expanded matching docIds (no limit, no order): the
-    * constant-score rewrite core shared by multiTermTopK and the parser's
-    * prefix/wildcard/fuzzy/range leaves. Expansion capped at
-    * [[MaxClauseCount]] highest-df terms. */
+    * constant-score rewrite core shared by [[Expanded]] requests and the
+    * parser's prefix/wildcard/fuzzy/range leaves. */
   def multiTermDocs(spark: SparkSession, blocks: Dataset[BlockRow], termstats: DataFrame,
                     termPred: Column): DataFrame = {
     import spark.implicits._
-    val expanded = termstats.filter(termPred)
-      .orderBy(desc("df"), asc("term")).limit(MaxClauseCount)
-      .select("term").as[String].collect().toSeq
+    val expanded = expand(termstats, termPred)
     if (expanded.isEmpty)
-      return spark.range(0).select($"id".as("docId"))
+      return noHits(spark).select("docId")
     blocks.filter($"term".isin(expanded: _*))
       .mapPartitions { it =>
         it.flatMap { b =>
@@ -613,7 +589,7 @@ object QueryEngine {
     val qs = synonyms.distinct
     val found = lookupDfs(termstats, qs, dfCache)
     if (found.isEmpty)
-      return spark.range(0).select($"id".as("docId"), lit(0).as("syn_tf"), lit(0f).as("score"))
+      return noHits(spark).select($"docId", lit(0).as("syn_tf"), $"score")
     val scorer = BM25.termScorer(boost, BM25.DefaultK1, BM25.DefaultB,
       found.values.max, stats.docCount, stats.sumTotalTermFreq)
     val rows = blocks.filter($"term".isin(found.keys.toSeq: _*))
@@ -626,53 +602,11 @@ object QueryEngine {
     val grouped = rows.groupBy("docId")
       .agg(sum($"tf").cast("int").as("syn_tf"), first($"normByte").as("normByte"))
     // tombstones excluded before the limit (liveDocs; stats unchanged)
-    val live = excludeDocs match {
-      case Some(dead) => grouped.join(
-        dead.select(col(dead.columns.head).cast("long").as("docId")), Seq("docId"), "left_anti")
-      case None => grouped
-    }
-    live.select($"docId", $"syn_tf",
+    liveDocs(grouped, excludeDocs)
+      .select($"docId", $"syn_tf",
         graft.functions.Bm25Score($"syn_tf", $"normByte".cast("byte"),
           scorer.weight, scorer.cache).as("score"))
       .orderBy(desc("score"), asc("docId")).limit(k)
-  }
-
-  /**
-   * DisjunctionMax top-k over real per-clause BM25 scores (reference
-   * search/DisjunctionMaxScorer.java:58-70): score = max sub score +
-   * tieBreaker * (double) sum of the other sub scores, iterated in
-   * query-term (ti) order, cast float. Returns (docId, score) ordered
-   * (score DESC, docId ASC).
-   */
-  def disMaxTopK(spark: SparkSession, blocks: Dataset[BlockRow], termstats: DataFrame,
-                 stats: CorpusStats, terms: Seq[String], tiebreak: Float,
-                 k: Int, excludeDocs: Option[DataFrame] = None,
-                 dfCache: Option[DfCache] = None): DataFrame = {
-    import spark.implicits._
-    val infos = plan(termstats, stats, terms, dfCache = dfCache)
-    if (infos.isEmpty)
-      return spark.range(0).select($"id".as("docId"), lit(0f).as("score"))
-    val scored = scoredPostings(spark, blocks, infos, 0f)
-      .groupByKey(_.docId)
-      .mapGroups { (doc, it) =>
-        val parts = it.toArray.sortBy(_.ti)
-        // exact DisjunctionMaxScorer.score loop: running float max, the
-        // displaced max and non-max subs accumulate into a double sum
-        var scoreMax = 0f
-        var otherSum = 0.0
-        parts.foreach { p =>
-          if (p.score >= scoreMax) { otherSum += scoreMax; scoreMax = p.score }
-          else otherSum += p.score
-        }
-        (doc, (scoreMax + otherSum * tiebreak).toFloat)
-      }
-      .toDF("docId", "score")
-    val live = excludeDocs match {
-      case Some(dead) => scored.join(
-        dead.select(col(dead.columns.head).cast("long").as("docId")), Seq("docId"), "left_anti")
-      case None => scored
-    }
-    live.orderBy(desc("score"), asc("docId")).limit(k)
   }
 
   /**
@@ -681,7 +615,7 @@ object QueryEngine {
    * BM25Similarity.java explainScore): one row per query term matching
    * `docId`, carrying every scoring component with the exact arithmetic of
    * the scoring path — so sum(term_score) double-accumulated in ti order,
-   * cast float, equals the topK score bit-for-bit (tested).
+   * cast float, equals the top-k score bit-for-bit (tested).
    */
   def explain(spark: SparkSession, blocks: Dataset[BlockRow], termstats: DataFrame,
               stats: CorpusStats, terms: Seq[String], docId: Long): DataFrame = {
@@ -708,95 +642,6 @@ object QueryEngine {
       }
       .toDF("term", "ti", "tf", "norm_byte", "dl_quantized", "weight", "k1", "b", "term_score")
       .orderBy("ti")
-  }
-
-  /**
-   * Multi-term query rewrite (PrefixQuery / WildcardQuery / RegexpQuery /
-   * FuzzyQuery / TermInSetQuery — SURVEY §2.3): expand a term predicate
-   * against the dictionary (a pushed-down filter on the small termstats
-   * table), cap at [[MaxClauseCount]] keeping the highest-df expansions
-   * (TopTermsRewrite keeps top terms; overflow past the cap raises in the
-   * reference — here the cap is applied deterministically), then run a
-   * CONSTANT-SCORE union: score = boost for every doc matching ANY
-   * expansion (MultiTermQuery CONSTANT_SCORE rewrite). Ordered docId ASC.
-   */
-  def multiTermTopK(spark: SparkSession, blocks: Dataset[BlockRow], termstats: DataFrame,
-                    termPred: Column, k: Int, boost: Float = 1f,
-                    excludeDocs: Option[DataFrame] = None): DataFrame = {
-    import spark.implicits._
-    val expanded = termstats.filter(termPred)
-      .orderBy(desc("df"), asc("term")).limit(MaxClauseCount)
-      .select("term").as[String].collect().toSeq
-    if (expanded.isEmpty)
-      return spark.range(0).select($"id".as("docId"), lit(boost).as("score"))
-    val matched = blocks.filter($"term".isin(expanded: _*))
-      .mapPartitions { it =>
-        it.flatMap { b =>
-          val (docs, _) = PostingsCodec.decodeBlock(b.minDoc, b.n, b.wDocs, b.wFreqs, b.docGaps, b.freqs)
-          docs.iterator.take(b.n)
-        }
-      }
-      .toDF("docId").distinct()
-    // tombstones excluded BEFORE limit(k): filtering after would under-fill
-    // k whenever deleted docs rank among the k lowest matching docIds
-    val live = excludeDocs match {
-      case Some(dead) => matched.join(
-        dead.select(col(dead.columns.head).cast("long").as("docId")), Seq("docId"), "left_anti")
-      case None => matched
-    }
-    live.orderBy(asc("docId")).limit(k)
-      .withColumn("score", lit(boost))
-  }
-
-  /**
-   * Federated top-k over the packed main index PLUS un-packed HOT posting
-   * rows from the streaming sink (IVrixDB's HOT->WARM->COLD search order,
-   * reference MultipleBucketsSearchStream — search results are independent
-   * of arrival order). Collection stats (N, avgdl, df) are merged across
-   * both tiers before scorer construction, so scores are bit-identical to
-   * a from-scratch build over the combined corpus (asserted in tests).
-   *
-   * `hot` schema: (term, docId, tf, normByte, dl) — StreamOps.hotIndexSink.
-   */
-  def topKWithHot(spark: SparkSession, blocks: Dataset[BlockRow], termstats: DataFrame,
-                  stats: CorpusStats, hot: DataFrame, terms: Seq[String], k: Int): DataFrame = {
-    import spark.implicits._
-    val qs = terms.distinct
-    // merged collection stats: hot docs counted once each
-    val hotDocs = hot.select("docId", "dl").distinct()
-    val hr = hotDocs.agg(count("*"), sum(col("dl").cast("long"))).head()
-    val mergedStats = CorpusStats(
-      stats.docCount + hr.getLong(0),
-      stats.sumTotalTermFreq + (if (hr.isNullAt(1)) 0L else hr.getLong(1)))
-    // merged per-term df
-    val mainDf = termstats.filter(col("term").isin(qs: _*))
-      .select("term", "df").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val hotDf = hot.filter(col("term").isin(qs: _*))
-      .groupBy("term").agg(count("*").as("df")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val infos = qs.zipWithIndex.collect {
-      case (t, i) if mainDf.contains(t) || hotDf.contains(t) =>
-        val df = mainDf.getOrElse(t, 0L) + hotDf.getOrElse(t, 0L)
-        val scorer = BM25.termScorer(1f, BM25.DefaultK1, BM25.DefaultB,
-          df, mergedStats.docCount, mergedStats.sumTotalTermFreq)
-        TermInfo(t, i, scorer, scorer.score(Int.MaxValue.toFloat, 0.toByte))
-    }
-    if (infos.isEmpty)
-      return spark.range(0).select($"id".as("docId"), lit(0f).as("score"))
-    val mainScored = scoredPostings(spark, blocks, infos, 0f)
-    // HOT rows are already columnar -> score with the codegen Bm25Score
-    // expression (whole-stage codegen; the term filter pushes to the scan)
-    val hotScored = infos.map { info =>
-      hot.filter(col("term") === info.term)
-        .select(col("docId").cast("long").as("docId"), lit(info.ti).as("ti"),
-          graft.functions.Bm25Score(col("tf").cast("int"), col("normByte").cast("byte"),
-            asBm25(info.scorer).weight, asBm25(info.scorer).cache).as("score"))
-    }.reduce(_.unionByName(_)).as[ScoredPosting]
-    mainScored.union(hotScored)
-      .groupBy("docId")
-      .agg(collect_list(struct($"ti", $"score")).as("parts"))
-      .select($"docId", combinedScore)
-      .orderBy(desc("score"), asc("docId")).limit(k)
   }
 
   /**

@@ -26,8 +26,6 @@ object Searcher {
 
   import QueryParser._
 
-  /** Parse + rank: top-k (docId, score) with tombstones excluded before
-    * the limit. */
   /** CommonTermsQuery over the index (reference lucene/queries/
     * CommonTermsQuery.java): df-split via the termstats dictionary (a
     * cached O(#terms) lookup, no corpus pass), then low-frequency terms
@@ -44,11 +42,14 @@ object Searcher {
     search(idx, (low.map("+" + _) ++ high).mkString(" "), k)
   }
 
-  def search(idx: OpenIndex, query: String, k: Int): DataFrame = {
-    val scored = eval(idx, QueryParser.parse(query))
-    val live = idx.deletes.fold(scored)(d => scored.join(d, Seq("docId"), "left_anti"))
-    live.orderBy(desc("score"), asc("docId")).limit(k)
-  }
+  /** Parse + rank: top-k (docId, score) with tombstones excluded before
+    * the limit. */
+  def search(idx: OpenIndex, query: String, k: Int): DataFrame =
+    rank(idx, eval(idx, QueryParser.parse(query)), k)
+
+  /** The planner's exclusion + output stages over an evaluated query. */
+  private def rank(idx: OpenIndex, scored: DataFrame, k: Int): DataFrame =
+    idx.run(QueryEngine.Request(QueryEngine.Scored(scored), k))
 
   /** MaxScoreQParser rewrite (reference solr/core/src/java/org/apache/solr/
     * search/MaxScoreQParser.java:34-78): parse exactly like the classic
@@ -66,11 +67,8 @@ object Searcher {
   }
 
   /** Parse + rank under the MaxScore rewrite (Solr `{!maxscore tie=...}`). */
-  def searchMaxScore(idx: OpenIndex, query: String, k: Int, tie: Float = 0f): DataFrame = {
-    val scored = eval(idx, maxScoreRewrite(QueryParser.parse(query), tie))
-    val live = idx.deletes.fold(scored)(d => scored.join(d, Seq("docId"), "left_anti"))
-    live.orderBy(desc("score"), asc("docId")).limit(k)
-  }
+  def searchMaxScore(idx: OpenIndex, query: String, k: Int, tie: Float = 0f): DataFrame =
+    rank(idx, eval(idx, maxScoreRewrite(QueryParser.parse(query), tie)), k)
 
   /** GraphTermsQParser (reference solr/core/src/java/org/apache/solr/search/
     * GraphTermsQParserPlugin.java:73-155): constant-score disjunction over
@@ -82,28 +80,22 @@ object Searcher {
   def graphTerms(idx: OpenIndex, terms: Seq[String], maxDocFreq: Long): DataFrame = {
     val dfs = QueryEngine.lookupDfs(idx.termstats, terms, Some(idx.dfCache))
     val keep = terms.distinct.filter(t => dfs.get(t).exists(_ <= maxDocFreq))
-    if (keep.isEmpty) emptyScored(idx.spark)
+    if (keep.isEmpty) QueryEngine.noHits(idx.spark)
     else constScore(idx, col("term").isin(keep: _*))
   }
 
   /** XML query (CoreParser dialect) search: parse via [[XmlParser]] and
     * rank like [[search]]. Span-rooted documents are rejected here — they
     * evaluate over a text column via [[graft.operators.Spans]]. */
-  def searchXml(idx: OpenIndex, xml: String, k: Int): DataFrame = {
-    val scored = eval(idx, XmlParser.parseScored(xml))
-    val live = idx.deletes.fold(scored)(d => scored.join(d, Seq("docId"), "left_anti"))
-    live.orderBy(desc("score"), asc("docId")).limit(k)
-  }
+  def searchXml(idx: OpenIndex, xml: String, k: Int): DataFrame =
+    rank(idx, eval(idx, XmlParser.parseScored(xml)), k)
 
   /** [[SimpleQueryParser]] dialect search — the lenient end-user surface
     * (never throws on malformed syntax). */
   def searchSimple(idx: OpenIndex, query: String, k: Int,
                    flags: Int = SimpleQueryParser.AllOperators,
-                   defaultOperator: String = "should"): DataFrame = {
-    val scored = eval(idx, SimpleQueryParser.parse(query, flags, defaultOperator))
-    val live = idx.deletes.fold(scored)(d => scored.join(d, Seq("docId"), "left_anti"))
-    live.orderBy(desc("score"), asc("docId")).limit(k)
-  }
+                   defaultOperator: String = "should"): DataFrame =
+    rank(idx, eval(idx, SimpleQueryParser.parse(query, flags, defaultOperator)), k)
 
   /**
    * Multi-field search (Lucene per-field inverted indexes): `field:`-scoped
@@ -125,7 +117,7 @@ object Searcher {
       throw new IllegalArgumentException(s"no index for default field '$defaultField'"))
     def ev(q: Query): DataFrame = q match {
       case FieldQ(f, inner) =>
-        idxs.get(f).map(eval(_, inner)).getOrElse(emptyScored(default.spark))
+        idxs.get(f).map(eval(_, inner)).getOrElse(QueryEngine.noHits(default.spark))
       case BoostQ(b, inner) => ev(inner)
         .select(col("docId"), (col("score") * lit(b)).cast("float").as("score"))
       case BoolQ(m, sh, n) => evalBool(default.spark, ev, m, sh, n)
@@ -134,9 +126,7 @@ object Searcher {
         ev(inner).select(col("docId")).distinct().withColumn("score", lit(1f))
       case leaf => eval(default, leaf)
     }
-    val scored = ev(ast)
-    val live = default.deletes.fold(scored)(d => scored.join(d, Seq("docId"), "left_anti"))
-    live.orderBy(desc("score"), asc("docId")).limit(k)
+    rank(default, ev(ast), k)
   }
 
   /** All matching docs of the parsed query: (docId LONG, score FLOAT). */
@@ -148,9 +138,10 @@ object Searcher {
       .select(col("docId"), (col("score") * lit(b)).cast("float").as("score"))
     case MatchAllQ =>
       idx.docstats.select(col("docId")).withColumn("score", lit(1f))
+    // leaves score every match; tombstones and the limit apply once, at the top
     case TermQ(t) =>
-      QueryEngine.termScores(idx.spark, idx.blocks, idx.termstats, idx.stats, t,
-        dfCache = Some(idx.dfCache))
+      QueryEngine.run(idx.spark, idx.blocks, idx.termstats, idx.stats,
+        QueryEngine.Request(QueryEngine.Terms(Seq(t)), QueryEngine.All), dfCache = Some(idx.dfCache))
     case PhraseQ(terms, 0) => phraseScores(idx, terms)
     case PhraseQ(terms, slop) => sloppyDocs(idx, terms, slop)
     case PrefixQ(p) =>
@@ -161,7 +152,7 @@ object Searcher {
       // gram-pruned expansion (FuzzyTermsEnum analogue): the dictionary
       // probe touches only the word's bigram buckets, never the full vocab
       val expanded = idx.fuzzyExpand(t, maxEdits)
-      if (expanded.isEmpty) emptyScored(idx.spark)
+      if (expanded.isEmpty) QueryEngine.noHits(idx.spark)
       else constScore(idx, col("term").isin(expanded: _*))
     case RangeQ(lo, hi, inclusive) =>
       constScore(idx, if (inclusive) col("term") >= lo && col("term") <= hi
@@ -186,11 +177,6 @@ object Searcher {
         (col("mx") + lit(tie.toDouble) * (col("sm") - col("mx"))).cast("float").as("score"))
   }
 
-  private def emptyScored(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    spark.range(0).select($"id".as("docId"), lit(0f).as("score"))
-  }
-
   private def constScore(idx: OpenIndex, termPred: org.apache.spark.sql.Column): DataFrame =
     QueryEngine.multiTermDocs(idx.spark, idx.blocks, idx.termstats, termPred)
       .withColumn("score", lit(1f))
@@ -202,7 +188,7 @@ object Searcher {
     val qs = terms.distinct
     val found = idx.termstats.filter(col("term").isin(qs: _*))
       .select("term", "df").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    if (found.size < qs.size) return emptyScored(idx.spark)
+    if (found.size < qs.size) return QueryEngine.noHits(idx.spark)
     var w = 0.0
     qs.foreach(t => w += BM25.idf(found(t), idx.stats.docCount).toDouble)
     val scorer = BM25.TermScorer(w.toFloat,
@@ -250,7 +236,7 @@ object Searcher {
   private def evalBool(spark: SparkSession, ev: Query => DataFrame,
                        must: Seq[Query], should: Seq[Query],
                        mustNot: Seq[Query]): DataFrame = {
-    if (must.isEmpty && should.isEmpty) return emptyScored(spark)
+    if (must.isEmpty && should.isEmpty) return QueryEngine.noHits(spark)
     // should-side: union of clauses, per-doc sum in clause (ci) order
     val shouldSum: Option[DataFrame] = if (should.isEmpty) None else Some {
       should.zipWithIndex.map { case (q, ci) =>

@@ -181,8 +181,6 @@ object TermAutomaton {
 
   /** Parse-and-rank convenience: top-k by (score DESC, docId ASC). */
   def topK(idx: OpenIndex, q: Compiled, k: Int): DataFrame = {
-    val m = matches(idx, q)
-    val live = idx.deletes.fold(m)(d => m.join(d, Seq("docId"), "left_anti"))
-    live.orderBy(desc("score"), asc("docId")).limit(k)
+    idx.run(QueryEngine.Request(QueryEngine.Scored(matches(idx, q)), k))
   }
 }

@@ -207,7 +207,7 @@ object Wand {
 
   /**
    * Distributed block-max WAND top-k. Returns (docId, score) ordered
-   * (score DESC, docId ASC), rank/score-identical to QueryEngine.topK.
+   * (score DESC, docId ASC), rank/score-identical to the exhaustive [[QueryEngine.run]] path.
    */
   def topK(spark: SparkSession, blocks: Dataset[BlockRow], infos: Seq[QueryEngine.TermInfo],
            k: Int, requireAll: Boolean = false, bucketDocs: Long = 1 << 16,

@@ -1,10 +1,8 @@
 package graft.streaming
 
-import graft.index.TimeIndex
-import graft.query.{BM25, QueryEngine}
-import graft.query.QueryEngine.TermInfo
+import graft.index.{CorpusStats, TimeIndex}
+import graft.query.QueryEngine
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicReference}
 
 /**
@@ -68,7 +66,6 @@ final class SearchJob private[streaming] (
   private def run(): Unit = {
     state.set("RUNNING")
     try {
-      import spark.implicits._
       // newest-first (IVrixDB HOT->WARM->COLD search order); range-select
       // on the TIME part so rolled `<ts>.<seq>` sub-buckets stay in range
       val sel = TimeIndex.buckets(dir)
@@ -80,15 +77,9 @@ final class SearchJob private[streaming] (
       // selected buckets -> scorers fixed up front, every bucket's scores
       // are final (identical to the one-shot cross-bucket search)
       val (docCount, sumDl) = TimeIndex.mergedStats(dir, sel)
-      val qs = terms.distinct
-      val allBlocks = TimeIndex.readBlocks(spark, dir, sel)
-      val dfs = allBlocks.filter($"term".isin(qs: _*))
-        .groupBy("term").agg(sum("n").as("df"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val infos = qs.zipWithIndex.collect { case (t, i) if dfs.contains(t) =>
-        val scorer = BM25.termScorer(1f, BM25.DefaultK1, BM25.DefaultB, dfs(t), docCount, sumDl)
-        TermInfo(t, i, scorer, scorer.score(Int.MaxValue.toFloat, 0.toByte))
-      }
+      val stats = CorpusStats(docCount, sumDl)
+      val termstats = TimeIndex.termstats(TimeIndex.readBlocks(spark, dir, sel))
+      val infos = QueryEngine.plan(termstats, stats, terms)
       if (infos.isEmpty) {
         snapshot.set(Preview(sel.size, sel.size, 0L, Nil))
         state.set("DONE"); tEnd = System.nanoTime(); return
@@ -100,8 +91,9 @@ final class SearchJob private[streaming] (
         // ONE job per bucket: top-k and the preview's hit counter come out
         // of the same pass (a second matchingDocs().count() job would
         // double per-bucket work)
-        val (rows, bucketHits) = QueryEngine.topKWithInfosAndCount(spark, bucketBlocks, infos, k)
-        hitCount += bucketHits
+        val (rows, bucketHits) = QueryEngine.runCounted(spark, bucketBlocks, termstats, stats,
+          QueryEngine.Request(QueryEngine.Infos(infos), k))
+        hitCount += bucketHits.value
         // buckets partition docs, so merging per-bucket top-k keeps the
         // global top-k exact (same (score DESC, docId ASC) order)
         merged = (merged ++ rows)

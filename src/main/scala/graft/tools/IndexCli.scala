@@ -163,12 +163,8 @@ object IndexCli {
         else if (flags.contains("--sim-sweet")) graft.query.SweetSpotSim(lnMin = 8, lnMax = 64)
         else null
       val t0 = System.nanoTime()
-      val hits = after match {
-        case Some((sc, id)) => idx.topKAfter(qTerms, k.toInt, sc, id, mode).collect()
-        case None => idx.topK(qTerms, k.toInt, mode, qNot,
-          prune = flags.contains("--prune"), wand = flags.contains("--wand"),
-          sim = sim).collect()
-      }
+      val hits = idx.run(QueryEngine.Request(QueryEngine.Terms(qTerms, sim), k.toInt, mode, qNot,
+        prune = flags.contains("--prune"), wand = flags.contains("--wand"), after = after)).collect()
       val ms = (System.nanoTime() - t0) / 1e6
       println(f"top-${k} for ${terms.mkString(" ")} (mode=$mode prune=${flags.contains("--prune")} wand=${flags.contains("--wand")}) in $ms%.0f ms:")
       hits.foreach(r => println(s"  doc=${r.getLong(0)} score=${r.getFloat(1)}"))
@@ -254,7 +250,8 @@ object IndexCli {
     // dismax rewrite)
     case "blended" :: dir :: k :: terms if terms.nonEmpty =>
       IndexStore.OpenIndex(spark, dir)
-        .blendedTopK(terms.map(t => (t, 1f)), k.toInt).collect()
+        .run(QueryEngine.Request(QueryEngine.Blended(terms.map(t => (t, 1f))), k.toInt,
+          tieBreaker = Some(0.01f))).collect()
         .foreach(r => println(s"  doc=${r.getLong(0)} score=${r.getFloat(1)}"))
 
     // cphrase <indexDir> <complex phrase body...>: groups/wildcards/fuzzies

@@ -54,7 +54,8 @@ class CompactAndHotSpec extends SparkSpec {
     val idx = IndexStore.OpenIndex(spark, dirMain)
 
     for (q <- Seq(Seq("public"), Seq("import", "class"), Seq("uniq_220_0"), Seq("public", "uniq_201_1"))) {
-      val fed = QueryEngine.topKWithHot(spark, idx.blocks, idx.termstats, idx.stats, hot, q, 20)
+      val fed = QueryEngine.run(spark, idx.blocks, idx.termstats, idx.stats,
+          QueryEngine.Request(QueryEngine.WithHot(q, hot), 20))
         .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
       val want = full.topK(q, 20).collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
       assert(fed === want, s"query $q")

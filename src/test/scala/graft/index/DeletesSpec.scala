@@ -2,6 +2,7 @@ package graft.index
 
 import graft.SparkSpec
 import graft.corpus.CorpusGen
+import graft.query.QueryEngine
 import java.nio.file.Files
 
 /** Lucene liveDocs semantics: tombstoned docs vanish from results while
@@ -36,7 +37,8 @@ class DeletesSpec extends SparkSpec {
     assert(after.head._1 === before(3)._1)
 
     // phrase + multiterm also exclude
-    assert(!idx2.multiTermTopK(org.apache.spark.sql.functions.col("term").startsWith("pub"), 10000)
+    assert(!idx2.run(QueryEngine.Request(
+        QueryEngine.Expanded(org.apache.spark.sql.functions.col("term").startsWith("pub")), 10000))
       .collect().map(_.getLong(0)).toSet.exists(victims.toSet))
 
     // compact reclaims: stats shrink; equals a fresh build over live docs
@@ -66,14 +68,15 @@ class DeletesSpec extends SparkSpec {
     IndexStore.build(spark, all, dir, numSegments = 1, shufflePartitions = 4)
     val pred = org.apache.spark.sql.functions.col("term").startsWith("pub")
     val idx = IndexStore.OpenIndex(spark, dir)
-    val allMatches = idx.multiTermTopK(pred, 1000000).collect().map(_.getLong(0)).toSeq
+    val allMatches = idx.run(QueryEngine.Request(QueryEngine.Expanded(pred), 1000000))
+      .collect().map(_.getLong(0)).toSeq
     assert(allMatches.size > 10)
     // tombstone 3 of the 5 LOWEST matching docIds — the exact case that
     // under-filled k when the anti-join ran after the limit
     val victims = allMatches.take(5).take(3)
     IndexStore.delete(spark, dir, victims)
     val idx2 = IndexStore.OpenIndex(spark, dir)
-    val got = idx2.multiTermTopK(pred, 5).collect().map(_.getLong(0)).toSeq
+    val got = idx2.run(QueryEngine.Request(QueryEngine.Expanded(pred), 5)).collect().map(_.getLong(0)).toSeq
     assert(got === allMatches.filterNot(victims.contains).take(5),
       "k must be filled from the next-lowest LIVE matches")
 
@@ -82,9 +85,12 @@ class DeletesSpec extends SparkSpec {
     val full = idx2.topK(terms, 12).collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
     val p1 = idx2.topK(terms, 4).collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
     val (d1, s1) = p1.last
-    val p2 = idx2.topKAfter(terms, 4, s1, d1).collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
+    def page(after: (Float, Long)) =
+      idx2.run(QueryEngine.Request(QueryEngine.Terms(terms), 4, after = Some(after)))
+        .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
+    val p2 = page((s1, d1))
     val (d2, s2) = p2.last
-    val p3 = idx2.topKAfter(terms, 4, s2, d2).collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
+    val p3 = page((s2, d2))
     assert(p1 ++ p2 ++ p3 === full)
     assert((p1 ++ p2 ++ p3).map(_._1).toSet.intersect(victims.toSet).isEmpty)
   }

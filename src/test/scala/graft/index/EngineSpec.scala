@@ -3,6 +3,7 @@ package graft.index
 import graft.SparkSpec
 import graft.corpus.CorpusGen
 import graft.query.{OracleScorer, QueryEngine}
+import graft.query.QueryEngine.{Request, Terms}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -27,7 +28,7 @@ class EngineSpec extends SparkSpec {
 
   def engineTopK(terms: Seq[String], k: Int, mode: QueryEngine.Mode = QueryEngine.Or,
                  mustNot: Seq[String] = Nil, prune: Boolean = false): Seq[(Long, Float)] =
-    QueryEngine.topK(spark, blocks, termstats, stats, terms, k, mode, mustNot, prune)
+    QueryEngine.run(spark, blocks, termstats, stats, Request(Terms(terms), k, mode, mustNot, prune))
       .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
 
   val queries: Seq[(Seq[String], QueryEngine.Mode, Seq[String])] = Seq(
@@ -72,7 +73,7 @@ class EngineSpec extends SparkSpec {
   test("WAND kernel is rank- and score-identical to the exhaustive path (Or and And)") {
     for ((terms, mode, neg) <- queries if neg.isEmpty; k <- Seq(1, 10, 50)) {
       val exhaustive = engineTopK(terms, k, mode, neg)
-      val wand = QueryEngine.topK(spark, blocks, termstats, stats, terms, k, mode, wand = true)
+      val wand = QueryEngine.run(spark, blocks, termstats, stats, Request(Terms(terms), k, mode, wand = true))
         .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
       assert(wand === exhaustive, s"terms=$terms mode=$mode k=$k")
     }
@@ -95,7 +96,7 @@ class EngineSpec extends SparkSpec {
       }).size.toLong
     }
     def run(terms: Seq[String], mode: QueryEngine.Mode, thr: Int) =
-      QueryEngine.topKWithTotal(spark, blocks, termstats, stats, terms, 10, mode, thr)
+      QueryEngine.runCounted(spark, blocks, termstats, stats, Request(Terms(terms), 10, mode), thr)
 
     // single term: df IS the count; bound class follows the threshold rule
     val dfPublic = trueCount(Seq("public"), QueryEngine.Or)
@@ -151,7 +152,7 @@ class EngineSpec extends SparkSpec {
       }),
       (col("term").isin("val", "var", "def"), (t: String) => Set("val", "var", "def")(t)))
     for (((pred, bpred), i) <- cases.zipWithIndex; k <- Seq(5, 50)) {
-      val got = QueryEngine.multiTermTopK(spark, blocks, termstats, pred, k)
+      val got = QueryEngine.run(spark, blocks, termstats, stats, Request(QueryEngine.Expanded(pred), k))
         .select("docId").collect().map(_.getLong(0)).toSeq
       assert(got === brute(bpred, k), s"case $i k=$k")
     }
@@ -166,7 +167,7 @@ class EngineSpec extends SparkSpec {
     val hashTs = IndexBuilder.termStats(hashBlocks).cache()
     for ((terms, mode, neg) <- queries if neg.isEmpty; k <- Seq(1, 10, 50)) {
       val exhaustive = engineTopK(terms, k, mode, neg)
-      val wand = QueryEngine.topK(spark, hashBlocks, hashTs, stats, terms, k, mode, wand = true)
+      val wand = QueryEngine.run(spark, hashBlocks, hashTs, stats, Request(Terms(terms), k, mode, wand = true))
         .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
       assert(wand === exhaustive, s"terms=$terms mode=$mode k=$k")
     }
@@ -192,7 +193,7 @@ class EngineSpec extends SparkSpec {
     val infos = QueryEngine.plan(ts, cs, Seq("common"))
     val got = graft.query.Wand.topK(spark, b, infos, 3, decodeCounter = Some(ctr))
       .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
-    val want = QueryEngine.topK(spark, b, ts, cs, Seq("common"), 3)
+    val want = QueryEngine.run(spark, b, ts, cs, Request(Terms(Seq("common")), 3))
       .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
     assert(got === want)
     assert(ctr.value < totalBlocks / 2,
@@ -205,10 +206,10 @@ class EngineSpec extends SparkSpec {
     val full = engineTopK(terms, 30)
     val page1 = engineTopK(terms, 10)
     val (d1, s1) = page1.last
-    val page2 = QueryEngine.topKAfter(spark, blocks, termstats, stats, terms, 10, s1, d1)
+    val page2 = QueryEngine.run(spark, blocks, termstats, stats, Request(Terms(terms), 10, after = Some((s1, d1))))
       .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
     val (d2, s2) = page2.last
-    val page3 = QueryEngine.topKAfter(spark, blocks, termstats, stats, terms, 10, s2, d2)
+    val page3 = QueryEngine.run(spark, blocks, termstats, stats, Request(Terms(terms), 10, after = Some((s2, d2))))
       .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
     assert(page1 ++ page2 ++ page3 === full)
   }

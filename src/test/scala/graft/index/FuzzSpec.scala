@@ -52,7 +52,8 @@ class FuzzSpec extends SparkSpec {
         }
         val want = OracleScorer.topK(corpusLocal, terms, k, mode, mustNot)
         def run(prune: Boolean, wand: Boolean) =
-          QueryEngine.topK(spark, blocks, termstats, stats, terms, k, mode, mustNot, prune, wand)
+          QueryEngine.run(spark, blocks, termstats, stats,
+            QueryEngine.Request(QueryEngine.Terms(terms), k, mode, mustNot, prune, wand))
             .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
         assert(run(prune = false, wand = false) === want, s"trial=$trial q=$q exhaustive terms=$terms mode=$mode k=$k neg=$mustNot")
         if (mustNot.isEmpty)
@@ -125,7 +126,8 @@ class FuzzSpec extends SparkSpec {
             Some((id, (mx + other * tb).toFloat))
           }
         }.sortBy { case (id, s) => (-s, id) }.take(k)
-        val gotDm = QueryEngine.disMaxTopK(spark, blocks, termstats, stats, terms, tb, k)
+        val gotDm = QueryEngine.run(spark, blocks, termstats, stats,
+            QueryEngine.Request(QueryEngine.Terms(terms), k, tieBreaker = Some(tb)))
           .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
         assert(gotDm === wantDm, s"trial=$trial dismax terms=$terms tb=$tb k=$k")
       }

@@ -278,7 +278,8 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("blendedTopK: same bounded-heap plan as topK; one term-pruned scan") {
-    val plan = planOf(idx.blendedTopK(Seq(("public", 1f), ("import", 1f)), 10))
+    val plan = planOf(idx.run(graft.query.QueryEngine.Request(
+      graft.query.QueryEngine.Blended(Seq(("public", 1f), ("import", 1f))), 10, tieBreaker = Some(0.01f))))
     assert(plan.contains("TakeOrderedAndProject"), plan.take(1200))
     assert("Scan parquet".r.findAllIn(plan).size <= 1, plan.take(1200))
   }

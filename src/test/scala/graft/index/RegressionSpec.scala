@@ -22,11 +22,11 @@ class RegressionSpec extends SparkSpec {
     val blocks = IndexBuilder.packBlocks(spark, IndexBuilder.invert(spark, df), 2).cache()
     val termstats = IndexBuilder.termStats(blocks)
     val stats = IndexBuilder.corpusStats(IndexBuilder.docStats(spark, df))
-    val unpruned = QueryEngine.topK(spark, blocks, termstats, stats,
-      Seq("foo"), 1, QueryEngine.Or, mustNot = Seq("bar"), prune = false)
+    val unpruned = QueryEngine.run(spark, blocks, termstats, stats, QueryEngine.Request(
+      QueryEngine.Terms(Seq("foo")), 1, QueryEngine.Or, mustNot = Seq("bar"), prune = false))
       .collect().map(_.getLong(0)).toSeq
-    val pruned = QueryEngine.topK(spark, blocks, termstats, stats,
-      Seq("foo"), 1, QueryEngine.Or, mustNot = Seq("bar"), prune = true)
+    val pruned = QueryEngine.run(spark, blocks, termstats, stats, QueryEngine.Request(
+      QueryEngine.Terms(Seq("foo")), 1, QueryEngine.Or, mustNot = Seq("bar"), prune = true))
       .collect().map(_.getLong(0)).toSeq
     assert(unpruned === Seq(1L))
     assert(pruned === unpruned)

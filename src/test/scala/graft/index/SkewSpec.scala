@@ -65,9 +65,10 @@ class PackStrategySpec extends graft.SparkSpec {
     assert(tsR.count() === IndexBuilder.termStats(hash).count())
     // identical top-k
     val stats = IndexBuilder.corpusStats(IndexBuilder.docStats(spark, docs))
-    val a = graft.query.QueryEngine.topK(spark, range, tsR, stats, Seq("hot", "uniq42"), 10)
+    val req = graft.query.QueryEngine.Request(graft.query.QueryEngine.Terms(Seq("hot", "uniq42")), 10)
+    val a = graft.query.QueryEngine.run(spark, range, tsR, stats, req)
       .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
-    val b = graft.query.QueryEngine.topK(spark, hash, tsR, stats, Seq("hot", "uniq42"), 10)
+    val b = graft.query.QueryEngine.run(spark, hash, tsR, stats, req)
       .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
     assert(a === b)
   }

@@ -1,6 +1,7 @@
 package graft.index
 
 import graft.SparkSpec
+import graft.query.QueryEngine
 import org.apache.spark.sql.functions.col
 
 /** Context-filtered completions (reference lucene/suggest document/
@@ -46,7 +47,7 @@ class SuggestContextSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
     assert(got == explicit && got.nonEmpty)
     // constant-score twin returns the same doc set but flat scores
-    val const = idx.multiTermTopK(col("term").startsWith("s"), 10)
+    val const = idx.run(QueryEngine.Request(QueryEngine.Expanded(col("term").startsWith("s")), 10))
       .collect().map(_.getLong(0)).toSet
     assert(const == got.map(_._1).toSet)
     assert(idx.multiTermScoredTopK(col("term").startsWith("zz"), 10).collect().isEmpty)

@@ -120,6 +120,9 @@ class DedupSkewSpec extends SparkSpec {
     // growth is logarithmic and clamps at the 64-bit sketch limit
     assert(Dedup.signPlanesFor(400000, bands = 4) === 44)
     assert(Dedup.signPlanesFor(Long.MaxValue, bands = 4) === 64)
+    // the per-band clamp keeps any band count within the 64-bit sketch
+    assert(Dedup.signPlanesFor(Long.MaxValue, bands = 5) === 60)
+    assert(Dedup.signPlanesFor(Long.MaxValue, bands = 8) === 64)
   }
 
   test("occupancy-law sizing keeps exact-dup recall on a duplicate flood") {

@@ -21,6 +21,11 @@ class BlendedSpec extends SparkSpec {
     (local, IndexStore.OpenIndex(spark, dir))
   }
 
+  /** The engine's Blended request; Lucene's default rewrite is dismax, tie 0.01. */
+  private def blended(idx: IndexStore.OpenIndex, terms: Seq[(String, Float)], k: Int,
+                      tieBreaker: Option[Float] = Some(0.01f)) =
+    idx.run(QueryEngine.Request(QueryEngine.Blended(terms), k, tieBreaker = tieBreaker))
+
   /** Local brute force with the exact engine arithmetic. */
   private def brute(local: Seq[(Long, String)], terms: Seq[(String, Float)],
                     k: Int, tie: Float, dismax: Boolean): Seq[(Long, Float)] = {
@@ -54,7 +59,7 @@ class BlendedSpec extends SparkSpec {
     val (local, idx) = built
     val terms = Seq(("public", 1f), ("handler7", 2f))
     for (dismax <- Seq(true, false)) {
-      val got = idx.blendedTopK(terms, 25, tieBreaker = 0.01f, dismax = dismax)
+      val got = blended(idx, terms, 25, tieBreaker = if (dismax) Some(0.01f) else None)
         .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
       assert(got == brute(local, terms, 25, 0.01f, dismax), s"dismax=$dismax")
     }
@@ -77,15 +82,15 @@ class BlendedSpec extends SparkSpec {
     val s2 = Bm25Sim().scorer(1f, blendDf, 0L, docCount, sumTtf)
     assert(s1.score(3f, 17.toByte) == s2.score(3f, 17.toByte))
     // and the engine's top hit scores match that shared-scorer arithmetic
-    val top = idx.blendedTopK(Seq(("public", 1f), ("handler7", 1f)), 5).collect()
+    val top = blended(idx, Seq(("public", 1f), ("handler7", 1f)), 5).collect()
     assert(top.nonEmpty)
   }
 
   test("absent terms drop out; all-absent returns empty") {
     val (local, idx) = built
-    val got = idx.blendedTopK(Seq(("public", 1f), ("zzzznotaterm", 1f)), 10)
+    val got = blended(idx, Seq(("public", 1f), ("zzzznotaterm", 1f)), 10)
       .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
     assert(got == brute(local, Seq(("public", 1f)), 10, 0.01f, dismax = true))
-    assert(idx.blendedTopK(Seq(("zzzznotaterm", 1f)), 10).collect().isEmpty)
+    assert(blended(idx, Seq(("zzzznotaterm", 1f)), 10).collect().isEmpty)
   }
 }

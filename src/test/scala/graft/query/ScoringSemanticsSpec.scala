@@ -88,7 +88,8 @@ class ScoringSemanticsSpec extends SparkSpec {
       }
     }.sortBy { case (id, s) => (-s, id) }
     for (k <- Seq(1, 10, 60)) {
-      val got = QueryEngine.disMaxTopK(spark, blocks, termstats, stats, terms, tb, k)
+      val got = QueryEngine.run(spark, blocks, termstats, stats,
+          QueryEngine.Request(QueryEngine.Terms(terms), k, tieBreaker = Some(tb)))
         .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
       assert(got === want.take(k), s"k=$k")
     }

@@ -78,20 +78,21 @@ class SearcherSpec extends SparkSpec {
 
   test("multiterm leaves: constant score, sets equal the dictionary paths") {
     val prefix = hits(idx.search("handler*", 100000))
-    val wantPrefix = idx.multiTermTopK(col("term").startsWith("handler"), 100000)
+    val wantPrefix = idx.run(QueryEngine.Request(QueryEngine.Expanded(col("term").startsWith("handler")), 100000))
       .collect().map(_.getLong(0)).toSet
     assert(prefix.map(_._1).toSet === wantPrefix)
     assert(prefix.forall(_._2 === 1f))
 
     val range = hits(idx.search("[handler0 TO handler4]", 100000))
-    val wantRange = idx.multiTermTopK(col("term") >= "handler0" && col("term") <= "handler4", 100000)
+    val wantRange = idx.run(QueryEngine.Request(
+      QueryEngine.Expanded(col("term") >= "handler0" && col("term") <= "handler4"), 100000))
       .collect().map(_.getLong(0)).toSet
     assert(range.map(_._1).toSet === wantRange)
 
     val fuzzy = hits(idx.search("import~1", 100000))
-    val wantFuzzy = idx.multiTermTopK(
+    val wantFuzzy = idx.run(QueryEngine.Request(QueryEngine.Expanded(
       org.apache.spark.sql.functions.levenshtein(col("term"),
-        org.apache.spark.sql.functions.lit("import")) <= 1, 100000)
+        org.apache.spark.sql.functions.lit("import")) <= 1), 100000))
       .collect().map(_.getLong(0)).toSet
     assert(fuzzy.map(_._1).toSet === wantFuzzy)
   }

@@ -24,7 +24,8 @@ class SimilaritiesSpec extends SparkSpec {
 
   private def engineTopK(terms: Seq[String], k: Int, sim: Similarity,
                          wand: Boolean = false): Seq[(Long, Float)] =
-    QueryEngine.topK(spark, blocks, termstats, stats, terms, k, wand = wand, sim = sim)
+    QueryEngine.run(spark, blocks, termstats, stats,
+      QueryEngine.Request(QueryEngine.Terms(terms, sim), k, wand = wand))
       .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
 
   val queries: Seq[Seq[String]] = Seq(

@@ -70,11 +70,17 @@ class SearchJobSpec extends SparkSpec {
     }
 
     var got: (Seq[(Long, Float)], Long) = (Nil, -1L)
-    val jNew = countJobs { got = QueryEngine.topKWithInfosAndCount(spark, blocks, infos, 15) }
+    val req = QueryEngine.Request(QueryEngine.Infos(infos), 15)
+    val jNew = countJobs {
+      val (hits, total) = QueryEngine.runCounted(spark, blocks, TimeIndex.termstats(blocks),
+        graft.index.CorpusStats(docCount, sumDl), req)
+      got = (hits, total.value)
+    }
     var oldHits: Seq[(Long, Float)] = Nil
     var oldCount = -1L
     val jOld = countJobs {
-      oldHits = QueryEngine.topKWithInfos(spark, blocks, infos, 15)
+      oldHits = QueryEngine.run(spark, blocks, TimeIndex.termstats(blocks),
+          graft.index.CorpusStats(docCount, sumDl), req)
         .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
       oldCount = QueryEngine.matchingDocs(spark, blocks, qs).count()
     }
