@@ -45,6 +45,192 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
     assert(s(1L) > s(0L))
   }
 
+  // ---- declarative scorers pinned against a plain-Scala evaluation of the
+  // formula in each doc comment (scores are rounded to 5 decimals) ----
+
+  private val scoringTexts = Seq(
+    0L -> "spark query join the fast spark",
+    1L -> "query data the the a slow",
+    2L -> "spark spark spark join",
+    3L -> "unrelated words only here",
+    4L -> "spark query join the fast spark",
+    5L -> "data group data spark scan",
+    6L -> "the scan the scan dup",
+    7L -> "spark data query slow data data",
+    8L -> "dup spark the",
+    9L -> "",
+    10L -> "join join data query the",
+    11L -> "Spark-Query! JOIN, data? 42",
+    12L -> ("query dup " + Seq.fill(39)("w").mkString(" ")))
+  private lazy val scoringDocs = scoringTexts.toDF("doc_id", "text")
+
+  /** Collection statistics of `scoringTexts` computed without Spark. */
+  private object Ref {
+    val tfs: Map[Long, Map[String, Int]] = scoringTexts.map { case (id, t) =>
+      id -> TextOps.TokenPattern.r.findAllIn(t.toLowerCase).toSeq
+        .groupBy(identity).map { case (k, v) => k -> v.size }
+    }.toMap
+    val dl: Map[Long, Double] = tfs.map { case (id, m) => id -> m.values.sum.toDouble }
+    val n: Double = scoringTexts.size.toDouble
+    val sumTtf: Double = dl.values.sum
+    val avgdl: Double = sumTtf / n
+    def df(t: String): Double = tfs.values.count(_.contains(t)).toDouble
+    def ttf(t: String): Double = tfs.values.map(_.getOrElse(t, 0)).sum.toDouble
+    def tf(id: Long, t: String): Double = tfs(id).getOrElse(t, 0).toDouble
+    def matching(terms: Seq[String]): Seq[Long] =
+      tfs.collect { case (id, m) if terms.exists(m.contains) => id }.toSeq
+    def idf(dfx: Double): Double = math.log(1.0 + (n - dfx + 0.5) / (dfx + 0.5))
+    def bm25(freq: Double, dlx: Double, dfx: Double): Double =
+      idf(dfx) * freq / (freq + 1.2 * (1.0 - 0.75 + 0.75 * dlx / avgdl))
+    def bm25(id: Long, t: String): Double = bm25(tf(id, t), dl(id), df(t))
+    def bm25Sum(id: Long, terms: Seq[String]): Double =
+      terms.distinct.filter(tf(id, _) > 0).map(bm25(id, _)).sum
+  }
+
+  private def scoresOf(df: org.apache.spark.sql.DataFrame): Map[Long, Double] =
+    df.select(col("doc_id"), col("score")).collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+
+  private def assertScores(got: Map[Long, Double], want: Map[Long, Double]): Unit = {
+    assert(got.keySet === want.keySet)
+    want.foreach { case (id, w) =>
+      assert(math.abs(got(id) - w) <= 1e-5, s"doc $id: got ${got(id)}, want $w")
+    }
+  }
+
+  test("tfidfAll: sum of sqrt(tf)·(1 + ln((N+1)/(df+1)))/sqrt(dl), OR and AND") {
+    val q = Seq("spark", "slow")
+    def want(ids: Seq[Long]) = ids.map(id => id -> q.filter(Ref.tf(id, _) > 0).map { t =>
+      math.sqrt(Ref.tf(id, t)) * (1.0 + math.log((Ref.n + 1.0) / (Ref.df(t) + 1.0))) /
+        math.sqrt(Ref.dl(id))
+    }.sum).toMap
+    assertScores(scoresOf(TextOps.tfidfAll(scoringDocs, "doc_id", "text", q)),
+      want(Ref.matching(q)))
+    val both = Ref.matching(q).filter(id => q.forall(Ref.tf(id, _) > 0))
+    assert(both === Seq(7L))
+    assertScores(scoresOf(TextOps.tfidfAll(scoringDocs, "doc_id", "text", q,
+      mode = "and")), want(both))
+  }
+
+  test("lmDirichletAll: sum of max(0, ln(1 + tf/(mu·p)) + ln(mu/(dl+mu))), p = (ttf+1)/(sumTtf+1)") {
+    val q = Seq("data", "w")
+    val mu = 2000.0
+    val want = Ref.matching(q).map(id => id -> q.filter(Ref.tf(id, _) > 0).map { t =>
+      val p = (Ref.ttf(t) + 1.0) / (Ref.sumTtf + 1.0)
+      math.max(0.0, math.log(1.0 + Ref.tf(id, t) / (mu * p)) + math.log(mu / (Ref.dl(id) + mu)))
+    }.sum).toMap
+    assertScores(scoresOf(TextOps.lmDirichletAll(scoringDocs, "doc_id", "text", q)), want)
+  }
+
+  test("dfiAll: sum of log2((tf − e)/sqrt(e) + 1) over tf > e, e = (ttf+1)·dl/(sumTtf+1)") {
+    val q = Seq("data", "spark", "dup")
+    val want = Ref.matching(q).map(id => id -> q.filter(Ref.tf(id, _) > 0).map { t =>
+      val e = (Ref.ttf(t) + 1.0) * Ref.dl(id) / (Ref.sumTtf + 1.0)
+      val f = Ref.tf(id, t)
+      if (f <= e) 0.0 else math.log((f - e) / math.sqrt(e) + 1.0) / math.log(2.0)
+    }.sum).toMap
+    assert(want(12L) == 0.0 && want.values.exists(_ > 0.0))
+    assertScores(scoresOf(TextOps.dfiAll(scoringDocs, "doc_id", "text", q)), want)
+  }
+
+  test("axiomaticAll: sum of tf/(tf + s0 + s0·dl/avgdl)·((N+1)/df)^k") {
+    val q = Seq("spark", "dup")
+    val (s0, k) = (0.25, 0.35)
+    val want = Ref.matching(q).map(id => id -> q.filter(Ref.tf(id, _) > 0).map { t =>
+      val f = Ref.tf(id, t)
+      f / (f + s0 + s0 * Ref.dl(id) / Ref.avgdl) * math.pow((Ref.n + 1.0) / Ref.df(t), k)
+    }.sum).toMap
+    assertScores(scoresOf(TextOps.axiomaticAll(scoringDocs, "doc_id", "text", q)), want)
+  }
+
+  test("bm25QuantizedNorms: BM25 with dl through the SmallFloat norm byte, exact avgdl") {
+    val q = Seq("query", "dup")
+    def qdl(d: Double) = graft.codec.SmallFloat.byte4ToInt(
+      graft.codec.SmallFloat.intToByte4(d.toInt)).toDouble
+    assert(qdl(Ref.dl(12L)) != Ref.dl(12L)) // the long doc's norm is lossy
+    val want = Ref.matching(q).map(id => id -> q.filter(Ref.tf(id, _) > 0)
+      .map(t => Ref.bm25(Ref.tf(id, t), qdl(Ref.dl(id)), Ref.df(t))).sum).toMap
+    assertScores(scoresOf(TextOps.bm25QuantizedNorms(scoringDocs, "doc_id", "text", q)), want)
+  }
+
+  test("bm25ReqOpt: every required term must match, optional terms only add") {
+    val (req, opt) = (Seq("spark"), Seq("query", "slow"))
+    val want = Ref.matching(req).filter(id => req.forall(Ref.tf(id, _) > 0))
+      .map(id => id -> Ref.bm25Sum(id, req ++ opt)).toMap
+    assertScores(scoresOf(TextOps.bm25ReqOpt(scoringDocs, "doc_id", "text", req, opt)), want)
+  }
+
+  test("commonTerms: df > maxTermFrequency·N terms only add score; all-high falls back to OR") {
+    val q = Seq("dup", "the", "spark")
+    val (high, low) = q.partition(t => Ref.df(t) > 0.4 * Ref.n)
+    assert(low === Seq("dup") && high === Seq("the", "spark"))
+    val want = Ref.matching(low).map(id => id -> Ref.bm25Sum(id, q)).toMap
+    assertScores(scoresOf(TextOps.commonTerms(scoringDocs, "doc_id", "text", q, 0.4)), want)
+    val allHigh = Seq("the", "spark")
+    assertScores(scoresOf(TextOps.commonTerms(scoringDocs, "doc_id", "text", allHigh, 0.1)),
+      Ref.matching(allHigh).map(id => id -> Ref.bm25Sum(id, allHigh)).toMap)
+  }
+
+  test("synonymBm25: one pseudo-term, summed tf, df = max member df") {
+    val syn = Seq("spark", "join")
+    val dfMax = syn.map(Ref.df).max
+    val want = Ref.matching(syn).map { id =>
+      id -> Ref.bm25(syn.map(Ref.tf(id, _)).sum, Ref.dl(id), dfMax)
+    }.toMap
+    assertScores(scoresOf(TextOps.synonymBm25(scoringDocs, "doc_id", "text", syn)), want)
+  }
+
+  test("disjunctionMaxBm25: max + tie·(sum − max) of the per-term BM25 scores") {
+    val q = Seq("spark", "query", "data")
+    val want = Ref.matching(q).map { id =>
+      val s = q.filter(Ref.tf(id, _) > 0).map(Ref.bm25(id, _))
+      id -> (s.max + 0.1 * (s.sum - s.max))
+    }.toMap
+    assertScores(scoresOf(TextOps.disjunctionMaxBm25(scoringDocs, "doc_id", "text", q, 0.1)),
+      want)
+  }
+
+  test("maxScoreBm25: must terms gate and sum, should terms dismax with tie") {
+    val (must, should) = (Seq("spark"), Seq("query", "data"))
+    val want = Ref.matching(must).map { id =>
+      val s = should.filter(Ref.tf(id, _) > 0).map(Ref.bm25(id, _))
+      id -> (Ref.bm25Sum(id, must) + (if (s.isEmpty) 0.0 else s.max + 0.3 * (s.sum - s.max)))
+    }.toMap
+    assertScores(scoresOf(TextOps.maxScoreBm25(scoringDocs, "doc_id", "text", must, should,
+      0.3)), want)
+  }
+
+  test("coveringBm25: per-doc minimum match, BM25 sum and the matched-clause count") {
+    val q = Seq("spark", "query", "data")
+    val got = TextOps.coveringBm25(scoringDocs, "doc_id", "text", q,
+        lit(1) + col("doc_id") % 3)
+      .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getLong(2))).toMap
+    val want = Ref.matching(q).flatMap { id =>
+      val nm = q.count(Ref.tf(id, _) > 0)
+      if (nm >= 1 + id % 3) Some(id -> (Ref.bm25Sum(id, q), nm.toLong)) else None
+    }.toMap
+    assertScores(got.map { case (id, (s, _)) => id -> s }, want.map { case (id, (s, _)) => id -> s })
+    assert(got.map { case (id, (_, nm)) => id -> nm } === want.map { case (id, (_, nm)) => id -> nm })
+  }
+
+  test("bm25Expanded: every dictionary term the predicate selects keeps its own BM25") {
+    val expanded = Ref.tfs.values.flatMap(_.keys).filter(_.startsWith("s")).toSeq.distinct
+    assert(expanded.sorted === Seq("scan", "slow", "spark"))
+    val want = Ref.matching(expanded).map(id => id -> Ref.bm25Sum(id, expanded)).toMap
+    assertScores(scoresOf(TextOps.bm25Expanded(scoringDocs, "doc_id", "text",
+      col("tok").startsWith("s"))), want)
+  }
+
+  test("bm25FeatureSaturation: BM25 plus weight·(1 − pivot/(f + pivot)) on matching docs") {
+    val q = Seq("spark")
+    val want = Ref.matching(q).map { id =>
+      val f = (id + 1).toDouble / 2.0
+      id -> (Ref.bm25Sum(id, q) + 1.5 * (1.0 - 4.0 / (f + 4.0)))
+    }.toMap
+    assertScores(scoresOf(TextOps.bm25FeatureSaturation(scoringDocs, "doc_id", "text", q,
+      (col("doc_id") + 1) / 2.0, weight = 1.5, pivot = 4.0)), want)
+  }
+
   test("phraseMatch finds consecutive tokens only") {
     val m = TextOps.phraseMatch(docs, "doc_id", "text", Seq("query", "join"))
       .select("doc_id").as[Long].collect().toSet
