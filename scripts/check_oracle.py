@@ -4,7 +4,7 @@
 parquet against DuckDB running the oracle SQL on the same tables."""
 import json, sys, glob, os
 import duckdb
-import pandas as pd
+from verify_outputs import norm, read_output
 
 sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 out_dir = sys.argv[2] if len(sys.argv) > 2 else "target/verify-out"
@@ -54,14 +54,8 @@ for name, sql in sorted(oracle.items()):
         print(f"ORACLE-ERR {name}: {e}")
         fail += 1
         continue
-    spark = pd.concat([pd.read_parquet(p) for p in glob.glob(f"{spark_path}/*.parquet")],
-                      ignore_index=True) if glob.glob(f"{spark_path}/*.parquet") else pd.DataFrame()
+    spark = read_output(spark_path)
     # driver semantics: sort columns by name, then compare value multisets
-    def norm(df):
-        df = df.reindex(sorted(df.columns), axis=1)
-        df = df.astype(object).where(pd.notnull(df), None)
-        rows = sorted([tuple(str(v) for v in r) for r in df.itertuples(index=False)])
-        return df.columns.tolist(), rows
     sc, sr = norm(spark)
     dc, dr = norm(duck)
     if sc != dc:

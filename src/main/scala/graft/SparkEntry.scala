@@ -452,7 +452,7 @@ object SparkEntry {
       "doc_id", "text", Seq("spark", "query", "join"))),
 
     "ft_bm25_and" -> ((s, d) => TextOps.bm25All(rd(s, d, "documents"),
-      "doc_id", "text", Seq("spark", "data"), mode = "and")),
+      "doc_id", "text", Seq("spark", "data"), mode = QueryEngine.And)),
 
     "ft_bm25_not" -> ((s, d) => TextOps.bm25All(rd(s, d, "documents"),
       "doc_id", "text", Seq("spark", "query"), mustNot = Seq("slow"))),

@@ -267,14 +267,14 @@ final case class MorphSegmentFilter(dictName: String = "ja_demo",
         // POS-stop drops nodes by tag (nori KoreanPartOfSpeechStopFilter:
         // particles/endings/suffixes removed AT the segmenter, positions
         // compact densely); decompound expands compound entries into their
-        // morpheme parts (DISCARD replaces; MIXED also emits the compound
-        // as a synonym-style overlap on the first part)
+        // morpheme parts (DISCARD replaces; MIXED emits the compound first,
+        // then its parts with the first part overlapping it, as nori does)
         val nodes = Lattice.segmentNodes(run.toString, dict)
           .filterNot(nd => stopPos(nd.pos))
         val emitted: Seq[(String, Boolean)] = nodes.flatMap { nd =>
           if (decompound == "none" || nd.parts.isEmpty) Seq(nd.surface -> false)
           else if (decompound == "discard") nd.parts.map(_ -> false)
-          else (nd.parts.head -> false) +: (nd.surface -> true) +:
+          else (nd.surface -> false) +: (nd.parts.head -> true) +:
             nd.parts.tail.map(_ -> false)
         }
         val base = t.pos + shift

@@ -94,29 +94,17 @@ object Classify {
    * aggregate, class constants broadcast.
    */
   def bm25nb(labeled: DataFrame, unlabeled: DataFrame, idCol: String = "doc_id",
-             textCol: String = "text", classCol: String = "source",
-             k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val ltf = TextOps.termFreqs(labeled, idCol, textCol) // (idCol, tok, tf)
-    val dl = ltf.groupBy(idCol).agg(sum("tf").as("dl"))
-    val global = labeled.agg(count("*").cast("double").as("n"))
-      .crossJoin(dl.agg(sum("dl").as("tot")))
-      .withColumn("avgdl", col("tot") / col("n"))
-    val dfs = ltf.groupBy("tok").agg(count("*").cast("double").as("df"))
+             textCol: String = "text", classCol: String = "source"): DataFrame = {
+    val tr = TextOps.termRows(labeled, idCol, textCol, lit(true))
     val cls = labeled.select(col(idCol).cast("long").as(idCol), col(classCol).as("cls"))
     // class-term constant: idf over the class "field" (one token per doc)
-    val classConst = cls.groupBy("cls").agg(count("*").cast("double").as("class_docs"))
-      .crossJoin(broadcast(global.select("n")))
-      .withColumn("sc",
-        log(lit(1.0) + (col("n") - col("class_docs") + 0.5) / (col("class_docs") + 0.5))
-          / (lit(1.0) + k1))
+    val classConst = cls.groupBy("cls").agg(count("*").as("class_docs"))
+      .crossJoin(broadcast(tr.stats.select("n")))
+      .withColumn("sc", TextOps.bm25Idf(col("n"), col("class_docs")) / (lit(1.0) + TextOps.K1))
       .select("cls", "sc")
     // per (class, word): best BM25 score of the word across the class docs
-    val wordBest = ltf.join(cls, idCol).join(dl, idCol).join(dfs, "tok")
-      .crossJoin(broadcast(global))
-      .withColumn("s",
-        log(lit(1.0) + (col("n") - col("df") + 0.5) / (col("df") + 0.5)) *
-          col("tf") / (col("tf") + lit(k1) * (lit(1.0) - b + lit(b) * col("dl") / col("avgdl"))))
-      .groupBy("cls", "tok").agg(max("s").as("sw"))
+    val wordBest = tr.vocabulary.join(cls, idCol)
+      .groupBy("cls", "tok").agg(max(TextOps.Bm25.score(col("dl"))).as("sw"))
 
     val testTf = TextOps.termFreqs(unlabeled, idCol, textCol)
     val scored = testTf
@@ -148,24 +136,15 @@ object Classify {
    */
   def knn(labeled: DataFrame, unlabeled: DataFrame, k: Int, idCol: String = "doc_id",
           textCol: String = "text", classCol: String = "source",
-          maxDfRatio: Double = 0.5, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val ltf = TextOps.termFreqs(labeled, idCol, textCol)
-    val dl = ltf.groupBy(idCol).agg(sum("tf").as("dl"))
-    val stats = labeled.agg(count("*").as("n"))
-      .crossJoin(dl.agg(sum("dl").as("tot")))
-      .withColumn("avgdl", col("tot") / col("n"))
-    val dfs = ltf.groupBy("tok").agg(count("*").as("df"))
-    // query terms: DISTINCT tokens of each test doc (the MLT term set)
-    val qterms = TextOps.termFreqs(unlabeled, idCol, textCol)
-      .select(col(idCol).as("test_id"), col("tok"))
-    val scoredPairs = qterms
-      .join(dfs, "tok").crossJoin(broadcast(stats))
+          maxDfRatio: Double = 0.5): DataFrame = {
+    // BM25 weight of every labeled (doc, token), stop-word tokens dropped
+    val weights = TextOps.termRows(labeled, idCol, textCol, lit(true)).vocabulary
       .filter(col("df") <= col("n") * maxDfRatio) // stop-word guard
-      .join(ltf.withColumnRenamed(idCol, "train_id"), "tok")
-      .join(dl.withColumnRenamed(idCol, "train_id"), "train_id")
-      .withColumn("s",
-        log(lit(1.0) + (col("n") - col("df") + 0.5) / (col("df") + 0.5)) *
-          col("tf") / (col("tf") + lit(k1) * (lit(1.0) - b + lit(b) * col("dl") / col("avgdl"))))
+      .select(col(idCol).as("train_id"), col("tok"), TextOps.Bm25.score(col("dl")).as("s"))
+    // query terms: DISTINCT tokens of each test doc (the MLT term set)
+    val scoredPairs = TextOps.termFreqs(unlabeled, idCol, textCol)
+      .select(col(idCol).as("test_id"), col("tok"))
+      .join(weights, "tok")
       .groupBy("test_id", "train_id").agg(round(sum("s"), 6).as("sim"))
     val topK = scoredPairs
       .withColumn("rn", row_number().over(

@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.query.QueryEngine
+import scala.jdk.CollectionConverters._
 
 /**
  * Text analysis + fulltext scoring over a documents table, expressed with
@@ -43,6 +45,14 @@ object TextOps {
 
   private val TokenRe = java.util.regex.Pattern.compile(TokenPattern)
 
+  /** Distinct tokens of one lowercased text with their occurrence counts. */
+  private def countTokens(text: String): java.util.HashMap[String, Int] = {
+    val m = new java.util.HashMap[String, Int]()
+    val it = TokenRe.matcher(text)
+    while (it.find()) m.merge(it.group(), 1, Integer.sum)
+    m
+  }
+
   /** Per-doc term frequencies: (id, tok, tf). ONE narrow typed pass — the
     * tf aggregation happens in a per-doc local map, so token occurrences
     * never enter a shuffle (the declarative explode→groupBy(id,tok) form
@@ -55,174 +65,219 @@ object TextOps {
     docs.select(col(idCol).cast("long"), lower(coalesce(col(textCol), lit(""))))
       .as[(Long, String)]
       .flatMap { case (id, text) =>
-        val m = new java.util.HashMap[String, Int]()
-        val it = TokenRe.matcher(text)
-        while (it.find()) m.merge(it.group(), 1, Integer.sum)
-        scala.jdk.CollectionConverters.MapHasAsScala(m).asScala
-          .iterator.map { case (t, c) => (id, t, c.toLong) }
+        countTokens(text).asScala.iterator.map { case (t, c) => (id, t, c.toLong) }
       }
       .toDF(idCol, "tok", "tf")
   }
 
-  /**
-   * BM25 scores of every matching doc for an OR query, computed declaratively
-   * in double precision (the driver-oracle-parity path; the float-exact
-   * Lucene arithmetic lives in graft.query.BM25).
-   *
-   *   idf  = ln(1 + (N - df + 0.5)/(df + 0.5))
-   *   score(d) = Σ_t idf_t * tf/(tf + k1*(1 - b + b*dl/avgdl))
-   *
-   * Plan shape at scale: tf/dl aggregations are partial+final; the query-term
-   * filter is pushed below the tf aggregation (only q-term postings shuffle);
-   * stats (N, avgdl, df) are single-row/broadcast joins.
-   */
-  /** Per-(doc, query-term) BM25-scored frame: (idCol, tok, s DOUBLE) — the
-    * shared arithmetic of bm25All / bm25ReqOpt (one definition of the
-    * oracle-checked idf/avgdl formulas). */
-  private def scoredTerms(docs: DataFrame, idCol: String, textCol: String,
-                          terms: Seq[String], k1: Double, b: Double): DataFrame = {
-    val tf = termFreqs(docs, idCol, textCol)
-    val dl = tf.groupBy(idCol).agg(sum("tf").as("dl"))
-    // avgdl = total tokens / ALL docs (token-less docs included) — the same
-    // denominator as graft.query.BM25 / Lucene's sumTotalTermFreq/docCount
-    val stats = docs.agg(count("*").as("n"))
-      .crossJoin(dl.agg(sum("dl").as("__totDl")))
-      .withColumn("avgdl", col("__totDl") / col("n"))
-    val qtf = tf.filter(col("tok").isin(terms: _*))
-    val dfs = qtf.groupBy("tok").agg(count("*").as("df"))
-    qtf
-      .join(broadcast(dfs), "tok")
-      .join(dl, idCol)
-      .crossJoin(broadcast(stats))
-      .withColumn("idf", log(lit(1.0) + (col("n") - col("df") + 0.5) / (col("df") + 0.5)))
-      .withColumn("s", col("idf") * col("tf") /
-        (col("tf") + lit(k1) * (lit(1.0) - b + lit(b) * col("dl") / col("avgdl"))))
-      .select(col(idCol), col("tok"), col("s"))
+  // ---------------------------------------------------------------------
+  // Declarative scoring: one stats frame, one term formula per model. The
+  // double-precision twin of the engine's float scorers (graft.query); the
+  // DuckDB oracle SQL hashes exactly these doubles, rounded to 5.
+  // ---------------------------------------------------------------------
+
+  /** [[termFreqs]] plus lengths, in the same typed pass: (id, tok, tf, dl)
+    * per distinct token of a doc, and ONE length row per doc with a null
+    * tok and tf 0. So dl, the doc count and the total length need no
+    * per-doc groupBy and no join back on the id. A token-less doc keeps its
+    * length row (dl 0): the doc count is Lucene's docCount over ALL docs. */
+  private def tokenRows(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    docs.select(col(idCol).cast("long"), lower(coalesce(col(textCol), lit(""))))
+      .as[(Long, String)]
+      .flatMap { case (id, text) =>
+        val counts = countTokens(text).asScala
+        val dl = counts.valuesIterator.map(_.toLong).sum
+        Iterator.single((id, null: String, 0L, dl)) ++
+          counts.iterator.map { case (t, c) => (id, t, c.toLong, dl) }
+      }
+      .toDF(idCol, "tok", "tf", "dl")
   }
 
-  /** ClassicSimilarity (TF-IDF) scoring — the reference's other stock
-    * similarity (search/similarities/ClassicSimilarity.java:39-63 /
-    * TFIDFSimilarity.java:543-549): score = Σ sqrt(tf) · idf · (1/sqrt(dl))
-    * with idf = 1 + ln((docCount+1)/(df+1)) — idf applied ONCE
-    * (TFIDFScorer.score = tf(freq) · queryWeight · normValue, queryWeight =
-    * boost · idf; the idf² of pre-7 Lucene died with queryNorm). Same
-    * shuffle shape as [[bm25All]]; only the arithmetic differs. */
-  def tfidfAll(docs: DataFrame, idCol: String, textCol: String,
-               terms: Seq[String], mode: String = "or"): DataFrame = {
-    val tf = termFreqs(docs, idCol, textCol)
-    val dl = tf.groupBy(idCol).agg(sum("tf").as("dl"))
-    val n = docs.agg(count("*").as("n"))
-    val qtf = tf.filter(col("tok").isin(terms: _*))
-    val dfs = qtf.groupBy("tok").agg(count("*").as("df"))
-    val scored = qtf
-      .join(broadcast(dfs), "tok")
-      .join(dl, idCol)
-      .crossJoin(broadcast(n))
-      .withColumn("idf", lit(1.0) + log((col("n") + 1.0) / (col("df") + 1.0)))
-      .withColumn("s", sqrt(col("tf")) * col("idf") / sqrt(col("dl")))
-      .groupBy(idCol)
-      .agg(sum("s").as("score_raw"), count("*").as("nMatched"))
-    val filtered = mode match {
-      case "and" => scored.filter(col("nMatched") === terms.distinct.size)
-      case _     => scored
-    }
-    filtered.select(col(idCol), round(col("score_raw"), 5).as("score"))
+  /** The stats frame of one declarative query over one text column —
+    * Lucene's TermStatistics and CollectionStatistics as DataFrames:
+    *  - `rows`: (id, tok, tf, dl) of the tokens the predicate selects;
+    *  - `dfs`: (tok, df, ttf) of those tokens;
+    *  - `stats`: ONE row (n, sumTtf, avgdl); n counts every doc, token-less
+    *    ones included, and avgdl = sumTtf/n, as BM25Similarity has it;
+    *  - `lengths`: (id, dl) of every doc. */
+  private[operators] final case class TermRows(idCol: String, rows: DataFrame,
+                                               dfs: DataFrame, stats: DataFrame,
+                                               lengths: DataFrame) {
+    /** (id, tok, tf, dl, df, ttf, n, sumTtf, avgdl): the columns a [[Model]]
+      * scores. dfs and stats are BROADCAST — right for a query's terms. */
+    def terms: DataFrame = rows.join(broadcast(dfs), "tok").crossJoin(broadcast(stats))
+
+    /** [[terms]] for a vocabulary-wide predicate: its dfs frame is as large
+      * as the vocabulary, so the join is left to the planner. */
+    def vocabulary: DataFrame = rows.join(dfs, "tok").crossJoin(broadcast(stats))
+
+    /** (id, tok, s): every term row scored by `model`. */
+    def scored(model: Model): DataFrame =
+      terms.select(col(idCol), col("tok"), model.score(col("dl")).as("s"))
+
+    /** `frame` with ONE df for every term, the max of their dfs (the
+      * SynonymQuery / BlendedTermQuery pseudo-term stats), and the stats. */
+    def withMaxDf(frame: DataFrame): DataFrame =
+      frame.crossJoin(broadcast(dfs.agg(max("df").as("df")))).crossJoin(broadcast(stats))
   }
 
-  /** LMDirichletSimilarity scoring — Bayesian-smoothed language model
-    * (search/similarities/LMDirichletSimilarity.java:73-78; collection model
-    * LMSimilarity.java:148-156): per matched term
+  /** [[TermRows]] of the tokens of `textCol` that `tokPred` selects (a
+    * Column over `tok`; `lit(true)` selects the whole vocabulary). */
+  private[operators] def termRows(docs: DataFrame, idCol: String, textCol: String,
+                                  tokPred: Column): TermRows = {
+    val all = tokenRows(docs, idCol, textCol)
+    val isLength = col("tok").isNull
+    val rows = all.filter(!isLength && tokPred)
+    TermRows(idCol, rows,
+      dfs = rows.groupBy("tok").agg(count("*").as("df"), sum("tf").as("ttf")),
+      stats = all.agg(count(when(isLength, 1)).as("n"), sum("tf").as("sumTtf"))
+        .withColumn("avgdl", col("sumTtf") / col("n")),
+      lengths = all.filter(isLength).select(col(idCol), col("dl")))
+  }
+
+  /** A similarity model: its per-(doc, term) score over the columns of
+    * [[TermRows.terms]], with the doc length passed in (`dl`, or the
+    * norm-quantized `qdl` of the engine twins). One definition per model,
+    * in the oracle SQL's operand order, so every double is bit-identical to
+    * the one the oracle hashes. The parameters are the oracle SQL's
+    * literals: k1 = 1.2, b = 0.75, mu = 2000, s0 = 0.25, k = 0.35. */
+  private[operators] sealed trait Model { def score(dl: Column): Column }
+
+  private[operators] val K1 = 1.2
+  private val B = 0.75
+
+  /** BM25's idf (BM25Similarity.java:37): ln(1 + (N − df + 0.5)/(df + 0.5)). */
+  private[operators] def bm25Idf(n: Column, df: Column): Column =
+    log(lit(1.0) + (n - df + 0.5) / (df + 0.5))
+
+  /** BM25 term weight: idf · tf/(tf + k1·(1 − b + b·dl/avgdl)). A boost
+    * rides in `idf`, multiplied in first (BlendedTermQuery, edismax pf2). */
+  private[operators] def bm25(idf: Column, tf: Column, dl: Column, avgdl: Column): Column =
+    idf * tf / (tf + lit(K1) * (lit(1.0) - B + lit(B) * dl / avgdl))
+
+  /** BM25Similarity (search/similarities/BM25Similarity.java:37). */
+  private[operators] case object Bm25 extends Model {
+    def score(dl: Column): Column = bm25(bm25Idf(col("n"), col("df")), col("tf"), dl, col("avgdl"))
+  }
+
+  /** ClassicSimilarity (search/similarities/ClassicSimilarity.java:39-63 /
+    * TFIDFSimilarity.java:543-549): sqrt(tf) · idf · (1/sqrt(dl)) with
+    * idf = 1 + ln((docCount+1)/(df+1)) — idf applied ONCE (TFIDFScorer.score
+    * = tf(freq) · queryWeight · normValue, queryWeight = boost · idf; the
+    * idf² of pre-7 Lucene died with queryNorm). */
+  private case object ClassicTfIdf extends Model {
+    def score(dl: Column): Column =
+      sqrt(col("tf")) * (lit(1.0) + log((col("n") + 1.0) / (col("df") + 1.0))) / sqrt(dl)
+  }
+
+  private val Mu = 2000.0
+
+  /** LMDirichletSimilarity (search/similarities/LMDirichletSimilarity.java:
+    * 73-78; collection model LMSimilarity.java:148-156):
     *   p(w|C) = (ttf+1)/(sumTtf+1)
     *   s      = max(0, ln(1 + tf/(mu·p)) + ln(mu/(dl+mu)))
-    * summed per doc; double arithmetic rounded to 5 (oracle-parity path;
-    * the norm-quantized engine version is `LMDirichletSim`). Same shuffle
-    * shape as [[bm25All]]. */
-  def lmDirichletAll(docs: DataFrame, idCol: String, textCol: String,
-                     terms: Seq[String], mu: Double = 2000.0): DataFrame = {
-    val tf = termFreqs(docs, idCol, textCol)
-    val dl = tf.groupBy(idCol).agg(sum("tf").as("dl"))
-    val sumTtf = tf.agg(sum("tf").as("sum_ttf"))
-    val qtf = tf.filter(col("tok").isin(terms: _*))
-    val ttfs = qtf.groupBy("tok").agg(sum("tf").as("ttf"))
-    qtf
-      .join(broadcast(ttfs), "tok")
-      .join(dl, idCol)
-      .crossJoin(broadcast(sumTtf))
-      .withColumn("p", (col("ttf") + 1.0) / (col("sum_ttf") + 1.0))
-      .withColumn("s", greatest(lit(0.0),
-        log(lit(1.0) + col("tf") / (lit(mu) * col("p"))) +
-          log(lit(mu) / (col("dl") + mu))))
-      .groupBy(idCol).agg(round(sum("s"), 5).as("score"))
+    * (the norm-quantized engine version is `LMDirichletSim`). */
+  private case object LMDirichlet extends Model {
+    def score(dl: Column): Column = {
+      val p = (col("ttf") + 1.0) / (col("sumTtf") + 1.0)
+      greatest(lit(0.0), log(lit(1.0) + col("tf") / (lit(Mu) * p)) + log(lit(Mu) / (dl + Mu)))
+    }
   }
 
-  /** DFISimilarity scoring — divergence from independence, standardized
-    * measure (search/similarities/DFISimilarity.java:55-66,
-    * IndependenceStandardized.java:37): per matched term
+  /** DFISimilarity, standardized measure (search/similarities/
+    * DFISimilarity.java:55-66, IndependenceStandardized.java:37):
     *   expected = (ttf+1)·dl/(sumTtf+1)
     *   s        = tf <= expected ? 0 : log2((tf−expected)/√expected + 1)
-    * summed per doc (double arithmetic, rounded to 5 — oracle-parity path;
-    * the norm-quantized engine version is `DfiSim`). Same shuffle shape as
-    * [[bm25All]]. */
-  def dfiAll(docs: DataFrame, idCol: String, textCol: String,
-             terms: Seq[String]): DataFrame = {
-    val tf = termFreqs(docs, idCol, textCol)
-    val dl = tf.groupBy(idCol).agg(sum("tf").as("dl"))
-    val sumTtf = tf.agg(sum("tf").as("sum_ttf"))
-    val qtf = tf.filter(col("tok").isin(terms: _*))
-    val ttfs = qtf.groupBy("tok").agg(sum("tf").as("ttf"))
-    qtf
-      .join(broadcast(ttfs), "tok")
-      .join(dl, idCol)
-      .crossJoin(broadcast(sumTtf))
-      .withColumn("expected", (col("ttf") + 1.0) * col("dl") / (col("sum_ttf") + 1.0))
-      .withColumn("s", when(col("tf") <= col("expected"), 0.0)
-        .otherwise(log2((col("tf") - col("expected")) / sqrt(col("expected")) + 1.0)))
-      .groupBy(idCol).agg(round(sum("s"), 5).as("score"))
-  }
-
-  /** AxiomaticF2EXP scoring (search/similarities/AxiomaticF2EXP.java:61-87,
-    * Axiomatic.java:104-114): per matched term
-    *   s = tf/(tf + s0 + s0·dl/avgdl) · ((N+1)/df)^k
-    * summed per doc (tf = ln = 1, gamma = 0 in the F2EXP lens; the clip at
-    * zero never fires for positive components). Same shuffle shape as
-    * [[bm25All]]; the norm-quantized engine version is `AxiomaticF2ExpSim`. */
-  def axiomaticAll(docs: DataFrame, idCol: String, textCol: String,
-                   terms: Seq[String], s0: Double = 0.25,
-                   k: Double = 0.35): DataFrame = {
-    val tf = termFreqs(docs, idCol, textCol)
-    val dl = tf.groupBy(idCol).agg(sum("tf").as("dl"))
-    val stats = docs.agg(count("*").as("n"))
-      .crossJoin(dl.agg(sum("dl").as("__tot")))
-      .withColumn("avgdl", col("__tot") / col("n"))
-    val qtf = tf.filter(col("tok").isin(terms: _*))
-    val dfs = qtf.groupBy("tok").agg(count("*").as("df"))
-    qtf
-      .join(broadcast(dfs), "tok")
-      .join(dl, idCol)
-      .crossJoin(broadcast(stats))
-      .withColumn("s",
-        col("tf") / (col("tf") + s0 + lit(s0) * col("dl") / col("avgdl")) *
-          pow((col("n") + 1.0) / col("df"), k))
-      .groupBy(idCol).agg(round(sum("s"), 5).as("score"))
-  }
-
-  def bm25All(docs: DataFrame, idCol: String, textCol: String, terms: Seq[String],
-              k1: Double = 1.2, b: Double = 0.75,
-              mode: String = "or", mustNot: Seq[String] = Nil): DataFrame = {
-    val agg = scoredTerms(docs, idCol, textCol, terms, k1, b).groupBy(idCol)
-      .agg(sum("s").as("score_raw"), count("*").as("nMatched"))
-    val filtered = mode match {
-      case "and" => agg.filter(col("nMatched") === terms.distinct.size)
-      case _     => agg
+    * (the norm-quantized engine version is `DfiSim`). */
+  private case object Dfi extends Model {
+    def score(dl: Column): Column = {
+      val expected = (col("ttf") + 1.0) * dl / (col("sumTtf") + 1.0)
+      when(col("tf") <= expected, 0.0)
+        .otherwise(log2((col("tf") - expected) / sqrt(expected) + 1.0))
     }
-    val anti =
-      if (mustNot.isEmpty) filtered
-      else filtered.join(
-        tokenTable(docs, idCol, textCol).filter(col("tok").isin(mustNot: _*))
-          .select(idCol).distinct(),
-        Seq(idCol), "left_anti")
-    anti.select(col(idCol), round(col("score_raw"), 5).as("score"))
   }
+
+  private val S0 = 0.25
+  private val AxK = 0.35
+
+  /** AxiomaticF2EXP (search/similarities/AxiomaticF2EXP.java:61-87,
+    * Axiomatic.java:104-114):
+    *   s = tf/(tf + s0 + s0·dl/avgdl) · ((N+1)/df)^k
+    * (tf = ln = 1, gamma = 0 in the F2EXP lens; the clip at zero never
+    * fires for positive components; the norm-quantized engine version is
+    * `AxiomaticF2ExpSim`). */
+  private case object AxiomaticF2Exp extends Model {
+    def score(dl: Column): Column =
+      col("tf") / (col("tf") + S0 + lit(S0) * dl / col("avgdl")) *
+        pow((col("n") + 1.0) / col("df"), AxK)
+  }
+
+  /** The sum combine: per doc, raw = Σ s over its scored term rows and
+    * nm = how many of them `counted` selects (all by default) — the AND
+    * count, the required-set count or a per-doc min-match count. */
+  private def summed(scored: DataFrame, idCol: String, counted: Column = lit(true)): DataFrame =
+    scored.groupBy(idCol).agg(sum("s").as("raw"), count(when(counted, 1)).as("nm"))
+
+  /** The DisjunctionMax combine (DisjunctionMaxScorer.java:58-70):
+    * max + tie·(Σ − max) of an aggregated score column. */
+  private def dismax(s: Column, tie: Double): Column = max(s) + lit(tie) * (sum(s) - max(s))
+
+  /** The output score: rounded to 5 decimals, as the oracle SQL rounds. */
+  private def score5(c: Column): Column = round(c, 5).as("score")
+
+  /** Every doc matching a term query, scored by `model` and summed: OR
+    * (any term) or AND (every distinct term), minus the docs that contain
+    * a `mustNot` term. Returns (idCol, score).
+    *
+    * Plan shape at scale: the tokenizer pass is narrow; only query-term rows
+    * survive its filter; the per-term dfs and the one-row collection stats
+    * are BROADCAST; one shuffle of partial sums into the per-doc combine. */
+  private def scoreAll(model: Model, docs: DataFrame, idCol: String, textCol: String,
+                       terms: Seq[String], mode: QueryEngine.Mode,
+                       mustNot: Seq[String] = Nil): DataFrame = {
+    val agg = summed(termRows(docs, idCol, textCol, col("tok").isin(terms: _*)).scored(model), idCol)
+    val gated = mode match {
+      case QueryEngine.And => agg.filter(col("nm") === terms.distinct.size)
+      case QueryEngine.Or  => agg
+    }
+    val kept =
+      if (mustNot.isEmpty) gated
+      else gated.join(tokenRows(docs, idCol, textCol).filter(col("tok").isin(mustNot: _*))
+        .select(idCol), Seq(idCol), "left_anti")
+    kept.select(col(idCol), score5(col("raw")))
+  }
+
+  /** BM25 scores of every doc matching an OR/AND query, minus `mustNot`
+    * docs, computed declaratively in double precision (the float-exact
+    * Lucene arithmetic lives in graft.query.BM25):
+    *   idf  = ln(1 + (N - df + 0.5)/(df + 0.5))
+    *   score(d) = Σ_t idf_t * tf/(tf + k1*(1 - b + b*dl/avgdl)) */
+  def bm25All(docs: DataFrame, idCol: String, textCol: String, terms: Seq[String],
+              mode: QueryEngine.Mode = QueryEngine.Or,
+              mustNot: Seq[String] = Nil): DataFrame =
+    scoreAll(Bm25, docs, idCol, textCol, terms, mode, mustNot)
+
+  /** ClassicSimilarity (TF-IDF) scores of an OR/AND query ([[ClassicTfIdf]]). */
+  def tfidfAll(docs: DataFrame, idCol: String, textCol: String,
+               terms: Seq[String], mode: QueryEngine.Mode = QueryEngine.Or): DataFrame =
+    scoreAll(ClassicTfIdf, docs, idCol, textCol, terms, mode)
+
+  /** LMDirichletSimilarity scores of an OR query ([[LMDirichlet]], mu = 2000). */
+  def lmDirichletAll(docs: DataFrame, idCol: String, textCol: String,
+                     terms: Seq[String]): DataFrame =
+    scoreAll(LMDirichlet, docs, idCol, textCol, terms, QueryEngine.Or)
+
+  /** DFISimilarity scores of an OR query ([[Dfi]]). */
+  def dfiAll(docs: DataFrame, idCol: String, textCol: String,
+             terms: Seq[String]): DataFrame =
+    scoreAll(Dfi, docs, idCol, textCol, terms, QueryEngine.Or)
+
+  /** AxiomaticF2EXP scores of an OR query ([[AxiomaticF2Exp]], s0 = 0.25, k = 0.35). */
+  def axiomaticAll(docs: DataFrame, idCol: String, textCol: String,
+                   terms: Seq[String]): DataFrame =
+    scoreAll(AxiomaticF2Exp, docs, idCol, textCol, terms, QueryEngine.Or)
 
   /** SmallFloat norm-quantization buckets `(lo, hi, qdl)` — one row per
     * norm byte, qdl = the bucket start the engine scores with after the
@@ -239,6 +294,15 @@ object TextOps {
     }
   }
 
+  /** `frame` with `qdl`: the norm-byte bucket start of its `dlCol`, the
+    * doc length the engine scores with ([[normQuantBuckets]]). */
+  private def quantized(frame: DataFrame, dlCol: String): DataFrame = {
+    val spark = frame.sparkSession
+    import spark.implicits._
+    frame.join(broadcast(normQuantBuckets.toDF("lo", "hi", "qdl")),
+      col(dlCol) >= col("lo") && col(dlCol) <= col("hi"))
+  }
+
   /** Declarative twin of the ENGINE's BM25 ranking: identical formula to
     * [[bm25All]] but the per-doc length in the denominator is the
     * SmallFloat-quantized `qdl` the engine actually scores with (norm byte
@@ -248,28 +312,10 @@ object TextOps {
     * twin exists so the driver oracle can hash-check the engine's top-k
     * doc set AND its scores (to 5 decimals) against DuckDB. */
   def bm25QuantizedNorms(docs: DataFrame, idCol: String, textCol: String,
-                         terms: Seq[String],
-                         k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val tf = termFreqs(docs, idCol, textCol)
-    val dl = tf.groupBy(idCol).agg(sum("tf").as("dl"))
-    val buckets = broadcast(normQuantBuckets.toDF("lo", "hi", "qdl"))
-    val qdl = dl.join(buckets, col("dl") >= col("lo") && col("dl") <= col("hi"))
-      .select(col(idCol), col("qdl"))
-    val stats = docs.agg(count("*").as("n"))
-      .crossJoin(dl.agg(sum("dl").as("__totDl")))
-      .withColumn("avgdl", col("__totDl") / col("n"))
-    val qtf = tf.filter(col("tok").isin(terms: _*))
-    val dfs = qtf.groupBy("tok").agg(count("*").as("df"))
-    qtf
-      .join(broadcast(dfs), "tok")
-      .join(qdl, idCol)
-      .crossJoin(broadcast(stats))
-      .withColumn("s",
-        log(lit(1.0) + (col("n") - col("df") + 0.5) / (col("df") + 0.5)) * col("tf") /
-          (col("tf") + lit(k1) * (lit(1.0) - b + lit(b) * col("qdl") / col("avgdl"))))
-      .groupBy(idCol).agg(round(sum("s"), 5).as("score"))
+                         terms: Seq[String]): DataFrame = {
+    val tr = termRows(docs, idCol, textCol, col("tok").isin(terms: _*))
+    summed(quantized(tr.terms, "dl").select(col(idCol), Bm25.score(col("qdl")).as("s")), idCol)
+      .select(col(idCol), score5(col("raw")))
   }
 
   /** BM25F combined-field scoring, declarative quantized twin of
@@ -286,64 +332,49 @@ object TextOps {
     * integral (the reference requires ≥ 1) so the float/double rounding
     * paths agree exactly. */
   def bm25fQuantized(docs: DataFrame, idCol: String,
-                     fields: Seq[(String, Double)], terms: Seq[String],
-                     k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
+                     fields: Seq[(String, Double)], terms: Seq[String]): DataFrame = {
     val qs = terms.distinct
-    val buckets = broadcast(normQuantBuckets.toDF("lo", "hi", "qdl"))
-    val perField = fields.map { case (c, w) =>
-      val tf = termFreqs(docs, idCol, c)
-      val dl = tf.groupBy(idCol).agg(sum("tf").as("dl"))
-      (w, tf, dl)
-    }
+    val perField = fields.map { case (c, w) => w -> termRows(docs, idCol, c, col("tok").isin(qs: _*)) }
     // combined quantized dl: per-field byte4 bucket, weighted sum, round,
     // bucket AGAIN (the MultiFieldNormValues re-encode)
-    val wqdl = perField.map { case (w, _, dl) =>
-      dl.join(buckets, col("dl") >= col("lo") && col("dl") <= col("hi"))
-        .select(col(idCol), (col("qdl") * w).as("wqdl"))
+    val ndl = perField.map { case (w, tr) =>
+      quantized(tr.lengths, "dl").select(col(idCol), (col("qdl") * w).as("wqdl"))
     }.reduce(_.unionByName(_))
       .groupBy(idCol).agg(round(sum("wqdl")).cast("long").as("ndl"))
-    val cqdl = wqdl.join(buckets, col("ndl") >= col("lo") && col("ndl") <= col("hi"))
-      .select(col(idCol), col("qdl").cast("double").as("cqdl"))
-    // pseudo stats: df = max over (field, term); avgdl exact
-    val dfMax = perField.map { case (_, tf, _) =>
-      tf.filter(col("tok").isin(qs: _*)).groupBy("tok").agg(count("*").as("df"))
-    }.reduce(_.unionByName(_)).agg(max("df").cast("double").as("df"))
-    val sumTtf = perField.map { case (w, _, dl) =>
-      dl.agg((sum("dl") * w).as("wttf"))
-    }.reduce(_.unionByName(_)).agg(sum("wttf").as("sttf"))
-    val stats = docs.agg(count("*").cast("double").as("n"))
-      .crossJoin(sumTtf).crossJoin(dfMax)
+    val cqdl = quantized(ndl, "ndl").select(col(idCol), col("qdl").cast("double").as("cqdl"))
+    // pseudo stats: df = max over (field, term); avgdl over the weighted total length
+    val dfMax = perField.map(_._2.dfs.select("df"))
+      .reduce(_.unionByName(_)).agg(max("df").cast("double").as("df"))
+    val weightedTtf = perField.map { case (w, tr) => tr.stats.select((col("sumTtf") * w).as("wttf")) }
+      .reduce(_.unionByName(_)).agg(sum("wttf").as("sttf"))
+    val stats = perField.head._2.stats.select(col("n").cast("double").as("n"))
+      .crossJoin(weightedTtf).crossJoin(dfMax)
       .withColumn("avgdl", col("sttf") / col("n"))
     // blended frequency over matching (field, term) rows
-    val freq = perField.map { case (w, tf, _) =>
-      tf.filter(col("tok").isin(qs: _*))
-        .select(col(idCol), (col("tf") * w).as("wtf"))
-    }.reduce(_.unionByName(_))
+    val freq = perField.map { case (w, tr) => tr.rows.select(col(idCol), (col("tf") * w).as("wtf")) }
+      .reduce(_.unionByName(_))
       .groupBy(idCol).agg(sum("wtf").as("freq"))
     freq.join(cqdl, idCol)
       .crossJoin(broadcast(stats))
-      .select(col(idCol), round(
-        log(lit(1.0) + (col("n") - col("df") + 0.5) / (col("df") + 0.5)) *
-          col("freq") /
-          (col("freq") + lit(k1) * (lit(1.0) - b + lit(b) * col("cqdl") / col("avgdl"))),
-        5).as("score"))
+      .select(col(idCol),
+        score5(bm25(bm25Idf(col("n"), col("df")), col("freq"), col("cqdl"), col("avgdl"))))
   }
+
+  /** Docs matching every `required` term, scored by the BM25 sum of all
+    * their matched query terms. */
+  private def requiredSum(tr: TermRows, required: Seq[String]): DataFrame =
+    summed(tr.scored(Bm25), tr.idCol, col("tok").isin(required: _*))
+      .filter(col("nm") === required.distinct.size)
+      .select(col(tr.idCol), score5(col("raw")))
 
   /** req-opt scoring (ReqOptSumScorer, Boolean2ScorerSupplier.java:107-114):
     * docs must match ALL `required` terms; `optional` terms add to the score
     * when present but never gate matching. */
   def bm25ReqOpt(docs: DataFrame, idCol: String, textCol: String,
-                 required: Seq[String], optional: Seq[String],
-                 k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val all = (required ++ optional).distinct
-    scoredTerms(docs, idCol, textCol, all, k1, b).groupBy(idCol)
-      .agg(sum("s").as("score_raw"),
-        sum(when(col("tok").isin(required: _*), 1).otherwise(0)).as("n_required"))
-      .filter(col("n_required") === required.distinct.size)
-      .select(col(idCol), round(col("score_raw"), 5).as("score"))
-  }
+                 required: Seq[String], optional: Seq[String]): DataFrame =
+    requiredSum(
+      termRows(docs, idCol, textCol, col("tok").isin((required ++ optional).distinct: _*)),
+      required)
 
   /**
    * CommonTermsQuery (reference lucene/queries/src/java/org/apache/lucene/
@@ -358,18 +389,15 @@ object TextOps {
    * (termstats lookup, no corpus pass).
    */
   def commonTerms(docs: DataFrame, idCol: String, textCol: String,
-                  terms: Seq[String], maxTermFrequency: Double,
-                  k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+                  terms: Seq[String], maxTermFrequency: Double): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
     val qs = terms.distinct
-    val docCount = docs.count().toDouble
-    val dfs = tokenTable(docs, idCol, textCol)
-      .filter(col("tok").isin(qs: _*))
-      .groupBy("tok").agg(countDistinct(idCol).as("df"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val (high, low) = qs.partition(t =>
-      dfs.getOrElse(t, 0L) > maxTermFrequency * docCount)
-    if (low.isEmpty) bm25All(docs, idCol, textCol, qs, k1, b)
-    else bm25ReqOpt(docs, idCol, textCol, required = low, optional = high, k1, b)
+    val tr = termRows(docs, idCol, textCol, col("tok").isin(qs: _*))
+    val high = tr.dfs.crossJoin(tr.stats)
+      .filter(col("df") > lit(maxTermFrequency) * col("n"))
+      .select("tok").as[String].collect().toSet
+    requiredSum(tr, qs.filterNot(high))
   }
 
   /**
@@ -382,23 +410,10 @@ object TextOps {
    * QueryEngine.synonymTopK).
    */
   def synonymBm25(docs: DataFrame, idCol: String, textCol: String,
-                  synonyms: Seq[String], k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val tf = termFreqs(docs, idCol, textCol)
-    val dl = tf.groupBy(idCol).agg(sum("tf").as("dl"))
-    val stats = docs.agg(count("*").as("n"))
-      .crossJoin(dl.agg(sum("dl").as("__totDl")))
-      .withColumn("avgdl", col("__totDl") / col("n"))
-    val qtf = tf.filter(col("tok").isin(synonyms: _*))
-    // pseudo-term stats: df = MAX of the member dfs (not the union size)
-    val dfMax = qtf.groupBy("tok").agg(count("*").as("df"))
-      .agg(max("df").as("df"))
-    qtf.groupBy(idCol).agg(sum("tf").as("syn_tf"))
-      .join(dl, idCol)
-      .crossJoin(broadcast(dfMax))
-      .crossJoin(broadcast(stats))
-      .withColumn("idf", log(lit(1.0) + (col("n") - col("df") + 0.5) / (col("df") + 0.5)))
-      .select(col(idCol), round(col("idf") * col("syn_tf") /
-        (col("syn_tf") + lit(k1) * (lit(1.0) - b + lit(b) * col("dl") / col("avgdl"))), 5).as("score"))
+                  synonyms: Seq[String]): DataFrame = {
+    val tr = termRows(docs, idCol, textCol, col("tok").isin(synonyms: _*))
+    tr.withMaxDf(tr.rows.groupBy(idCol, "dl").agg(sum("tf").as("tf")))
+      .select(col(idCol), score5(Bm25.score(col("dl"))))
   }
 
   /** DisjunctionMax over real per-term BM25 scores (reference
@@ -406,11 +421,9 @@ object TextOps {
     * the others). Double arithmetic rounded to 5; [[disjunctionMax]] keeps
     * the integer tf variant for exact-count pipelines. */
   def disjunctionMaxBm25(docs: DataFrame, idCol: String, textCol: String,
-                         terms: Seq[String], tiebreak: Double,
-                         k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    scoredTerms(docs, idCol, textCol, terms, k1, b)
-      .groupBy(idCol)
-      .agg(round(max("s") + lit(tiebreak) * (sum("s") - max("s")), 5).as("score"))
+                         terms: Seq[String], tiebreak: Double): DataFrame =
+    termRows(docs, idCol, textCol, col("tok").isin(terms: _*)).scored(Bm25)
+      .groupBy(idCol).agg(score5(dismax(col("s"), tiebreak)))
 
   /** MaxScoreQParser combine (reference solr/core/src/java/org/apache/solr/
     * search/MaxScoreQParser.java:34-78): required terms gate matching and
@@ -418,21 +431,15 @@ object TextOps {
     * DisjunctionMaxQuery, contributing max + tie·(sum − max). Declarative
     * oracle-parity twin of [[graft.query.Searcher.maxScoreRewrite]]. */
   def maxScoreBm25(docs: DataFrame, idCol: String, textCol: String,
-                   must: Seq[String], should: Seq[String], tie: Double,
-                   k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val all = (must ++ should).distinct
-    scoredTerms(docs, idCol, textCol, all, k1, b)
+                   must: Seq[String], should: Seq[String], tie: Double): DataFrame = {
+    val isMust = col("tok").isin(must: _*)
+    val isShould = col("tok").isin(should: _*)
+    termRows(docs, idCol, textCol, col("tok").isin((must ++ should).distinct: _*)).scored(Bm25)
       .groupBy(idCol)
-      .agg(
-        sum(when(col("tok").isin(must: _*), col("s"))).as("ms"),
-        sum(when(col("tok").isin(must: _*), 1).otherwise(0)).as("nm"),
-        max(when(col("tok").isin(should: _*), col("s"))).as("mx"),
-        sum(when(col("tok").isin(should: _*), col("s"))).as("ss"))
+      .agg(sum(when(isMust, col("s"))).as("ms"), count(when(isMust, 1)).as("nm"),
+        dismax(when(isShould, col("s")), tie).as("ds"))
       .filter(col("nm") === must.distinct.size)
-      .select(col(idCol), round(
-        coalesce(col("ms"), lit(0.0)) +
-          coalesce(col("mx") + lit(tie) * (col("ss") - col("mx")), lit(0.0)),
-        5).as("score"))
+      .select(col(idCol), score5(coalesce(col("ms"), lit(0.0)) + coalesce(col("ds"), lit(0.0))))
   }
 
   /**
@@ -480,14 +487,11 @@ object TextOps {
     * threshold joins from the doc table as a column, so the gate is one
     * codegen filter after the scoring agg. */
   def coveringBm25(docs: DataFrame, idCol: String, textCol: String,
-                   terms: Seq[String], minMatch: Column,
-                   k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    scoredTerms(docs, idCol, textCol, terms, k1, b)
-      .groupBy(idCol).agg(sum("s").as("raw"), count("*").as("nm"))
+                   terms: Seq[String], minMatch: Column): DataFrame =
+    summed(termRows(docs, idCol, textCol, col("tok").isin(terms: _*)).scored(Bm25), idCol)
       .join(docs.select(col(idCol), minMatch.cast("long").as("__mm")), Seq(idCol))
       .filter(col("nm") >= col("__mm"))
-      .select(col(idCol), round(col("raw"), 5).as("score"),
-        col("nm").as("n_matched"))
+      .select(col(idCol), score5(col("raw")), col("nm").as("n_matched"))
 
   /** MultiTermQuery SCORING_BOOLEAN_REWRITE twin (reference search/
     * MultiTermQuery.java SCORING_BOOLEAN_REWRITE + ScoringRewrite.java:
@@ -497,22 +501,9 @@ object TextOps {
     * Double arithmetic rounded to 5; the engine path is
     * `OpenIndex.multiTermScoredTopK`. */
   def bm25Expanded(docs: DataFrame, idCol: String, textCol: String,
-                   tokPred: Column, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val tf = termFreqs(docs, idCol, textCol)
-    val dl = tf.groupBy(idCol).agg(sum("tf").as("dl"))
-    val stats = docs.agg(count("*").as("n"))
-      .crossJoin(dl.agg(sum("dl").as("__totDl")))
-      .withColumn("avgdl", col("__totDl") / col("n"))
-    val qtf = tf.filter(tokPred)
-    val dfs = qtf.groupBy("tok").agg(count("*").as("df"))
-    qtf.join(broadcast(dfs), "tok")
-      .join(dl, idCol)
-      .crossJoin(broadcast(stats))
-      .withColumn("s",
-        log(lit(1.0) + (col("n") - col("df") + 0.5) / (col("df") + 0.5)) * col("tf") /
-          (col("tf") + lit(k1) * (lit(1.0) - b + lit(b) * col("dl") / col("avgdl"))))
-      .groupBy(idCol).agg(round(sum("s"), 5).as("score"))
-  }
+                   tokPred: Column): DataFrame =
+    summed(termRows(docs, idCol, textCol, tokPred).scored(Bm25), idCol)
+      .select(col(idCol), score5(col("raw")))
 
   /** Declarative BlendedTermQuery twin (reference lucene/core search/
     * BlendedTermQuery.java:273-284: df = max over the terms' dfs so rare
@@ -520,30 +511,15 @@ object TextOps {
     * arithmetic rounded to 5 — the float-exact engine path is
     * a [[graft.query.QueryEngine.Blended]] request. */
   def blendedBm25(docs: DataFrame, idCol: String, textCol: String,
-                  terms: Seq[(String, Double)], tieBreaker: Double,
-                  k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val tf = termFreqs(docs, idCol, textCol)
+                  terms: Seq[(String, Double)], tieBreaker: Double): DataFrame = {
     val names = terms.map(_._1)
-    val dl = tf.groupBy(idCol).agg(sum("tf").as("dl"))
-    val stats = docs.agg(count("*").as("n"))
-      .crossJoin(dl.agg(sum("dl").as("__totDl")))
-      .withColumn("avgdl", col("__totDl") / col("n"))
-    val qtf = tf.filter(col("tok").isin(names: _*))
-    // the blend: ONE df for every term = max of their dfs
-    val dfBlend = qtf.select(col("tok")).distinct()
-      .join(tf.groupBy("tok").agg(countDistinct(idCol).as("df")), "tok")
-      .agg(max("df").as("df"))
     val boosts = terms.toMap
-    val boostCol = coalesce(names.map(t => when(col("tok") === t, lit(boosts(t)))): _*)
-    val sc = qtf
-      .crossJoin(broadcast(dfBlend))
-      .join(dl, idCol)
-      .crossJoin(broadcast(stats))
-      .withColumn("s", boostCol *
-        log(lit(1.0) + (col("n") - col("df") + 0.5) / (col("df") + 0.5)) * col("tf") /
-        (col("tf") + lit(k1) * (lit(1.0) - b + lit(b) * col("dl") / col("avgdl"))))
-    sc.groupBy(idCol)
-      .agg(round(max("s") + lit(tieBreaker) * (sum("s") - max("s")), 5).as("score"))
+    val boost = coalesce(names.map(t => when(col("tok") === t, lit(boosts(t)))): _*)
+    val tr = termRows(docs, idCol, textCol, col("tok").isin(names: _*))
+    tr.withMaxDf(tr.rows)
+      .select(col(idCol),
+        bm25(boost * bm25Idf(col("n"), col("df")), col("tf"), col("dl"), col("avgdl")).as("s"))
+      .groupBy(idCol).agg(score5(dismax(col("s"), tieBreaker)))
   }
 
   /** Declarative FeatureField twin (reference document/FeatureField.java
@@ -554,14 +530,11 @@ object TextOps {
     * [[graft.index.IndexStore.OpenIndex.topKWithFeature]]. */
   def bm25FeatureSaturation(docs: DataFrame, idCol: String, textCol: String,
                             terms: Seq[String], feature: Column,
-                            weight: Double, pivot: Double,
-                            k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    scoredTerms(docs, idCol, textCol, terms, k1, b)
-      .groupBy(idCol).agg(sum("s").as("raw"))
+                            weight: Double, pivot: Double): DataFrame =
+    summed(termRows(docs, idCol, textCol, col("tok").isin(terms: _*)).scored(Bm25), idCol)
       .join(docs.select(col(idCol), feature.as("__f")), Seq(idCol))
       .select(col(idCol),
-        round(col("raw") + lit(weight) * (lit(1.0) - lit(pivot) / (col("__f") + lit(pivot))), 5)
-          .as("score"))
+        score5(col("raw") + lit(weight) * (lit(1.0) - lit(pivot) / (col("__f") + lit(pivot)))))
 
   /**
    * ExtendedDisMax (edismax) — Solr's primary user-facing query parser
@@ -583,24 +556,23 @@ object TextOps {
    *    adds fieldBoost × phraseBM25, where phrase idf = Σ of the member
    *    terms' idfs and tf = adjacent-occurrence count (PhraseWeight feeds
    *    all term stats to one Similarity scorer). Multiple pf2 fields
-   *    dismax with the same `tie`.
+   *    dismax with the same `tie`;
+   *  - `bf` is edismax's additive boost function (score += bf(doc)) and
+   *    `boostFn` the multiplicative `boost` param (score ×= boost(doc),
+   *    ExtendedDismaxQParser's BoostedQuery wrapping) — both expressions
+   *    over the doc table's columns, applied AFTER mm gating and pf2.
    *
    * Output: (idCol, score) rounded to 5 — oracle-reproducible doubles.
    *
-   * Plan shape at scale: one tf/dl aggregation pass per field (narrow typed
-   * termFreqs, partial+final aggs), stats broadcast; the pf2 adjacency join
-   * touches only the bigram terms' position rows; no window functions, no
-   * driver loops — clause fan-out is a union of per-field frames.
+   * Plan shape at scale: one stats frame per field (narrow typed
+   * tokenizer pass, partial+final aggs), stats broadcast; the pf2 adjacency
+   * join touches only the bigram terms' position rows; no window functions,
+   * no driver loops — clause fan-out is a union of per-field frames.
    */
-  /** `bf` = edismax's additive boost function (score += bf(doc));
-    * `boostFn` = the multiplicative `boost` param (score ×= boost(doc),
-    * ExtendedDismaxQParser's BoostedQuery wrapping) — both expressions
-    * over the doc table's columns, applied AFTER mm gating and pf2. */
   def edismax(docs: DataFrame, idCol: String,
               qf: Seq[(String, Double)], terms: Seq[String], mm: Int,
               tie: Double, pf2: Seq[(String, Double)] = Nil,
-              bf: Option[Column] = None, boostFn: Option[Column] = None,
-              k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+              bf: Option[Column] = None, boostFn: Option[Column] = None): DataFrame = {
     require(qf.nonEmpty && terms.nonEmpty && mm >= 1)
     def applyBoosts(scored: DataFrame): DataFrame =
       if (bf.isEmpty && boostFn.isEmpty) scored
@@ -610,37 +582,25 @@ object TextOps {
           boostFn.getOrElse(lit(1.0)).cast("double").as("__boost"))
         scored.withColumnRenamed("score", "__s")
           .join(enrich, Seq(idCol))
-          .select(col(idCol),
-            round((col("__s") + col("__bf")) * col("__boost"), 5).as("score"))
+          .select(col(idCol), score5((col("__s") + col("__bf")) * col("__boost")))
       }
-    val perField = qf.map { case (c, boost) =>
-      scoredTerms(docs, idCol, c, terms, k1, b)
+    val clauses = qf.map { case (c, boost) =>
+      termRows(docs, idCol, c, col("tok").isin(terms: _*)).scored(Bm25)
         .select(col(idCol), col("tok"), (col("s") * boost).as("bs"))
     }.reduce(_ unionByName _)
-    val clauses = perField.groupBy(col(idCol), col("tok"))
-      .agg((max("bs") + lit(tie) * (sum("bs") - max("bs"))).as("cs"))
-    val main = clauses.groupBy(idCol)
-      .agg(sum("cs").as("ms"), count("*").as("nm"))
-      .filter(col("nm") >= mm)
-      .select(col(idCol), col("ms"))
+      .groupBy(col(idCol), col("tok")).agg(dismax(col("bs"), tie).as("s"))
+    val main = summed(clauses, idCol).filter(col("nm") >= mm)
     val bigrams = terms.sliding(2).filter(_.size == 2).toSeq
     if (pf2.isEmpty || bigrams.isEmpty)
-      applyBoosts(main.select(col(idCol), round(col("ms"), 5).as("score")))
+      applyBoosts(main.select(col(idCol), score5(col("raw"))))
     else {
       val bigramTerms = bigrams.flatten.distinct
       // one frame per pf2 field: (id, bg, ps) — bg indexes the bigram so
       // cross-field dismax groups per (doc, bigram)
       val perPhraseField = pf2.map { case (c, boost) =>
-        val tf = termFreqs(docs, idCol, c)
-        val dl = tf.groupBy(idCol).agg(sum("tf").as("dl"))
-        val stats = docs.agg(count("*").as("n"))
-          .crossJoin(dl.agg(sum("dl").as("__totDl")))
-          .withColumn("avgdl", col("__totDl") / col("n"))
-        val dfs = tf.filter(col("tok").isin(bigramTerms: _*))
-          .groupBy("tok").agg(count("*").as("df"))
-        // idf per bigram = Σ member idfs over THIS field's stats; a term
-        // absent from the field has df=0 → idf = ln(1 + (N+0.5)/0.5)
-        val dfMap = dfs.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        val tr = termRows(docs, idCol, c, col("tok").isin(bigramTerms: _*))
+        val dfMap = tr.dfs.select("tok", "df").collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
         val pos = tokenPosTable(docs, idCol, c)
           .filter(col("tok").isin(bigramTerms: _*))
         val perBigram = bigrams.zipWithIndex.map { case (Seq(t1, t2), bi) =>
@@ -650,24 +610,22 @@ object TextOps {
             .groupBy(idCol).agg(count("*").cast("double").as("ptf"))
             .withColumn("bg", lit(bi))
         }.reduce(_ unionByName _)
-        val idfOf = (t: String) => {
-          val df = dfMap.getOrElse(t, 0L).toDouble
-          (n: Column) => log(lit(1.0) + (n - df + 0.5) / (df + 0.5))
-        }
-        val idfCol = coalesce(bigrams.zipWithIndex.map { case (Seq(t1, t2), bi) =>
-          when(col("bg") === bi, idfOf(t1)(col("n")) + idfOf(t2)(col("n")))
+        // idf per bigram = Σ member idfs over THIS field's stats; a term
+        // absent from the field has df=0 → idf = ln(1 + (N+0.5)/0.5)
+        val idf = coalesce(bigrams.zipWithIndex.map { case (bigram, bi) =>
+          when(col("bg") === bi, bigram.map(t =>
+            bm25Idf(col("n"), lit(dfMap.getOrElse(t, 0L).toDouble))).reduce(_ + _))
         }: _*)
         perBigram
-          .join(dl, idCol).crossJoin(broadcast(stats))
+          .join(tr.lengths, idCol).crossJoin(broadcast(tr.stats))
           .select(col(idCol), col("bg"),
-            (lit(boost) * idfCol * col("ptf") /
-              (col("ptf") + lit(k1) * (lit(1.0) - b + lit(b) * col("dl") / col("avgdl")))).as("ps"))
+            bm25(lit(boost) * idf, col("ptf"), col("dl"), col("avgdl")).as("ps"))
       }.reduce(_ unionByName _)
       val phrase = perPhraseField.groupBy(col(idCol), col("bg"))
-        .agg((max("ps") + lit(tie) * (sum("ps") - max("ps"))).as("bps"))
+        .agg(dismax(col("ps"), tie).as("bps"))
         .groupBy(idCol).agg(sum("bps").as("pb"))
       applyBoosts(main.join(phrase, Seq(idCol), "left")
-        .select(col(idCol), round(col("ms") + coalesce(col("pb"), lit(0.0)), 5).as("score")))
+        .select(col(idCol), score5(col("raw") + coalesce(col("pb"), lit(0.0)))))
     }
   }
 
@@ -683,16 +641,15 @@ object TextOps {
    * Determinism: both passes round to 5 before combining and the window
    * boundary orders by (first_pass DESC, id ASC), so the oracle's double
    * arithmetic reproduces the exact row set. Scale shape: the corpus is
-   * tokenized ONCE for both term sets (shared scoredTerms frame); window
+   * tokenized ONCE for both term sets (one shared stats frame); window
    * selection is TakeOrderedAndProject (bounded per-partition heaps), and
    * the rescore join touches only the reRankDocs-sized window.
    */
   def reRank(docs: DataFrame, idCol: String, textCol: String,
              mainTerms: Seq[String], rescoreTerms: Seq[String],
-             reRankDocs: Int, weight: Double,
-             k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val st = scoredTerms(docs, idCol, textCol,
-      (mainTerms ++ rescoreTerms).distinct, k1, b)
+             reRankDocs: Int, weight: Double): DataFrame = {
+    val st = termRows(docs, idCol, textCol,
+      col("tok").isin((mainTerms ++ rescoreTerms).distinct: _*)).scored(Bm25)
     val main = st.filter(col("tok").isin(mainTerms: _*)).groupBy(idCol)
       .agg(round(sum("s"), 5).as("first_pass"))
     val re = st.filter(col("tok").isin(rescoreTerms: _*)).groupBy(idCol)
@@ -700,8 +657,7 @@ object TextOps {
     main.orderBy(col("first_pass").desc, col(idCol).asc).limit(reRankDocs)
       .join(re, Seq(idCol), "left")
       .select(col(idCol),
-        round(col("first_pass") + lit(weight) * coalesce(col("__re"), lit(0.0)), 5)
-          .as("score"),
+        score5(col("first_pass") + lit(weight) * coalesce(col("__re"), lit(0.0))),
         col("first_pass"))
   }
 
@@ -768,23 +724,11 @@ object TextOps {
       .agg(round(max("tf") + lit(tiebreak) * (sum("tf") - max("tf")), 5).as("dmax_score"))
 
   /** Exact phrase match (ExactPhraseMatcher): docs where the terms occur at
-    * consecutive token positions. Position-array intersection per doc. */
+    * consecutive token positions — the one-term-per-slot [[multiPhraseMatch]].
+    * Returns (idCol, n_occurrences). */
   def phraseMatch(docs: DataFrame, idCol: String, textCol: String,
-                  phrase: Seq[String]): DataFrame = {
-    require(phrase.nonEmpty)
-    val pos = tokenPosTable(docs, idCol, textCol)
-    val parts = phrase.zipWithIndex.map { case (t, i) =>
-      pos.filter(col("tok") === t)
-        .groupBy(idCol).agg(collect_list(col("pos") - i).as(s"p$i"))
-    }
-    val joined = parts.reduceLeft((a, b) => a.join(b, idCol))
-    val starts = (1 until phrase.length).foldLeft(col("p0")) { (acc, i) =>
-      array_intersect(acc, col(s"p$i"))
-    }
-    joined.withColumn("n_occurrences", size(starts))
-      .filter(col("n_occurrences") > 0)
-      .select(col(idCol), col("n_occurrences"))
-  }
+                  phrase: Seq[String]): DataFrame =
+    multiPhraseMatch(docs, idCol, textCol, phrase.map(Seq(_)))
 
   /**
    * Sloppy phrase match (SloppyPhraseMatcher semantics for phrases without
@@ -967,9 +911,6 @@ object TextOps {
   // Text analysis for training-data pipelines
   // ---------------------------------------------------------------------
 
-  /** GPT-2-ish pre-tokenizer pattern: letter runs, digit runs, single
-    * non-alnum marks (the "BPE-ish regex" token estimator — training-data
-    * budgeting counts subword-ish units, not just whitespace words). */
   /** Context-filtered suggestions (reference lucene/suggest
     * CompletionQuery contexts capability): completions of `prefix` drawn
     * only from docs whose `ctxCol` equals `ctx`, weighted by IN-CONTEXT

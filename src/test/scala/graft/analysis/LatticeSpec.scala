@@ -93,7 +93,7 @@ class LatticeSpec extends AnyFunSuite {
     val chain = AnalyzerChain(Seq(
       MorphSegmentFilter("ko_demo", Set("J", "X", "C", "E"), "mixed")))
     val toks = chain.analyze("삼성전자는")
-    assert(toks.map(_.term) === Seq("삼성", "삼성전자", "전자"))
+    assert(toks.map(_.term) === Seq("삼성전자", "삼성", "전자"))
     // compound overlaps the first part; second part advances
     assert(toks.map(_.pos) === Seq(0, 0, 1))
   }

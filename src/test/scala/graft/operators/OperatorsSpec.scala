@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.query.QueryEngine
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -28,7 +29,7 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
     assert(or.keySet === Set(0L, 1L, 2L, 4L))
     // doc 0 and its dup 4 must score identically
     assert(or(0L) === or(4L))
-    val and = TextOps.bm25All(docs, "doc_id", "text", Seq("spark", "query"), mode = "and")
+    val and = TextOps.bm25All(docs, "doc_id", "text", Seq("spark", "query"), mode = QueryEngine.And)
       .select("doc_id").as[Long].collect().toSet
     assert(and === Set(0L, 4L))
     val not = TextOps.bm25All(docs, "doc_id", "text", Seq("query"), mustNot = Seq("slow"))
@@ -109,7 +110,7 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
     val both = Ref.matching(q).filter(id => q.forall(Ref.tf(id, _) > 0))
     assert(both === Seq(7L))
     assertScores(scoresOf(TextOps.tfidfAll(scoringDocs, "doc_id", "text", q,
-      mode = "and")), want(both))
+      mode = QueryEngine.And)), want(both))
   }
 
   test("lmDirichletAll: sum of max(0, ln(1 + tf/(mu·p)) + ln(mu/(dl+mu))), p = (ttf+1)/(sumTtf+1)") {
