@@ -56,6 +56,10 @@ class PlanAuditSpec extends SparkSpec {
     // WAND: the docId-bucket groupByKey is the only shuffle
     assert(exchanges(idx.topK(two, 10, wand = true)) == 1, planOf(idx.topK(two, 10, wand = true)))
     assert(exchanges(idx.topK(two, 10, And, wand = true)) == 1, planOf(idx.topK(two, 10, And, wand = true)))
+    // parsed `+a b -c`: the should clause's per-doc combine is the one
+    // shuffle; the must ⋈ should and mustNot joins broadcast
+    val parsed = idx.search("+public import -handler3", 10)
+    assert(exchanges(parsed) == 1, planOf(parsed))
   }
 
   test("docvalues scan reads ONLY the narrow columns (column pruning)") {

@@ -76,6 +76,30 @@ class SearcherSpec extends SparkSpec {
     assert(got === got.sortBy { case (id, s) => (-s, id) })
   }
 
+  test("sloppy phrase leaf: doc set equals TextOps.sloppyPhraseMatch, repeated terms included") {
+    // a small-vocabulary corpus both tokenizers split alike, dense enough
+    // that every phrase below matches some docs and misses others
+    val vocab = Seq("alpha", "beta", "gamma", "delta", "eps")
+    val rng = new scala.util.Random(7)
+    val texts = (0 until 80).map(_ => Seq.fill(6 + rng.nextInt(10))(vocab(rng.nextInt(vocab.size))).mkString(" "))
+    val d = Files.createTempDirectory("graft-sloppy").toString
+    val corpus = spark.createDataFrame(texts.zipWithIndex.map { case (t, i) => (i.toLong, t) })
+      .toDF("docId", "content")
+    IndexStore.build(spark, corpus, d, numSegments = 2, shufflePartitions = 2, withPositions = true)
+    val sIdx = IndexStore.OpenIndex(spark, d)
+    val docs = corpus.withColumnRenamed("docId", "doc_id").withColumnRenamed("content", "text")
+    for ((phrase, slop) <- Seq((Seq("alpha", "beta", "gamma"), 1), (Seq("alpha", "beta", "gamma"), 3),
+                               (Seq("gamma", "alpha"), 2), (Seq("alpha", "beta", "alpha"), 2),
+                               (Seq("delta", "delta"), 1), (Seq("beta", "eps", "beta", "eps"), 4))) {
+      val got = hits(sIdx.search(s""""${phrase.mkString(" ")}"~$slop""", 100000))
+      val want = graft.operators.TextOps.sloppyPhraseMatch(docs, "doc_id", "text", phrase, slop)
+        .collect().map(_.getLong(0)).toSet
+      assert(got.map(_._1).toSet === want, s"$phrase~$slop")
+      assert(want.nonEmpty && want.size < texts.size, s"vacuous: $phrase~$slop matched ${want.size}")
+      assert(got.forall(_._2 === 1f))
+    }
+  }
+
   test("multiterm leaves: constant score, sets equal the dictionary paths") {
     val prefix = hits(idx.search("handler*", 100000))
     val wantPrefix = idx.run(QueryEngine.Request(QueryEngine.Expanded(col("term").startsWith("handler")), 100000))
@@ -148,6 +172,33 @@ class SearcherSpec extends SparkSpec {
     got.foreach { case (id, s) =>
       val best = Seq(pub.getOrElse(id, 0f), imp.getOrElse(id, 0f)).max
       assert(s === (h3(id).toDouble + best.toDouble).toFloat, s"doc $id")
+    }
+  }
+
+  test("dismax over >= 3 clauses scores bit-for-bit like the planner's tieBreaker request") {
+    val terms = Seq("public", "import", "class", "handler3")
+    val tie = 0.3f
+    val all = QueryEngine.All
+    val want = hits(idx.run(QueryEngine.Request(QueryEngine.Terms(terms), all, tieBreaker = Some(tie)))).toMap
+    assert(want.size > 10)
+    val maxScore = hits(Searcher.searchMaxScore(idx, terms.mkString(" "), all, tie))
+    assert(maxScore.toMap === want)
+    val xml = hits(Searcher.searchXml(idx,
+      s"""<DisjunctionMaxQuery tieBreaker="$tie">${terms.take(3).map(t => s"<TermQuery>$t</TermQuery>").mkString}</DisjunctionMaxQuery>""", all))
+    assert(xml.toMap ===
+      hits(idx.run(QueryEngine.Request(QueryEngine.Terms(terms.take(3)), all, tieBreaker = Some(tie)))).toMap)
+  }
+
+  test("searchFielded with every field on one index equals search for Boost, DisMax and Const") {
+    val idxs = Map("content" -> idx, "path" -> idx)
+    val asts = Seq(
+      BoostQ(2f, BoolQ(Nil, Seq(TermQ("public"), FieldQ("path", TermQ("import"))), Nil)),
+      DisMaxQ(Seq(TermQ("public"), FieldQ("path", TermQ("import")), TermQ("class")), 0.2f),
+      ConstQ(BoolQ(Seq(FieldQ("path", PrefixQ("handler"))), Seq(TermQ("public")), Nil)))
+    for (ast <- asts) {
+      val got = hits(Searcher.searchFieldedAst(idxs, "content", ast, 100000))
+      val want = hits(idx.run(QueryEngine.Request(QueryEngine.Scored(Searcher.eval(idx, ast)), 100000)))
+      assert(got.nonEmpty && got === want, ast)
     }
   }
 
