@@ -2,7 +2,6 @@ package graft
 
 import graft.corpus.CorpusGen
 import graft.index.{IndexBuilder, IndexStore}
-import graft.codec.PostingsCodec
 import graft.operators.{Analytics => A, AtomicUpdate, Classify, Dedup, Ltr, MathEval => M, MediaContainers, Monitor, Multimodal, Pipeline => P, Relational => R, ResultClustering, Signatures, Similarity, Spans, TextOps}
 import graft.query.QueryEngine
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -489,17 +488,8 @@ object SparkEntry {
 
     // ---- the real engine: codec + segmented store + BM25 (integer-exact
     //      outputs oracle-checked; scores covered by ScalaTest goldens) ----
-    "ft_engine_tf" -> ((s, d) => {
-      import s.implicits._
-      val idx = docIndex(s, d)
-      idx.blocks.filter(col("term") === "spark")
-        .mapPartitions { it =>
-          it.flatMap { b =>
-            val (docs, tfs) = PostingsCodec.decodeBlock(b.minDoc, b.n, b.wDocs, b.wFreqs, b.docGaps, b.freqs)
-            (0 until b.n).iterator.map(i => (docs(i), tfs(i)))
-          }
-        }.toDF("doc_id", "tf")
-    }),
+    "ft_engine_tf" -> ((s, d) => docIndex(s, d).postings("spark")
+      .select(col("docId").as("doc_id"), col("tf"))),
 
     "ft_engine_and" -> ((s, d) => docIndex(s, d)
       .topK(Seq("spark", "query"), 1000000, QueryEngine.And)
@@ -700,16 +690,9 @@ object SparkEntry {
     // through the codec path, so the chain's full effect on postings is
     // oracle-checkable
     "ft_stemmed_tf" -> ((s, d) => {
-      import s.implicits._
       val idx = stemDocIndex(s, d)
-      val stem = idx.analyzeQuery("tables").head
-      idx.blocks.filter(col("term") === stem)
-        .mapPartitions { it =>
-          it.flatMap { b =>
-            val (docs, tfs) = PostingsCodec.decodeBlock(b.minDoc, b.n, b.wDocs, b.wFreqs, b.docGaps, b.freqs)
-            (0 until b.n).iterator.map(i => (docs(i), tfs(i)))
-          }
-        }.toDF("doc_id", "tf")
+      idx.postings(idx.analyzeQuery("tables").head)
+        .select(col("docId").as("doc_id"), col("tf"))
     }),
 
     // stop-filter norm semantics: doc length counts SURVIVING tokens only
@@ -1182,15 +1165,8 @@ object SparkEntry {
     // term query, ranked by tf (integer-exact) with docId tie-break; the
     // engine provides postings, the metadata join provides the group field
     "ft_engine_grouped" -> ((s, d) => {
-      import s.implicits._
-      val idx = docIndex(s, d)
-      val tf = idx.blocks.filter(col("term") === "spark")
-        .mapPartitions { it =>
-          it.flatMap { b =>
-            val (docs, tfs) = PostingsCodec.decodeBlock(b.minDoc, b.n, b.wDocs, b.wFreqs, b.docGaps, b.freqs)
-            (0 until b.n).iterator.map(i => (docs(i), tfs(i)))
-          }
-        }.toDF("doc_id", "tf")
+      val tf = docIndex(s, d).postings("spark")
+        .select(col("docId").as("doc_id"), col("tf"))
       val withLang = tf.join(rd(s, d, "documents").select("doc_id", "lang"), "doc_id")
       R.topPerGroup(withLang, Seq("lang"), Seq(desc("tf"), asc("doc_id")), 2)
         .select("lang", "doc_id", "tf", "rn")

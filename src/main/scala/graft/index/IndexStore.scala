@@ -463,11 +463,7 @@ object IndexStore {
         Some(spark.read.parquet(s"$dir/deletes").select(col("docId").cast("long").as("docId")).distinct())
       else None
     val blocks = spark.read.parquet(segDirs.map(_ + "/postings"): _*).as[BlockRow]
-    val rows0: Dataset[PostingRow] = blocks.flatMap { b =>
-      val (docs, tfs) = graft.codec.PostingsCodec.decodeBlock(
-        b.minDoc, b.n, b.wDocs, b.wFreqs, b.docGaps, b.freqs)
-      (0 until b.n).iterator.map(i => PostingRow(b.term, docs(i), tfs(i), b.norms(i)))
-    }
+    val rows0 = QueryEngine.postingRows(blocks)
     val rows = dead match {
       case Some(d) => rows0.join(d, Seq("docId"), "left_anti").as[PostingRow]
       case None => rows0
@@ -898,17 +894,8 @@ object IndexStore {
       graft.query.Searcher.searchXml(this, xml, k)
 
     /** Decoded postings of one term: (docId, tf) — the raw read API. */
-    def postings(term: String): DataFrame = {
-      import spark.implicits._
-      blocks.filter(col("term") === term)
-        .mapPartitions { it =>
-          it.flatMap { b =>
-            val (docs, tfs) = graft.codec.PostingsCodec.decodeBlock(
-              b.minDoc, b.n, b.wDocs, b.wFreqs, b.docGaps, b.freqs)
-            (0 until b.n).iterator.map(i => (docs(i), tfs(i)))
-          }
-        }.toDF("docId", "tf")
-    }
+    def postings(term: String): DataFrame =
+      QueryEngine.postingRows(blocks.filter(col("term") === term)).select("docId", "tf")
 
     /**
      * More-like-this (reference lucene/queries MoreLikeThis.java: select
@@ -1079,15 +1066,8 @@ object IndexStore {
       val cands = QueryEngine.expand(termstats, col("term").startsWith(prefix))
       if (cands.isEmpty)
         return spark.range(0).select($"id".cast("string").as("term"), lit(0.0).as("score"))
-      val pairs = blocks.filter($"term".isin(cands: _*))
-        .mapPartitions { it =>
-          it.flatMap { b =>
-            val (docs, _) = graft.codec.PostingsCodec.decodeBlock(
-              b.minDoc, b.n, b.wDocs, b.wFreqs, b.docGaps, b.freqs)
-            docs.iterator.take(b.n).map(d => (b.term, d))
-          }
-        }
-        .toDF("term", "docId").distinct()
+      val pairs = QueryEngine.postingRows(blocks.filter($"term".isin(cands: _*)))
+        .select("term", "docId").distinct()
       val ctx = docvalues
         .select(col("docId"), col(contextCol).cast("string").as("__ctx"))
         .filter(col("__ctx").isin(contexts.keys.toSeq: _*))
@@ -1420,14 +1400,6 @@ object IndexStore {
       IndexStore.applyDvPatches(spark, dir, spark.read.parquet(dvDirs: _*))
     }
 
-    /**
-     * Field-sorted top-k (SortField / TopFieldCollector analogue, reference
-     * search/SortField.java:35, TopFieldCollector.java:40): docs matching
-     * the terms (constant-score filter; mode And requires all), ordered by
-     * the doc-values sort fields with docId as the final tie-break, first
-     * k. Spark executes this as a bounded per-partition heap + driver merge
-     * (TakeOrderedAndProject) over ONLY the narrow docvalues columns.
-     */
     /** DocValuesTermsQuery / DocValuesNumbersQuery (reference lucene/
       * sandbox/src/java/org/apache/lucene/search/DocValuesTermsQuery.java:48
       * and DocValuesNumbersQuery.java): docs whose doc-values field holds
@@ -1440,18 +1412,33 @@ object IndexStore {
       liveDocs(m)
     }
 
-    def topKByField(terms: Seq[String], sortBys: Seq[(String, Boolean)], k: Int,
-                    mode: QueryEngine.Mode = QueryEngine.And): DataFrame = {
+    /** The sorted-match frame of the field-sorted and facet paths: the
+      * live docs matching the terms (constant-score filter; mode And
+      * requires all) joined to the doc-values tier, or to only its
+      * `fields` when given. */
+    private def liveMatchValues(terms: Seq[String], mode: QueryEngine.Mode,
+                                fields: Seq[String] = Nil): DataFrame =
+      liveDocs(QueryEngine.matchingDocs(spark, blocks, terms, mode)).join(
+        if (fields.isEmpty) docvalues else docvalues.select("docId", fields: _*), "docId")
+
+    /** Order by the doc-values sort fields (ascending when true), docId as
+      * the final tie-break. */
+    private def fieldSorted(matches: DataFrame, sortBys: Seq[(String, Boolean)]): DataFrame = {
       require(sortBys.nonEmpty)
-      val matched = QueryEngine.matchingDocs(spark, blocks, terms, mode)
-      val live = liveDocs(matched)
-      val sortCols = sortBys.map { case (f, asc_) =>
-        if (asc_) asc(f) else desc(f)
-      } :+ asc("docId")
-      live.join(docvalues, "docId")
-        .orderBy(sortCols: _*)
-        .limit(k)
+      matches.orderBy(sortBys.map { case (f, up) => if (up) asc(f) else desc(f) } :+ asc("docId"): _*)
     }
+
+    /**
+     * Field-sorted top-k (SortField / TopFieldCollector analogue, reference
+     * search/SortField.java:35, TopFieldCollector.java:40): docs matching
+     * the terms (constant-score filter; mode And requires all), ordered by
+     * the doc-values sort fields with docId as the final tie-break, first
+     * k. Spark executes this as a bounded per-partition heap + driver merge
+     * (TakeOrderedAndProject) over ONLY the narrow docvalues columns.
+     */
+    def topKByField(terms: Seq[String], sortBys: Seq[(String, Boolean)], k: Int,
+                    mode: QueryEngine.Mode = QueryEngine.And): DataFrame =
+      fieldSorted(liveMatchValues(terms, mode), sortBys).limit(k)
 
     /**
      * FeatureField-boosted top-k (reference lucene/core document/
@@ -1500,17 +1487,7 @@ object IndexStore {
     def cursorPage(terms: Seq[String], sortBys: Seq[(String, Boolean)], k: Int,
                    cursorMark: String = graft.query.Cursor.Start,
                    mode: QueryEngine.Mode = QueryEngine.And): (DataFrame, String) = {
-      require(sortBys.nonEmpty)
-      val after = graft.query.Cursor.parse(cursorMark)
-      val matched = QueryEngine.matchingDocs(spark, blocks, terms, mode)
-      val live = liveDocs(matched)
-      val joined = live.join(docvalues, "docId")
-      val filtered = after.fold(joined)(c =>
-        joined.filter(graft.query.Cursor.afterPredicate(sortBys, c.values)))
-      val sortCols = sortBys.map { case (f, asc_) =>
-        if (asc_) asc(f) else desc(f)
-      } :+ asc("docId")
-      val page = filtered.orderBy(sortCols: _*).limit(k)
+      val page = cursorQuery(terms, sortBys, k, cursorMark, mode)
       val rows = page.collect()
       val next =
         if (rows.isEmpty) cursorMark
@@ -1518,6 +1495,15 @@ object IndexStore {
           sortBys.map { case (f, _) => rows.last.getAs[Any](f) } :+
             rows.last.getAs[Any]("docId")).serialize
       (spark.createDataFrame(java.util.Arrays.asList(rows: _*), page.schema), next)
+    }
+
+    /** The uncollected page query of [[cursorPage]]. */
+    private[index] def cursorQuery(terms: Seq[String], sortBys: Seq[(String, Boolean)], k: Int,
+                                   cursorMark: String, mode: QueryEngine.Mode): DataFrame = {
+      val matches = liveMatchValues(terms, mode)
+      val after = graft.query.Cursor.parse(cursorMark).fold(matches)(c =>
+        matches.filter(graft.query.Cursor.afterPredicate(sortBys, c.values)))
+      fieldSorted(after, sortBys).limit(k)
     }
 
     /** Export handler (Solr /export, reference solr/core .../handler/
@@ -1528,15 +1514,8 @@ object IndexStore {
       * its range independently; no single-node bottleneck) over ONLY the
       * narrow docvalues columns. */
     def exportSorted(terms: Seq[String], sortBys: Seq[(String, Boolean)],
-                     mode: QueryEngine.Mode = QueryEngine.And): DataFrame = {
-      require(sortBys.nonEmpty)
-      val matched = QueryEngine.matchingDocs(spark, blocks, terms, mode)
-      val live = liveDocs(matched)
-      val sortCols = sortBys.map { case (f, asc_) =>
-        if (asc_) asc(f) else desc(f)
-      } :+ asc("docId")
-      live.join(docvalues, "docId").orderBy(sortCols: _*)
-    }
+                     mode: QueryEngine.Mode = QueryEngine.And): DataFrame =
+      fieldSorted(liveMatchValues(terms, mode), sortBys)
 
     /** The sorted doc-values tier for `field` (see
       * [[IndexStore.buildSortedDocValues]]). */
@@ -1597,13 +1576,10 @@ object IndexStore {
       * -> per-field-value counts, ordered (count DESC, value ASC).
       * Tombstones excluded before counting. */
     def facetByField(terms: Seq[String], field: String,
-                     mode: QueryEngine.Mode = QueryEngine.And): DataFrame = {
-      val matched = QueryEngine.matchingDocs(spark, blocks, terms, mode)
-      val live = liveDocs(matched)
-      live.join(docvalues.select(col("docId"), col(field)), "docId")
+                     mode: QueryEngine.Mode = QueryEngine.And): DataFrame =
+      liveMatchValues(terms, mode, Seq(field))
         .groupBy(field).agg(count("*").as("count"))
         .orderBy(desc("count"), asc(field))
-    }
 
     /** Field facet with the SimpleFacets option set (reference solr/core/
       * src/java/org/apache/solr/request/SimpleFacets.java getFacetTermEnumCounts
@@ -1624,9 +1600,7 @@ object IndexStore {
                          minCount: Long = 1, limit: Int = 100, offset: Int = 0,
                          sort: String = "count",
                          missing: Boolean = false): DataFrame = {
-      val matched = QueryEngine.matchingDocs(spark, blocks, terms, mode)
-      val live = liveDocs(matched)
-      val joined = live.join(docvalues.select(col("docId"), col(field)), "docId")
+      val joined = liveMatchValues(terms, mode, Seq(field))
       var vals = joined.filter(col(field).isNotNull)
       prefix.foreach(p => vals = vals.filter(col(field).startsWith(p)))
       contains.foreach { c =>
@@ -1652,7 +1626,6 @@ object IndexStore {
           .select(lit(null).cast("string").as(field), col("count")))
     }
 
-    /** Multi-phrase (slot = any-of terms) docIds via positions. */
     /** Complex phrase (reference lucene/queryparser complexPhrase/
       * ComplexPhraseQueryParser.java): a quoted phrase whose slots may be
       * groups `(a b)`, wildcards `jo*`, or fuzzies `word~1`; multi-term
@@ -1675,6 +1648,7 @@ object IndexStore {
       else multiPhrase(slots)
     }
 
+    /** Multi-phrase (slot = any-of terms) docIds via positions. */
     def multiPhrase(slots: Seq[Seq[String]]): DataFrame = {
       val r = QueryEngine.multiPhraseMatch(positions, slots)
       liveDocs(r)

@@ -67,12 +67,8 @@ object Bm25F {
     // Integral tf × integral-valued float weight sums exactly in double,
     // so the float cast equals the reference's float accumulation.
     val weighted = fields.map { case (idx, w) =>
-      idx.blocks.filter(col("term").isin(qs: _*))
-        .flatMap { blk =>
-          val (docs, tfs) = graft.codec.PostingsCodec.decodeBlock(
-            blk.minDoc, blk.n, blk.wDocs, blk.wFreqs, blk.docGaps, blk.freqs)
-          (0 until blk.n).iterator.map(i => (docs(i), w.toDouble * tfs(i)))
-        }.toDF("docId", "wtf")
+      QueryEngine.postingRows(idx.blocks.filter(col("term").isin(qs: _*)))
+        .select(col("docId"), (lit(w.toDouble) * col("tf")).as("wtf"))
     }
     val freq = weighted.reduce(_.unionByName(_))
       .groupBy("docId").agg(sum("wtf").as("freq"))

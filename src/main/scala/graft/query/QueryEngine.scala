@@ -1,6 +1,6 @@
 package graft.query
 
-import graft.index.{BlockRow, CorpusStats}
+import graft.index.{BlockRow, CorpusStats, PostingRow}
 import graft.codec.PostingsCodec
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -167,6 +167,19 @@ object QueryEngine {
           }
         }
       }
+  }
+
+  /** The one block -> posting decode of the match-only and tf paths
+    * (Lucene's PostingsEnum): every (term, docId, tf, normByte) row of the
+    * blocks. Callers push their term (or doc-range) filter onto `blocks`
+    * first, so only those blocks are read. The scoring kernels
+    * ([[scoredPostings]], [[Wand]]) decode inline to score as they go. */
+  def postingRows(blocks: Dataset[BlockRow]): Dataset[PostingRow] = {
+    import blocks.sparkSession.implicits._
+    blocks.flatMap { b =>
+      val (docs, tfs) = PostingsCodec.decodeBlock(b.minDoc, b.n, b.wDocs, b.wFreqs, b.docGaps, b.freqs)
+      (0 until b.n).iterator.map(i => PostingRow(b.term, docs(i), tfs(i), b.norms(i)))
+    }
   }
 
   /** The empty (docId LONG, score FLOAT) result. */
@@ -394,7 +407,7 @@ object QueryEngine {
     val combined = req.clauses match {
       case Scored(frame) => frame
       case Expanded(termPred) =>
-        multiTermDocs(spark, blocks, termstats, termPred).withColumn("score", lit(1f))
+        matchingDocs(spark, blocks, expand(termstats, termPred)).withColumn("score", lit(1f))
       case clauses =>
         val main = scoredPostings(spark, blocks, infos, theta)
         val postings = clauses match {
@@ -415,8 +428,7 @@ object QueryEngine {
         // dominant query class costs one narrow scan + bounded heap.
         if (infos.size == 1) postings.select($"docId", $"score")
         else {
-          val grouped = postings.groupBy("docId")
-            .agg(collect_list(struct($"ti", $"score")).as("parts"))
+          val grouped = collectParts(postings.toDF(), "ti")
           val matched = req.mode match {
             case Or  => grouped
             case And => grouped.filter(size($"parts") === infos.size)
@@ -438,18 +450,27 @@ object QueryEngine {
     }
   }
 
-  /** Sum per-term float scores in term order as double, cast float. */
-  private def summedScore: Column =
+  /** Stage 3's grouping: each doc's (`order`, score) parts as one `parts`
+    * list, for [[partsSum]] or [[disMaxScore]] to combine in `order`. */
+  private[query] def collectParts(scored: DataFrame, order: String): DataFrame =
+    scored.groupBy("docId").agg(collect_list(struct(col(order), col("score"))).as("parts"))
+
+  /** The per-doc sum combine: float parts summed in order as double
+    * (DisjunctionSumScorer), not yet cast. */
+  private[query] def partsSum: Column =
     aggregate(
       sort_array(col("parts")),
       lit(0.0d),
       (acc, x) => acc + x.getField("score").cast("double")
-    ).cast("float").as("score")
+    )
 
-  /** DisjunctionMaxScorer.score over the ti-ordered parts: a running float
+  /** Sum per-term float scores in term order as double, cast float. */
+  private def summedScore: Column = partsSum.cast("float").as("score")
+
+  /** DisjunctionMaxScorer.score over the ordered parts: a running float
     * max; the displaced max and every non-max sub-score accumulate into a
     * double; (float)(max + others * tie). */
-  private def disMaxScore(tie: Float): Column = {
+  private[query] def disMaxScore(tie: Float): Column = {
     def acc(mx: Column, others: Column) = struct(mx.as("mx"), others.as("others"))
     aggregate(
       sort_array(col("parts")),
@@ -501,25 +522,6 @@ object QueryEngine {
       .orderBy(desc("df"), asc("term")).limit(cap)
       .select("term").collect().map(_.getString(0)).toSeq
 
-  /** Dictionary-expanded matching docIds (no limit, no order): the
-    * constant-score rewrite core shared by [[Expanded]] requests and the
-    * parser's prefix/wildcard/fuzzy/range leaves. */
-  def multiTermDocs(spark: SparkSession, blocks: Dataset[BlockRow], termstats: DataFrame,
-                    termPred: Column): DataFrame = {
-    import spark.implicits._
-    val expanded = expand(termstats, termPred)
-    if (expanded.isEmpty)
-      return noHits(spark).select("docId")
-    blocks.filter($"term".isin(expanded: _*))
-      .mapPartitions { it =>
-        it.flatMap { b =>
-          val (docs, _) = PostingsCodec.decodeBlock(b.minDoc, b.n, b.wDocs, b.wFreqs, b.docGaps, b.freqs)
-          docs.iterator.take(b.n)
-        }
-      }
-      .toDF("docId").distinct()
-  }
-
   /** Per-doc phrase frequency (number of consecutive-match start positions)
     * over the positions tier; slot i matches any of its terms.
     *
@@ -531,6 +533,17 @@ object QueryEngine {
     * shape (per-slot groupBy + N-way join) cost one shuffle per slot —
     * a 5-term phrase on common terms was 5 shuffles + 4 joins. */
   def phraseFreqs(positions: DataFrame, slots: Seq[Seq[String]]): DataFrame = {
+    val starts = (1 until slots.length).foldLeft(col("p0")) { (acc, i) =>
+      array_intersect(acc, col(s"p$i"))
+    }
+    slotPositions(positions, slots)
+      .select(col("docId"), size(starts).as("freq")).filter(col("freq") > 0)
+  }
+
+  /** [[phraseFreqs]]' one-shuffle slot grouping: per doc with every slot
+    * present, slot i's adjusted positions (pos - i) as column `p$i`, in no
+    * particular order. */
+  private[query] def slotPositions(positions: DataFrame, slots: Seq[Seq[String]]): DataFrame = {
     require(slots.nonEmpty && slots.forall(_.nonEmpty))
     val spark = positions.sparkSession
     import spark.implicits._
@@ -543,31 +556,23 @@ object QueryEngine {
       .select(col("docId"), col("__slot"), explode(col("poss")).as("__p"))
     val slotLists = slots.indices.map(i =>
       collect_list(when(col("__slot") === i, col("__p") - i)).as(s"p$i"))
-    val joined = occ.groupBy("docId").agg(slotLists.head, slotLists.tail: _*)
+    occ.groupBy("docId").agg(slotLists.head, slotLists.tail: _*)
       .filter(slots.indices.map(i => size(col(s"p$i")) > 0).reduce(_ && _))
-    val starts = (1 until slots.length).foldLeft(col("p0")) { (acc, i) =>
-      array_intersect(acc, col(s"p$i"))
-    }
-    joined.select(col("docId"), size(starts).as("freq")).filter(col("freq") > 0)
   }
 
   /** docIds matching the terms (Or = any, And = all) as a constant-score
-    * filter — the match-only half of a query, used by field-sorted top-k
-    * (the "filter query + sort by doc values" shape). */
+    * filter — the match-only half of a query: field-sorted top-k and
+    * facets (the "filter query + sort by doc values" shape), filter
+    * DocSets, and with [[expand]]ed terms the constant-score rewrite of
+    * [[Expanded]] requests and the parser's multi-term leaves. */
   def matchingDocs(spark: SparkSession, blocks: Dataset[BlockRow],
                    terms: Seq[String], mode: Mode = Or): DataFrame = {
-    import spark.implicits._
     val qs = terms.distinct
-    val rows = blocks.filter($"term".isin(qs: _*))
-      .mapPartitions { it =>
-        it.flatMap { b =>
-          val (docs, _) = PostingsCodec.decodeBlock(b.minDoc, b.n, b.wDocs, b.wFreqs, b.docGaps, b.freqs)
-          docs.iterator.take(b.n).map(d => (b.term, d))
-        }
-      }.toDF("term", "docId")
+    if (qs.isEmpty) return noHits(spark).select("docId")
+    val rows = postingRows(blocks.filter(col("term").isin(qs: _*)))
     mode match {
       case Or  => rows.select("docId").distinct()
-      case And => rows.distinct().groupBy("docId").agg(count("*").as("__nt"))
+      case And => rows.select("term", "docId").distinct().groupBy("docId").agg(count("*").as("__nt"))
         .filter(col("__nt") === qs.size).select("docId")
     }
   }
@@ -592,14 +597,7 @@ object QueryEngine {
       return noHits(spark).select($"docId", lit(0).as("syn_tf"), $"score")
     val scorer = BM25.termScorer(boost, BM25.DefaultK1, BM25.DefaultB,
       found.values.max, stats.docCount, stats.sumTotalTermFreq)
-    val rows = blocks.filter($"term".isin(found.keys.toSeq: _*))
-      .mapPartitions { it =>
-        it.flatMap { b =>
-          val (docs, tfs) = PostingsCodec.decodeBlock(b.minDoc, b.n, b.wDocs, b.wFreqs, b.docGaps, b.freqs)
-          (0 until b.n).iterator.map(i => (docs(i), tfs(i), b.norms(i)))
-        }
-      }.toDF("docId", "tf", "normByte")
-    val grouped = rows.groupBy("docId")
+    val grouped = postingRows(blocks.filter($"term".isin(found.keys.toSeq: _*))).groupBy("docId")
       .agg(sum($"tf").cast("int").as("syn_tf"), first($"normByte").as("normByte"))
     // tombstones excluded before the limit (liveDocs; stats unchanged)
     liveDocs(grouped, excludeDocs)
@@ -624,21 +622,15 @@ object QueryEngine {
     val byTerm = infos.map(i => i.term -> i).toMap
     val k1 = BM25.DefaultK1
     val b = BM25.DefaultB
-    blocks
-      .filter($"term".isin(infos.map(_.term): _*) &&
-        $"minDoc" <= docId && $"maxDoc" >= docId)
-      .flatMap { blk =>
-        val (docs, tfs) = PostingsCodec.decodeBlock(blk.minDoc, blk.n, blk.wDocs, blk.wFreqs, blk.docGaps, blk.freqs)
-        val i = java.util.Arrays.binarySearch(docs, 0, blk.n, docId)
-        if (i < 0) Iterator.empty
-        else {
-          val info = byTerm(blk.term)
-          val nb = blk.norms(i)
-          Iterator.single((blk.term, info.ti, tfs(i), nb.toInt & 0xFF,
-            graft.codec.SmallFloat.byte4ToInt(nb),
-            asBm25(info.scorer).weight, k1, b,
-            info.scorer.score(tfs(i).toFloat, nb)))
-        }
+    postingRows(blocks.filter($"term".isin(infos.map(_.term): _*) &&
+        $"minDoc" <= docId && $"maxDoc" >= docId))
+      .filter($"docId" === docId)
+      .map { p =>
+        val info = byTerm(p.term)
+        (p.term, info.ti, p.tf, p.normByte.toInt & 0xFF,
+          graft.codec.SmallFloat.byte4ToInt(p.normByte),
+          asBm25(info.scorer).weight, k1, b,
+          info.scorer.score(p.tf.toFloat, p.normByte))
       }
       .toDF("term", "ti", "tf", "norm_byte", "dl_quantized", "weight", "k1", "b", "term_score")
       .orderBy("ti")

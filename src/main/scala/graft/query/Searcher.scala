@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
 
 /**
  * Query-string execution against an [[OpenIndex]]: parse with
- * [[QueryParser]], map each AST node to the matching engine path, compose
- * booleans with deterministic score arithmetic. The reference analogue is
+ * [[QueryParser]], map each leaf onto a [[QueryEngine]] stage, compose
+ * Boost/Bool/DisMax/Const in one AST walk with the planner's combine
+ * columns. The reference analogue is
  * IndexSearcher.search(QueryParser.parse(...)) (SURVEY.md §3.1).
  *
  * Scoring contract (documented, asserted in SearcherSpec):
@@ -19,8 +20,10 @@ import org.apache.spark.sql.functions._
  *  - Sloppy phrase / prefix / wildcard / fuzzy / range: constant score 1
  *    (MultiTermQuery CONSTANT_SCORE rewrite; sloppy kept constant-score).
  *  - Boolean: score = matching clauses' scores summed as double in clause
- *    order, cast float — identical arithmetic to QueryEngine.topK, so a
- *    pure-term query string scores bit-identically to the topK path.
+ *    order, cast float; DisjunctionMax runs DisjunctionMaxScorer's loop in
+ *    clause order. Both are the [[QueryEngine.run]] planner's combines, so
+ *    a pure-term query string (or a maxscore/XML dismax over terms) scores
+ *    bit-identically to the matching [[QueryEngine.Request]].
  */
 object Searcher {
 
@@ -115,33 +118,43 @@ object Searcher {
                        ast: Query, k: Int): DataFrame = {
     val default = idxs.getOrElse(defaultField,
       throw new IllegalArgumentException(s"no index for default field '$defaultField'"))
-    def ev(q: Query): DataFrame = q match {
+    rank(default, compose(default.spark, ast) {
       case FieldQ(f, inner) =>
         idxs.get(f).map(eval(_, inner)).getOrElse(QueryEngine.noHits(default.spark))
-      case BoostQ(b, inner) => ev(inner)
-        .select(col("docId"), (col("score") * lit(b)).cast("float").as("score"))
-      case BoolQ(m, sh, n) => evalBool(default.spark, ev, m, sh, n)
-      case DisMaxQ(cs, tie) => evalDisMax(ev, cs, tie)
-      case ConstQ(inner) =>
-        ev(inner).select(col("docId")).distinct().withColumn("score", lit(1f))
-      case leaf => eval(default, leaf)
-    }
-    rank(default, ev(ast), k)
+      case q => leaf(default, q)
+    }, k)
   }
 
   /** All matching docs of the parsed query: (docId LONG, score FLOAT). */
-  def eval(idx: OpenIndex, q: Query): DataFrame = q match {
+  def eval(idx: OpenIndex, q: Query): DataFrame = compose(idx.spark, q)(leaf(idx, _))
+
+  /** The one AST walk: Boost, Bool, DisMax and Const compose the frames
+    * of the leaves that `leaf` resolves. */
+  private def compose(spark: SparkSession, q: Query)(leaf: Query => DataFrame): DataFrame = {
+    def ev(q: Query): DataFrame = q match {
+      // boost multiplies the child's float scores (classic setBoost)
+      case BoostQ(b, inner) => ev(inner)
+        .select(col("docId"), (col("score") * lit(b)).cast("float").as("score"))
+      case BoolQ(must, should, mustNot) => evalBool(spark, ev, must, should, mustNot)
+      // DisjunctionMaxQuery (reference search/DisjunctionMaxQuery.java)
+      case DisMaxQ(clauses, tie) =>
+        require(clauses.nonEmpty, "DisMaxQ needs >= 1 clause")
+        clauseParts(ev, clauses).select(col("docId"), QueryEngine.disMaxScore(tie))
+      case ConstQ(inner) =>
+        ev(inner).select(col("docId")).distinct().withColumn("score", lit(1f))
+      case other => leaf(other)
+    }
+    ev(q)
+  }
+
+  /** A leaf over one index; every match is scored, and tombstones and the
+    * limit apply once, at the top. */
+  private def leaf(idx: OpenIndex, q: Query): DataFrame = q match {
     // single-index search: a field prefix can only mean the one field
     case FieldQ(_, inner) => eval(idx, inner)
-    // boost multiplies the child's float scores (classic setBoost)
-    case BoostQ(b, inner) => eval(idx, inner)
-      .select(col("docId"), (col("score") * lit(b)).cast("float").as("score"))
     case MatchAllQ =>
       idx.docstats.select(col("docId")).withColumn("score", lit(1f))
-    // leaves score every match; tombstones and the limit apply once, at the top
-    case TermQ(t) =>
-      QueryEngine.run(idx.spark, idx.blocks, idx.termstats, idx.stats,
-        QueryEngine.Request(QueryEngine.Terms(Seq(t)), QueryEngine.All), dfCache = Some(idx.dfCache))
+    case TermQ(t) => scoreAll(idx, QueryEngine.Terms(Seq(t)))
     case PhraseQ(terms, 0) => phraseScores(idx, terms)
     case PhraseQ(terms, slop) => sloppyDocs(idx, terms, slop)
     case PrefixQ(p) =>
@@ -157,37 +170,23 @@ object Searcher {
     case RangeQ(lo, hi, inclusive) =>
       constScore(idx, if (inclusive) col("term") >= lo && col("term") <= hi
                       else col("term") > lo && col("term") < hi)
-    case BoolQ(must, should, mustNot) =>
-      evalBool(idx.spark, eval(idx, _), must, should, mustNot)
-    case DisMaxQ(clauses, tie) => evalDisMax(eval(idx, _), clauses, tie)
-    case ConstQ(inner) =>
-      eval(idx, inner).select(col("docId")).distinct().withColumn("score", lit(1f))
+    case composite => throw new IllegalArgumentException(s"not a leaf query: $composite")
   }
 
-  /** DisjunctionMaxQuery combine: per-doc max + tie · (sum − max) over the
-    * clause frames (reference search/DisjunctionMaxQuery.java). */
-  private def evalDisMax(ev: Query => DataFrame, clauses: Seq[Query],
-                         tie: Float): DataFrame = {
-    require(clauses.nonEmpty, "DisMaxQ needs >= 1 clause")
-    clauses.map(q => ev(q).select(col("docId"), col("score").cast("double").as("s")))
-      .reduce(_.unionByName(_))
-      .groupBy("docId")
-      .agg(max("s").as("mx"), sum("s").as("sm"))
-      .select(col("docId"),
-        (col("mx") + lit(tie.toDouble) * (col("sm") - col("mx"))).cast("float").as("score"))
-  }
+  /** Every match of a planner request over the index, unranked. */
+  private def scoreAll(idx: OpenIndex, clauses: QueryEngine.Clauses): DataFrame =
+    QueryEngine.run(idx.spark, idx.blocks, idx.termstats, idx.stats,
+      QueryEngine.Request(clauses, QueryEngine.All), dfCache = Some(idx.dfCache))
 
   private def constScore(idx: OpenIndex, termPred: org.apache.spark.sql.Column): DataFrame =
-    QueryEngine.multiTermDocs(idx.spark, idx.blocks, idx.termstats, termPred)
-      .withColumn("score", lit(1f))
+    scoreAll(idx, QueryEngine.Expanded(termPred))
 
   /** Exact phrase, BM25-scored with tf = phrase freq; weight = (float) sum
     * of distinct member-term idfs (double accumulation in first-occurrence
     * order). A member term absent from the dictionary -> no match. */
   private def phraseScores(idx: OpenIndex, terms: Seq[String]): DataFrame = {
     val qs = terms.distinct
-    val found = idx.termstats.filter(col("term").isin(qs: _*))
-      .select("term", "df").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val found = QueryEngine.lookupDfs(idx.termstats, qs, Some(idx.dfCache))
     if (found.size < qs.size) return QueryEngine.noHits(idx.spark)
     var w = 0.0
     qs.foreach(t => w += BM25.idf(found(t), idx.stats.docCount).toDouble)
@@ -202,21 +201,18 @@ object Searcher {
   }
 
   /** Sloppy phrase over the positions tier (constant score): per doc, one
-    * sorted adjusted-position list per slot; the shared min-range kernels
-    * (sweep / repeats-aware DFS) decide the match. */
+    * sorted adjusted-position list per slot from [[QueryEngine.phraseFreqs]]'
+    * one-shuffle slot grouping; the shared min-range kernels (sweep /
+    * repeats-aware DFS) decide the match. */
   private def sloppyDocs(idx: OpenIndex, phrase: Seq[String], slop: Int): DataFrame = {
     val spark = idx.spark
     import spark.implicits._
     val termIds = phrase.distinct.zipWithIndex.toMap
     val termOfSlot = phrase.map(termIds).toArray
     val hasRepeats = phrase.distinct.size != phrase.size
-    val parts = phrase.zipWithIndex.map { case (t, i) =>
-      idx.positions.filter(col("term") === t)
-        .select(col("docId"), transform(col("poss"), p => p - i).as(s"q$i"))
-    }
-    val joined = parts.reduceLeft((a, b) => a.join(b, "docId"))
-    joined.select(col("docId"),
-        array(phrase.indices.map(i => col(s"q$i")): _*).as("qs"))
+    QueryEngine.slotPositions(idx.positions, phrase.map(Seq(_)))
+      .select(col("docId"),
+        array(phrase.indices.map(i => sort_array(col(s"p$i"))): _*).as("qs"))
       .as[(Long, Seq[Seq[Int]])]
       .flatMap { case (docId, lists) =>
         val best =
@@ -227,27 +223,26 @@ object Searcher {
       .toDF("docId", "score")
   }
 
+  /** Each doc's (clause index, score) parts over the clause frames. */
+  private def clauseParts(ev: Query => DataFrame, clauses: Seq[Query]): DataFrame =
+    QueryEngine.collectParts(clauses.zipWithIndex.map { case (q, ci) =>
+      ev(q).select(col("docId"), lit(ci).as("ci"), col("score"))
+    }.reduce(_.unionByName(_)), "ci")
+
   /**
    * Boolean combination. Matching set: all `must` clauses AND (when must is
    * empty) at least one `should`; minus `mustNot`. Score: must clauses
    * joined in clause order (double adds), should contributions summed in
-   * clause order via a sorted-struct aggregate, added when present.
+   * clause order by the planner's sum combine, added when present.
    */
   private def evalBool(spark: SparkSession, ev: Query => DataFrame,
                        must: Seq[Query], should: Seq[Query],
                        mustNot: Seq[Query]): DataFrame = {
     if (must.isEmpty && should.isEmpty) return QueryEngine.noHits(spark)
     // should-side: union of clauses, per-doc sum in clause (ci) order
-    val shouldSum: Option[DataFrame] = if (should.isEmpty) None else Some {
-      should.zipWithIndex.map { case (q, ci) =>
-        ev(q).select(col("docId"), lit(ci).as("ci"), col("score"))
-      }.reduce(_.unionByName(_))
-        .groupBy("docId")
-        .agg(collect_list(struct(col("ci"), col("score"))).as("parts"))
-        .select(col("docId"),
-          aggregate(sort_array(col("parts")), lit(0.0d),
-            (acc, x) => acc + x.getField("score").cast("double")).as("s"))
-    }
+    val shouldSum: Option[DataFrame] =
+      if (should.isEmpty) None
+      else Some(clauseParts(ev, should).select(col("docId"), QueryEngine.partsSum.as("s")))
     val core: DataFrame =
       if (must.nonEmpty) {
         // inner-join chain in clause order; double accumulation

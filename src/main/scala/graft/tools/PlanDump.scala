@@ -9,8 +9,20 @@ import org.apache.spark.sql.execution.debug._
 
 /** Regenerates PLANS.md: `explain(formatted)` of the scale-critical
   * queries with commentary — the plan-shape evidence the PlanAuditSpec
-  * assertions are distilled from. Run: `sbt "runMain graft.tools.PlanDump"`. */
+  * assertions are distilled from. Run from the repository root:
+  * `sbt "runMain graft.tools.PlanDump"`. Everything in PLANS.md from the
+  * [[HandWritten]] marker line on is hand-written and kept as it is. */
 object PlanDump {
+  val HandWritten = "<!-- Hand-written sections below: PlanDump keeps everything from this line on. -->"
+
+  /** The generated text followed by the hand-written tail of `existing`;
+    * a file without the marker is refused rather than overwritten. */
+  def merge(generated: String, existing: String): String = {
+    val at = existing.indexOf(HandWritten)
+    require(at >= 0, s"PLANS.md has no marker line '$HandWritten'; refusing to overwrite it")
+    generated + "\n" + existing.substring(at)
+  }
+
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[4]")
       .appName("graft-plandump")
@@ -225,7 +237,8 @@ object PlanDump {
         docs.filter($"doc_id" % 2 === 0), docs.filter($"doc_id" % 2 === 1),
         k = 3, classCol = "lang"))
 
-    java.nio.file.Files.writeString(java.nio.file.Paths.get("PLANS.md"), sb.toString)
+    val out = java.nio.file.Paths.get("PLANS.md")
+    java.nio.file.Files.writeString(out, merge(sb.toString, java.nio.file.Files.readString(out)))
     println(s"PLANS.md written (${sb.length} chars)")
     spark.stop()
   }

@@ -69,8 +69,7 @@ class FuzzySpellSpec extends SparkSpec {
     val viaSearch = idx.search("pubic~1", 1000000)
       .select("docId").as[Long].collect().toSet
     val terms = fullScanNeighborhood("pubic", 1).toSeq
-    val viaTerms = graft.query.QueryEngine.multiTermDocs(
-        spark, idx.blocks, idx.termstats, col("term").isin(terms: _*))
+    val viaTerms = graft.query.QueryEngine.matchingDocs(spark, idx.blocks, terms)
       .as[Long].collect().toSet
     assert(viaSearch === viaTerms)
     assert(viaSearch.nonEmpty)

@@ -271,12 +271,8 @@ class PlanAuditSpec extends SparkSpec {
 
   test("cursorMark page plan: bounded TakeOrderedAndProject with the after-filter, never sort-and-skip") {
     val (_, mark) = idx.cursorPage(Seq("public"), Seq(("lang", true)), 5)
-    val after = graft.query.Cursor.parse(mark).get
-    val matched = graft.query.QueryEngine.matchingDocs(spark, idx.blocks, Seq("public"), graft.query.QueryEngine.And)
-    val paged = matched.join(idx.docvalues, "docId")
-      .filter(graft.query.Cursor.afterPredicate(Seq(("lang", true)), after.values))
-      .orderBy(asc("lang"), asc("docId")).limit(5)
-    val plan = planOf(paged)
+    val plan = planOf(idx.cursorQuery(Seq("public"), Seq(("lang", true)), 5, mark,
+      graft.query.QueryEngine.And))
     assert(plan.contains("TakeOrderedAndProject"), plan.take(1200))
     assert(!plan.contains("GlobalLimit"), plan.take(1200)) // no sort+offset shape
   }
