@@ -4,7 +4,7 @@
 parquet against DuckDB running the oracle SQL on the same tables."""
 import json, sys, glob, os
 import duckdb
-from verify_outputs import norm, read_output
+from verify_outputs import exit_now, norm, read_output
 
 sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 out_dir = sys.argv[2] if len(sys.argv) > 2 else "target/verify-out"
@@ -71,4 +71,4 @@ for name, sql in sorted(oracle.items()):
         ok += 1
 
 print(f"\n{ok} ok, {fail} failed, {skipped} skipped, {len(set(g.split('/')[-1] for g in glob.glob(out_dir + '/*') if os.path.isdir(g)) - set(oracle))} rows-only")
-sys.exit(1 if fail else 0)
+exit_now(1 if fail else 0)

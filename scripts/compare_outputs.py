@@ -11,7 +11,7 @@ any difference."""
 import os
 import sys
 
-from verify_outputs import norm, read_output
+from verify_outputs import exit_now, norm, read_output
 
 if len(sys.argv) != 3:
     sys.exit(__doc__)
@@ -42,4 +42,4 @@ for q in sorted(qa | qb):
         same += 1
 
 print(f"\n{same} identical, {differ} differ")
-sys.exit(1 if differ else 0)
+exit_now(1 if differ else 0)

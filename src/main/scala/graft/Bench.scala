@@ -66,19 +66,20 @@ object Bench {
 
   /** The fixed query workload (EnwikiQueryMaker-style reference set over the
     * synthetic corpus vocabulary: hot keywords, mid idents, rare uniques). */
-  /** (terms, mode, prune, wand) */
-  private val QuerySet: Seq[(Seq[String], QueryEngine.Mode, Boolean, Boolean)] = Seq(
-    (Seq("public"), QueryEngine.Or, false, false),
-    (Seq("import"), QueryEngine.Or, false, false),
-    (Seq("parseconfig"), QueryEngine.Or, false, false),
-    (Seq("public", "static", "void"), QueryEngine.Or, false, false),
-    (Seq("public", "static", "void"), QueryEngine.Or, true, false),
-    (Seq("public", "static", "void"), QueryEngine.Or, false, true),
-    (Seq("import", "handler7"), QueryEngine.And, false, false),
-    (Seq("mergepolicy", "checkpoint"), QueryEngine.Or, true, false),
-    (Seq("scoredocs", "readblock", "writeshard"), QueryEngine.Or, false, true),
-    (Seq("class", "object"), QueryEngine.And, false, true),
-    (Seq("uniq_42_1"), QueryEngine.Or, false, false))
+  /** (terms, mode, wand). The repeated 3-term Or row keeps the per-pass
+    * workload (and so the scaling gate's normalization) at 11 queries. */
+  private val QuerySet: Seq[(Seq[String], QueryEngine.Mode, Boolean)] = Seq(
+    (Seq("public"), QueryEngine.Or, false),
+    (Seq("import"), QueryEngine.Or, false),
+    (Seq("parseconfig"), QueryEngine.Or, false),
+    (Seq("public", "static", "void"), QueryEngine.Or, false),
+    (Seq("public", "static", "void"), QueryEngine.Or, false),
+    (Seq("public", "static", "void"), QueryEngine.Or, true),
+    (Seq("import", "handler7"), QueryEngine.And, false),
+    (Seq("mergepolicy", "checkpoint"), QueryEngine.Or, false),
+    (Seq("scoredocs", "readblock", "writeshard"), QueryEngine.Or, true),
+    (Seq("class", "object"), QueryEngine.And, true),
+    (Seq("uniq_42_1"), QueryEngine.Or, false))
 
   /** Materialize the corpus table once (untimed): the north-rule input is a
     * STORED source-code table, so the timed build reads parquet, not a
@@ -182,8 +183,8 @@ object Bench {
         // query set — otherwise the first measured queries pay one-time
         // costs that are noise, not throughput (the round-2 artifact's 0.65
         // query efficiency came from exactly this: a single cold window)
-        QuerySet.foreach { case (terms, mode, prune, wand) =>
-          idx.topK(terms, 10, mode, prune = prune, wand = wand).collect(): Unit
+        QuerySet.foreach { case (terms, mode, wand) =>
+          idx.topK(terms, 10, mode, wand = wand).collect(): Unit
         }
         // QPS is a THROUGHPUT metric: queries run as `cores` concurrent
         // streams (SparkSession is thread-safe; Lucene QPS harnesses run
@@ -198,7 +199,7 @@ object Bench {
         // costs more at 8 streams than at 2). Cross-round robustness comes
         // from the matched-pair median + per-round ceiling gate.
         val work = new java.util.concurrent.ConcurrentLinkedQueue[
-          (Seq[String], QueryEngine.Mode, Boolean, Boolean)]()
+          (Seq[String], QueryEngine.Mode, Boolean)]()
         (1 to QueryReps).foreach(_ => QuerySet.foreach(work.add))
         val nq = work.size()
         // one searcher stream per core (the standard Lucene QPS-harness
@@ -211,8 +212,8 @@ object Bench {
             def run(): Unit = {
               var next = work.poll()
               while (next != null) {
-                val (terms, mode, prune, wand) = next
-                idx.topK(terms, 10, mode, prune = prune, wand = wand).collect(): Unit
+                val (terms, mode, wand) = next
+                idx.topK(terms, 10, mode, wand = wand).collect(): Unit
                 next = work.poll()
               }
             }

@@ -59,21 +59,16 @@ object CheckIndex {
                                    docCount: Long, sumDl: Long,
                                    blockCount: Long, shaXor: String)
 
-  private def long(js: String, k: String): Long =
-    ("\"" + k + "\":(-?\\d+)").r.findFirstMatchIn(js).get.group(1).toLong
-  private def str(js: String, k: String): String =
-    ("\"" + k + "\":\"([^\"]*)\"").r.findFirstMatchIn(js).get.group(1)
-
   def check(spark: SparkSession, dir: String): CheckReport = {
     import spark.implicits._
     val issues = scala.collection.mutable.ArrayBuffer.empty[CheckIssue]
     def issue(check: String, count: Long, examples: Seq[String] = Nil): Unit =
       if (count != 0) issues += CheckIssue(check, count, examples.take(ExamplesPerCheck))
 
-    val manifests = IndexStore.readManifests(dir).map { js =>
-      SegMeta(long(js, "segId").toInt, long(js, "docLo"), long(js, "docHi"),
-        long(js, "docCount"), long(js, "sumDl"), long(js, "blockCount"),
-        str(js, "shaXor"))
+    val manifests = IndexStore.manifests(dir).map { case (f, js) =>
+      def long(k: String) = IndexStore.jsonLong(js, k, f)
+      SegMeta(long("segId").toInt, long("docLo"), long("docHi"), long("docCount"),
+        long("sumDl"), long("blockCount"), IndexStore.jsonStr(js, "shaXor", f))
     }.sortBy(_.segId)
     require(manifests.nonEmpty, s"no committed segments under $dir")
     val segDirs = manifests.map(m => s"$dir/segments/seg=${m.segId}")
@@ -400,13 +395,15 @@ object CheckIndex {
       sum(when(col("normByte") =!= normOf(col("dl")), 1L).otherwise(0L)).as("badNorms"))
       .collect().map(r => r.getString(0) -> (r.getLong(1), if (r.isNullAt(2)) 0L else r.getLong(2), r.getLong(3))).toMap
     all.foreach { b =>
-      val m = java.nio.file.Files.readString(java.nio.file.Paths.get(s"$dir/buckets/b=$b/MANIFEST.json"))
+      val f = s"$dir/buckets/b=$b/MANIFEST.json"
+      val m = java.nio.file.Files.readString(java.nio.file.Paths.get(f))
+      val (mCount, mSumDl) = (IndexStore.jsonLong(m, "docCount", f), IndexStore.jsonLong(m, "sumDl", f))
       val (cnt, sumDl, badNorms) = agg.getOrElse(b, (0L, 0L, 0L))
       totalDocs += cnt
-      if (cnt != long(m, "docCount"))
-        issue("bucket_doc_count", 1, Seq(s"b=$b manifest=${long(m, "docCount")} docstats=$cnt"))
-      if (sumDl != long(m, "sumDl"))
-        issue("bucket_sum_dl", 1, Seq(s"b=$b manifest=${long(m, "sumDl")} docstats=$sumDl"))
+      if (cnt != mCount)
+        issue("bucket_doc_count", 1, Seq(s"b=$b manifest=$mCount docstats=$cnt"))
+      if (sumDl != mSumDl)
+        issue("bucket_sum_dl", 1, Seq(s"b=$b manifest=$mSumDl docstats=$sumDl"))
       if (badNorms != 0) issue("norm_byte_mismatch", badNorms, Seq(s"b=$b"))
       if (b.contains('.') && cnt > maxEventsPerBucket)
         issue("bucket_over_rollover_cap", 1, Seq(s"b=$b has $cnt > $maxEventsPerBucket events"))

@@ -113,17 +113,29 @@ object IndexStore {
     out.sorted.toSeq
   }
 
-  def readManifests(dir: String): Seq[String] = {
-    val segs = Paths.get(s"$dir/segments")
-    if (!Files.exists(segs)) return Nil
-    val it = Files.list(segs).iterator()
-    val out = scala.collection.mutable.ArrayBuffer[String]()
-    while (it.hasNext) {
-      val p = it.next().resolve("MANIFEST.json")
-      if (Files.exists(p)) out += Files.readString(p)
+  /** The committed segments' (MANIFEST.json path, contents). */
+  def manifests(dir: String): Seq[(String, String)] =
+    committedSegmentDirs(dir).map { d =>
+      val f = s"$d/MANIFEST.json"
+      f -> Files.readString(Paths.get(f))
     }
-    out.toSeq
-  }
+
+  def readManifests(dir: String): Seq[String] = manifests(dir).map(_._2)
+
+  /** The `value` pattern's group after `"key":` in a MANIFEST.json or
+    * corpus.json document, None when the key is absent. */
+  private def jsonField(js: String, key: String, value: String): Option[String] =
+    ("\"" + key + "\":" + value).r.findFirstMatchIn(js).map(_.group(1))
+  private val JsonString = "\"([^\"]*)\""
+  private def missing(key: String, file: String): Nothing =
+    throw new IllegalStateException(s"""$file has no "$key" field""")
+  /** A numeric field of the document `js` read from `file`; a missing key
+    * fails naming the key and the file. */
+  private[index] def jsonLong(js: String, key: String, file: String): Long =
+    jsonField(js, key, "(-?\\d+)").getOrElse(missing(key, file)).toLong
+  /** A string field of the document `js` read from `file`, as [[jsonLong]]. */
+  private[index] def jsonStr(js: String, key: String, file: String): String =
+    jsonField(js, key, JsonString).getOrElse(missing(key, file))
 
   /**
    * Build (or resume) a segmented index from a corpus that already carries
@@ -236,9 +248,8 @@ object IndexStore {
     require(!bounds.isNullAt(0), "cannot seal an empty hot tier")
     val (lo, hi) = (bounds.getLong(0), bounds.getLong(1) + 1)
     // sealed docIds must not collide with committed segments' doc ranges
-    readManifests(dir).foreach { m =>
-      val mHi = """"docHi":(\d+)""".r.findFirstMatchIn(m).get.group(1).toLong
-      val mLo = """"docLo":(\d+)""".r.findFirstMatchIn(m).get.group(1).toLong
+    manifests(dir).foreach { case (f, m) =>
+      val (mLo, mHi) = (jsonLong(m, "docLo", f), jsonLong(m, "docHi", f))
       require(hi <= mLo || lo >= mHi,
         s"hot docId range [$lo,$hi) overlaps committed segment range [$mLo,$mHi)")
     }
@@ -354,9 +365,9 @@ object IndexStore {
     if (Files.exists(st)) graft.util.Fs.copyTree(st, dest.resolve("stats"))
     // tombstones / dv patches restricted to the split's docId ranges
     val ranges: Seq[(Long, Long)] = segIds.map { id =>
-      val m = Files.readString(Paths.get(byId(id), "MANIFEST.json"))
-      def f(k: String) = s""""$k":(\\d+)""".r.findFirstMatchIn(m).get.group(1).toLong
-      (f("docLo"), f("docHi"))
+      val f = s"${byId(id)}/MANIFEST.json"
+      val m = Files.readString(Paths.get(f))
+      (jsonLong(m, "docLo", f), jsonLong(m, "docHi", f))
     }
     val inRange = (c: org.apache.spark.sql.Column) =>
       ranges.map { case (lo, hi) => c.between(lo, hi) }.reduce(_ || _)
@@ -602,8 +613,7 @@ object IndexStore {
         .agg(min("docId"), max("docId"), count("*"), sum("dl")).head()
       val blockCount = spark.read.parquet(s"$segDir/postings").count()
       val srcMan = Files.readString(Paths.get(s"$srcSeg/MANIFEST.json"))
-      val shaXor = """"shaXor":"([^"]*)"""".r.findFirstMatchIn(srcMan)
-        .map(_.group(1)).getOrElse(f"${0L}%016x")
+      val shaXor = jsonField(srcMan, "shaXor", JsonString).getOrElse(f"${0L}%016x")
       writeManifest(dstDir, Manifest(segId, a.getLong(0), a.getLong(1),
         a.getLong(2), a.getLong(3), blockCount, shaXor,
         s"addIndexes:$srcDir", spark.sparkContext.applicationId, 0L))
@@ -647,9 +657,9 @@ object IndexStore {
     }
     var docCount = 0L
     var sumTtf = 0L
-    readManifests(dir).foreach { m =>
-      docCount += """"docCount":(\d+)""".r.findFirstMatchIn(m).get.group(1).toLong
-      sumTtf += """"sumDl":(\d+)""".r.findFirstMatchIn(m).get.group(1).toLong
+    manifests(dir).foreach { case (f, m) =>
+      docCount += jsonLong(m, "docCount", f)
+      sumTtf += jsonLong(m, "sumDl", f)
     }
     val json = s"""{"docCount":$docCount,"sumTotalTermFreq":$sumTtf}"""
     Files.createDirectories(Paths.get(s"$dir/stats"))
@@ -693,10 +703,9 @@ object IndexStore {
     lazy val docstats: DataFrame = spark.read.parquet(segDirs.map(_ + "/docstats"): _*)
     lazy val termstats: DataFrame = spark.read.parquet(s"$dir/stats/termstats")
     lazy val stats: CorpusStats = {
-      val s = Files.readString(Paths.get(s"$dir/stats/corpus.json"))
-      val dc = """"docCount":(\d+)""".r.findFirstMatchIn(s).get.group(1).toLong
-      val st = """"sumTotalTermFreq":(\d+)""".r.findFirstMatchIn(s).get.group(1).toLong
-      CorpusStats(dc, st)
+      val f = s"$dir/stats/corpus.json"
+      val s = Files.readString(Paths.get(f))
+      CorpusStats(jsonLong(s, "docCount", f), jsonLong(s, "sumTotalTermFreq", f))
     }
     /** The analysis chain the index was built with (stats/analyzer.json;
       * standard for pre-chain indexes). Query text must go through THIS
@@ -746,12 +755,13 @@ object IndexStore {
     /** Drop this index's tombstoned docs from a docId-keyed frame. */
     def liveDocs(docs: DataFrame): DataFrame = QueryEngine.liveDocs(docs, deletes)
 
-    /** BM25 (or `sim`) top-k over the query terms. */
+    /** BM25 (or `sim`) top-k over the query terms. `prune` is ignored —
+      * block-max skipping is `wand` — and stays only for existing callers. */
     def topK(terms: Seq[String], k: Int, mode: QueryEngine.Mode = QueryEngine.Or,
              mustNot: Seq[String] = Nil, prune: Boolean = false,
              wand: Boolean = false,
              sim: graft.query.Similarity = null): DataFrame =
-      run(QueryEngine.Request(QueryEngine.Terms(terms, sim), k, mode, mustNot, prune, wand))
+      run(QueryEngine.Request(QueryEngine.Terms(terms, sim), k, mode, mustNot, wand))
 
     /** Solr queryResultCache analogue (solr/core .../search/SolrIndexSearcher
       * queryResultCache; Lucene LRUQueryCache is the filter-level cousin):
@@ -822,13 +832,12 @@ object IndexStore {
         filter = Some(cachedFilterDocs(fq))))
 
     def topKCached(terms: Seq[String], k: Int, mode: QueryEngine.Mode = QueryEngine.Or,
-                   mustNot: Seq[String] = Nil, prune: Boolean = false,
-                   wand: Boolean = false): DataFrame = {
-      val key = s"${terms.mkString(",")}|$k|$mode|${mustNot.mkString(",")}|$prune|$wand"
+                   mustNot: Seq[String] = Nil, wand: Boolean = false): DataFrame = {
+      val key = s"${terms.mkString(",")}|$k|$mode|${mustNot.mkString(",")}|$wand"
       // on a hit, do NOT even construct the underlying plan (query planning
       // runs driver-side stats lookups) — the hit costs zero Spark jobs
       val rows = resultCache.synchronized(Option(resultCache.get(key))).getOrElse {
-        val r = topK(terms, k, mode, mustNot, prune, wand).collect()
+        val r = topK(terms, k, mode, mustNot, wand = wand).collect()
         resultCache.synchronized(resultCache.put(key, r))
         r
       }

@@ -217,9 +217,10 @@ object TimeIndex {
     var docCount = 0L
     var sumDl = 0L
     sel.foreach { b =>
-      val m = Files.readString(Paths.get(bucketDir(dir, b), "MANIFEST.json"))
-      docCount += """"docCount":(\d+)""".r.findFirstMatchIn(m).get.group(1).toLong
-      sumDl += """"sumDl":(\d+)""".r.findFirstMatchIn(m).get.group(1).toLong
+      val f = s"${bucketDir(dir, b)}/MANIFEST.json"
+      val m = Files.readString(Paths.get(f))
+      docCount += IndexStore.jsonLong(m, "docCount", f)
+      sumDl += IndexStore.jsonLong(m, "sumDl", f)
     }
     (docCount, sumDl)
   }

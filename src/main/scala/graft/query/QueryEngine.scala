@@ -22,13 +22,9 @@ final case class ScoredPosting(docId: Long, ti: Int, score: Float)
  *  - "TopScoreDocCollector + TopDocs.merge" = orderBy(score DESC, docId ASC)
  *    .limit(k): Spark's TakeOrderedAndProject runs a bounded per-partition
  *    heap and merges on the driver — the per-executor-heap pattern.
- *  - "block-max WAND" = a rank-identity-safe two-phase prune: phase A scores
- *    the single highest-upper-bound block per term (achieved partial scores
- *    are lower bounds of true doc scores), takes the k-th best as theta;
- *    phase B skips blocks whose upper bound (block max + other terms' global
- *    max) cannot reach theta. Surviving scores are unchanged, so ranks are
- *    identical to the exhaustive path (cf. reference WANDScorer.java:45,
- *    MaxScoreCache.java:61-105 — pruning only skips non-competitive docs).
+ *  - "block-max WAND" = the [[Wand]] kernel (reference WANDScorer.java:45):
+ *    the caller's explicit choice, rank- and score-identical to the
+ *    exhaustive path.
  *
  * Every scored top-k query is one [[Request]] run by one planner ([[run]],
  * or [[runCounted]] for the top-k + hit count output), like Lucene's
@@ -37,7 +33,7 @@ final case class ScoredPosting(docId: Long, ti: Int, score: Float)
  * stages, each written once:
  *  1. term infos — through [[plan]], from blended dfs, caller-built, or with
  *     the hot tier's stats merged in;
- *  2. scored postings (theta-pruned when asked and safe);
+ *  2. scored postings — every matching block decoded and scored;
  *  3. per-doc combine — the single-term no-shuffle fast path, the ti-ordered
  *     double sum, or DisjunctionMax;
  *  4. exclusions — AND clause count, mustNot, filter DocSet, tombstones, the
@@ -59,13 +55,7 @@ object QueryEngine {
     * search/IndexSearcher.java getMaxClauseCount). */
   val MaxClauseCount = 1024
 
-  final case class TermInfo(term: String, ti: Int, scorer: SimScorer, globalMaxScore: Float)
-  object TermInfo {
-    /** Global max score of a term: tf -> inf, shortest doc — conservative,
-      * the best possible impact (freq = Int.Max, norm byte 0). */
-    def apply(term: String, ti: Int, scorer: SimScorer): TermInfo =
-      TermInfo(term, ti, scorer, scorer.score(Int.MaxValue.toFloat, 0.toByte))
-  }
+  final case class TermInfo(term: String, ti: Int, scorer: SimScorer)
 
   /** Per-index term-dictionary memo: term -> Some(df) | None (term absent).
     * Lucene keeps the term dictionary hot in memory; here each queried
@@ -122,48 +112,19 @@ object QueryEngine {
       s"this path supports the BM25 similarity only, got ${other.getClass.getSimpleName}")
   }
 
-  /** Upper bound of any doc's score within a block, from competitive impacts. */
-  def blockBound(scorer: SimScorer, impactFreqs: Array[Int], impactNorms: Array[Byte]): Float = {
-    var m = 0f
-    var i = 0
-    while (i < impactFreqs.length) {
-      val s = scorer.score(impactFreqs(i).toFloat, impactNorms(i))
-      if (s > m) m = s
-      i += 1
-    }
-    m
-  }
-
-  /** Decode + score matching blocks into (docId, ti, score) rows.
-    * `boundFilter` (bound, term) => keep is applied before decoding. */
-  private def scoredPostings(spark: SparkSession, blocks: Dataset[BlockRow], infos: Seq[TermInfo],
-                             theta: Float): Dataset[ScoredPosting] = {
+  /** Decode + score the query terms' blocks into (docId, ti, score) rows. */
+  private def scoredPostings(spark: SparkSession, blocks: Dataset[BlockRow],
+                             infos: Seq[TermInfo]): Dataset[ScoredPosting] = {
     import spark.implicits._
     val byTerm = infos.map(ti => ti.term -> ti).toMap
-    // per-term sum of the OTHER terms' maxima, accumulated in double (a
-    // float subtraction sumAll - own could round BELOW the true sum of the
-    // others, over-pruning a theta-tying block)
-    val otherMax: Map[String, Double] = infos.map { i =>
-      i.term -> infos.filterNot(_.term == i.term).map(_.globalMaxScore.toDouble).sum
-    }.toMap
-    // compare against nextDown(theta): a doc whose exact double sum is just
-    // under theta can still round UP to exactly theta as a float and enter
-    // the heap on the docId tie-break — never prune those
-    val thetaGuard = math.nextDown(theta.toDouble)
     blocks
       .filter($"term".isin(infos.map(_.term): _*))
       .mapPartitions { it =>
         it.flatMap { b =>
           val info = byTerm(b.term)
-          val bound = blockBound(info.scorer, b.impactFreqs, b.impactNorms)
-          // block can contribute to a >= theta doc only if its own bound plus
-          // every other term's global max reaches theta
-          if (theta > 0f && bound.toDouble + otherMax(b.term) < thetaGuard) Iterator.empty
-          else {
-            val (docs, tfs) = PostingsCodec.decodeBlock(b.minDoc, b.n, b.wDocs, b.wFreqs, b.docGaps, b.freqs)
-            (0 until b.n).iterator.map { i =>
-              ScoredPosting(docs(i), info.ti, info.scorer.score(tfs(i).toFloat, b.norms(i)))
-            }
+          val (docs, tfs) = PostingsCodec.decodeBlock(b.minDoc, b.n, b.wDocs, b.wFreqs, b.docGaps, b.freqs)
+          (0 until b.n).iterator.map { i =>
+            ScoredPosting(docs(i), info.ti, info.scorer.score(tfs(i).toFloat, b.norms(i)))
           }
         }
       }
@@ -231,11 +192,11 @@ object QueryEngine {
   val All: Int = Int.MaxValue
 
   /**
-   * One scored query. `prune` (block-max theta) and `wand` (the [[Wand]]
-   * kernel) are the caller's physical choice; both are rank- and
-   * score-identical and apply only to a summed combine with nothing
-   * removed after scoring (no mustNot, filter, tombstones or cursor):
-   * theta estimated over all docs could exceed the surviving k-th score.
+   * One scored query. `wand` picks the [[Wand]] kernel, the caller's
+   * physical choice: rank- and score-identical to the exhaustive path, it
+   * applies only to a bounded top-k summed combine with nothing removed
+   * after scoring (no mustNot, filter, tombstones or cursor) — a kernel
+   * threshold over all docs could exceed the surviving k-th score.
    *
    * @param tieBreaker DisjunctionMax combine with this tie (reference
    *                   search/DisjunctionMaxScorer.java:58-70); None sums
@@ -247,7 +208,7 @@ object QueryEngine {
    *                   big top-k
    */
   final case class Request(clauses: Clauses, k: Int, mode: Mode = Or, mustNot: Seq[String] = Nil,
-                           prune: Boolean = false, wand: Boolean = false,
+                           wand: Boolean = false,
                            tieBreaker: Option[Float] = None,
                            filter: Option[DataFrame] = None,
                            after: Option[(Float, Long)] = None)
@@ -262,12 +223,10 @@ object QueryEngine {
     termInfos(termstats, stats, req, dfCache) match {
       case None => noHits(spark)
       case Some(infos) =>
-        val skippable = canSkip(req, infos, excludeDocs)
-        if (req.wand && skippable && req.k != All && !req.clauses.isInstanceOf[WithHot])
+        if (req.wand && canSkip(req, infos, excludeDocs) && req.k != All && !req.clauses.isInstanceOf[WithHot])
           Wand.topK(spark, blocks, infos, req.k, requireAll = req.mode == And)
         else {
-          val docs = liveScores(spark, blocks, termstats, stats, req, infos,
-            theta(spark, blocks, req, infos, req.prune && skippable), excludeDocs, dfCache)
+          val docs = liveScores(spark, blocks, termstats, stats, req, infos, excludeDocs, dfCache)
           if (req.k == All) docs else docs.orderBy(desc("score"), asc("docId")).limit(req.k)
         }
     }
@@ -286,42 +245,24 @@ object QueryEngine {
    *
    * TopScoreDocCollector's totalHitsThreshold contract (reference
    * TopScoreDocCollector.java:49-95,233: hits are counted exactly while
-   * the count is within the threshold; beyond it the collector may skip
-   * non-competitive docs and the count degrades to a lower bound). The
-   * mapping onto block-max pruning decides UP FRONT from dictionary
-   * stats: a single term's count is its df (free, from the dictionary);
-   * multi-term counts are bounded by Σdf (Or) / min df (And), and when
-   * that bound fits the threshold (or threshold is [[All]]) the engine
-   * counts exhaustively and reports EXACT. Otherwise the Or path prunes
-   * with theta and reports the decoded-doc count as a GTE lower bound. The
-   * bound class is always sound; it equals Lucene's whenever the df bound
-   * is decisive (it is conservative-GTE where Lucene's per-hit counter
-   * could still prove EQ on overlapping multi-term matches). A threshold
-   * below [[All]] reads every term's df from `termstats`.
+   * the count is within the threshold; beyond it the count may degrade to
+   * a lower bound). This path skips nothing, so the count `n` is always
+   * the exact match count and the bound class follows Lucene's rule:
+   * `TotalHits(n, exact = threshold == All || n <= threshold)`.
    */
   def runCounted(spark: SparkSession, blocks: Dataset[BlockRow], termstats: DataFrame,
                  stats: CorpusStats, req: Request,
                  totalHitsThreshold: Int = All): (Seq[(Long, Float)], TotalHits) = {
-    // one dictionary lookup serves both the term infos and the df bound
-    val memo = Some(newDfCache())
-    termInfos(termstats, stats, req, memo) match {
+    termInfos(termstats, stats, req, None) match {
       case None => (Nil, TotalHits(0L, exact = true))
       case Some(infos) =>
         import spark.implicits._
-        val dfBound: Option[Long] =
-          if (totalHitsThreshold == All || infos.isEmpty) None
-          else {
-            val dfs = lookupDfs(termstats, infos.map(_.term), memo)
-            val termDfs = infos.map(i => dfs(i.term))
-            Some(if (req.mode == And) termDfs.min else termDfs.sum)
-          }
-        val prune = dfBound.exists(_ > totalHitsThreshold) && canSkip(req, infos, None)
-        val th = theta(spark, blocks, req, infos, prune)
         val k = req.k
         // worst-first ordering: lowest score, then highest docId dequeues first
         implicit val worstFirst: Ordering[(Long, Float)] =
           Ordering.by { case (id, s) => (-s, id) }
-        val partials = liveScores(spark, blocks, termstats, stats, req, infos, th, None, memo)
+        val partials = liveScores(spark, blocks, termstats, stats, req, infos,
+            excludeDocs = None, dfCache = None)
           .as[(Long, Float)]
           .mapPartitions { it =>
             var n = 0L
@@ -337,15 +278,7 @@ object QueryEngine {
         val hits = partials.iterator.flatMap(_._2)
           .toArray.sortBy { case (id, s) => (-s, id) }.take(k).toSeq
         val n = partials.iterator.map(_._1).sum
-        val total = dfBound match {
-          // the dictionary df IS a single term's count; the bound class
-          // still follows the reference rule (EQ iff the count fits)
-          case Some(df) if infos.size == 1 => TotalHits(df, exact = df <= totalHitsThreshold)
-          // theta == 0 means nothing was skipped: the count is exact even on
-          // the not-provably-small path (And mode, or an Or whose estimate was 0)
-          case _ => TotalHits(n, exact = th == 0f && (totalHitsThreshold == All || n <= totalHitsThreshold))
-        }
-        (hits, total)
+        (hits, TotalHits(n, exact = totalHitsThreshold == All || n <= totalHitsThreshold))
     }
   }
 
@@ -384,24 +317,17 @@ object QueryEngine {
     if (infos.isEmpty || (req.mode == And && infos.size < required)) None else Some(infos)
   }
 
-  /** Pruning and WAND skip docs by their summed score over ALL matches: a
-    * clause that removes docs after scoring (mustNot, filter, tombstones,
-    * cursor) could leave fewer than k survivors above theta, and theta's
-    * partial sums are no lower bound of a DisjunctionMax score. */
+  /** WAND skips docs by their summed score over ALL matches: a clause that
+    * removes docs after scoring (mustNot, filter, tombstones, cursor) could
+    * leave fewer than k survivors above the kernel's threshold, and its
+    * block bounds are no bound of a DisjunctionMax score. */
   private def canSkip(req: Request, infos: Seq[TermInfo], excludeDocs: Option[DataFrame]): Boolean =
     infos.nonEmpty && req.tieBreaker.isEmpty && req.mustNot.isEmpty && req.filter.isEmpty &&
       req.after.isEmpty && excludeDocs.isEmpty
 
-  /** Stage 2's prune threshold: the estimated k-th score when pruning (Or,
-    * or a single term — an And doc's partial sums prove nothing), else 0. */
-  private def theta(spark: SparkSession, blocks: Dataset[BlockRow], req: Request,
-                    infos: Seq[TermInfo], prune: Boolean): Float =
-    if (prune && (req.mode == Or || infos.size == 1)) estimateTheta(spark, blocks, infos, req.k)
-    else 0f
-
   /** Stages 2-4: scored postings, the per-doc combine, the exclusions. */
   private def liveScores(spark: SparkSession, blocks: Dataset[BlockRow], termstats: DataFrame,
-                         stats: CorpusStats, req: Request, infos: Seq[TermInfo], theta: Float,
+                         stats: CorpusStats, req: Request, infos: Seq[TermInfo],
                          excludeDocs: Option[DataFrame], dfCache: Option[DfCache]): DataFrame = {
     import spark.implicits._
     val combined = req.clauses match {
@@ -409,7 +335,7 @@ object QueryEngine {
       case Expanded(termPred) =>
         matchingDocs(spark, blocks, expand(termstats, termPred)).withColumn("score", lit(1f))
       case clauses =>
-        val main = scoredPostings(spark, blocks, infos, theta)
+        val main = scoredPostings(spark, blocks, infos)
         val postings = clauses match {
           // HOT rows are already columnar -> score with the codegen
           // Bm25Score expression (the term filter pushes to the scan)
@@ -439,7 +365,7 @@ object QueryEngine {
     val negInfos = if (req.mustNot.isEmpty) Nil else plan(termstats, stats, req.mustNot, dfCache = dfCache)
     val kept =
       if (negInfos.isEmpty) combined
-      else combined.join(scoredPostings(spark, blocks, negInfos, 0f).select("docId").distinct(),
+      else combined.join(scoredPostings(spark, blocks, negInfos).select("docId").distinct(),
         Seq("docId"), "left_anti")
     val filtered = req.filter.fold(kept)(fq => kept.join(fq, Seq("docId")))
     // tombstones and the cursor apply BEFORE the limit: afterwards, pages
@@ -482,35 +408,6 @@ object QueryEngine {
       },
       a => (a.getField("mx").cast("double") + a.getField("others") * lit(tie.toDouble)).cast("float")
     ).as("score")
-  }
-
-  /** Phase A of the prune: fully score the single best block per term; the
-    * k-th best achieved partial score is a valid lower bound of the true
-    * k-th score (partial <= true). */
-  private def estimateTheta(spark: SparkSession, blocks: Dataset[BlockRow],
-                            infos: Seq[TermInfo], k: Int): Float = {
-    import spark.implicits._
-    val byTerm = infos.map(ti => ti.term -> ti).toMap
-    // per term, the (minDoc) key of the block with the highest upper bound
-    val bounds = blocks
-      .filter($"term".isin(infos.map(_.term): _*))
-      .select($"term", $"minDoc", $"impactFreqs", $"impactNorms")
-      .as[(String, Long, Array[Int], Array[Byte])]
-      .map { case (t, minDoc, fs, ns) => (t, minDoc, blockBound(byTerm(t).scorer, fs, ns)) }
-      .toDF("term", "minDoc", "bound")
-    val bestKeys = bounds.groupBy("term").agg(max_by(col("minDoc"), col("bound")).as("minDoc"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    if (bestKeys.isEmpty) return 0f
-    val bestBlocks = blocks.filter($"term".isin(infos.map(_.term): _*))
-      .filter(b => bestKeys.contains((b.term, b.minDoc)))
-    val partials = scoredPostings(spark, bestBlocks, infos, 0f)
-      .groupBy("docId").agg(sum(col("score").cast("double")).cast("float").as("s"))
-      .orderBy(desc("s")).limit(k)
-      .collect()
-    // nextDown: the partial sum's accumulation order (Spark sum(double)) can
-    // exceed the canonical ti-ordered sum by an ulp; theta must stay a true
-    // lower bound of the k-th score
-    if (partials.length < k) 0f else math.nextDown(partials.last.getFloat(1))
   }
 
   /** Dictionary expansion of a term predicate (a pushed-down filter on the

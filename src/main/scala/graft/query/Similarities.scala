@@ -13,7 +13,7 @@ import graft.codec.SmallFloat
  * A [[SimScorer]] is the per-term scoring kernel: immutable, a few hundred
  * bytes, built once on the driver from broadcast stats and shipped inside
  * task closures (the Spark analogue of Lucene building a Weight up front).
- * Every engine path — exhaustive top-k, WAND block bounds, theta pruning —
+ * Every engine path — exhaustive top-k, WAND block bounds —
  * consumes only `score(freq, normByte)`, so any monotone-in-freq /
  * antitone-in-length similarity plugs into all of them.
  */

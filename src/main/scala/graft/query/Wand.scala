@@ -60,6 +60,18 @@ object Wand {
     def advance(): Unit = { idx += 1; docs = null; tfs = null; pos = 0 }
   }
 
+  /** Upper bound of any doc's score within a block, from competitive impacts. */
+  private def blockBound(scorer: SimScorer, impactFreqs: Array[Int], impactNorms: Array[Byte]): Float = {
+    var m = 0f
+    var i = 0
+    while (i < impactFreqs.length) {
+      val s = scorer.score(impactFreqs(i).toFloat, impactNorms(i))
+      if (s > m) m = s
+      i += 1
+    }
+    m
+  }
+
   /** The per-bucket kernel. `lo`/`hi` mask docs outside the bucket (blocks
     * replicated across a boundary must not double-count). */
   private def bucketTopK(termBlocks: Array[TermBlocks], k: Int, lo: Long, hi: Long,
@@ -213,8 +225,7 @@ object Wand {
            k: Int, requireAll: Boolean = false, bucketDocs: Long = 1 << 16,
            decodeCounter: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
     import spark.implicits._
-    if (infos.isEmpty || k <= 0)
-      return spark.range(0).select($"id".as("docId"), lit(0f).as("score"))
+    if (infos.isEmpty || k <= 0) return QueryEngine.noHits(spark)
     val byTerm = infos.map(i => i.term -> i).toMap
     val terms = infos.map(_.term)
     val bucketed = blocks
@@ -231,7 +242,7 @@ object Wand {
         val tbs = infos.flatMap { info =>
           byT.get(info.term).map { bs =>
             val sorted = normalizeBlocks(bs.sortBy(b => (b.minDoc, b.maxDoc)))
-            val bounds = sorted.map(b => QueryEngine.blockBound(info.scorer, b.impactFreqs, b.impactNorms))
+            val bounds = sorted.map(b => blockBound(info.scorer, b.impactFreqs, b.impactNorms))
             new TermBlocks(info.ti, info.scorer, sorted, bounds, decodeCounter)
           }
         }.toArray

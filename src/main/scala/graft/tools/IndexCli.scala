@@ -11,7 +11,7 @@ import org.apache.spark.sql.SparkSession
  *   build <indexDir> <numDocs> [segments] [--pos] build/resume an index over the
  *                                                 deterministic synthetic corpus
  *   buildParquet <indexDir> <parquet> <idCol> <contentCol> [segments]
- *   query <indexDir> <k> [--and] [--prune] [--not t1,t2] term...
+ *   query <indexDir> <k> [--and] [--wand] [--not t1,t2] term...
  *   search <indexDir> <k> <classic query string>  (+a -b "c d"~2 pre* f~1 [x TO y])
  *   collate <indexDir> word...        did-you-mean with verified hit count
  *   infix <indexDir> <k> <substring>  infix suggester
@@ -164,9 +164,9 @@ object IndexCli {
         else null
       val t0 = System.nanoTime()
       val hits = idx.run(QueryEngine.Request(QueryEngine.Terms(qTerms, sim), k.toInt, mode, qNot,
-        prune = flags.contains("--prune"), wand = flags.contains("--wand"), after = after)).collect()
+        wand = flags.contains("--wand"), after = after)).collect()
       val ms = (System.nanoTime() - t0) / 1e6
-      println(f"top-${k} for ${terms.mkString(" ")} (mode=$mode prune=${flags.contains("--prune")} wand=${flags.contains("--wand")}) in $ms%.0f ms:")
+      println(f"top-${k} for ${terms.mkString(" ")} (mode=$mode wand=${flags.contains("--wand")}) in $ms%.0f ms:")
       hits.foreach(r => println(s"  doc=${r.getLong(0)} score=${r.getFloat(1)}"))
 
     // search <indexDir> <k> <classic query string...>

@@ -1,11 +1,29 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import java.util.concurrent.atomic.AtomicInteger
 
 /** Shared local SparkSession for suites (one per suite, lazily). */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Number of Spark jobs started while `body` runs. */
+  def countJobs(body: => Unit): Int = {
+    val n = new AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = n.incrementAndGet(): Unit
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      // listener bus is async; poll until the counter is stable
+      var last = -1
+      while (n.get() != last) { last = n.get(); Thread.sleep(200) }
+    } finally spark.sparkContext.removeSparkListener(l)
+    n.get()
+  }
 }
 
 object SparkSpec {

@@ -2,29 +2,12 @@ package graft.index
 
 import graft.SparkSpec
 import graft.corpus.CorpusGen
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
 /** queryResultCache (zero-job repeat queries) and snapshot/backup
   * (consistent commit-point copy, isolated from later source mutation). */
 class CacheSnapshotSpec extends SparkSpec {
   import spark.implicits._
-
-  private def countJobs(body: => Unit): Int = {
-    val n = new AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = n.incrementAndGet(): Unit
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      // listener bus is async; poll until the counter is stable
-      var last = -1
-      while (n.get() != last) { last = n.get(); Thread.sleep(200) }
-    } finally spark.sparkContext.removeSparkListener(l)
-    n.get()
-  }
 
   test("topKCached: repeat query costs ZERO jobs and returns identical rows") {
     val dir = Files.createTempDirectory("graft-qrc").toString

@@ -27,8 +27,8 @@ class EngineSpec extends SparkSpec {
   lazy val stats = IndexBuilder.corpusStats(IndexBuilder.docStats(spark, withIds))
 
   def engineTopK(terms: Seq[String], k: Int, mode: QueryEngine.Mode = QueryEngine.Or,
-                 mustNot: Seq[String] = Nil, prune: Boolean = false): Seq[(Long, Float)] =
-    QueryEngine.run(spark, blocks, termstats, stats, Request(Terms(terms), k, mode, mustNot, prune))
+                 mustNot: Seq[String] = Nil): Seq[(Long, Float)] =
+    QueryEngine.run(spark, blocks, termstats, stats, Request(Terms(terms), k, mode, mustNot))
       .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
 
   val queries: Seq[(Seq[String], QueryEngine.Mode, Seq[String])] = Seq(
@@ -62,14 +62,6 @@ class EngineSpec extends SparkSpec {
     }
   }
 
-  test("block-max pruning is rank- and score-identical to the exhaustive path") {
-    for ((terms, mode, neg) <- queries.filter(_._2 == QueryEngine.Or); k <- Seq(1, 10, 50)) {
-      val exhaustive = engineTopK(terms, k, mode, neg, prune = false)
-      val pruned = engineTopK(terms, k, mode, neg, prune = true)
-      assert(pruned === exhaustive, s"terms=$terms k=$k")
-    }
-  }
-
   test("WAND kernel is rank- and score-identical to the exhaustive path (Or and And)") {
     for ((terms, mode, neg) <- queries if neg.isEmpty; k <- Seq(1, 10, 50)) {
       val exhaustive = engineTopK(terms, k, mode, neg)
@@ -98,7 +90,7 @@ class EngineSpec extends SparkSpec {
     def run(terms: Seq[String], mode: QueryEngine.Mode, thr: Int) =
       QueryEngine.runCounted(spark, blocks, termstats, stats, Request(Terms(terms), 10, mode), thr)
 
-    // single term: df IS the count; bound class follows the threshold rule
+    // single term: the count is its df; bound class follows the threshold rule
     val dfPublic = trueCount(Seq("public"), QueryEngine.Or)
     val (h1, t1) = run(Seq("public"), QueryEngine.Or, Int.MaxValue)
     assert(t1 === QueryEngine.TotalHits(dfPublic, exact = true))
@@ -108,19 +100,25 @@ class EngineSpec extends SparkSpec {
 
     // multi-term Or, threshold unlimited: exact count, rank-identical hits
     val orTerms = Seq("import", "return", "uniq_10_1")
+    val nOr = trueCount(orTerms, QueryEngine.Or)
     val (h3, t3) = run(orTerms, QueryEngine.Or, Int.MaxValue)
-    assert(t3 === QueryEngine.TotalHits(trueCount(orTerms, QueryEngine.Or), exact = true))
+    assert(t3 === QueryEngine.TotalHits(nOr, exact = true))
     assert(h3 === engineTopK(orTerms, 10))
 
-    // multi-term Or beyond the threshold: pruned path — hits identical,
-    // count a valid lower bound covering at least the top-k
+    // multi-term Or with the threshold at its true union count: Σdf exceeds
+    // the threshold (the terms overlap) but the count fits, so it is EXACT
+    val (h3b, t3b) = run(orTerms, QueryEngine.Or, nOr.toInt)
+    assert(t3b === QueryEngine.TotalHits(nOr, exact = true))
+    assert(h3b === engineTopK(orTerms, 10))
+
+    // multi-term Or beyond the threshold: hits identical, the count a valid
+    // lower bound covering at least the top-k
     val (h4, t4) = run(orTerms, QueryEngine.Or, 5)
     assert(h4 === engineTopK(orTerms, 10))
     assert(!t4.exact)
     assert(t4.value >= h4.size && t4.value <= trueCount(orTerms, QueryEngine.Or))
 
-    // And mode: nothing is ever skipped (theta stays 0), so a small true
-    // count under a small threshold still reports EXACT
+    // And mode: a small true count within a small threshold reports EXACT
     val andTerms = Seq("import", "handler3")
     val nAnd = trueCount(andTerms, QueryEngine.And)
     val (h5, t5) = run(andTerms, QueryEngine.And, math.max(nAnd.toInt, 1))

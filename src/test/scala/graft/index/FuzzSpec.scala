@@ -6,11 +6,11 @@ import graft.query.{OracleScorer, QueryEngine, Wand}
 /** Randomized engine-vs-oracle equivalence (the RandomPostingsTester /
   * CheckHits analogue): random corpora with adversarial shapes — empty
   * docs, single-term docs, a term in every doc, huge tf — random queries,
-  * all evaluation paths (exhaustive / pruned / WAND). */
+  * both evaluation paths (exhaustive / WAND). */
 class FuzzSpec extends SparkSpec {
   import spark.implicits._
 
-  test("random corpora: exhaustive, pruned and WAND paths all match the oracle") {
+  test("random corpora: exhaustive and WAND paths match the oracle") {
     val rnd = new scala.util.Random(12345)
     val trials = sys.env.getOrElse("GRAFT_FUZZ_TRIALS", "3").toInt
     for (trial <- 0 until trials) {
@@ -51,15 +51,13 @@ class FuzzSpec extends SparkSpec {
           case _ => Nil
         }
         val want = OracleScorer.topK(corpusLocal, terms, k, mode, mustNot)
-        def run(prune: Boolean, wand: Boolean) =
+        def run(wand: Boolean) =
           QueryEngine.run(spark, blocks, termstats, stats,
-            QueryEngine.Request(QueryEngine.Terms(terms), k, mode, mustNot, prune, wand))
+            QueryEngine.Request(QueryEngine.Terms(terms), k, mode, mustNot, wand))
             .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
-        assert(run(prune = false, wand = false) === want, s"trial=$trial q=$q exhaustive terms=$terms mode=$mode k=$k neg=$mustNot")
+        assert(run(wand = false) === want, s"trial=$trial q=$q exhaustive terms=$terms mode=$mode k=$k neg=$mustNot")
         if (mustNot.isEmpty)
-          assert(run(prune = false, wand = true) === want, s"trial=$trial q=$q wand terms=$terms mode=$mode k=$k")
-        if (mode == QueryEngine.Or)
-          assert(run(prune = true, wand = false) === want, s"trial=$trial q=$q pruned terms=$terms mode=$mode k=$k neg=$mustNot")
+          assert(run(wand = true) === want, s"trial=$trial q=$q wand terms=$terms mode=$mode k=$k")
       }
       blocks.unpersist(); termstats.unpersist()
     }

@@ -51,8 +51,6 @@ class PlanAuditSpec extends SparkSpec {
     // multi-term exhaustive: exactly the one groupBy(docId) shuffle
     assert(exchanges(idx.topK(two, 10)) == 1, planOf(idx.topK(two, 10)))
     assert(exchanges(idx.topK(two, 10, And)) == 1, planOf(idx.topK(two, 10, And)))
-    // pruned: theta is estimated by driver-side jobs; the final query keeps one shuffle
-    assert(exchanges(idx.topK(two, 10, prune = true)) == 1, planOf(idx.topK(two, 10, prune = true)))
     // WAND: the docId-bucket groupByKey is the only shuffle
     assert(exchanges(idx.topK(two, 10, wand = true)) == 1, planOf(idx.topK(two, 10, wand = true)))
     assert(exchanges(idx.topK(two, 10, And, wand = true)) == 1, planOf(idx.topK(two, 10, And, wand = true)))
@@ -60,6 +58,25 @@ class PlanAuditSpec extends SparkSpec {
     // shuffle; the must ⋈ should and mustNot joins broadcast
     val parsed = idx.search("+public import -handler3", 10)
     assert(exchanges(parsed) == 1, planOf(parsed))
+  }
+
+  test("topK's ignored prune flag: same plan and job count as the plain Or query") {
+    // the benchmark's or_prune class calls topK(terms, 10, prune = true)
+    // on a warmed index; it must run exactly the exhaustive Or query
+    val warmed = IndexStore.OpenIndex(spark, dir).warm(2)
+    val terms = Seq("public", "static", "void")
+    warmed.topK(terms, 10).collect(): Unit // cache the postings, fill the df memo
+    def shape(df: => DataFrame): (String, Int) = {
+      var plan = ""
+      val jobs = countJobs { val d = df; plan = planOf(d); d.collect(): Unit }
+      (plan.replaceAll("#\\d+|plan_id=\\d+|@[0-9a-f]+", ""), jobs)
+    }
+    val (orPlan, orJobs) = shape(warmed.topK(terms, 10))
+    val (prunePlan, pruneJobs) = shape(warmed.topK(terms, 10, prune = true))
+    assert(prunePlan === orPlan)
+    assert(pruneJobs === orJobs)
+    assert("Exchange hashpartitioning".r.findAllIn(prunePlan).size == 1, prunePlan)
+    warmed.blocks.unpersist()
   }
 
   test("docvalues scan reads ONLY the narrow columns (column pruning)") {

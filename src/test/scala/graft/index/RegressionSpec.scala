@@ -6,14 +6,14 @@ import graft.query.{QueryEngine, Wand}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
-/** Regressions for review findings: prune+mustNot interaction, density
+/** Regressions for review findings: mustNot before the limit, density
   * check holes, uncommitted-segment isolation, degenerate inputs. */
 class RegressionSpec extends SparkSpec {
   import spark.implicits._
 
-  test("prune + mustNot: theta pruning must not drop surviving docs") {
+  test("mustNot before the limit: the only surviving doc is returned") {
     // doc 0 scores highest for 'foo' but contains 'bar' (excluded);
-    // doc 1 is the only survivor and must be returned even with prune=true
+    // doc 1 is the only survivor and must be returned
     val df = Seq(
       (0L, "foo foo foo foo foo bar"),
       (1L, "foo filler filler filler filler filler filler filler filler"),
@@ -23,13 +23,9 @@ class RegressionSpec extends SparkSpec {
     val termstats = IndexBuilder.termStats(blocks)
     val stats = IndexBuilder.corpusStats(IndexBuilder.docStats(spark, df))
     val unpruned = QueryEngine.run(spark, blocks, termstats, stats, QueryEngine.Request(
-      QueryEngine.Terms(Seq("foo")), 1, QueryEngine.Or, mustNot = Seq("bar"), prune = false))
-      .collect().map(_.getLong(0)).toSeq
-    val pruned = QueryEngine.run(spark, blocks, termstats, stats, QueryEngine.Request(
-      QueryEngine.Terms(Seq("foo")), 1, QueryEngine.Or, mustNot = Seq("bar"), prune = true))
+      QueryEngine.Terms(Seq("foo")), 1, QueryEngine.Or, mustNot = Seq("bar")))
       .collect().map(_.getLong(0)).toSeq
     assert(unpruned === Seq(1L))
-    assert(pruned === unpruned)
   }
 
   test("build rejects non-[0,n) docIds and empty corpora") {
@@ -66,6 +62,16 @@ class RegressionSpec extends SparkSpec {
     val out = Files.createTempDirectory("graft-uncommitted-out").toString
     IndexStore.compact(spark, dir, out, 3)
     assert(IndexStore.OpenIndex(spark, out).docstats.count() === docCount)
+  }
+
+  test("corpus.json without sumTotalTermFreq: stats fails naming the key and the file") {
+    val dir = Files.createTempDirectory("graft-corpusjson").toString
+    IndexStore.build(spark, Seq((0L, "a b"), (1L, "a c")).toDF("docId", "content"), dir, 1, 2)
+    val corpusJson = Paths.get(s"$dir/stats/corpus.json")
+    Files.writeString(corpusJson, """{"docCount":2}""")
+    val e = intercept[IllegalStateException](IndexStore.OpenIndex(spark, dir).stats)
+    assert(e.getMessage.contains("\"sumTotalTermFreq\"") && e.getMessage.contains(corpusJson.toString),
+      e.getMessage)
   }
 
   test("compact carries the positions tier") {

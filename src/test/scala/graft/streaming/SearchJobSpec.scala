@@ -51,22 +51,7 @@ class SearchJobSpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val infos = qs.zipWithIndex.collect { case (t, i) if dfs.contains(t) =>
       val sc = BM25.termScorer(1f, BM25.DefaultK1, BM25.DefaultB, dfs(t), docCount, sumDl)
-      QueryEngine.TermInfo(t, i, sc, sc.score(Int.MaxValue.toFloat, 0.toByte))
-    }
-
-    def countJobs(work: => Unit): Int = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet(): Unit
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
-        work
-        var last = -1
-        while (jobs.get() != last) { last = jobs.get(); Thread.sleep(200) }
-        jobs.get()
-      } finally spark.sparkContext.removeSparkListener(l)
+      QueryEngine.TermInfo(t, i, sc)
     }
 
     var got: (Seq[(Long, Float)], Long) = (Nil, -1L)
