@@ -64,8 +64,9 @@ class AddIndexesSpec extends SparkSpec {
     val dirD = Files.createTempDirectory("graft-split-dst").toString
     IndexStore.build(spark, docs.toDF("docId", "content"), dirS,
       numSegments = 4, shufflePartitions = 4)
-    // tombstone one doc inside seg 1's range and one outside it
-    IndexStore.delete(spark, dirS, Seq(50L, 130L))
+    // tombstone one doc inside seg 1's range [40,80), one outside it, and
+    // seg 2's first doc (80: seg 1's exclusive docHi)
+    IndexStore.delete(spark, dirS, Seq(50L, 130L, 80L))
     IndexStore.splitSegments(spark, dirS, dirD, Seq(1))
     val split = IndexStore.OpenIndex(spark, dirD)
     val full = IndexStore.OpenIndex(spark, dirS)
@@ -79,6 +80,7 @@ class AddIndexesSpec extends SparkSpec {
     // only in-range tombstones carried over
     val dead = split.deletes.get.collect().map(_.getLong(0)).toSet
     assert(dead.forall(d => d >= lo && d <= hi) && dead.nonEmpty)
+    assert(!dead.contains(80L))
     // split scores with its own (smaller) collection stats: a term's df
     // in the split ≤ its df in the full index, and queries run green
     val hits = split.topK(Seq("public"), 10).collect()
