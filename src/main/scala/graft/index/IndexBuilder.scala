@@ -23,6 +23,13 @@ final case class CorpusStats(docCount: Long, sumTotalTermFreq: Long) {
   def avgdl: Float = (sumTotalTermFreq / docCount.toDouble).toFloat
 }
 
+/** One analyzed doc: everything the index needs, content dropped. Produced
+  * in a SINGLE analysis pass (tokenization is the dominant CPU cost of the
+  * build — computing postings and doc stats from one pass instead of two
+  * nearly halves build time; see Bench). */
+final case class DocInverted(docId: Long, dl: Int, normByte: Byte, sha: String,
+                             terms: Array[String], tfs: Array[Int])
+
 /**
  * Inverted-index construction as a Catalyst-planned Dataset pipeline
  * (capability match of the reference indexing chain,
@@ -46,13 +53,6 @@ final case class CorpusStats(docCount: Long, sumTotalTermFreq: Long) {
  * in-memory per document inside flatMap (docs are small), so the shuffle
  * carries one row per (doc, distinct term), not per token.
  */
-/** One analyzed doc: everything the index needs, content dropped. Produced
-  * in a SINGLE analysis pass (tokenization is the dominant CPU cost of the
-  * build — computing postings and doc stats from one pass instead of two
-  * nearly halves build time; see Bench). */
-final case class DocInverted(docId: Long, dl: Int, normByte: Byte, sha: String,
-                             terms: Array[String], tfs: Array[Int])
-
 object IndexBuilder {
 
   /** The single analysis pass: tokenize + per-doc aggregate + sha256.
@@ -234,21 +234,14 @@ object IndexBuilder {
     override def next(): BlockRow = { val r = pending; pending = null; r }
   }
 
-  /** Global term stats from packed blocks (1/128th of the posting rows). */
-  def termStats(blocks: Dataset[BlockRow]): DataFrame =
+  /** Term stats (term, df, ttf) from packed blocks (1/128th of the
+    * posting rows): df = Σn, ttf = ΣsumTf, since each (term, doc) posting
+    * sits in exactly one block. Any frame with `term`, `n` and `sumTf`
+    * columns serves. */
+  def termStats(blocks: Dataset[_]): DataFrame =
     blocks.groupBy("term").agg(
       sum("n").as("df"),
       sum("sumTf").as("ttf"))
-
-  /** Term stats straight from the cached inverted form — same result as
-    * [[termStats]] over the packed blocks (asserted in EngineSpec), but
-    * reads the in-memory `inv` instead of the just-written parquet. */
-  def termStatsOfInverted(inv: Dataset[DocInverted]): DataFrame = {
-    import inv.sparkSession.implicits._
-    inv.flatMap(d => d.terms.indices.iterator.map(i => (d.terms(i), d.tfs(i))))
-      .toDF("term", "tf")
-      .groupBy("term").agg(count("*").as("df"), sum("tf").cast("long").as("ttf"))
-  }
 
   def corpusStats(docstats: Dataset[DocStat]): CorpusStats = {
     val r = docstats.agg(count("*"), sum(col("dl").cast("long"))).head()

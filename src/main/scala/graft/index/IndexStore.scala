@@ -97,6 +97,70 @@ object IndexStore {
     Files.move(tmp, manifestPath(dir, m.segId), StandardCopyOption.ATOMIC_MOVE)
   }
 
+  /** The postings columns a segment's termstats derive from, given to the
+    * read-back so it runs no schema-inference job. */
+  private lazy val TermStatsInput: org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType(org.apache.spark.sql.Encoders.product[BlockRow].schema
+      .filter(f => Set("term", "n", "sumTf")(f.name)))
+
+  /**
+   * Publish one segment: the single commit of build, sealHot, compact and
+   * addIndexes (Lucene's flush, merge and addIndexes likewise end in one
+   * publish — the codec writes the postings with the segment's term
+   * statistics, then the segment is recorded; SURVEY §2.2, §3.4). In order:
+   *  1. refuse a `segId` already committed under `dir`;
+   *  2. `tiers(segDir)` writes the caller's extra tiers (positions,
+   *     offsets, docvalues);
+   *  3. write postings and docstats, each observing its manifest aggregates
+   *     (block count; doc count, sum(dl), docId min/max, content xor) in the
+   *     write's own final stage — a result-stage task's metrics apply once
+   *     even when the task is retried or run speculatively;
+   *  4. write termstats from the postings just written (df = Σn,
+   *     ttf = ΣsumTf: each (term, doc) posting sits in exactly one block);
+   *  5. refuse an empty segment, or a [docLo, docHi) range overlapping
+   *     another committed segment;
+   *  6. write the MANIFEST — the commit point — with docHi = max docId + 1.
+   * Data written before a refusal has no manifest, so readers never see it.
+   *
+   * `shaXor` replaces the observed content xor: sealHot's docstats carry no
+   * content, and addIndexes carries the source manifest's value.
+   */
+  private def commitSegment(spark: SparkSession, dir: String, segId: Int, source: String,
+                            postings: DataFrame, docstats: DataFrame,
+                            shaXor: Option[String] = None)(tiers: String => Unit): Unit = {
+    require(!isCommitted(dir, segId), s"segment $segId already committed under $dir")
+    val t0 = System.nanoTime()
+    val segDir = s"$dir/segments/seg=$segId"
+    tiers(segDir)
+    val blocks = org.apache.spark.sql.Observation()
+    postings.observe(blocks, count(lit(1)).as("blocks"))
+      .write.mode("overwrite").parquet(s"$segDir/postings")
+    val docs = org.apache.spark.sql.Observation()
+    docstats.observe(docs, count(lit(1)).as("docs"), sum(col("dl").cast("long")).as("sumDl"),
+        min(col("docId").cast("long")).as("lo"), max(col("docId").cast("long")).as("hi"),
+        bit_xor(xxhash64(col("contentSha256"))).as("shaXor"))
+      .write.mode("overwrite").parquet(s"$segDir/docstats")
+    IndexBuilder.termStats(spark.read.schema(TermStatsInput).parquet(s"$segDir/postings"))
+      .write.mode("overwrite").parquet(s"$segDir/termstats")
+    val d = docs.get
+    require(d("hi") != null,
+      s"$source: no docs to commit as segment $segId under $dir (empty input, " +
+        "or every doc is tombstoned) — refusing to commit an empty segment")
+    val (lo, hi) = (d("lo").asInstanceOf[Long], d("hi").asInstanceOf[Long] + 1)
+    // a manifest of this segId itself comes from a concurrent writer of the
+    // same idempotent unit (e.g. a build process that outlived its kill);
+    // this commit replaces it, so it is no neighbour to overlap
+    manifests(dir).foreach { case (f, m) =>
+      val (mLo, mHi) = (jsonLong(m, "docLo", f), jsonLong(m, "docHi", f))
+      require(jsonLong(m, "segId", f) == segId || hi <= mLo || lo >= mHi,
+        s"segment $segId docId range [$lo,$hi) overlaps committed segment range [$mLo,$mHi)")
+    }
+    writeManifest(dir, Manifest(segId, lo, hi, d("docs").asInstanceOf[Long],
+      d("sumDl").asInstanceOf[Long], blocks.get("blocks").asInstanceOf[Long],
+      shaXor.getOrElse(f"${d("shaXor").asInstanceOf[Long]}%016x"), source,
+      spark.sparkContext.applicationId, (System.nanoTime() - t0) / 1000000))
+  }
+
   /** Paths of COMMITTED segments only (manifest present). All readers go
     * through this — a crashed build's partial parquet without its
     * MANIFEST.json commit marker must never be read (the manifest IS the
@@ -166,7 +230,6 @@ object IndexStore {
       val lo = seg * per
       val hi = math.min(n, lo + per)
       if (lo < n && !isCommitted(dir, seg)) {
-        val t0 = System.nanoTime()
         val slice = corpusWithIds.filter($"docId" >= lo && $"docId" < hi)
         // ONE analysis pass per segment: postings and doc stats both derive
         // from the cached inverted form (content already dropped — the
@@ -174,45 +237,32 @@ object IndexStore {
         val inv = (if (preAnalyzed) IndexBuilder.invertDocsPre(spark, slice)
                    else IndexBuilder.invertDocs(spark, slice, analyzer = analyzer))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val ds = IndexBuilder.statsOf(inv)
-        val blocks = IndexBuilder.packBlocks(spark, IndexBuilder.postingsOf(inv), shufflePartitions)
-        val segDir = s"$dir/segments/seg=$seg"
-        blocks.write.mode("overwrite").parquet(s"$segDir/postings")
-        ds.write.mode("overwrite").parquet(s"$segDir/docstats")
-        // optional .pos analogue (phrase queries): (docId, term, poss ASC),
-        // term-bucketed so phrase term lookups prune files
-        if (withPositions)
-          (if (preAnalyzed) IndexBuilder.invertPositionsPre(spark, slice)
-           else IndexBuilder.invertPositions(spark, slice, analyzer = analyzer))
-            .repartitionByRange(shufflePartitions, $"term")
-            .sortWithinPartitions($"term", $"docId")
-            .write.mode("overwrite").parquet(s"$segDir/positions")
-        // offsets tier (.pay analogue): positions + char offsets for
-        // passage highlighting, term-bucketed like the positions tier
-        if (withOffsets)
-          IndexBuilder.invertOffsets(spark, slice)
-            .repartitionByRange(shufflePartitions, $"term")
-            .sortWithinPartitions($"term", $"docId")
-            .write.mode("overwrite").parquet(s"$segDir/offsets")
-        // doc-values tier (Lucene80DocValuesFormat analogue, SURVEY §1.1):
-        // columnar per-doc fields for sort/group — docId-clustered parquet
-        // so field-sorted queries read only these narrow columns
-        if (docValueCols.nonEmpty)
-          slice.select(($"docId" +: docValueCols.map(col)): _*)
-            .write.mode("overwrite").parquet(s"$segDir/docvalues")
-        val m = ds.agg(count("*"), sum(col("dl").cast("long")),
-          bit_xor(xxhash64(col("contentSha256")))).head()
-        // per-segment term stats (vocab-sized) written now so finalize
-        // never re-aggregates the full postings table; computed from the
-        // CACHED inverted form, not a parquet read-back
-        IndexBuilder.termStatsOfInverted(inv)
-          .write.mode("overwrite").parquet(s"$segDir/termstats")
-        val blockCount = spark.read.parquet(s"$segDir/postings").count()
-        inv.unpersist()
-        writeManifest(dir, Manifest(seg, lo, hi, m.getLong(0),
-          if (m.isNullAt(1)) 0L else m.getLong(1), blockCount,
-          f"${m.getLong(2)}%016x", source, spark.sparkContext.applicationId,
-          (System.nanoTime() - t0) / 1000000))
+        try commitSegment(spark, dir, seg, source,
+          IndexBuilder.packBlocks(spark, IndexBuilder.postingsOf(inv), shufflePartitions).toDF(),
+          IndexBuilder.statsOf(inv).toDF()) { segDir =>
+          // optional .pos analogue (phrase queries): (docId, term, poss ASC),
+          // term-bucketed so phrase term lookups prune files
+          if (withPositions)
+            (if (preAnalyzed) IndexBuilder.invertPositionsPre(spark, slice)
+             else IndexBuilder.invertPositions(spark, slice, analyzer = analyzer))
+              .repartitionByRange(shufflePartitions, $"term")
+              .sortWithinPartitions($"term", $"docId")
+              .write.mode("overwrite").parquet(s"$segDir/positions")
+          // offsets tier (.pay analogue): positions + char offsets for
+          // passage highlighting, term-bucketed like the positions tier
+          if (withOffsets)
+            IndexBuilder.invertOffsets(spark, slice)
+              .repartitionByRange(shufflePartitions, $"term")
+              .sortWithinPartitions($"term", $"docId")
+              .write.mode("overwrite").parquet(s"$segDir/offsets")
+          // doc-values tier (Lucene80DocValuesFormat analogue, SURVEY §1.1):
+          // columnar per-doc fields for sort/group — docId-clustered parquet
+          // so field-sorted queries read only these narrow columns
+          if (docValueCols.nonEmpty)
+            slice.select(($"docId" +: docValueCols.map(col)): _*)
+              .write.mode("overwrite").parquet(s"$segDir/docvalues")
+        }
+        finally inv.unpersist()
       }
     }
 
@@ -238,41 +288,21 @@ object IndexStore {
    * score-identical to the federated `QueryEngine.WithHot` request over (old index + hot)
    * because collection stats merge the same way (tested). Streamed rows
    * carry no source text, so the per-row sha invariant is recorded as
-   * absent (shaXor 0, source "sealHot").
+   * absent (shaXor 0, source "sealHot"). An empty hot tier, or one whose
+   * docIds overlap a committed segment's range, is refused at the commit.
    */
   def sealHot(spark: SparkSession, hot: DataFrame, dir: String, segId: Int,
               shufflePartitions: Int): Unit = {
     import spark.implicits._
-    require(!isCommitted(dir, segId), s"segment $segId already committed under $dir")
-    val bounds = hot.agg(min(col("docId").cast("long")), max(col("docId").cast("long"))).head()
-    require(!bounds.isNullAt(0), "cannot seal an empty hot tier")
-    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1) + 1)
-    // sealed docIds must not collide with committed segments' doc ranges
-    manifests(dir).foreach { case (f, m) =>
-      val (mLo, mHi) = (jsonLong(m, "docLo", f), jsonLong(m, "docHi", f))
-      require(hi <= mLo || lo >= mHi,
-        s"hot docId range [$lo,$hi) overlaps committed segment range [$mLo,$mHi)")
-    }
-    val t0 = System.nanoTime()
     val rows = hot.select(col("term").cast("string").as("term"),
         col("docId").cast("long").as("docId"), col("tf").cast("int").as("tf"),
         col("normByte").cast("byte").as("normByte")).as[PostingRow]
-    val segDir = s"$dir/segments/seg=$segId"
-    IndexBuilder.packBlocks(spark, rows, shufflePartitions)
-      .write.mode("overwrite").parquet(s"$segDir/postings")
     val ds = hot.select(col("docId").cast("long").as("docId"), col("dl").cast("int").as("dl"),
         col("normByte").cast("byte").as("normByte")).distinct()
       .withColumn("contentSha256", lit(""))
-    ds.write.mode("overwrite").parquet(s"$segDir/docstats")
-    hot.groupBy(col("term"))
-      .agg(count("*").as("df"), sum(col("tf").cast("long")).as("ttf"))
-      .write.mode("overwrite").parquet(s"$segDir/termstats")
-    val m = ds.agg(count("*"), sum(col("dl").cast("long"))).head()
-    val blockCount = spark.read.parquet(s"$segDir/postings").count()
-    writeManifest(dir, Manifest(segId, lo, hi, m.getLong(0),
-      if (m.isNullAt(1)) 0L else m.getLong(1), blockCount,
-      f"${0L}%016x", "sealHot", spark.sparkContext.applicationId,
-      (System.nanoTime() - t0) / 1000000))
+    commitSegment(spark, dir, segId, "sealHot",
+      IndexBuilder.packBlocks(spark, rows, shufflePartitions).toDF(), ds,
+      shaXor = Some(f"${0L}%016x"))(_ => ())
     finalizeStats(spark, dir)
   }
 
@@ -370,7 +400,7 @@ object IndexStore {
       (jsonLong(m, "docLo", f), jsonLong(m, "docHi", f))
     }
     val inRange = (c: org.apache.spark.sql.Column) =>
-      ranges.map { case (lo, hi) => c.between(lo, hi) }.reduce(_ || _)
+      ranges.map { case (lo, hi) => c >= lo && c < hi }.reduce(_ || _)
     Seq("deletes", "dvpatch").foreach { sub =>
       if (Files.exists(Paths.get(srcDir, sub))) {
         val kept = spark.read.parquet(s"$srcDir/$sub")
@@ -473,57 +503,31 @@ object IndexStore {
       if (Files.exists(Paths.get(s"$dir/deletes")))
         Some(spark.read.parquet(s"$dir/deletes").select(col("docId").cast("long").as("docId")).distinct())
       else None
+    def live(df: DataFrame): DataFrame = dead.fold(df)(d => df.join(d, Seq("docId"), "left_anti"))
     val blocks = spark.read.parquet(segDirs.map(_ + "/postings"): _*).as[BlockRow]
-    val rows0 = QueryEngine.postingRows(blocks)
-    val rows = dead match {
-      case Some(d) => rows0.join(d, Seq("docId"), "left_anti").as[PostingRow]
-      case None => rows0
-    }
-    val repacked = IndexBuilder.packBlocks(spark, rows, shufflePartitions)
-    val t0 = System.nanoTime()
-    repacked.write.mode("overwrite").parquet(s"$outDir/segments/seg=0/postings")
-    val ds0 = spark.read.parquet(segDirs.map(_ + "/docstats"): _*)
-    val ds = dead match {
-      case Some(d) => ds0.join(d, Seq("docId"), "left_anti")
-      case None => ds0
-    }
-    ds.write.mode("overwrite").parquet(s"$outDir/segments/seg=0/docstats")
-    // carry the positions tier (phrase support) when the source index has it
-    val posDirs = segDirs.filter(d => Files.exists(Paths.get(d, "positions")))
-    if (posDirs.nonEmpty)
-      dead.foldLeft(spark.read.parquet(posDirs.map(_ + "/positions"): _*)) {
-          (df, d) => df.join(d, Seq("docId"), "left_anti")
-        }
-        .repartitionByRange(shufflePartitions, col("term"))
-        .sortWithinPartitions(col("term"), col("docId"))
-        .write.mode("overwrite").parquet(s"$outDir/segments/seg=0/positions")
-    // carry the doc-values tier likewise, BAKING IN any numeric dv
-    // patches (Lucene: docvalues update generations collapse at merge)
-    val dvDirs = segDirs.filter(d => Files.exists(Paths.get(d, "docvalues")))
-    if (dvDirs.nonEmpty)
-      applyDvPatches(spark, dir,
-        dead.foldLeft(spark.read.parquet(dvDirs.map(_ + "/docvalues"): _*)) {
-          (df, d) => df.join(d, Seq("docId"), "left_anti")
-        })
-        .write.mode("overwrite").parquet(s"$outDir/segments/seg=0/docvalues")
-    val m = ds.agg(count("*"), sum(col("dl").cast("long")),
-      bit_xor(xxhash64(col("contentSha256"))), max("docId")).head()
-    // every doc tombstoned -> no surviving rows. Refuse to COMMIT (the data
-    // already written has no manifest, so readers never see it) — an index
-    // over zero docs has undefined stats, exactly like build()'s
-    // empty-corpus require. maybeCompact's 33% delete budget makes
+    val rows = live(QueryEngine.postingRows(blocks).toDF()).as[PostingRow]
+    // every doc tombstoned -> no surviving rows: commitSegment refuses to
+    // commit (an index over zero docs has undefined stats, like build()'s
+    // empty-corpus require). maybeCompact's 33% delete budget makes
     // high-delete compactions the expected trigger path, so this case is
     // reachable, not hypothetical.
-    require(!m.isNullAt(3),
-      s"compact($dir): every doc is tombstoned — refusing to commit an empty index at $outDir")
-    val segBlocks = spark.read.parquet(s"$outDir/segments/seg=0/postings")
-    IndexBuilder.termStats(segBlocks.as[BlockRow])
-      .write.mode("overwrite").parquet(s"$outDir/segments/seg=0/termstats")
-    val blockCount = segBlocks.count()
-    writeManifest(outDir, Manifest(0, 0L, m.getLong(3) + 1, m.getLong(0),
-      if (m.isNullAt(1)) 0L else m.getLong(1), blockCount,
-      f"${m.getLong(2)}%016x", s"compact($dir)", spark.sparkContext.applicationId,
-      (System.nanoTime() - t0) / 1000000))
+    commitSegment(spark, outDir, 0, s"compact($dir)",
+      IndexBuilder.packBlocks(spark, rows, shufflePartitions).toDF(),
+      live(spark.read.parquet(segDirs.map(_ + "/docstats"): _*))) { segDir =>
+      // carry the positions tier (phrase support) when the source index has it
+      val posDirs = segDirs.filter(d => Files.exists(Paths.get(d, "positions")))
+      if (posDirs.nonEmpty)
+        live(spark.read.parquet(posDirs.map(_ + "/positions"): _*))
+          .repartitionByRange(shufflePartitions, col("term"))
+          .sortWithinPartitions(col("term"), col("docId"))
+          .write.mode("overwrite").parquet(s"$segDir/positions")
+      // carry the doc-values tier likewise, BAKING IN any numeric dv
+      // patches (Lucene: docvalues update generations collapse at merge)
+      val dvDirs = segDirs.filter(d => Files.exists(Paths.get(d, "docvalues")))
+      if (dvDirs.nonEmpty)
+        applyDvPatches(spark, dir, live(spark.read.parquet(dvDirs.map(_ + "/docvalues"): _*)))
+          .write.mode("overwrite").parquet(s"$segDir/docvalues")
+    }
     finalizeStats(spark, outDir)
     // the merged index keeps the source's analysis chain
     val aj = Paths.get(s"$dir/stats/analyzer.json")
@@ -532,12 +536,6 @@ object IndexStore {
         StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Aggregate global stats over all committed segments (Lucene's
-    * IndexSearcher-level collection stats across leaves). Per-segment
-    * termstats (written at segment commit) merge with a vocab-sized
-    * aggregation — no re-read of the postings table; corpus stats come
-    * straight from the manifests (no docstats scan). Segments from older
-    * layouts without a termstats dir fall back to the postings read. */
   /**
    * IndexWriter.addIndexes (reference lucene/core index/IndexWriter.java
    * addIndexes(Directory...): import another index's segments WITHOUT
@@ -548,9 +546,11 @@ object IndexStore {
    * decode: doc gaps are deltas, so the rebase only shifts each block's
    * absolute [minDoc, maxDoc] bounds — an O(blocks) columnar rewrite, not
    * an O(postings) rebuild. Positions/offsets/docvalues tiers and
-   * tombstones/dv-patches shift the same way; per-segment termstats copy
-   * unchanged (term→df/ttf is id-independent); [[finalizeStats]] re-merges
-   * the global stats last.
+   * tombstones/dv-patches shift the same way. Each imported segment
+   * commits through [[commitSegment]], which re-derives its termstats from
+   * the rebased blocks (term→df/ttf is id-independent, so they equal the
+   * source's) and records the rebased [docLo, docHi); [[finalizeStats]]
+   * re-merges the global stats last.
    *
    * Requires identical analysis chains (Lucene's implicit contract — a
    * foreign segment analyzed differently is silently wrong there; here it
@@ -588,39 +588,25 @@ object IndexStore {
       spark.read.parquet(s"$srcDir/dvpatch")
         .withColumn("docId", col("docId") + offset)
         .write.mode("append").parquet(s"$dstDir/dvpatch")
-    var segId = nextSeg0
-    srcSegs.foreach { srcSeg =>
-      val segDir = s"$dstDir/segments/seg=$segId"
-      spark.read.parquet(s"$srcSeg/postings")
-        .withColumn("minDoc", col("minDoc") + offset)
-        .withColumn("maxDoc", col("maxDoc") + offset)
-        .write.mode("overwrite").parquet(s"$segDir/postings")
-      spark.read.parquet(s"$srcSeg/docstats")
-        .withColumn("docId", col("docId") + offset)
-        .write.mode("overwrite").parquet(s"$segDir/docstats")
-      Seq("positions", "offsets", "docvalues").foreach { tier =>
-        if (Files.exists(Paths.get(s"$srcSeg/$tier")))
-          spark.read.parquet(s"$srcSeg/$tier")
-            .withColumn("docId", col("docId") + offset)
-            .write.mode("overwrite").parquet(s"$segDir/$tier")
-      }
-      if (Files.exists(Paths.get(s"$srcSeg/termstats")))
-        spark.read.parquet(s"$srcSeg/termstats")
-          .write.mode("overwrite").parquet(s"$segDir/termstats")
-      // manifest LAST — the commit point; ranges recomputed post-shift,
+    srcSegs.zipWithIndex.foreach { case (srcSeg, i) =>
       // the content shaXor carries over (bytes unchanged by a rebase)
-      val a = spark.read.parquet(s"$segDir/docstats")
-        .agg(min("docId"), max("docId"), count("*"), sum("dl")).head()
-      val blockCount = spark.read.parquet(s"$segDir/postings").count()
       val srcMan = Files.readString(Paths.get(s"$srcSeg/MANIFEST.json"))
-      val shaXor = jsonField(srcMan, "shaXor", JsonString).getOrElse(f"${0L}%016x")
-      writeManifest(dstDir, Manifest(segId, a.getLong(0), a.getLong(1),
-        a.getLong(2), a.getLong(3), blockCount, shaXor,
-        s"addIndexes:$srcDir", spark.sparkContext.applicationId, 0L))
-      segId += 1
+      commitSegment(spark, dstDir, nextSeg0 + i, s"addIndexes:$srcDir",
+        spark.read.parquet(s"$srcSeg/postings")
+          .withColumn("minDoc", col("minDoc") + offset)
+          .withColumn("maxDoc", col("maxDoc") + offset),
+        spark.read.parquet(s"$srcSeg/docstats").withColumn("docId", col("docId") + offset),
+        shaXor = Some(jsonField(srcMan, "shaXor", JsonString).getOrElse(f"${0L}%016x"))) { segDir =>
+        Seq("positions", "offsets", "docvalues").foreach { tier =>
+          if (Files.exists(Paths.get(s"$srcSeg/$tier")))
+            spark.read.parquet(s"$srcSeg/$tier")
+              .withColumn("docId", col("docId") + offset)
+              .write.mode("overwrite").parquet(s"$segDir/$tier")
+        }
+      }
     }
     finalizeStats(spark, dstDir)
-    segId - nextSeg0
+    srcSegs.size
   }
 
   private def analyzerJson(dir: String): String = {
@@ -628,6 +614,12 @@ object IndexStore {
     if (Files.exists(p)) Files.readString(p) else ""
   }
 
+  /** Aggregate global stats over all committed segments (Lucene's
+    * IndexSearcher-level collection stats across leaves). Per-segment
+    * termstats (written at segment commit) merge with a vocab-sized
+    * aggregation — no re-read of the postings table; corpus stats come
+    * straight from the manifests (no docstats scan). Segments from older
+    * layouts without a termstats dir fall back to the postings read. */
   def finalizeStats(spark: SparkSession, dir: String): Unit = {
     val segDirs = committedSegmentDirs(dir)
     require(segDirs.nonEmpty, s"no committed segments under $dir")

@@ -232,11 +232,6 @@ object TimeIndex {
     spark.read.parquet(sel.map(b => s"${bucketDir(dir, b)}/postings"): _*).as[BlockRow]
   }
 
-  /** The selected buckets' term dictionary (term, df) read off their
-    * postings: a (term, doc) pair lives in exactly one block. */
-  def termstats(blocks: org.apache.spark.sql.Dataset[BlockRow]): DataFrame =
-    blocks.groupBy("term").agg(sum("n").as("df"))
-
   /**
    * Top-k BM25 over the buckets intersecting [fromBucket, toBucket]
    * (inclusive, bucket-id strings). Only selected buckets' parquet is read
@@ -251,7 +246,7 @@ object TimeIndex {
     if (sel.isEmpty) return QueryEngine.noHits(spark)
     val (docCount, sumDl) = mergedStats(dir, sel)
     val blocks = readBlocks(spark, dir, sel)
-    QueryEngine.run(spark, blocks, termstats(blocks), CorpusStats(docCount, sumDl),
+    QueryEngine.run(spark, blocks, IndexBuilder.termStats(blocks), CorpusStats(docCount, sumDl),
       QueryEngine.Request(QueryEngine.Terms(terms), k))
   }
 }

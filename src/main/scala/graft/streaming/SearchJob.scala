@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.index.{CorpusStats, TimeIndex}
+import graft.index.{CorpusStats, IndexBuilder, TimeIndex}
 import graft.query.QueryEngine
 import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicReference}
@@ -78,7 +78,7 @@ final class SearchJob private[streaming] (
       // are final (identical to the one-shot cross-bucket search)
       val (docCount, sumDl) = TimeIndex.mergedStats(dir, sel)
       val stats = CorpusStats(docCount, sumDl)
-      val termstats = TimeIndex.termstats(TimeIndex.readBlocks(spark, dir, sel))
+      val termstats = IndexBuilder.termStats(TimeIndex.readBlocks(spark, dir, sel))
       val infos = QueryEngine.plan(termstats, stats, terms)
       if (infos.isEmpty) {
         snapshot.set(Preview(sel.size, sel.size, 0L, Nil))

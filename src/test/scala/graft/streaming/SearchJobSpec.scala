@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.index.TimeIndex
+import graft.index.{IndexBuilder, TimeIndex}
 import java.nio.file.Files
 
 /** Incremental search job: previews advance newest-bucket-first, the
@@ -57,14 +57,14 @@ class SearchJobSpec extends SparkSpec {
     var got: (Seq[(Long, Float)], Long) = (Nil, -1L)
     val req = QueryEngine.Request(QueryEngine.Infos(infos), 15)
     val jNew = countJobs {
-      val (hits, total) = QueryEngine.runCounted(spark, blocks, TimeIndex.termstats(blocks),
+      val (hits, total) = QueryEngine.runCounted(spark, blocks, IndexBuilder.termStats(blocks),
         graft.index.CorpusStats(docCount, sumDl), req)
       got = (hits, total.value)
     }
     var oldHits: Seq[(Long, Float)] = Nil
     var oldCount = -1L
     val jOld = countJobs {
-      oldHits = QueryEngine.run(spark, blocks, TimeIndex.termstats(blocks),
+      oldHits = QueryEngine.run(spark, blocks, IndexBuilder.termStats(blocks),
           graft.index.CorpusStats(docCount, sumDl), req)
         .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
       oldCount = QueryEngine.matchingDocs(spark, blocks, qs).count()
