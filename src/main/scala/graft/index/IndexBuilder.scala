@@ -205,6 +205,11 @@ object IndexBuilder {
       .mapPartitions { it => new BlockPacker(it) }
   }
 
+  /** A codec block as a postings-table row. */
+  def blockRow(b: PostingsCodec.Block): BlockRow =
+    BlockRow(b.term, b.minDoc, b.maxDoc, b.n, b.sumTf, b.wDocs.toInt, b.wFreqs.toInt,
+      b.docGaps, b.freqs, b.norms, b.impactFreqs, b.impactNorms)
+
   /** Streaming packer: emits a BlockRow per <=128 same-term postings. */
   private final class BlockPacker(it: Iterator[PostingRow]) extends Iterator[BlockRow] {
     private val docs = new Array[Long](PostingsCodec.BlockSize)
@@ -215,9 +220,7 @@ object IndexBuilder {
     private var pending: BlockRow = null
     private def flush(): Unit = {
       if (n > 0) {
-        val b = PostingsCodec.encodeBlock(term, docs, tfs, nbs, 0, n)
-        pending = BlockRow(b.term, b.minDoc, b.maxDoc, b.n, b.sumTf, b.wDocs.toInt, b.wFreqs.toInt,
-          b.docGaps, b.freqs, b.norms, b.impactFreqs, b.impactNorms)
+        pending = blockRow(PostingsCodec.encodeBlock(term, docs, tfs, nbs, 0, n))
         n = 0
       }
     }
@@ -232,6 +235,16 @@ object IndexBuilder {
       pending != null
     }
     override def next(): BlockRow = { val r = pending; pending = null; r }
+  }
+
+  /** The hot tier's rows (StreamOps.hotIndexSink: term, docId, tf,
+    * normByte, dl) as postings — what sealHot packs into a segment and a
+    * `WithHot` query packs to score beside the index. */
+  def hotPostingRows(hot: DataFrame): Dataset[PostingRow] = {
+    import hot.sparkSession.implicits._
+    hot.select(col("term").cast("string").as("term"),
+      col("docId").cast("long").as("docId"), col("tf").cast("int").as("tf"),
+      col("normByte").cast("byte").as("normByte")).as[PostingRow]
   }
 
   /** Term stats (term, df, ttf) from packed blocks (1/128th of the

@@ -293,15 +293,11 @@ object IndexStore {
    */
   def sealHot(spark: SparkSession, hot: DataFrame, dir: String, segId: Int,
               shufflePartitions: Int): Unit = {
-    import spark.implicits._
-    val rows = hot.select(col("term").cast("string").as("term"),
-        col("docId").cast("long").as("docId"), col("tf").cast("int").as("tf"),
-        col("normByte").cast("byte").as("normByte")).as[PostingRow]
     val ds = hot.select(col("docId").cast("long").as("docId"), col("dl").cast("int").as("dl"),
         col("normByte").cast("byte").as("normByte")).distinct()
       .withColumn("contentSha256", lit(""))
     commitSegment(spark, dir, segId, "sealHot",
-      IndexBuilder.packBlocks(spark, rows, shufflePartitions).toDF(), ds,
+      IndexBuilder.packBlocks(spark, IndexBuilder.hotPostingRows(hot), shufflePartitions).toDF(), ds,
       shaXor = Some(f"${0L}%016x"))(_ => ())
     finalizeStats(spark, dir)
   }
@@ -747,13 +743,15 @@ object IndexStore {
     /** Drop this index's tombstoned docs from a docId-keyed frame. */
     def liveDocs(docs: DataFrame): DataFrame = QueryEngine.liveDocs(docs, deletes)
 
-    /** BM25 (or `sim`) top-k over the query terms. `prune` is ignored —
-      * block-max skipping is `wand` — and stays only for existing callers. */
+    /** BM25 (or `sim`) top-k over the query terms. `prune` and `wand` are
+      * ignored — the planner turns block-max skipping on whenever it is
+      * sound — and stay only because the benchmark's query classes still
+      * pass them. */
     def topK(terms: Seq[String], k: Int, mode: QueryEngine.Mode = QueryEngine.Or,
              mustNot: Seq[String] = Nil, prune: Boolean = false,
              wand: Boolean = false,
              sim: graft.query.Similarity = null): DataFrame =
-      run(QueryEngine.Request(QueryEngine.Terms(terms, sim), k, mode, mustNot, wand))
+      run(QueryEngine.Request(QueryEngine.Terms(terms, sim), k, mode, mustNot))
 
     /** Solr queryResultCache analogue (solr/core .../search/SolrIndexSearcher
       * queryResultCache; Lucene LRUQueryCache is the filter-level cousin):
@@ -824,12 +822,12 @@ object IndexStore {
         filter = Some(cachedFilterDocs(fq))))
 
     def topKCached(terms: Seq[String], k: Int, mode: QueryEngine.Mode = QueryEngine.Or,
-                   mustNot: Seq[String] = Nil, wand: Boolean = false): DataFrame = {
-      val key = s"${terms.mkString(",")}|$k|$mode|${mustNot.mkString(",")}|$wand"
+                   mustNot: Seq[String] = Nil): DataFrame = {
+      val key = s"${terms.mkString(",")}|$k|$mode|${mustNot.mkString(",")}"
       // on a hit, do NOT even construct the underlying plan (query planning
       // runs driver-side stats lookups) — the hit costs zero Spark jobs
       val rows = resultCache.synchronized(Option(resultCache.get(key))).getOrElse {
-        val r = topK(terms, k, mode, mustNot, wand = wand).collect()
+        val r = topK(terms, k, mode, mustNot).collect()
         resultCache.synchronized(resultCache.put(key, r))
         r
       }

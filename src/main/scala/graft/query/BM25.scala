@@ -53,8 +53,6 @@ object BM25 {
       val norm: Double = cache(normByte & 0xFF).toDouble
       weight * (freq / (freq + norm)).toFloat
     }
-    /** Upper bound of score for a (freq, norm) impact pair — used for block-max pruning. */
-    def maxScore(freq: Int, normByte: Byte): Float = score(freq.toFloat, normByte)
   }
 
   def termScorer(boost: Float, k1: Float, b: Float,

@@ -1,12 +1,9 @@
 package graft.query
 
-import graft.index.{BlockRow, CorpusStats, PostingRow}
+import graft.index.{BlockRow, CorpusStats, IndexBuilder, PostingRow}
 import graft.codec.PostingsCodec
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-
-/** One scored posting: `ti` is the query-term index (fixed summation order). */
-final case class ScoredPosting(docId: Long, ti: Int, score: Float)
 
 /**
  * BM25 top-k query execution over the packed postings table, mirroring the
@@ -17,14 +14,14 @@ final case class ScoredPosting(docId: Long, ti: Int, score: Float)
  *    [[BM25.TermScorer]]s once, ship them in closures (broadcast stats).
  *  - "per-leaf scorers" = `filter(term IN qs)` on the blocks DataFrame
  *    (Parquet min/max pruning skips non-matching row groups because blocks
- *    are written term-sorted), then a typed mapPartitions decodes blocks to
- *    (docId, termIdx, score).
- *  - "TopScoreDocCollector + TopDocs.merge" = orderBy(score DESC, docId ASC)
- *    .limit(k): Spark's TakeOrderedAndProject runs a bounded per-partition
- *    heap and merges on the driver — the per-executor-heap pattern.
- *  - "block-max WAND" = the [[Wand]] kernel (reference WANDScorer.java:45):
- *    the caller's explicit choice, rank- and score-identical to the
- *    exhaustive path.
+ *    are written term-sorted), then the [[Wand]] kernel scores the blocks
+ *    doc-at-a-time.
+ *  - "TopScoreDocCollector + TopDocs.merge" = the kernel's bounded
+ *    [[Wand.HitQueue]] per run, merged by orderBy(score DESC, docId ASC)
+ *    .limit(k) (Spark's TakeOrderedAndProject) on the driver.
+ *  - "block-max WAND" (reference WANDScorer.java:45) = the same kernel with
+ *    skipping on. As with Lucene's TOP_SCORES, it is not the caller's
+ *    choice: the planner turns it on whenever it is sound ([[canSkip]]).
  *
  * Every scored top-k query is one [[Request]] run by one planner ([[run]],
  * or [[runCounted]] for the top-k + hit count output), like Lucene's
@@ -33,12 +30,12 @@ final case class ScoredPosting(docId: Long, ti: Int, score: Float)
  * stages, each written once:
  *  1. term infos — through [[plan]], from blended dfs, caller-built, or with
  *     the hot tier's stats merged in;
- *  2. scored postings — every matching block decoded and scored;
- *  3. per-doc combine — the single-term no-shuffle fast path, the ti-ordered
- *     double sum, or DisjunctionMax;
- *  4. exclusions — AND clause count, mustNot, filter DocSet, tombstones, the
- *     `after` cursor;
- *  5. output — orderBy(score DESC, docId ASC).limit(k), the unbounded score
+ *  2. scores — term requests through the [[Wand]] kernel (the ti-ordered
+ *     double sum or DisjunctionMax, And's all-terms rule, top k or every
+ *     doc); [[Expanded]] and [[Scored]] frames as they come;
+ *  3. exclusions — mustNot, filter DocSet, tombstones, the `after` cursor,
+ *     all after scoring (the kernel then emits every doc);
+ *  4. output — orderBy(score DESC, docId ASC).limit(k), the unbounded score
  *     frame, or the one-job bounded heap + count.
  *
  * Summation contract for multi-term scores: per-term float scores are summed
@@ -104,37 +101,19 @@ object QueryEngine {
     }
   }
 
-  /** The explain and hot-tier codegen paths read BM25 internals (weight,
-    * norm cache) and are wired for the default similarity only. */
+  /** The explain path reads BM25 internals (weight, norm cache) and is
+    * wired for the default similarity only. */
   private def asBm25(s: SimScorer): BM25.TermScorer = s match {
     case t: BM25.TermScorer => t
     case other => throw new IllegalArgumentException(
       s"this path supports the BM25 similarity only, got ${other.getClass.getSimpleName}")
   }
 
-  /** Decode + score the query terms' blocks into (docId, ti, score) rows. */
-  private def scoredPostings(spark: SparkSession, blocks: Dataset[BlockRow],
-                             infos: Seq[TermInfo]): Dataset[ScoredPosting] = {
-    import spark.implicits._
-    val byTerm = infos.map(ti => ti.term -> ti).toMap
-    blocks
-      .filter($"term".isin(infos.map(_.term): _*))
-      .mapPartitions { it =>
-        it.flatMap { b =>
-          val info = byTerm(b.term)
-          val (docs, tfs) = PostingsCodec.decodeBlock(b.minDoc, b.n, b.wDocs, b.wFreqs, b.docGaps, b.freqs)
-          (0 until b.n).iterator.map { i =>
-            ScoredPosting(docs(i), info.ti, info.scorer.score(tfs(i).toFloat, b.norms(i)))
-          }
-        }
-      }
-  }
-
   /** The one block -> posting decode of the match-only and tf paths
     * (Lucene's PostingsEnum): every (term, docId, tf, normByte) row of the
     * blocks. Callers push their term (or doc-range) filter onto `blocks`
-    * first, so only those blocks are read. The scoring kernels
-    * ([[scoredPostings]], [[Wand]]) decode inline to score as they go. */
+    * first, so only those blocks are read. The scoring kernel ([[Wand]])
+    * decodes inline to score as it goes. */
   def postingRows(blocks: Dataset[BlockRow]): Dataset[PostingRow] = {
     import blocks.sparkSession.implicits._
     blocks.flatMap { b =>
@@ -192,11 +171,8 @@ object QueryEngine {
   val All: Int = Int.MaxValue
 
   /**
-   * One scored query. `wand` picks the [[Wand]] kernel, the caller's
-   * physical choice: rank- and score-identical to the exhaustive path, it
-   * applies only to a bounded top-k summed combine with nothing removed
-   * after scoring (no mustNot, filter, tombstones or cursor) — a kernel
-   * threshold over all docs could exceed the surviving k-th score.
+   * One scored query. How it is executed (block-max skipping, where the
+   * top-k heap sits) is the planner's choice, not a field.
    *
    * @param tieBreaker DisjunctionMax combine with this tie (reference
    *                   search/DisjunctionMaxScorer.java:58-70); None sums
@@ -208,7 +184,6 @@ object QueryEngine {
    *                   big top-k
    */
   final case class Request(clauses: Clauses, k: Int, mode: Mode = Or, mustNot: Seq[String] = Nil,
-                           wand: Boolean = false,
                            tieBreaker: Option[Float] = None,
                            filter: Option[DataFrame] = None,
                            after: Option[(Float, Long)] = None)
@@ -222,13 +197,13 @@ object QueryEngine {
           dfCache: Option[DfCache] = None): DataFrame =
     termInfos(termstats, stats, req, dfCache) match {
       case None => noHits(spark)
+      // a term request with nothing removed after scoring: the kernel's
+      // own heap is the top-k
+      case Some(infos) if infos.nonEmpty && removesNone(req, excludeDocs) =>
+        scoreTerms(spark, blocks, req, infos, req.k, skip = canSkip(req, infos))
       case Some(infos) =>
-        if (req.wand && canSkip(req, infos, excludeDocs) && req.k != All && !req.clauses.isInstanceOf[WithHot])
-          Wand.topK(spark, blocks, infos, req.k, requireAll = req.mode == And)
-        else {
-          val docs = liveScores(spark, blocks, termstats, stats, req, infos, excludeDocs, dfCache)
-          if (req.k == All) docs else docs.orderBy(desc("score"), asc("docId")).limit(req.k)
-        }
+        val docs = liveScores(spark, blocks, termstats, req, infos, excludeDocs)
+        if (req.k == All) docs else docs.orderBy(desc("score"), asc("docId")).limit(req.k)
     }
 
   /** Lucene TotalHits (reference search/TotalHits.java): `value` is the
@@ -237,11 +212,11 @@ object QueryEngine {
   final case class TotalHits(value: Long, exact: Boolean)
 
   /**
-   * Top-k AND its TotalHits in ONE job: each partition folds its scored
-   * docs into a bounded worst-out heap plus a counter, the driver merges
-   * the tiny per-partition states (a separate count() job would double the
-   * work — search-job previews need both per bucket). Same (score DESC,
-   * docId ASC) order as [[run]].
+   * Top-k AND its TotalHits in ONE job: each partition folds every scored
+   * doc through a [[Wand.HitQueue]] plus a counter, and the driver merges
+   * the tiny per-partition states through one more (a separate count() job
+   * would double the work — search-job previews need both per bucket). Same
+   * (score DESC, docId ASC) order as [[run]].
    *
    * TopScoreDocCollector's totalHitsThreshold contract (reference
    * TopScoreDocCollector.java:49-95,233: hits are counted exactly while
@@ -258,27 +233,20 @@ object QueryEngine {
       case Some(infos) =>
         import spark.implicits._
         val k = req.k
-        // worst-first ordering: lowest score, then highest docId dequeues first
-        implicit val worstFirst: Ordering[(Long, Float)] =
-          Ordering.by { case (id, s) => (-s, id) }
-        val partials = liveScores(spark, blocks, termstats, stats, req, infos,
-            excludeDocs = None, dfCache = None)
-          .as[(Long, Float)]
+        val partials = liveScores(spark, blocks, termstats, req, infos, excludeDocs = None)
+          .as[Wand.Hit]
           .mapPartitions { it =>
+            val q = new Wand.HitQueue(k)
             var n = 0L
-            val heap = scala.collection.mutable.PriorityQueue.empty[(Long, Float)]
-            it.foreach { r =>
-              n += 1
-              heap.enqueue(r)
-              if (heap.size > k) heap.dequeue(): Unit
-            }
-            Iterator.single((n, heap.toArray))
+            it.foreach { h => n += 1; q.offer(h) }
+            Iterator.single((n, q.hits))
           }
           .collect()
-        val hits = partials.iterator.flatMap(_._2)
-          .toArray.sortBy { case (id, s) => (-s, id) }.take(k).toSeq
+        val merged = new Wand.HitQueue(k)
+        partials.foreach(_._2.foreach(merged.offer))
         val n = partials.iterator.map(_._1).sum
-        (hits, TotalHits(n, exact = totalHitsThreshold == All || n <= totalHitsThreshold))
+        (merged.hits.map(h => (h.docId, h.score)).toSeq,
+          TotalHits(n, exact = totalHitsThreshold == All || n <= totalHitsThreshold))
     }
   }
 
@@ -317,56 +285,47 @@ object QueryEngine {
     if (infos.isEmpty || (req.mode == And && infos.size < required)) None else Some(infos)
   }
 
-  /** WAND skips docs by their summed score over ALL matches: a clause that
-    * removes docs after scoring (mustNot, filter, tombstones, cursor) could
-    * leave fewer than k survivors above the kernel's threshold, and its
-    * block bounds are no bound of a DisjunctionMax score. */
-  private def canSkip(req: Request, infos: Seq[TermInfo], excludeDocs: Option[DataFrame]): Boolean =
-    infos.nonEmpty && req.tieBreaker.isEmpty && req.mustNot.isEmpty && req.filter.isEmpty &&
-      req.after.isEmpty && excludeDocs.isEmpty
+  /** Nothing leaves the scored set after scoring: no mustNot, filter
+    * DocSet, tombstones or cursor. Otherwise a top-k taken while scoring
+    * could keep fewer than k survivors. */
+  private def removesNone(req: Request, excludeDocs: Option[DataFrame]): Boolean =
+    req.mustNot.isEmpty && req.filter.isEmpty && req.after.isEmpty && excludeDocs.isEmpty
 
-  /** Stages 2-4: scored postings, the per-doc combine, the exclusions. */
+  /** Block-max skipping is on whenever it is sound: for the summed combine
+    * (the block bounds are no bound of a DisjunctionMax score) over
+    * scorers whose competitive impacts bound their blocks. */
+  private def canSkip(req: Request, infos: Seq[TermInfo]): Boolean =
+    req.tieBreaker.isEmpty && infos.forall(_.scorer.impactBounded)
+
+  /** Stage 2 for term requests: the [[Wand]] kernel over the index blocks
+    * — for [[WithHot]] unioned with the hot rows, packed into blocks as
+    * sealHot packs them. */
+  private def scoreTerms(spark: SparkSession, blocks: Dataset[BlockRow], req: Request,
+                         infos: Seq[TermInfo], k: Int, skip: Boolean): DataFrame = {
+    val scored = req.clauses match {
+      case WithHot(_, hot) =>
+        val rows = IndexBuilder.hotPostingRows(hot.filter(col("term").isin(infos.map(_.term): _*)))
+        blocks.unionByName(IndexBuilder.packBlocks(spark, rows,
+          spark.conf.get("spark.sql.shuffle.partitions").toInt))
+      case _ => blocks
+    }
+    Wand.topK(spark, scored, infos, k, requireAll = req.mode == And, req.tieBreaker, skip)
+  }
+
+  /** Stages 2-3: every match's score, then the exclusions. */
   private def liveScores(spark: SparkSession, blocks: Dataset[BlockRow], termstats: DataFrame,
-                         stats: CorpusStats, req: Request, infos: Seq[TermInfo],
-                         excludeDocs: Option[DataFrame], dfCache: Option[DfCache]): DataFrame = {
+                         req: Request, infos: Seq[TermInfo],
+                         excludeDocs: Option[DataFrame]): DataFrame = {
     import spark.implicits._
     val combined = req.clauses match {
       case Scored(frame) => frame
       case Expanded(termPred) =>
         matchingDocs(spark, blocks, expand(termstats, termPred)).withColumn("score", lit(1f))
-      case clauses =>
-        val main = scoredPostings(spark, blocks, infos)
-        val postings = clauses match {
-          // HOT rows are already columnar -> score with the codegen
-          // Bm25Score expression (the term filter pushes to the scan)
-          case WithHot(_, hot) => main.union(infos.map { info =>
-            hot.filter(col("term") === info.term)
-              .select(col("docId").cast("long").as("docId"), lit(info.ti).as("ti"),
-                graft.functions.Bm25Score(col("tf").cast("int"), col("normByte").cast("byte"),
-                  asBm25(info.scorer).weight, asBm25(info.scorer).cache).as("score"))
-          }.reduce(_.unionByName(_)).as[ScoredPosting])
-          case _ => main
-        }
-        // single-term fast path: each posting IS the doc's full score, so
-        // the per-doc groupBy (a full shuffle of matched postings) is
-        // skipped — bit-identical by the summation contract ((0.0 + s)
-        // cast float == s) and for DisjunctionMax (s + 0 * tie). The
-        // dominant query class costs one narrow scan + bounded heap.
-        if (infos.size == 1) postings.select($"docId", $"score")
-        else {
-          val grouped = collectParts(postings.toDF(), "ti")
-          val matched = req.mode match {
-            case Or  => grouped
-            case And => grouped.filter(size($"parts") === infos.size)
-          }
-          matched.select($"docId", req.tieBreaker.fold(summedScore)(disMaxScore))
-        }
+      case _ => scoreTerms(spark, blocks, req, infos, All, skip = false)
     }
-    val negInfos = if (req.mustNot.isEmpty) Nil else plan(termstats, stats, req.mustNot, dfCache = dfCache)
     val kept =
-      if (negInfos.isEmpty) combined
-      else combined.join(scoredPostings(spark, blocks, negInfos).select("docId").distinct(),
-        Seq("docId"), "left_anti")
+      if (req.mustNot.isEmpty) combined
+      else combined.join(matchingDocs(spark, blocks, req.mustNot), Seq("docId"), "left_anti")
     val filtered = req.filter.fold(kept)(fq => kept.join(fq, Seq("docId")))
     // tombstones and the cursor apply BEFORE the limit: afterwards, pages
     // over an index with deletes would under-fill k
@@ -376,8 +335,9 @@ object QueryEngine {
     }
   }
 
-  /** Stage 3's grouping: each doc's (`order`, score) parts as one `parts`
-    * list, for [[partsSum]] or [[disMaxScore]] to combine in `order`. */
+  /** The composed-query grouping ([[Searcher]]): each doc's (`order`,
+    * score) parts as one `parts` list, for [[partsSum]] or [[disMaxScore]]
+    * to combine in `order` — the SQL twins of the kernel's combines. */
   private[query] def collectParts(scored: DataFrame, order: String): DataFrame =
     scored.groupBy("docId").agg(collect_list(struct(col(order), col("score"))).as("parts"))
 
@@ -389,9 +349,6 @@ object QueryEngine {
       lit(0.0d),
       (acc, x) => acc + x.getField("score").cast("double")
     )
-
-  /** Sum per-term float scores in term order as double, cast float. */
-  private def summedScore: Column = partsSum.cast("float").as("score")
 
   /** DisjunctionMaxScorer.score over the ordered parts: a running float
     * max; the displaced max and every non-max sub-score accumulate into a

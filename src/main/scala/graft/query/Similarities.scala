@@ -13,13 +13,20 @@ import graft.codec.SmallFloat
  * A [[SimScorer]] is the per-term scoring kernel: immutable, a few hundred
  * bytes, built once on the driver from broadcast stats and shipped inside
  * task closures (the Spark analogue of Lucene building a Weight up front).
- * Every engine path — exhaustive top-k, WAND block bounds —
- * consumes only `score(freq, normByte)`, so any monotone-in-freq /
- * antitone-in-length similarity plugs into all of them.
+ * The scoring kernel ([[Wand]]) consumes only `score(freq, normByte)`, both
+ * to score hits and to bound a block from its competitive impacts.
  */
 trait SimScorer extends Serializable {
   /** Score one (term, doc) hit from its term frequency and norm byte. */
   def score(freq: Float, normByte: Byte): Float
+
+  /** True when the score is non-decreasing in freq and non-increasing in
+    * the unsigned norm byte (over the bytes a doc length >= 1 encodes to).
+    * Only then does the best score over a block's competitive impacts
+    * (`PostingsCodec.competitiveImpacts`) bound every doc in the block, so
+    * block-max skipping may use it. A similarity outside this contract
+    * says so from its own parameters. */
+  def impactBounded: Boolean = true
 }
 
 /** Factory for per-term scorers (reference Similarity.scorer()). */
@@ -323,6 +330,7 @@ final case class MultiSim(sims: Seq[Similarity]) extends Similarity {
       subs.foreach(s => sum += s.score(freq, normByte))
       sum
     }
+    override def impactBounded: Boolean = subs.forall(_.impactBounded)
   }
 
   def scorer(boost: Float, docFreq: Long, totalTermFreq: Long,
@@ -413,10 +421,20 @@ final case class SweetSpotSim(lnMin: Int = 1, lnMax: Int = 1,
     t
   }
 
+  /** [[SimScorer.impactBounded]]: lengthNorm RISES with doc length below
+    * min(lnMin, lnMax) when steepness > 0 (and everywhere above the plateau
+    * when steepness < 0), so a plateau starting past length 1 scores
+    * shorter docs lower; hyperbolic tf falls with freq when its range and
+    * base point opposite ways. */
+  val impactBounded: Boolean =
+    (steepness == 0f || (steepness > 0f && math.min(lnMin, lnMax) <= 1)) &&
+      (!hyperbolic || (hyperMax - hyperMin) * (hyperBase - 1) >= 0)
+
   private final case class Scorer(queryWeight: Float, self: SweetSpotSim)
       extends SimScorer {
     def score(freq: Float, normByte: Byte): Float =
       self.tf(freq) * queryWeight * self.normTable(normByte & 0xFF)
+    override def impactBounded: Boolean = self.impactBounded
   }
 
   def scorer(boost: Float, docFreq: Long, totalTermFreq: Long,

@@ -1,185 +1,172 @@
 package graft.query
 
 import graft.codec.PostingsCodec
-import graft.index.BlockRow
+import graft.index.{BlockRow, IndexBuilder}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.LongAccumulator
 
 /**
- * Block-max WAND top-k: the one hand-fused physical operator of the engine
- * (SURVEY.md §4.3), mirroring the reference's dynamic pruning
- * (search/WANDScorer.java:45, MaxScoreCache.java:61-105, block-max skipping
- * ImpactsDISI.java:75-108) in Spark's execution model:
+ * The one term-scoring kernel, with block-max WAND skipping (reference
+ * search/WANDScorer.java:45, MaxScoreCache.java:61-105, ImpactsDISI.java:
+ * 75-108) — the one hand-fused physical operator of the engine (SURVEY.md
+ * §4.3). It scores every `Terms`, `Blended`, `Infos` and `WithHot` request:
  *
- *  - Postings blocks of the query terms (term-major layout) are re-keyed to
- *    doc-range buckets (`bucket = minDoc / bucketDocs`; a block spanning a
- *    boundary is replicated into both buckets and masked inside the kernel),
- *    so each bucket holds ALL query-term postings for its doc range — the
- *    Spark analogue of a Lucene leaf slice. Only query-term blocks shuffle.
- *  - Per bucket, a single-threaded kernel runs block-granular WAND: frontier
- *    = the lowest unprocessed block per term; pivot = min frontier maxDoc;
- *    if Σ frontier block-max scores < θ (current k-th best), every doc ≤
- *    pivot is non-competitive and the pivot block is skipped WITHOUT
- *    decoding; otherwise the covering blocks are decoded and docs ≤ pivot
- *    are scored doc-at-a-time into a bounded heap.
- *  - θ starts at 0 per bucket (no cross-bucket feedback — Lucene's
- *    per-slice collectors share no threshold either, so rank identity is
- *    preserved); per-bucket top-k rows are merged by the driver-side
- *    orderBy(score DESC, docId ASC).limit(k) (TakeOrderedAndProject).
+ *  - One query term runs per input partition, with no shuffle. Several
+ *    terms re-key their blocks to doc-range buckets (`bucket = minDoc /
+ *    bucketDocs`; a block spanning a boundary is replicated into both and
+ *    masked inside the kernel), so each bucket holds ALL query-term postings
+ *    for its doc range — the Spark analogue of a Lucene leaf slice. Block
+ *    bounds are computed map-side; only what the kernel reads shuffles.
+ *  - Per run: frontier = the lowest unprocessed block per term, pivot = min
+ *    frontier maxDoc. With skipping on, a window whose Σ frontier block
+ *    bounds cannot beat the k-th best score θ is skipped WITHOUT decoding;
+ *    otherwise its blocks are decoded and docs ≤ pivot scored doc-at-a-time.
+ *  - Output: a [[HitQueue]] per run, merged by the driver-side orderBy(score
+ *    DESC, docId ASC).limit(k) (TakeOrderedAndProject); or every matching
+ *    doc for `k` = [[QueryEngine.All]]. θ starts at 0 per run, as Lucene's
+ *    per-slice collectors share no threshold, so ranks stay identical.
  *
- * Scoring arithmetic and tie-breaks are identical to the exhaustive path
- * (asserted rank- AND score-identical in EngineSpec): per-term float scores
- * summed in query-term order as double, cast float; heap eviction order
- * (score ASC, docId DESC) matches HitQueue.java:76-81.
+ * Combines: per-term float scores summed in query-term order as double,
+ * cast float (DisjunctionSumScorer), or DisjunctionMaxScorer's ordered
+ * running max for a tie-breaker; `requireAll` keeps docs matching every
+ * term (And). Skipping is the caller's to grant ([[QueryEngine.run]]).
  */
 object Wand {
 
   /** One scored hit emitted by the kernel. */
   final case class Hit(docId: Long, score: Float)
 
-  /** Per-term, per-bucket block list entry (decoded lazily). */
-  private final class TermBlocks(val ti: Int, val scorer: SimScorer,
-                                 val blocks: Array[BlockRow], val bounds: Array[Float],
-                                 decodeCounter: Option[org.apache.spark.util.LongAccumulator]) {
+  /** A postings block as the kernel reads it: `slot` is the term's position
+    * in the ti-ordered query and `bound` the block's score bound from its
+    * competitive impacts (the impact arrays stay map-side). */
+  final case class KernelBlock(slot: Int, minDoc: Long, maxDoc: Long, n: Int, wDocs: Int, wFreqs: Int,
+                               docGaps: Array[Byte], freqs: Array[Byte], norms: Array[Byte], bound: Float)
+
+  /** Lucene's HitQueue (HitQueue.java:76-81) as a bounded heap: its head is
+    * the worst kept hit — lowest score, then highest docId — so the top `k`
+    * by (score DESC, docId ASC) survive. Each kernel run fills one, and
+    * [[QueryEngine.runCounted]] folds and merges through it. */
+  final class HitQueue(k: Int) {
+    private def better(a: Hit, b: Hit) = a.score > b.score || (a.score == b.score && a.docId < b.docId)
+    private val heap = scala.collection.mutable.PriorityQueue.empty[Hit](Ordering.fromLessThan(better))
+    def full: Boolean = k > 0 && heap.size == k
+    /** The k-th best score, once [[full]]. */
+    def bottom: Float = heap.head.score
+    def offer(h: Hit): Unit =
+      if (heap.size < k) heap.enqueue(h)
+      else if (k > 0 && better(h, heap.head)) { heap.dequeue(); heap.enqueue(h) }
+    /** The kept hits, best first. */
+    def hits: Array[Hit] = heap.clone().dequeueAll.reverse.toArray
+  }
+
+  /** One term's blocks in one kernel run (decoded lazily). */
+  private final class TermBlocks(val scorer: SimScorer, val blocks: Array[KernelBlock],
+                                 decodeCounter: Option[LongAccumulator]) {
     var idx = 0
     // decoded state for the current block
     var docs: Array[Long] = null
     var tfs: Array[Int] = null
     var pos = 0
     def exhausted: Boolean = idx >= blocks.length
-    def cur: BlockRow = blocks(idx)
-    def curBound: Float = bounds(idx)
-    def decodeCur(): Unit = {
-      if (docs == null) {
-        val b = cur
-        val d = PostingsCodec.decodeBlock(b.minDoc, b.n, b.wDocs, b.wFreqs, b.docGaps, b.freqs)
-        docs = d._1; tfs = d._2; pos = 0
-        decodeCounter.foreach(_.add(1))
-      }
+    def cur: KernelBlock = blocks(idx)
+    /** The current decoded doc, or Long.MaxValue when none is pending. */
+    def doc: Long = if (!exhausted && docs != null && pos < docs.length) docs(pos) else Long.MaxValue
+    def decodeCur(): Unit = if (docs == null) {
+      val b = cur
+      val d = PostingsCodec.decodeBlock(b.minDoc, b.n, b.wDocs, b.wFreqs, b.docGaps, b.freqs)
+      docs = d._1; tfs = d._2; pos = 0
+      decodeCounter.foreach(_.add(1))
     }
     def advance(): Unit = { idx += 1; docs = null; tfs = null; pos = 0 }
   }
 
-  /** Upper bound of any doc's score within a block, from competitive impacts. */
-  private def blockBound(scorer: SimScorer, impactFreqs: Array[Int], impactNorms: Array[Byte]): Float = {
-    var m = 0f
-    var i = 0
-    while (i < impactFreqs.length) {
-      val s = scorer.score(impactFreqs(i).toFloat, impactNorms(i))
-      if (s > m) m = s
-      i += 1
-    }
-    m
-  }
+  /** A block with its score bound: the best score over its competitive
+    * impacts, an upper bound of every doc in it for an impact-bounded scorer. */
+  private def kernelBlock(b: BlockRow, slot: Int, scorer: SimScorer): KernelBlock =
+    KernelBlock(slot, b.minDoc, b.maxDoc, b.n, b.wDocs, b.wFreqs, b.docGaps, b.freqs, b.norms,
+      b.impactFreqs.indices.map(i => scorer.score(b.impactFreqs(i).toFloat, b.impactNorms(i)))
+        .foldLeft(0f)(math.max))
 
-  /** The per-bucket kernel. `lo`/`hi` mask docs outside the bucket (blocks
+  /** One kernel run: the matching docs of one bucket (or partition) in
+    * ascending docId order. `lo`/`hi` mask docs outside the bucket (blocks
     * replicated across a boundary must not double-count). */
-  private def bucketTopK(termBlocks: Array[TermBlocks], k: Int, lo: Long, hi: Long,
-                         requireAll: Boolean): Iterator[Hit] = {
-    // bounded heap, eviction order = (score ASC, docId DESC) so survivors
-    // are top by (score DESC, docId ASC)
-    val ord = new scala.math.Ordering[Hit] {
-      def compare(a: Hit, b: Hit): Int = {
-        val c = java.lang.Float.compare(b.score, a.score) // min-heap by score
-        if (c != 0) c else java.lang.Long.compare(a.docId, b.docId)
+  private final class Kernel(terms: Array[TermBlocks], lo: Long, hi: Long,
+                             requireAll: Boolean, tieBreaker: Option[Float]) extends Iterator[Hit] {
+    /** Lucene's setMinCompetitiveScore: a window whose summed block bounds
+      * fall below it is skipped undecoded. */
+    var minCompetitive: Double = Double.NegativeInfinity
+    private val nTerms = terms.length
+    private val disMax = tieBreaker.isDefined
+    private val tie = tieBreaker.getOrElse(0f).toDouble
+    private var open = false
+    private var pivot = 0L
+    private var pending: Hit = null
+
+    def hasNext: Boolean = {
+      while (pending == null && (open || openWindow())) {
+        var d = Long.MaxValue
+        var t = 0
+        while (t < nTerms) { d = math.min(d, terms(t).doc); t += 1 }
+        if (d > pivot) closeWindow() else pending = scoreDoc(d)
       }
-    }
-    val heap = new scala.collection.mutable.PriorityQueue[Hit]()(ord)
-    var theta = 0f
-    def offer(docId: Long, score: Float): Unit = {
-      if (heap.size < k) {
-        heap.enqueue(Hit(docId, score))
-        if (heap.size == k) theta = heap.head.score
-      } else if (score > theta ||
-        (score == theta && docId < heap.head.docId)) {
-        heap.dequeue()
-        heap.enqueue(Hit(docId, score))
-        theta = heap.head.score
-      }
+      pending != null
     }
 
-    val nTerms = termBlocks.length
-    while (termBlocks.exists(!_.exhausted)) {
-      // frontier: lowest unprocessed block per term; pivot = min maxDoc
-      var pivot = Long.MaxValue
-      var boundSum = 0.0
+    def next(): Hit = { hasNext; val h = pending; pending = null; h }
+
+    /** Open the next window whose bound is competitive and decode its
+      * covering blocks; false once every term is exhausted. */
+    private def openWindow(): Boolean = {
+      while (terms.exists(!_.exhausted)) {
+        val live = terms.filterNot(_.exhausted)
+        pivot = live.iterator.map(_.cur.maxDoc).min
+        val covering = live.filter(_.cur.minDoc <= pivot)
+        val boundSum = covering.foldLeft(0.0)(_ + _.cur.bound)
+        // skip: no doc <= pivot can beat theta; advance every frontier block
+        // that ends at or before the pivot — never decoded
+        if (boundSum < minCompetitive) live.filter(_.cur.maxDoc <= pivot).foreach(_.advance())
+        else {
+          covering.foreach(_.decodeCur())
+          open = true
+          return true
+        }
+      }
+      false
+    }
+
+    /** Advance the frontier blocks the window consumed. */
+    private def closeWindow(): Unit = {
+      terms.foreach { tb =>
+        if (!tb.exhausted && ((tb.docs != null && tb.pos >= tb.docs.length) || tb.cur.maxDoc <= pivot))
+          tb.advance()
+      }
+      open = false
+    }
+
+    /** Score doc `d` from every term positioned on it, in query-term (ti)
+      * order: the double sum, or DisjunctionMaxScorer's running float max
+      * with the displaced max and every non-max part summed as double,
+      * (float)(max + others * tie). Null when `d` is not a hit. */
+    private def scoreDoc(d: Long): Hit = {
+      var sum = 0.0
+      var mx = 0f
+      var matched = 0
       var t = 0
       while (t < nTerms) {
-        val tb = termBlocks(t)
-        if (!tb.exhausted && tb.cur.maxDoc < pivot) pivot = tb.cur.maxDoc
+        val tb = terms(t)
+        if (tb.doc == d) {
+          val s = tb.scorer.score(tb.tfs(tb.pos).toFloat, tb.cur.norms(tb.pos))
+          if (!disMax || s < mx) sum += s
+          else { sum += mx; mx = s }
+          matched += 1
+          tb.pos += 1
+        }
         t += 1
       }
-      t = 0
-      while (t < nTerms) {
-        val tb = termBlocks(t)
-        if (!tb.exhausted && tb.cur.minDoc <= pivot) boundSum += tb.curBound
-        t += 1
-      }
-      // skip ONLY below nextDown(theta): a doc whose exact double sum is
-      // just under theta can round UP to exactly theta as a float and enter
-      // the heap on the docId tie-break (HitQueue tie rule)
-      val competitive = heap.size < k || boundSum >= math.nextDown(theta.toDouble)
-      if (!competitive) {
-        // skip: no doc <= pivot can reach theta; advance every frontier
-        // block that ends at or before the pivot — never decoded
-        t = 0
-        while (t < nTerms) {
-          val tb = termBlocks(t)
-          if (!tb.exhausted && tb.cur.maxDoc <= pivot) tb.advance()
-          t += 1
-        }
-      } else {
-        // score all docs <= pivot doc-at-a-time from the covering blocks
-        t = 0
-        while (t < nTerms) {
-          val tb = termBlocks(t)
-          if (!tb.exhausted && tb.cur.minDoc <= pivot) tb.decodeCur()
-          t += 1
-        }
-        var continueDocs = true
-        while (continueDocs) {
-          // next candidate = min current docId across decoded frontiers
-          var d = Long.MaxValue
-          t = 0
-          while (t < nTerms) {
-            val tb = termBlocks(t)
-            if (!tb.exhausted && tb.docs != null && tb.pos < tb.docs.length) {
-              val cd = tb.docs(tb.pos)
-              if (cd < d) d = cd
-            }
-            t += 1
-          }
-          if (d == Long.MaxValue || d > pivot) continueDocs = false
-          else {
-            // accumulate in query-term (ti) order as double — termBlocks is
-            // already ti-sorted
-            var sum = 0.0
-            var matched = 0
-            t = 0
-            while (t < nTerms) {
-              val tb = termBlocks(t)
-              if (!tb.exhausted && tb.docs != null && tb.pos < tb.docs.length && tb.docs(tb.pos) == d) {
-                sum += tb.scorer.score(tb.tfs(tb.pos).toFloat, tb.cur.norms(tb.pos))
-                matched += 1
-                tb.pos += 1
-              }
-              t += 1
-            }
-            if (d >= lo && d < hi && (!requireAll || matched == nTerms))
-              offer(d, sum.toFloat)
-          }
-        }
-        // advance fully-consumed frontier blocks
-        t = 0
-        while (t < nTerms) {
-          val tb = termBlocks(t)
-          if (!tb.exhausted && ((tb.docs != null && tb.pos >= tb.docs.length) || tb.cur.maxDoc <= pivot))
-            tb.advance()
-          t += 1
-        }
-      }
+      if (d < lo || d >= hi || (requireAll && matched < nTerms)) null
+      else Hit(d, if (disMax) (mx.toDouble + sum * tie).toFloat else sum.toFloat)
     }
-    heap.dequeueAll.reverseIterator
   }
 
   /** The kernel walks one 'current' block per term in ascending-docId order,
@@ -187,70 +174,70 @@ object Wand {
     * segments (IndexBuilder.packBlocks default) guarantee that; hash-packed
     * segments interleave a term's docs across partitions, producing
     * overlapping blocks whose split partial scores would corrupt multi-term
-    * sums. Detect the overlap per (bucket, term) and re-pack those postings
+    * sums. Detect the overlap per (run, term) and re-pack those postings
     * into disjoint blocks in memory — impacts recomputed by the codec, so
-    * pruning bounds stay exact. A bucket holds <= bucketDocs postings per
-    * term, so the merge is small and local. */
-  private def normalizeBlocks(sorted: Array[BlockRow]): Array[BlockRow] = {
-    var overlap = false
-    var i = 1
-    while (!overlap && i < sorted.length) {
-      if (sorted(i - 1).maxDoc >= sorted(i).minDoc) overlap = true
-      i += 1
-    }
-    if (!overlap) return sorted
-    val n = sorted.map(_.n).sum
-    val docs = new Array[Long](n); val tfs = new Array[Int](n); val nbs = new Array[Byte](n)
-    var o = 0
-    sorted.foreach { b =>
+    * the bounds stay exact. */
+  private def normalizeBlocks(sorted: Array[KernelBlock], scorer: SimScorer): Array[KernelBlock] = {
+    if (sorted.indices.tail.forall(i => sorted(i - 1).maxDoc < sorted(i).minDoc)) return sorted
+    // each (term, docId) lives in exactly one source partition, so the
+    // merged (doc, tf, norm) triples have no duplicates
+    val postings = sorted.flatMap { b =>
       val (d, f) = PostingsCodec.decodeBlock(b.minDoc, b.n, b.wDocs, b.wFreqs, b.docGaps, b.freqs)
-      var j = 0
-      while (j < b.n) { docs(o) = d(j); tfs(o) = f(j); nbs(o) = b.norms(j); o += 1; j += 1 }
-    }
-    // sort the merged (doc, tf, norm) triples by docId — each (term, docId)
-    // lives in exactly one source partition, so there are no duplicates
-    val idx = Array.range(0, n).sortBy(docs(_))
-    val sd = idx.map(docs(_)); val sf = idx.map(tfs(_)); val sn = idx.map(nbs(_))
-    PostingsCodec.encodeTerm(sorted(0).term, sd, sf, sn).map { b =>
-      BlockRow(b.term, b.minDoc, b.maxDoc, b.n, b.sumTf, b.wDocs.toInt, b.wFreqs.toInt,
-        b.docGaps, b.freqs, b.norms, b.impactFreqs, b.impactNorms)
-    }.toArray
+      d.indices.map(j => (d(j), f(j), b.norms(j)))
+    }.sortBy(_._1)
+    PostingsCodec.encodeTerm("", postings.map(_._1), postings.map(_._2), postings.map(_._3))
+      .map(b => kernelBlock(IndexBuilder.blockRow(b), sorted(0).slot, scorer)).toArray
   }
 
   /**
-   * Distributed block-max WAND top-k. Returns (docId, score) ordered
-   * (score DESC, docId ASC), rank/score-identical to the exhaustive [[QueryEngine.run]] path.
+   * Score the query terms' blocks: (docId, score) ordered (score DESC,
+   * docId ASC), at most `k` rows — or every matching doc, unordered, for
+   * `k` = [[QueryEngine.All]]. `skip` turns on block-max skipping for a
+   * bounded `k`; it is sound only for the summed combine over
+   * impact-bounded scorers, and the caller grants it.
    */
   def topK(spark: SparkSession, blocks: Dataset[BlockRow], infos: Seq[QueryEngine.TermInfo],
-           k: Int, requireAll: Boolean = false, bucketDocs: Long = 1 << 16,
-           decodeCounter: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
+           k: Int, requireAll: Boolean = false, tieBreaker: Option[Float] = None,
+           skip: Boolean = false, bucketDocs: Long = 1 << 16,
+           decodeCounter: Option[LongAccumulator] = None): DataFrame = {
     import spark.implicits._
     if (infos.isEmpty || k <= 0) return QueryEngine.noHits(spark)
-    val byTerm = infos.map(i => i.term -> i).toMap
-    val terms = infos.map(_.term)
-    val bucketed = blocks
-      .filter($"term".isin(terms: _*))
-      .flatMap { b =>
-        val b0 = b.minDoc / bucketDocs
-        val b1 = b.maxDoc / bucketDocs
-        (b0 to b1).iterator.map(bk => (bk, b))
+    val sorted = infos.sortBy(_.ti)
+    val slotOf = sorted.map(_.term).zipWithIndex.toMap
+    val scorers = sorted.map(_.scorer).toArray
+    def run(rows: Iterator[KernelBlock], lo: Long, hi: Long): Iterator[Hit] = {
+      val bySlot = rows.toArray.groupBy(_.slot)
+      if (bySlot.isEmpty || (requireAll && bySlot.size < scorers.length)) return Iterator.empty
+      val kernel = new Kernel(bySlot.toArray.sortBy(_._1).map { case (s, bs) =>
+        new TermBlocks(scorers(s), normalizeBlocks(bs.sortBy(b => (b.minDoc, b.maxDoc)), scorers(s)),
+          decodeCounter)
+      }, lo, hi, requireAll, tieBreaker)
+      if (k == QueryEngine.All) return kernel
+      val q = new HitQueue(k)
+      kernel.foreach { h =>
+        q.offer(h)
+        // docs arrive in ascending docId order (a doc met again after a
+        // skipped window carries a partial score within the bound that
+        // skipped it), so a later doc that only ties the k-th score loses
+        // the tie-break: it must beat it
+        if (skip && q.full) kernel.minCompetitive = Math.nextUp(q.bottom.toDouble)
       }
-    bucketed
-      .groupByKey(_._1)
-      .flatMapGroups { (bucket: Long, rows: Iterator[(Long, BlockRow)]) =>
-        val byT = rows.map(_._2).toArray.groupBy(_.term)
-        val tbs = infos.flatMap { info =>
-          byT.get(info.term).map { bs =>
-            val sorted = normalizeBlocks(bs.sortBy(b => (b.minDoc, b.maxDoc)))
-            val bounds = sorted.map(b => blockBound(info.scorer, b.impactFreqs, b.impactNorms))
-            new TermBlocks(info.ti, info.scorer, sorted, bounds, decodeCounter)
+      q.hits.iterator
+    }
+    val termBlocks = blocks.filter($"term".isin(sorted.map(_.term): _*))
+    val hits =
+      if (scorers.length == 1)
+        termBlocks.mapPartitions(it => run(it.map(kernelBlock(_, 0, scorers(0))), Long.MinValue, Long.MaxValue))
+      else
+        termBlocks
+          .flatMap { b =>
+            val kb = kernelBlock(b, slotOf(b.term), scorers(slotOf(b.term)))
+            (b.minDoc / bucketDocs to b.maxDoc / bucketDocs).iterator.map(bucket => (bucket, kb))
           }
-        }.toArray
-        if (tbs.isEmpty || (requireAll && tbs.length < infos.size)) Iterator.empty
-        else bucketTopK(tbs, k, bucket * bucketDocs, (bucket + 1) * bucketDocs, requireAll)
-      }
-      .toDF("docId", "score")
-      .orderBy(desc("score"), asc("docId"))
-      .limit(k)
+          .repartition($"_1")
+          .mapPartitions(_.toArray.groupBy(_._1).iterator.flatMap { case (bucket, bs) =>
+            run(bs.iterator.map(_._2), bucket * bucketDocs, (bucket + 1) * bucketDocs)
+          })
+    if (k == QueryEngine.All) hits.toDF() else hits.toDF().orderBy(desc("score"), asc("docId")).limit(k)
   }
 }

@@ -64,12 +64,14 @@ object PlanDump {
       sb.append("```\n")
     }
 
-    section("BM25 top-k (exhaustive)",
+    section("BM25 top-k (the term-scoring kernel)",
       """The term filter pushes into the postings parquet scan (row-group
-        |pruning on the term-sorted layout); decode+score is a single
-        |narrow mapPartitions; the final top-k is TakeOrderedAndProject —
-        |bounded per-partition heaps merged on the driver, never a global
-        |sort.""".stripMargin,
+        |pruning on the term-sorted layout); each block's score bound is
+        |computed map-side and the slim blocks shuffle once, to their
+        |doc-range bucket; the kernel scores each bucket into a bounded
+        |heap, skipping blocks that cannot compete; the final top-k is
+        |TakeOrderedAndProject — the per-bucket heaps merged on the
+        |driver, never a global sort.""".stripMargin,
       idx.topK(Seq("public", "import"), 10))
 
     section("Field-sorted top-k over doc values",

@@ -31,6 +31,14 @@ class EngineSpec extends SparkSpec {
     QueryEngine.run(spark, blocks, termstats, stats, Request(Terms(terms), k, mode, mustNot))
       .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
 
+  /** Every match of the same request (k = All, no skipping possible),
+    * sorted (score DESC, docId ASC) and cut to k. */
+  def allCutToK(b: org.apache.spark.sql.Dataset[BlockRow], ts: DataFrame, terms: Seq[String],
+                k: Int, mode: QueryEngine.Mode): Seq[(Long, Float)] =
+    QueryEngine.run(spark, b, ts, stats, Request(Terms(terms), QueryEngine.All, mode))
+      .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
+      .sortBy { case (id, s) => (-s, id) }.take(k)
+
   val queries: Seq[(Seq[String], QueryEngine.Mode, Seq[String])] = Seq(
     (Seq("public"), QueryEngine.Or, Nil),                       // mega term
     (Seq("uniq_5_0"), QueryEngine.Or, Nil),                     // singleton-ish
@@ -63,18 +71,21 @@ class EngineSpec extends SparkSpec {
   }
 
   test("WAND kernel is rank- and score-identical to the exhaustive path (Or and And)") {
+    // the exhaustive path: the same request at k = All (no heap, so no
+    // skipping), sorted and cut to k
     for ((terms, mode, neg) <- queries if neg.isEmpty; k <- Seq(1, 10, 50)) {
-      val exhaustive = engineTopK(terms, k, mode, neg)
-      val wand = QueryEngine.run(spark, blocks, termstats, stats, Request(Terms(terms), k, mode, wand = true))
-        .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
-      assert(wand === exhaustive, s"terms=$terms mode=$mode k=$k")
+      val bounded = engineTopK(terms, k, mode, neg)
+      assert(bounded === allCutToK(blocks, termstats, terms, k, mode), s"terms=$terms mode=$mode k=$k")
+      assert(bounded === OracleScorer.topK(corpusLocal, terms, k, mode), s"terms=$terms mode=$mode k=$k")
     }
     // small bucket size forces boundary-spanning replication + many buckets
-    val exhaustive = engineTopK(Seq("public", "import", "return"), 25, QueryEngine.Or, Nil)
-    val infos = QueryEngine.plan(termstats, stats, Seq("public", "import", "return"))
-    val tiny = graft.query.Wand.topK(spark, blocks, infos, 25, requireAll = false, bucketDocs = 64)
+    val terms = Seq("public", "import", "return")
+    val infos = QueryEngine.plan(termstats, stats, terms)
+    val tiny = graft.query.Wand.topK(spark, blocks, infos, 25, requireAll = false, skip = true,
+        bucketDocs = 64)
       .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
-    assert(tiny === exhaustive)
+    assert(tiny === allCutToK(blocks, termstats, terms, 25, QueryEngine.Or))
+    assert(tiny === OracleScorer.topK(corpusLocal, terms, 25))
   }
 
   test("totalHitsThreshold contract: exact within the threshold, sound lower bound beyond") {
@@ -164,10 +175,10 @@ class EngineSpec extends SparkSpec {
       spark, IndexBuilder.invert(spark, withIds), 8, strategy = "hash").cache()
     val hashTs = IndexBuilder.termStats(hashBlocks).cache()
     for ((terms, mode, neg) <- queries if neg.isEmpty; k <- Seq(1, 10, 50)) {
-      val exhaustive = engineTopK(terms, k, mode, neg)
-      val wand = QueryEngine.run(spark, hashBlocks, hashTs, stats, Request(Terms(terms), k, mode, wand = true))
+      val bounded = QueryEngine.run(spark, hashBlocks, hashTs, stats, Request(Terms(terms), k, mode))
         .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
-      assert(wand === exhaustive, s"terms=$terms mode=$mode k=$k")
+      assert(bounded === allCutToK(hashBlocks, hashTs, terms, k, mode), s"terms=$terms mode=$mode k=$k")
+      assert(bounded === OracleScorer.topK(corpusLocal, terms, k, mode), s"terms=$terms mode=$mode k=$k")
     }
     hashBlocks.unpersist(); hashTs.unpersist()
   }
@@ -189,7 +200,7 @@ class EngineSpec extends SparkSpec {
     val totalBlocks = b.filter($"term" === "common").count()
     val ctr = spark.sparkContext.longAccumulator("decoded")
     val infos = QueryEngine.plan(ts, cs, Seq("common"))
-    val got = graft.query.Wand.topK(spark, b, infos, 3, decodeCounter = Some(ctr))
+    val got = graft.query.Wand.topK(spark, b, infos, 3, skip = true, decodeCounter = Some(ctr))
       .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
     val want = QueryEngine.run(spark, b, ts, cs, Request(Terms(Seq("common")), 3))
       .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq

@@ -6,11 +6,12 @@ import graft.query.{OracleScorer, QueryEngine, Wand}
 /** Randomized engine-vs-oracle equivalence (the RandomPostingsTester /
   * CheckHits analogue): random corpora with adversarial shapes — empty
   * docs, single-term docs, a term in every doc, huge tf — random queries,
-  * both evaluation paths (exhaustive / WAND). */
+  * a bounded top-k (block-max skipping when sound) and every match cut to k. */
 class FuzzSpec extends SparkSpec {
   import spark.implicits._
 
   test("random corpora: exhaustive and WAND paths match the oracle") {
+    // exhaustive: k = All sorted and cut to k; WAND: the bounded request
     val rnd = new scala.util.Random(12345)
     val trials = sys.env.getOrElse("GRAFT_FUZZ_TRIALS", "3").toInt
     for (trial <- 0 until trials) {
@@ -51,13 +52,13 @@ class FuzzSpec extends SparkSpec {
           case _ => Nil
         }
         val want = OracleScorer.topK(corpusLocal, terms, k, mode, mustNot)
-        def run(wand: Boolean) =
+        def run(kk: Int) =
           QueryEngine.run(spark, blocks, termstats, stats,
-            QueryEngine.Request(QueryEngine.Terms(terms), k, mode, mustNot, wand))
+            QueryEngine.Request(QueryEngine.Terms(terms), kk, mode, mustNot))
             .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
-        assert(run(wand = false) === want, s"trial=$trial q=$q exhaustive terms=$terms mode=$mode k=$k neg=$mustNot")
-        if (mustNot.isEmpty)
-          assert(run(wand = true) === want, s"trial=$trial q=$q wand terms=$terms mode=$mode k=$k")
+        val all = run(QueryEngine.All).sortBy { case (id, s) => (-s, id) }.take(k)
+        assert(all === want, s"trial=$trial q=$q all terms=$terms mode=$mode k=$k neg=$mustNot")
+        assert(run(k) === want, s"trial=$trial q=$q bounded terms=$terms mode=$mode k=$k neg=$mustNot")
       }
       blocks.unpersist(); termstats.unpersist()
     }

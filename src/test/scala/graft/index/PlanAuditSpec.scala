@@ -48,12 +48,9 @@ class PlanAuditSpec extends SparkSpec {
     val two = Seq("public", "import")
     // single term: each posting IS the doc's score, no per-doc grouping
     assert(exchanges(idx.topK(Seq("public"), 10)) == 0, planOf(idx.topK(Seq("public"), 10)))
-    // multi-term exhaustive: exactly the one groupBy(docId) shuffle
+    // multi-term: the kernel's doc-range bucket shuffle is the only one
     assert(exchanges(idx.topK(two, 10)) == 1, planOf(idx.topK(two, 10)))
     assert(exchanges(idx.topK(two, 10, And)) == 1, planOf(idx.topK(two, 10, And)))
-    // WAND: the docId-bucket groupByKey is the only shuffle
-    assert(exchanges(idx.topK(two, 10, wand = true)) == 1, planOf(idx.topK(two, 10, wand = true)))
-    assert(exchanges(idx.topK(two, 10, And, wand = true)) == 1, planOf(idx.topK(two, 10, And, wand = true)))
     // parsed `+a b -c`: the should clause's per-doc combine is the one
     // shuffle; the must ⋈ should and mustNot joins broadcast
     val parsed = idx.search("+public import -handler3", 10)
@@ -61,8 +58,9 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("topK's ignored prune flag: same plan and job count as the plain Or query") {
-    // the benchmark's or_prune class calls topK(terms, 10, prune = true)
-    // on a warmed index; it must run exactly the exhaustive Or query
+    // the benchmark's or_prune, or_wand and and_wand classes call topK with
+    // prune = true or wand = true on a warmed index; each must run exactly
+    // the plain Or (And) query
     val warmed = IndexStore.OpenIndex(spark, dir).warm(2)
     val terms = Seq("public", "static", "void")
     warmed.topK(terms, 10).collect(): Unit // cache the postings, fill the df memo
@@ -76,6 +74,9 @@ class PlanAuditSpec extends SparkSpec {
     assert(prunePlan === orPlan)
     assert(pruneJobs === orJobs)
     assert("Exchange hashpartitioning".r.findAllIn(prunePlan).size == 1, prunePlan)
+    assert(shape(warmed.topK(terms, 10, wand = true)) === (orPlan, orJobs))
+    val andShape = shape(warmed.topK(terms, 10, graft.query.QueryEngine.And))
+    assert(shape(warmed.topK(terms, 10, graft.query.QueryEngine.And, wand = true)) === andShape)
     warmed.blocks.unpersist()
   }
 

@@ -22,11 +22,14 @@ class SimilaritiesSpec extends SparkSpec {
   lazy val termstats = IndexBuilder.termStats(blocks).cache()
   lazy val stats = IndexBuilder.corpusStats(IndexBuilder.docStats(spark, withIds))
 
-  private def engineTopK(terms: Seq[String], k: Int, sim: Similarity,
-                         wand: Boolean = false): Seq[(Long, Float)] =
+  private def engineTopK(terms: Seq[String], k: Int, sim: Similarity): Seq[(Long, Float)] =
     QueryEngine.run(spark, blocks, termstats, stats,
-      QueryEngine.Request(QueryEngine.Terms(terms, sim), k, wand = wand))
+      QueryEngine.Request(QueryEngine.Terms(terms, sim), k))
       .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
+
+  /** Every match (k = All), sorted (score DESC, docId ASC) and cut to k. */
+  private def allCutToK(terms: Seq[String], k: Int, sim: Similarity): Seq[(Long, Float)] =
+    engineTopK(terms, QueryEngine.All, sim).sortBy { case (id, s) => (-s, id) }.take(k)
 
   val queries: Seq[Seq[String]] = Seq(
     Seq("public"),
@@ -181,10 +184,84 @@ class SimilaritiesSpec extends SparkSpec {
     // the WAND bounds come from scorer.score over impact pairs, which is a
     // valid upper bound for ANY freq-monotone/length-antitone similarity
     for (terms <- queries; k <- Seq(10, 50)) {
-      val got = engineTopK(terms, k, ClassicSim, wand = true)
+      val got = engineTopK(terms, k, ClassicSim)
+      assert(got === allCutToK(terms, k, ClassicSim), s"terms=$terms k=$k")
       val want = OracleScorer.topKSim(corpusLocal, terms, k, ClassicSim)
       assert(got === want, s"terms=$terms k=$k")
     }
+  }
+
+  /** Every norm byte that a doc length >= 1 encodes to, ascending unsigned. */
+  private val normBytes: Seq[Byte] = (1 to 255).map(_.toByte)
+    .filter(b => SmallFloat.byte4ToInt(b) >= 1 && SmallFloat.intToByte4(SmallFloat.byte4ToInt(b)) == b)
+
+  /** The first (freq, norm byte) step at which the score falls with freq or
+    * rises with the unsigned norm byte, or None when it never does. */
+  private def contractBreak(s: SimScorer): Option[String] = {
+    val steps = for (f <- 1 to 64; (nb, i) <- normBytes.zipWithIndex) yield {
+      val here = s.score(f.toFloat, nb)
+      if (f < 64 && s.score(f + 1f, nb) < here) Some(s"freq $f -> ${f + 1} at norm byte ${nb & 0xFF}")
+      else if (i + 1 < normBytes.size && s.score(f.toFloat, normBytes(i + 1)) > here)
+        Some(s"norm byte ${nb & 0xFF} -> ${normBytes(i + 1) & 0xFF} at freq $f")
+      else None
+    }
+    steps.flatten.headOption
+  }
+
+  test("similarity bound contract: each shipped Similarity is freq-monotone and norm-antitone, or declares it is not") {
+    assert(normBytes.size > 200 && normBytes.head == SmallFloat.intToByte4(1))
+    // defaults, then the parameters the specs and the CLI use
+    val sims: Seq[Similarity] = Seq(Bm25Sim(), ClassicSim, BooleanSim, LMDirichletSim(), DfrInL2Sim(),
+      DfiSim(), IBSim(), AxiomaticF2ExpSim(), MultiSim(Seq(Bm25Sim(), ClassicSim)),
+      LMJelinekMercerSim(), SweetSpotSim(),
+      Bm25Sim(0.9f, 0.4f), LMJelinekMercerSim(0.1f), DfiSim(DfiSim.Saturated), DfiSim(DfiSim.ChiSquared),
+      IBSim(IBSim.LL, IBSim.LambdaTTF, IBSim.H1), SweetSpotSim(lnMin = 1, lnMax = 1, steepness = 0.5f),
+      SweetSpotSim(hyperbolic = true, hyperMin = 0f, hyperMax = 2f, hyperBase = 1.3, hyperXoffset = 5f))
+    // (df, ttf, docCount, sumTtf): the pinned-arithmetic stats, a rare and
+    // a common term over this spec's corpus
+    val statsSets = Seq((9L, 40L, 99L, 1980L), (1L, 2L, N.toLong, stats.sumTotalTermFreq),
+      (N / 2L, 20L * N, N.toLong, stats.sumTotalTermFreq))
+    for (sim <- sims; (df, ttf, n, sumTtf) <- statsSets) {
+      val s = sim.scorer(1f, df, ttf, n, sumTtf)
+      assert(s.impactBounded, s"$sim")
+      assert(contractBreak(s).isEmpty, s"$sim at df=$df ttf=$ttf: ${contractBreak(s)}")
+    }
+    // a plateau past length 1 scores shorter docs LOWER: it breaks the
+    // contract and says so; so do the spec's plateau and the CLI's
+    for (sim <- Seq(SweetSpotSim(lnMin = 8, lnMax = 20, steepness = 0.5f, tfBase = 1.5f, tfMin = 2f),
+                    SweetSpotSim(lnMin = 8, lnMax = 64), SweetSpotSim(lnMin = 2, lnMax = 2))) {
+      val s = sim.scorer(1f, 9L, 40L, 99L, 1980L)
+      assert(!s.impactBounded, s"$sim")
+      assert(contractBreak(s).nonEmpty, s"$sim")
+      assert(!MultiSim(Seq(Bm25Sim(), sim)).scorer(1f, 9L, 40L, 99L, 1980L).impactBounded)
+    }
+  }
+
+  test("SweetSpot plateau: skipping would drop a short high-tf doc; the engine does not skip") {
+    import spark.implicits._
+    // docs 0..127 fill one block with tf 1 on the plateau (dl 8); in the
+    // next block, doc 128 (tf 6, dl 6: below the plateau) dominates doc 129
+    // (tf 5, dl 8) in the competitive impacts, so that block's bound is
+    // sqrt(6)/3 of the weight while doc 129 scores sqrt(5) of it
+    val sim = SweetSpotSim(lnMin = 8, lnMax = 20, steepness = 2f)
+    val contents = (0 until 128).map(_ => "x a b c d e f g") ++
+      Seq("x x x x x x", "x x x x x a b c") ++ (0 until 40).map(_ => "a b c d e f g h")
+    val local = contents.zipWithIndex.map { case (c, i) => OracleScorer.Doc(i.toLong, c) }
+    val df = contents.zipWithIndex.map { case (c, i) => (i.toLong, c) }.toDF("docId", "content")
+    val b = IndexBuilder.packBlocks(spark, IndexBuilder.invert(spark, df), 1).cache()
+    val ts = IndexBuilder.termStats(b)
+    val cs = IndexBuilder.corpusStats(IndexBuilder.docStats(spark, df))
+    val want = OracleScorer.topKSim(local, Seq("x"), 1, sim)
+    assert(want.map(_._1) === Seq(129L))
+    val got = QueryEngine.run(spark, b, ts, cs, QueryEngine.Request(QueryEngine.Terms(Seq("x"), sim), 1))
+      .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
+    assert(got === want)
+    // the kernel forced to skip on these bounds loses doc 129
+    val infos = QueryEngine.plan(ts, cs, Seq("x"), sim = sim)
+    val forced = Wand.topK(spark, b, infos, 1, skip = true)
+      .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
+    assert(forced.map(_._1) === Seq(0L))
+    b.unpersist()
   }
 
   test("SweetSpotSim: plateau norm, baseline tf arithmetic, engine==oracle") {
