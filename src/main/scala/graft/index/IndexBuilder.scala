@@ -196,13 +196,18 @@ object IndexBuilder {
   def packBlocks(spark: SparkSession, postings: Dataset[PostingRow],
                  shufflePartitions: Int, strategy: String = "range"): Dataset[BlockRow] = {
     import spark.implicits._
-    val parted = strategy match {
+    packPartitions(strategy match {
       case "hash" => postings.repartition(shufflePartitions, $"term", $"docId")
       case _      => postings.repartitionByRange(shufflePartitions, $"term", $"docId")
-    }
-    parted
-      .sortWithinPartitions($"term", $"docId")
-      .mapPartitions { it => new BlockPacker(it) }
+    })
+  }
+
+  /** Pack each partition as it stands, with no shuffle: a term's blocks
+    * are disjoint within a partition but may overlap across partitions,
+    * which the scoring kernel takes. */
+  def packPartitions(postings: Dataset[PostingRow]): Dataset[BlockRow] = {
+    import postings.sparkSession.implicits._
+    postings.sortWithinPartitions($"term", $"docId").mapPartitions(it => new BlockPacker(it))
   }
 
   /** A codec block as a postings-table row. */

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
  *    .limit(k) (Spark's TakeOrderedAndProject) on the driver.
  *  - "block-max WAND" (reference WANDScorer.java:45) = the same kernel with
  *    skipping on. As with Lucene's TOP_SCORES, it is not the caller's
- *    choice: the planner turns it on whenever it is sound ([[canSkip]]).
+ *    choice: the kernel turns it on whenever it is sound ([[Wand.topK]]).
  *
  * Every scored top-k query is one [[Request]] run by one planner ([[run]],
  * or [[runCounted]] for the top-k + hit count output), like Lucene's
@@ -200,7 +200,7 @@ object QueryEngine {
       // a term request with nothing removed after scoring: the kernel's
       // own heap is the top-k
       case Some(infos) if infos.nonEmpty && removesNone(req, excludeDocs) =>
-        scoreTerms(spark, blocks, req, infos, req.k, skip = canSkip(req, infos))
+        scoreTerms(spark, blocks, req, infos, req.k)
       case Some(infos) =>
         val docs = liveScores(spark, blocks, termstats, req, infos, excludeDocs)
         if (req.k == All) docs else docs.orderBy(desc("score"), asc("docId")).limit(req.k)
@@ -291,25 +291,18 @@ object QueryEngine {
   private def removesNone(req: Request, excludeDocs: Option[DataFrame]): Boolean =
     req.mustNot.isEmpty && req.filter.isEmpty && req.after.isEmpty && excludeDocs.isEmpty
 
-  /** Block-max skipping is on whenever it is sound: for the summed combine
-    * (the block bounds are no bound of a DisjunctionMax score) over
-    * scorers whose competitive impacts bound their blocks. */
-  private def canSkip(req: Request, infos: Seq[TermInfo]): Boolean =
-    req.tieBreaker.isEmpty && infos.forall(_.scorer.impactBounded)
-
   /** Stage 2 for term requests: the [[Wand]] kernel over the index blocks
-    * — for [[WithHot]] unioned with the hot rows, packed into blocks as
-    * sealHot packs them. */
+    * — for [[WithHot]] unioned with the hot rows, packed into blocks from
+    * the postings sealHot packs, in place (no shuffle). */
   private def scoreTerms(spark: SparkSession, blocks: Dataset[BlockRow], req: Request,
-                         infos: Seq[TermInfo], k: Int, skip: Boolean): DataFrame = {
+                         infos: Seq[TermInfo], k: Int): DataFrame = {
     val scored = req.clauses match {
       case WithHot(_, hot) =>
         val rows = IndexBuilder.hotPostingRows(hot.filter(col("term").isin(infos.map(_.term): _*)))
-        blocks.unionByName(IndexBuilder.packBlocks(spark, rows,
-          spark.conf.get("spark.sql.shuffle.partitions").toInt))
+        blocks.unionByName(IndexBuilder.packPartitions(rows))
       case _ => blocks
     }
-    Wand.topK(spark, scored, infos, k, requireAll = req.mode == And, req.tieBreaker, skip)
+    Wand.topK(spark, scored, infos, k, requireAll = req.mode == And, req.tieBreaker)
   }
 
   /** Stages 2-3: every match's score, then the exclusions. */
@@ -321,7 +314,7 @@ object QueryEngine {
       case Scored(frame) => frame
       case Expanded(termPred) =>
         matchingDocs(spark, blocks, expand(termstats, termPred)).withColumn("score", lit(1f))
-      case _ => scoreTerms(spark, blocks, req, infos, All, skip = false)
+      case _ => scoreTerms(spark, blocks, req, infos, All)
     }
     val kept =
       if (req.mustNot.isEmpty) combined

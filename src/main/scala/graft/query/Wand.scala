@@ -12,25 +12,28 @@ import org.apache.spark.util.LongAccumulator
  * 75-108) — the one hand-fused physical operator of the engine (SURVEY.md
  * §4.3). It scores every `Terms`, `Blended`, `Infos` and `WithHot` request:
  *
- *  - One query term runs per input partition, with no shuffle. Several
- *    terms re-key their blocks to doc-range buckets (`bucket = minDoc /
- *    bucketDocs`; a block spanning a boundary is replicated into both and
- *    masked inside the kernel), so each bucket holds ALL query-term postings
- *    for its doc range — the Spark analogue of a Lucene leaf slice. Block
- *    bounds are computed map-side; only what the kernel reads shuffles.
- *  - Per run: frontier = the lowest unprocessed block per term, pivot = min
+ *  - One query term streams each input partition a block at a time, with
+ *    no shuffle. Several terms re-key their blocks to doc-range buckets
+ *    (`bucket = minDoc / bucketDocs`; a block spanning a boundary is
+ *    replicated into both and masked inside the kernel), so each bucket
+ *    holds ALL query-term postings for its doc range — the Spark analogue
+ *    of a Lucene leaf slice. Block bounds are computed map-side; only what
+ *    the kernel reads shuffles.
+ *  - Per run (a bucket, or a stretch of one term's ascending blocks):
+ *    frontier = the lowest unprocessed block per term, pivot = min
  *    frontier maxDoc. With skipping on, a window whose Σ frontier block
  *    bounds cannot beat the k-th best score θ is skipped WITHOUT decoding;
  *    otherwise its blocks are decoded and docs ≤ pivot scored doc-at-a-time.
- *  - Output: a [[HitQueue]] per run, merged by the driver-side orderBy(score
- *    DESC, docId ASC).limit(k) (TakeOrderedAndProject); or every matching
- *    doc for `k` = [[QueryEngine.All]]. θ starts at 0 per run, as Lucene's
- *    per-slice collectors share no threshold, so ranks stay identical.
+ *  - Output: one [[HitQueue]] per task, fed by all its runs, merged by the
+ *    driver-side orderBy(score DESC, docId ASC).limit(k)
+ *    (TakeOrderedAndProject); or every matching doc for `k` =
+ *    [[QueryEngine.All]]. θ is that queue's k-th best score: a doc outside
+ *    its task's top k is outside the global top k, so ranks stay identical.
  *
  * Combines: per-term float scores summed in query-term order as double,
  * cast float (DisjunctionSumScorer), or DisjunctionMaxScorer's ordered
  * running max for a tie-breaker; `requireAll` keeps docs matching every
- * term (And). Skipping is the caller's to grant ([[QueryEngine.run]]).
+ * term (And). Skipping is the kernel's own choice ([[topK]]).
  */
 object Wand {
 
@@ -60,25 +63,32 @@ object Wand {
     def hits: Array[Hit] = heap.clone().dequeueAll.reverse.toArray
   }
 
-  /** One term's blocks in one kernel run (decoded lazily). */
-  private final class TermBlocks(val scorer: SimScorer, val blocks: Array[KernelBlock],
+  /** One term's blocks in one kernel run: the longest prefix of `blocks`
+    * that ascends in disjoint docId ranges (a partition over several files,
+    * or of hash-packed blocks, is several runs), read one at a time and
+    * decoded lazily. */
+  private final class TermBlocks(val scorer: SimScorer, blocks: BufferedIterator[KernelBlock],
                                  decodeCounter: Option[LongAccumulator]) {
-    var idx = 0
+    /** The frontier block; null once exhausted. */
+    var cur: KernelBlock = null
     // decoded state for the current block
     var docs: Array[Long] = null
     var tfs: Array[Int] = null
     var pos = 0
-    def exhausted: Boolean = idx >= blocks.length
-    def cur: KernelBlock = blocks(idx)
+    advance()
+    def exhausted: Boolean = cur == null
     /** The current decoded doc, or Long.MaxValue when none is pending. */
-    def doc: Long = if (!exhausted && docs != null && pos < docs.length) docs(pos) else Long.MaxValue
+    def doc: Long = if (docs != null && pos < docs.length) docs(pos) else Long.MaxValue
     def decodeCur(): Unit = if (docs == null) {
       val b = cur
       val d = PostingsCodec.decodeBlock(b.minDoc, b.n, b.wDocs, b.wFreqs, b.docGaps, b.freqs)
       docs = d._1; tfs = d._2; pos = 0
       decodeCounter.foreach(_.add(1))
     }
-    def advance(): Unit = { idx += 1; docs = null; tfs = null; pos = 0 }
+    def advance(): Unit = {
+      cur = if (blocks.hasNext && (cur == null || blocks.head.minDoc > cur.maxDoc)) blocks.next() else null
+      docs = null; tfs = null; pos = 0
+    }
   }
 
   /** A block with its score bound: the best score over its competitive
@@ -88,14 +98,17 @@ object Wand {
       b.impactFreqs.indices.map(i => scorer.score(b.impactFreqs(i).toFloat, b.impactNorms(i)))
         .foldLeft(0f)(math.max))
 
-  /** One kernel run: the matching docs of one bucket (or partition) in
-    * ascending docId order. `lo`/`hi` mask docs outside the bucket (blocks
-    * replicated across a boundary must not double-count). */
+  /** One kernel run: the matching docs of one bucket (or one ascending
+    * stretch of a term's blocks) in ascending docId order. `lo`/`hi` mask
+    * docs outside the bucket (blocks replicated across a boundary must not
+    * double-count). */
   private final class Kernel(terms: Array[TermBlocks], lo: Long, hi: Long,
                              requireAll: Boolean, tieBreaker: Option[Float]) extends Iterator[Hit] {
     /** Lucene's setMinCompetitiveScore: a window whose summed block bounds
       * fall below it is skipped undecoded. */
     var minCompetitive: Double = Double.NegativeInfinity
+    /** No hit of the run has a lower docId. */
+    val start: Long = terms.iterator.filterNot(_.exhausted).map(_.cur.minDoc).foldLeft(hi)(math.min) max lo
     private val nTerms = terms.length
     private val disMax = tieBreaker.isDefined
     private val tie = tieBreaker.getOrElse(0f).toDouble
@@ -169,14 +182,11 @@ object Wand {
     }
   }
 
-  /** The kernel walks one 'current' block per term in ascending-docId order,
-    * so a term's blocks must have disjoint docId ranges. Range-packed
-    * segments (IndexBuilder.packBlocks default) guarantee that; hash-packed
-    * segments interleave a term's docs across partitions, producing
-    * overlapping blocks whose split partial scores would corrupt multi-term
-    * sums. Detect the overlap per (run, term) and re-pack those postings
-    * into disjoint blocks in memory — impacts recomputed by the codec, so
-    * the bounds stay exact. */
+  /** A term's blocks in a bucket must have disjoint docId ranges for one
+    * run. Hash-packed segments interleave a term's docs across partitions,
+    * so their blocks overlap: re-pack those postings into disjoint blocks
+    * (impacts recomputed by the codec, so the bounds stay exact). A bucket
+    * holds <= bucketDocs postings per term, so the merge is small and local. */
   private def normalizeBlocks(sorted: Array[KernelBlock], scorer: SimScorer): Array[KernelBlock] = {
     if (sorted.indices.tail.forall(i => sorted(i - 1).maxDoc < sorted(i).minDoc)) return sorted
     // each (term, docId) lives in exactly one source partition, so the
@@ -189,45 +199,51 @@ object Wand {
       .map(b => kernelBlock(IndexBuilder.blockRow(b), sorted(0).slot, scorer)).toArray
   }
 
-  /**
-   * Score the query terms' blocks: (docId, score) ordered (score DESC,
-   * docId ASC), at most `k` rows — or every matching doc, unordered, for
-   * `k` = [[QueryEngine.All]]. `skip` turns on block-max skipping for a
-   * bounded `k`; it is sound only for the summed combine over
-   * impact-bounded scorers, and the caller grants it.
-   */
+  /** Score the query terms' blocks: (docId, score) ordered (score DESC,
+    * docId ASC), at most `k` rows — or every matching doc, unordered, for
+    * `k` = [[QueryEngine.All]]. Block-max skipping is on whenever it is
+    * sound, as with Lucene's TOP_SCORES: for a bounded `k` under the summed
+    * combine (block bounds are no bound of a DisjunctionMax score) over
+    * [[SimScorer.impactBounded]] scorers. */
   def topK(spark: SparkSession, blocks: Dataset[BlockRow], infos: Seq[QueryEngine.TermInfo],
            k: Int, requireAll: Boolean = false, tieBreaker: Option[Float] = None,
-           skip: Boolean = false, bucketDocs: Long = 1 << 16,
+           bucketDocs: Long = 1 << 16,
            decodeCounter: Option[LongAccumulator] = None): DataFrame = {
     import spark.implicits._
     if (infos.isEmpty || k <= 0) return QueryEngine.noHits(spark)
     val sorted = infos.sortBy(_.ti)
     val slotOf = sorted.map(_.term).zipWithIndex.toMap
     val scorers = sorted.map(_.scorer).toArray
-    def run(rows: Iterator[KernelBlock], lo: Long, hi: Long): Iterator[Hit] = {
-      val bySlot = rows.toArray.groupBy(_.slot)
-      if (bySlot.isEmpty || (requireAll && bySlot.size < scorers.length)) return Iterator.empty
-      val kernel = new Kernel(bySlot.toArray.sortBy(_._1).map { case (s, bs) =>
-        new TermBlocks(scorers(s), normalizeBlocks(bs.sortBy(b => (b.minDoc, b.maxDoc)), scorers(s)),
-          decodeCounter)
-      }, lo, hi, requireAll, tieBreaker)
-      if (k == QueryEngine.All) return kernel
+    val skip = k != QueryEngine.All && tieBreaker.isEmpty && scorers.forall(_.impactBounded)
+    // a task's runs, in turn, into one queue (or straight out for k = All)
+    def collect(runs: Iterator[Kernel]): Iterator[Hit] = {
+      if (k == QueryEngine.All) return runs.flatten
       val q = new HitQueue(k)
-      kernel.foreach { h =>
-        q.offer(h)
-        // docs arrive in ascending docId order (a doc met again after a
-        // skipped window carries a partial score within the bound that
-        // skipped it), so a later doc that only ties the k-th score loses
-        // the tie-break: it must beat it
-        if (skip && q.full) kernel.minCompetitive = Math.nextUp(q.bottom.toDouble)
+      var top = Long.MinValue // the highest docId offered so far
+      runs.foreach { kernel =>
+        // a run's docs ascend (a doc met again after a skipped window carries
+        // a partial score within the bound that skipped it): when the run
+        // starts past every kept doc, a later doc that only ties the k-th
+        // score loses the tie-break, so it must beat it; otherwise it must
+        // not round to a tie
+        val tieLoses = kernel.start > top
+        def raise(): Unit = if (skip && q.full) kernel.minCompetitive =
+          if (tieLoses) Math.nextUp(q.bottom.toDouble) else Math.nextDown(q.bottom).toDouble
+        raise()
+        kernel.foreach { h => q.offer(h); top = math.max(top, h.docId); raise() }
       }
       q.hits.iterator
     }
     val termBlocks = blocks.filter($"term".isin(sorted.map(_.term): _*))
     val hits =
       if (scorers.length == 1)
-        termBlocks.mapPartitions(it => run(it.map(kernelBlock(_, 0, scorers(0))), Long.MinValue, Long.MaxValue))
+        // streamed: one block at a time
+        termBlocks.mapPartitions { it =>
+          val src = it.map(kernelBlock(_, 0, scorers(0))).buffered
+          collect(Iterator.continually(src).takeWhile(_.hasNext).map(s =>
+            new Kernel(Array(new TermBlocks(scorers(0), s, decodeCounter)), Long.MinValue, Long.MaxValue,
+              requireAll, tieBreaker)))
+        }
       else
         termBlocks
           .flatMap { b =>
@@ -235,9 +251,16 @@ object Wand {
             (b.minDoc / bucketDocs to b.maxDoc / bucketDocs).iterator.map(bucket => (bucket, kb))
           }
           .repartition($"_1")
-          .mapPartitions(_.toArray.groupBy(_._1).iterator.flatMap { case (bucket, bs) =>
-            run(bs.iterator.map(_._2), bucket * bucketDocs, (bucket + 1) * bucketDocs)
-          })
+          // a task holds the compressed blocks of its buckets and decodes
+          // (or re-packs) one bucket at a time
+          .mapPartitions(it => collect(it.toArray.groupBy(_._1).iterator.flatMap { case (bucket, rows) =>
+            val bySlot = rows.map(_._2).groupBy(_.slot)
+            if (requireAll && bySlot.size < scorers.length) None
+            else Some(new Kernel(bySlot.toArray.sortBy(_._1).map { case (slot, bs) =>
+              new TermBlocks(scorers(slot),
+                normalizeBlocks(bs.sortBy(b => (b.minDoc, b.maxDoc)), scorers(slot)).iterator.buffered, decodeCounter)
+            }, bucket * bucketDocs, (bucket + 1) * bucketDocs, requireAll, tieBreaker))
+          }))
     if (k == QueryEngine.All) hits.toDF() else hits.toDF().orderBy(desc("score"), asc("docId")).limit(k)
   }
 }

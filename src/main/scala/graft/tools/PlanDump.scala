@@ -68,9 +68,9 @@ object PlanDump {
       """The term filter pushes into the postings parquet scan (row-group
         |pruning on the term-sorted layout); each block's score bound is
         |computed map-side and the slim blocks shuffle once, to their
-        |doc-range bucket; the kernel scores each bucket into a bounded
-        |heap, skipping blocks that cannot compete; the final top-k is
-        |TakeOrderedAndProject — the per-bucket heaps merged on the
+        |doc-range bucket; the kernel scores a task's buckets into one
+        |bounded heap, skipping blocks that cannot compete; the final top-k
+        |is TakeOrderedAndProject — the per-task heaps merged on the
         |driver, never a global sort.""".stripMargin,
       idx.topK(Seq("public", "import"), 10))
 

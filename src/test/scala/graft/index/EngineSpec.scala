@@ -81,11 +81,28 @@ class EngineSpec extends SparkSpec {
     // small bucket size forces boundary-spanning replication + many buckets
     val terms = Seq("public", "import", "return")
     val infos = QueryEngine.plan(termstats, stats, terms)
-    val tiny = graft.query.Wand.topK(spark, blocks, infos, 25, requireAll = false, skip = true,
-        bucketDocs = 64)
+    val tiny = graft.query.Wand.topK(spark, blocks, infos, 25, requireAll = false, bucketDocs = 64)
       .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
     assert(tiny === allCutToK(blocks, termstats, terms, 25, QueryEngine.Or))
     assert(tiny === OracleScorer.topK(corpusLocal, terms, 25))
+  }
+
+  test("runs out of docId order in one task keep the docId tie-break") {
+    // every doc scores the same, so the top k are the k lowest docIds; the
+    // hash-packed partitions, coalesced, reach one task out of docId order
+    val local = (0L until 1000L).map(OracleScorer.Doc(_, "same words here"))
+    val docs = local.map(d => (d.docId, d.content)).toDF("docId", "content")
+    val b = IndexBuilder.packBlocks(spark, IndexBuilder.invert(spark, docs), 4, strategy = "hash")
+      .coalesce(1).cache()
+    val ts = IndexBuilder.termStats(b)
+    val cs = IndexBuilder.corpusStats(IndexBuilder.docStats(spark, docs))
+    for (terms <- Seq(Seq("same"), Seq("same", "words")); k <- Seq(1, 5, 200)) {
+      val got = graft.query.Wand.topK(spark, b, QueryEngine.plan(ts, cs, terms), k, bucketDocs = 64)
+        .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
+      assert(got.map(_._1) === (0L until k.toLong), s"terms=$terms k=$k")
+      assert(got === OracleScorer.topK(local, terms, k), s"terms=$terms k=$k")
+    }
+    b.unpersist()
   }
 
   test("totalHitsThreshold contract: exact within the threshold, sound lower bound beyond") {
@@ -194,17 +211,23 @@ class EngineSpec extends SparkSpec {
         .otherwise(org.apache.spark.sql.functions.concat(
           org.apache.spark.sql.functions.lit("common " + ("filler " * 300)),
           $"id")).as("content"))
+    val local = (0L until 8050L).map(id => OracleScorer.Doc(id,
+      if (id < 50) "common common common common common" else "common " + ("filler " * 300) + id))
     val b = IndexBuilder.packBlocks(spark, IndexBuilder.invert(spark, docs), 4).cache()
     val ts = IndexBuilder.termStats(b)
     val cs = IndexBuilder.corpusStats(IndexBuilder.docStats(spark, docs))
     val totalBlocks = b.filter($"term" === "common").count()
     val ctr = spark.sparkContext.longAccumulator("decoded")
     val infos = QueryEngine.plan(ts, cs, Seq("common"))
-    val got = graft.query.Wand.topK(spark, b, infos, 3, skip = true, decodeCounter = Some(ctr))
+    val got = graft.query.Wand.topK(spark, b, infos, 3, decodeCounter = Some(ctr))
       .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
-    val want = QueryEngine.run(spark, b, ts, cs, Request(Terms(Seq("common")), 3))
+    // references that skip nothing: every doc's score sorted and cut to 3,
+    // and the brute-force oracle
+    val all = QueryEngine.run(spark, b, ts, cs, Request(Terms(Seq("common")), QueryEngine.All))
       .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
-    assert(got === want)
+    assert(all.size === 8050)
+    assert(got === all.sortBy { case (id, s) => (-s, id) }.take(3))
+    assert(got === OracleScorer.topK(local, Seq("common"), 3))
     assert(ctr.value < totalBlocks / 2,
       s"WAND decoded ${ctr.value} of $totalBlocks blocks — pruning ineffective")
     b.unpersist()

@@ -256,9 +256,10 @@ class SimilaritiesSpec extends SparkSpec {
     val got = QueryEngine.run(spark, b, ts, cs, QueryEngine.Request(QueryEngine.Terms(Seq("x"), sim), 1))
       .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
     assert(got === want)
-    // the kernel forced to skip on these bounds loses doc 129
+    // the kernel, told these bounds are sound, skips and loses doc 129
     val infos = QueryEngine.plan(ts, cs, Seq("x"), sim = sim)
-    val forced = Wand.topK(spark, b, infos, 1, skip = true)
+      .map(i => i.copy(scorer = ClaimsImpactBounded(i.scorer)))
+    val forced = Wand.topK(spark, b, infos, 1)
       .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
     assert(forced.map(_._1) === Seq(0L))
     b.unpersist()
@@ -296,4 +297,11 @@ class SimilaritiesSpec extends SparkSpec {
     val want = OracleScorer.topKSim(corpusLocal, queries.last, 30, sim)
     assert(got === want)
   }
+}
+
+/** A scorer that claims its impacts bound its blocks, whatever it is: forces
+  * block-max skipping on a similarity outside the bound contract. */
+final case class ClaimsImpactBounded(s: SimScorer) extends SimScorer {
+  def score(freq: Float, normByte: Byte): Float = s.score(freq, normByte)
+  override def impactBounded: Boolean = true
 }
