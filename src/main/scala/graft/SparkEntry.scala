@@ -54,6 +54,9 @@ object SparkEntry {
   private[graft] def engineTopKBench(s: SparkSession, dir: String): DataFrame =
     docIndex(s, dir).topK(Seq("spark", "query", "join"), 20)
 
+  /** ft_engine_wand's query terms. */
+  private val WandTerms = Seq("join", "table", "dup")
+
   private val stemIdxCache = scala.collection.mutable.Map[(SparkSession, String), IndexStore.OpenIndex]()
 
   /** Stop + Porter-stemmed index over the documents table (the
@@ -531,13 +534,13 @@ object SparkEntry {
       .run(QueryEngine.Request(QueryEngine.Expanded(col("term").startsWith("s")), 1000000))
       .select(col("docId").as("doc_id"))),
 
-    // the block-max WAND battery entry: the planner skips blocks on its
-    // own, so this is ft_engine_topk's query under its own name
+    // the block-max WAND battery entry: a small k over an impact-skewed
+    // term set (tf up to 10 against a mean near 2, plus the rare `dup`), so
+    // the kernel's k-th best score rises early and skips blocks; checked
+    // by the same quantized-norm twin as ft_engine_topk
     "ft_engine_wand" -> ((s, d) => {
-      val hits = docIndex(s, d).topK(Seq("spark", "query", "join"), 20)
-        .select(col("docId").as("doc_id"))
-      hits.join(TextOps.bm25QuantizedNorms(rd(s, d, "documents"),
-        "doc_id", "text", Seq("spark", "query", "join")), "doc_id")
+      val hits = docIndex(s, d).topK(WandTerms, 3).select(col("docId").as("doc_id"))
+      hits.join(TextOps.bm25QuantizedNorms(rd(s, d, "documents"), "doc_id", "text", WandTerms), "doc_id")
     }),
 
     // engine SynonymQuery: match-any + summed tf through the real codec
@@ -3528,7 +3531,7 @@ object SparkEntry {
            | HAVING sum(CASE WHEN tok = 'dup' THEN 1 ELSE 0 END) = 1""".stripMargin,
       "ft_bm25_or" -> bm25Sql(Seq("spark", "query", "join"), "or", Nil),
       "ft_engine_topk" -> engineTopKSql(Seq("spark", "query", "join"), 20),
-      "ft_engine_wand" -> engineTopKSql(Seq("spark", "query", "join"), 20),
+      "ft_engine_wand" -> engineTopKSql(WandTerms, 3),
       "ft_bm25f" -> bm25fSql(Seq("spark", "query"), 20),
       "ph_scores" -> phrasesSql(Seq("spark", "query", "join", "data")),
       "qp_localparams" ->

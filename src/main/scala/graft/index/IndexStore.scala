@@ -1,6 +1,6 @@
 package graft.index
 
-import graft.query.QueryEngine
+import graft.query.{QueryEngine, Wand}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardCopyOption}
@@ -185,6 +185,13 @@ object IndexStore {
     }
 
   def readManifests(dir: String): Seq[String] = manifests(dir).map(_._2)
+
+  /** A committed segment directory's [docLo, docHi) from its MANIFEST. */
+  private def segmentDocRange(segDir: String): (Long, Long) = {
+    val f = s"$segDir/MANIFEST.json"
+    val m = Files.readString(Paths.get(f))
+    (jsonLong(m, "docLo", f), jsonLong(m, "docHi", f))
+  }
 
   /** The `value` pattern's group after `"key":` in a MANIFEST.json or
     * corpus.json document, None when the key is absent. */
@@ -390,11 +397,7 @@ object IndexStore {
     val st = Paths.get(srcDir, "stats")
     if (Files.exists(st)) graft.util.Fs.copyTree(st, dest.resolve("stats"))
     // tombstones / dv patches restricted to the split's docId ranges
-    val ranges: Seq[(Long, Long)] = segIds.map { id =>
-      val f = s"${byId(id)}/MANIFEST.json"
-      val m = Files.readString(Paths.get(f))
-      (jsonLong(m, "docLo", f), jsonLong(m, "docHi", f))
-    }
+    val ranges: Seq[(Long, Long)] = segIds.map(id => segmentDocRange(byId(id)))
     val inRange = (c: org.apache.spark.sql.Column) =>
       ranges.map { case (lo, hi) => c >= lo && c < hi }.reduce(_ || _)
     Seq("deletes", "dvpatch").foreach { sub =>
@@ -722,14 +725,20 @@ object IndexStore {
       * page-cache analogue for query-heavy sessions. Lazy: materialized by
       * the first query.
       *
-      * `numPartitions` > 0 coalesces the cached postings: a small top-k
-      * query launches one task per cached partition, so a file-count-sized
-      * layout (e.g. 64 build shuffle files) pays 64 task launches per query
-      * — pure scheduler overhead for queries that read a handful of blocks.
-      * Query-heavy sessions should size this near the executor-core count. */
+      * The cache is laid out once as doc-range slices of [[Wand]]'s grid
+      * ([[Wand.BucketDocs]] docIds each, Lucene's leaf slices): a block
+      * that crosses a grid line is cut there, so every posting still sits
+      * in exactly one block and `blocks` stays a valid postings table for
+      * every reader. Each cached partition holds whole, contiguous slices,
+      * at most `numPartitions` of them (one per slice for 0), so a
+      * multi-term top-k scores each partition's slices in place: one stage,
+      * no exchange. An index under one slice is one partition, coalesced
+      * narrowly, with no shuffle and no cut. Fewer, larger partitions also
+      * spare a small top-k one task launch per build output file. */
     def warm(numPartitions: Int = 0): this.type = {
-      val ds = if (numPartitions > 0) rawBlocks.coalesce(numPartitions) else rawBlocks
-      warmed = Some(ds.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      val ranges = segDirs.map(segmentDocRange)
+      val sliced = Wand.slice(rawBlocks, numPartitions, ranges.map(_._1).min, ranges.map(_._2).max)
+      warmed = Some(sliced.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       this
     }
     private var warmed: Option[Dataset[BlockRow]] = None

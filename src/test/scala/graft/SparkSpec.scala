@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import java.util.concurrent.atomic.AtomicInteger
@@ -10,19 +10,24 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
 
   /** Number of Spark jobs started while `body` runs. */
-  def countJobs(body: => Unit): Int = {
-    val n = new AtomicInteger(0)
+  def countJobs(body: => Unit): Int = countJobsAndStages(body)._1
+
+  /** (jobs started, stages submitted) while `body` runs; a stage whose
+    * shuffle output is reused is skipped, not submitted. */
+  def countJobsAndStages(body: => Unit): (Int, Int) = {
+    val (jobs, stages) = (new AtomicInteger(0), new AtomicInteger(0))
     val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = n.incrementAndGet(): Unit
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+      override def onStageSubmitted(ss: SparkListenerStageSubmitted): Unit = stages.incrementAndGet(): Unit
     }
     spark.sparkContext.addSparkListener(l)
     try {
       body
-      // listener bus is async; poll until the counter is stable
-      var last = -1
-      while (n.get() != last) { last = n.get(); Thread.sleep(200) }
+      // listener bus is async; poll until the counters are stable
+      var last = (-1, -1)
+      while ((jobs.get(), stages.get()) != last) { last = (jobs.get(), stages.get()); Thread.sleep(200) }
     } finally spark.sparkContext.removeSparkListener(l)
-    n.get()
+    (jobs.get(), stages.get())
   }
 }
 

@@ -55,6 +55,15 @@ class PlanAuditSpec extends SparkSpec {
     // shuffle; the must ⋈ should and mustNot joins broadcast
     val parsed = idx.search("+public import -handler3", 10)
     assert(exchanges(parsed) == 1, planOf(parsed))
+    // warmed: the cache is laid out in doc-range slices, so several terms
+    // score each cached partition in place — no exchange, one stage, one job
+    val warmed = IndexStore.OpenIndex(spark, dir).warm(2)
+    warmed.topK(two, 10).collect(): Unit // cache the postings, fill the df memo
+    for (df <- Seq(() => warmed.topK(two, 10), () => warmed.topK(two, 10, And))) {
+      assert(exchanges(df()) == 0, planOf(df()))
+      assert(countJobsAndStages(df().collect(): Unit) == ((1, 1)), planOf(df()))
+    }
+    warmed.blocks.unpersist()
   }
 
   test("topK's ignored prune flag: same plan and job count as the plain Or query") {
@@ -73,7 +82,7 @@ class PlanAuditSpec extends SparkSpec {
     val (prunePlan, pruneJobs) = shape(warmed.topK(terms, 10, prune = true))
     assert(prunePlan === orPlan)
     assert(pruneJobs === orJobs)
-    assert("Exchange hashpartitioning".r.findAllIn(prunePlan).size == 1, prunePlan)
+    assert("Exchange hashpartitioning".r.findAllIn(prunePlan).size == 0, prunePlan)
     assert(shape(warmed.topK(terms, 10, wand = true)) === (orPlan, orJobs))
     val andShape = shape(warmed.topK(terms, 10, graft.query.QueryEngine.And))
     assert(shape(warmed.topK(terms, 10, graft.query.QueryEngine.And, wand = true)) === andShape)
