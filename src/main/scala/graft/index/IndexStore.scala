@@ -725,20 +725,22 @@ object IndexStore {
       * page-cache analogue for query-heavy sessions. Lazy: materialized by
       * the first query.
       *
-      * The cache is laid out once as doc-range slices of [[Wand]]'s grid
-      * ([[Wand.BucketDocs]] docIds each, Lucene's leaf slices): a block
-      * that crosses a grid line is cut there, so every posting still sits
-      * in exactly one block and `blocks` stays a valid postings table for
-      * every reader. Each cached partition holds whole, contiguous slices,
-      * at most `numPartitions` of them (one per slice for 0), so a
-      * multi-term top-k scores each partition's slices in place: one stage,
-      * no exchange. An index under one slice is one partition, coalesced
-      * narrowly, with no shuffle and no cut. Fewer, larger partitions also
-      * spare a small top-k one task launch per build output file. */
+      * An index whose docIds lie in one slice of [[Wand]]'s grid
+      * ([[Wand.BucketDocs]] docIds, a Lucene leaf slice's analogue) is
+      * cached as that one slice ([[Wand.slice]]): one partition, coalesced
+      * narrowly (no shuffle), whatever `numPartitions` says, so a
+      * multi-term top-k scores it in place, in one stage with no exchange.
+      * A larger index keeps its layout, coalesced to `numPartitions` when
+      * that is > 0: a small top-k query launches one task per cached
+      * partition, so a file-count-sized layout (e.g. 64 build shuffle
+      * files) pays 64 task launches per query — pure scheduler overhead
+      * for queries that read a handful of blocks. Query-heavy sessions
+      * should size this near the executor-core count. */
     def warm(numPartitions: Int = 0): this.type = {
       val ranges = segDirs.map(segmentDocRange)
-      val sliced = Wand.slice(rawBlocks, numPartitions, ranges.map(_._1).min, ranges.map(_._2).max)
-      warmed = Some(sliced.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      val ds = Wand.slice(rawBlocks, ranges.map(_._1).min, ranges.map(_._2).max)
+        .getOrElse(if (numPartitions > 0) rawBlocks.coalesce(numPartitions) else rawBlocks)
+      warmed = Some(ds.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       this
     }
     private var warmed: Option[Dataset[BlockRow]] = None

@@ -16,15 +16,15 @@ import org.apache.spark.sql.functions._
  *    (Parquet min/max pruning skips non-matching row groups because blocks
  *    are written term-sorted), then the [[Wand]] kernel scores the blocks
  *    doc-at-a-time.
- *  - "leaf slices" = doc-range slices of one grid ([[Wand.BucketDocs]]
- *    docIds). `OpenIndex.warm` caches the blocks already laid out in
- *    slices ([[Wand.slice]]), so a multi-term request scores each cached
- *    partition in place, with no exchange. Every other `blocks` input (an
- *    unwarmed index, one segment of a budgeted search, `WithHot`'s union
- *    with the hot rows, time-bucket and search-job blocks) is cut at the
- *    same grid lines and shuffled to its slices per query, inside the
- *    kernel. Which of the two runs is a property of the `blocks` Dataset,
- *    not of the request.
+ *  - "leaf slices" = doc-range buckets of one grid ([[Wand.BucketDocs]]
+ *    docIds). `OpenIndex.warm` caches an index under one grid slice as
+ *    that slice ([[Wand.slice]], one partition), so a multi-term request
+ *    scores it in place, with no exchange. Every other `blocks` input (a
+ *    larger or unwarmed index, one segment of a budgeted search,
+ *    `WithHot`'s union with the hot rows, time-bucket and search-job
+ *    blocks) is shuffled to its buckets per query, inside the kernel.
+ *    Which of the two runs is a property of the `blocks` Dataset, not of
+ *    the request.
  *  - "TopScoreDocCollector + TopDocs.merge" = the kernel's bounded
  *    [[Wand.HitQueue]] per run, merged by orderBy(score DESC, docId ASC)
  *    .limit(k) (Spark's TakeOrderedAndProject) on the driver.
@@ -303,7 +303,7 @@ object QueryEngine {
   /** Stage 2 for term requests: the [[Wand]] kernel over the index blocks
     * — for [[WithHot]] unioned with the hot rows, packed into blocks from
     * the postings sealHot packs, in place (no shuffle). The union is no
-    * [[Wand.slice]]d layout, so several terms shuffle it to its slices. */
+    * [[Wand.slice]], so several terms shuffle it to its buckets. */
   private def scoreTerms(spark: SparkSession, blocks: Dataset[BlockRow], req: Request,
                          infos: Seq[TermInfo], k: Int): DataFrame = {
     val scored = req.clauses match {

@@ -12,20 +12,20 @@ import org.apache.spark.util.LongAccumulator
  * 75-108) — the one hand-fused physical operator of the engine (SURVEY.md
  * §4.3). It scores every `Terms`, `Blended`, `Infos` and `WithHot` request:
  *
- *  - Input contract: a run holds ALL query-term postings of one doc-range
- *    slice of the grid (`slice = docId / bucketDocs`, the Spark analogue of
- *    a Lucene leaf slice). A block that crosses a grid line is cut there
- *    ([[gridParts]]), so every posting sits in exactly one slice and no
- *    doc is masked or counted twice.
  *  - One query term streams each input partition a block at a time, with
- *    no shuffle. Several terms over [[slice]]d input (the warmed cache of
- *    `OpenIndex.warm`) run one kernel per slice, in ascending slice order,
- *    inside each partition: one stage, no exchange. Any other input (an
+ *    no shuffle. Several terms need ALL query-term postings of a doc range
+ *    in one run. Over a [[slice]] (the warmed cache of an index under one
+ *    grid slice, `OpenIndex.warm`) that is the one cached partition: one
+ *    run, in place, one stage, no exchange. Any other input (a larger or
  *    unwarmed index, one segment of a budgeted search, `WithHot`'s union,
- *    time-bucket or search-job blocks) is cut at the same grid lines and
- *    re-keyed to its slices per query by one shuffle. Block bounds are
+ *    time-bucket or search-job blocks) re-keys its blocks to doc-range
+ *    buckets of the grid per query (`bucket = minDoc / bucketDocs`; a block
+ *    spanning a boundary is replicated into both and masked inside the
+ *    kernel), so each bucket holds ALL query-term postings for its doc
+ *    range — the Spark analogue of a Lucene leaf slice. Block bounds are
  *    computed map-side; only what the kernel reads shuffles.
- *  - Per run (a slice, or a stretch of one term's ascending blocks):
+ *  - Per run (a slice, a bucket, or a stretch of one term's ascending
+ *    blocks):
  *    frontier = the lowest unprocessed block per term, pivot = min
  *    frontier maxDoc. With skipping on, a window whose Σ frontier block
  *    bounds cannot beat the k-th best score θ is skipped WITHOUT decoding;
@@ -43,8 +43,8 @@ import org.apache.spark.util.LongAccumulator
  */
 object Wand {
 
-  /** The doc-range grid's width in docIds: slice `s` holds docIds
-    * [s * BucketDocs, (s + 1) * BucketDocs). */
+  /** The doc-range grid's width in docIds: bucket `b` holds docIds
+    * [b * BucketDocs, (b + 1) * BucketDocs). */
   val BucketDocs: Long = 1L << 16
 
   /** One scored hit emitted by the kernel. */
@@ -108,15 +108,17 @@ object Wand {
       b.impactFreqs.indices.map(i => scorer.score(b.impactFreqs(i).toFloat, b.impactNorms(i)))
         .foldLeft(0f)(math.max))
 
-  /** One kernel run: the matching docs of one slice (or one ascending
-    * stretch of a term's blocks) in ascending docId order. */
-  private final class Kernel(terms: Array[TermBlocks], requireAll: Boolean,
-                             tieBreaker: Option[Float]) extends Iterator[Hit] {
+  /** One kernel run: the matching docs of one slice or bucket (or one
+    * ascending stretch of a term's blocks) in ascending docId order.
+    * `lo`/`hi` mask docs outside a bucket (blocks replicated across a
+    * boundary must not double-count). */
+  private final class Kernel(terms: Array[TermBlocks], lo: Long, hi: Long,
+                             requireAll: Boolean, tieBreaker: Option[Float]) extends Iterator[Hit] {
     /** Lucene's setMinCompetitiveScore: a window whose summed block bounds
       * fall below it is skipped undecoded. */
     var minCompetitive: Double = Double.NegativeInfinity
     /** No hit of the run has a lower docId. */
-    val start: Long = terms.iterator.filterNot(_.exhausted).map(_.cur.minDoc).foldLeft(Long.MaxValue)(math.min)
+    val start: Long = terms.iterator.filterNot(_.exhausted).map(_.cur.minDoc).foldLeft(hi)(math.min) max lo
     private val nTerms = terms.length
     private val disMax = tieBreaker.isDefined
     private val tie = tieBreaker.getOrElse(0f).toDouble
@@ -185,16 +187,17 @@ object Wand {
         }
         t += 1
       }
-      if (requireAll && matched < nTerms) null
+      if (d < lo || d >= hi || (requireAll && matched < nTerms)) null
       else Hit(d, if (disMax) (mx.toDouble + sum * tie).toFloat else sum.toFloat)
     }
   }
 
-  /** A term's blocks in a slice must have disjoint docId ranges for one
-    * run. Hash-packed segments interleave a term's docs across partitions,
-    * so their blocks overlap: re-pack those postings into disjoint blocks
-    * (impacts recomputed by the codec, so the bounds stay exact). A slice
-    * holds <= bucketDocs postings per term, so the merge is small and local. */
+  /** A term's blocks in one run must have disjoint docId ranges.
+    * Hash-packed segments interleave a term's docs across partitions, so
+    * their blocks overlap: re-pack those postings into disjoint blocks
+    * (impacts recomputed by the codec, so the bounds stay exact). A run
+    * holds <= bucketDocs postings per term (a [[slice]] or a bucket), so
+    * the merge is small and local. */
   private def normalizeBlocks(sorted: Array[KernelBlock], scorer: SimScorer): Array[KernelBlock] = {
     if (sorted.indices.tail.forall(i => sorted(i - 1).maxDoc < sorted(i).minDoc)) return sorted
     // each (term, docId) lives in exactly one source partition, so the
@@ -207,76 +210,37 @@ object Wand {
       .map(b => kernelBlock(IndexBuilder.blockRow(b), sorted(0).slot, scorer)).toArray
   }
 
-  /** `b` cut at the grid lines of width `w`: one block per slice it
-    * touches, each re-encoded by the codec (impacts recomputed, so block
-    * bounds stay exact); a block inside one slice is returned as is. */
-  private def gridParts(b: BlockRow, w: Long): Iterator[BlockRow] =
-    if (b.minDoc / w == b.maxDoc / w) Iterator.single(b)
+  /** The Datasets laid out by [[slice]], held by identity: a Dataset
+    * derived from one (a filter, a union) is another object and reads as
+    * no slice. Weak keys, so a dropped layout goes. */
+  private val slices = java.util.Collections.synchronizedSet(
+    java.util.Collections.newSetFromMap(new java.util.WeakHashMap[Dataset[_], java.lang.Boolean]()))
+
+  /** The blocks of docIds [`docLo`, `docHi`) as one doc-range slice, when
+    * they lie in one slice of the grid (`bucketDocs` wide): one partition,
+    * coalesced narrowly (no shuffle, no cut), sorted by (term, minDoc) so
+    * the in-memory batch stats prune by term. [[topK]] scores several
+    * terms over it in place, with no exchange. None when the docIds span
+    * several slices: one task per query would then decode more than one
+    * bucket's postings per term. Not persisted: `OpenIndex.warm` caches
+    * it. */
+  def slice(blocks: Dataset[BlockRow], docLo: Long, docHi: Long,
+            bucketDocs: Long = BucketDocs): Option[Dataset[BlockRow]] =
+    if (docLo / bucketDocs != docHi / bucketDocs) None
     else {
-      val (docs, tfs) = PostingsCodec.decodeBlock(b.minDoc, b.n, b.wDocs, b.wFreqs, b.docGaps, b.freqs)
-      // docs ascend, so each slice's postings are one contiguous run
-      val cuts = (0 +: docs.indices.tail.filter(i => docs(i) / w != docs(i - 1) / w)) :+ docs.length
-      cuts.zip(cuts.tail).iterator.flatMap { case (from, until) =>
-        PostingsCodec.encodeTerm(b.term, docs.slice(from, until), tfs.slice(from, until), b.norms.slice(from, until))
-          .map(IndexBuilder.blockRow)
-      }
+      val out = blocks.coalesce(1).sortWithinPartitions("term", "minDoc")
+      slices.add(out)
+      Some(out)
     }
-
-  /** The grid width of each Dataset laid out by [[slice]], held by
-    * identity: a Dataset derived from one (a filter, a union) is another
-    * object and reads as unsliced. Weak keys, so a dropped layout goes. */
-  private val sliceWidths =
-    java.util.Collections.synchronizedMap(new java.util.WeakHashMap[Dataset[_], java.lang.Long]())
-
-  private def sliceWidth(blocks: Dataset[BlockRow]): Option[Long] =
-    Option(sliceWidths.get(blocks)).map(_.longValue)
-
-  /** Sends slice `s` of `slices` grid slices starting at slice `first` to
-    * partition `(s - first) * parts / slices`: whole, contiguous slices.
-    * Clamped, so a manifest whose docHi is inclusive (written before docHi
-    * was made exclusive) sends its last doc to the last partition. */
-  private final class SlicePartitioner(parts: Int, first: Long, slices: Long)
-      extends org.apache.spark.Partitioner {
-    def numPartitions: Int = parts
-    def getPartition(key: Any): Int =
-      ((((key.asInstanceOf[Long] - first) max 0L) * parts / slices) min (parts - 1)).toInt
-  }
-
-  /** The blocks of docIds [`docLo`, `docHi`) laid out as doc-range slices
-    * of the grid (`bucketDocs` wide): every block cut at the grid lines
-    * ([[gridParts]]), each partition holding whole, contiguous slices in
-    * ascending order — at most `n` partitions (one per slice for `n` <= 0),
-    * blocks sorted by (slice, term, minDoc), so the in-memory batch stats
-    * prune by term. Input under one slice is one partition, coalesced
-    * narrowly (no shuffle, no cut). [[topK]] scores several terms over
-    * the returned Dataset with no exchange. Not persisted:
-    * `OpenIndex.warm` caches it. */
-  def slice(blocks: Dataset[BlockRow], n: Int, docLo: Long, docHi: Long,
-            bucketDocs: Long = BucketDocs): Dataset[BlockRow] = {
-    import blocks.sparkSession.implicits._
-    val first = docLo / bucketDocs
-    // docHi is exclusive; the one-slice test holds for an inclusive one too
-    val laidOut =
-      if (docHi / bucketDocs == first) blocks.coalesce(1)
-      else {
-        val slices = (docHi - 1) / bucketDocs - first + 1
-        val parts = if (n > 0) math.min(n.toLong, slices).toInt else slices.toInt
-        val keyed = blocks.rdd.flatMap(gridParts(_, bucketDocs)).keyBy(_.minDoc / bucketDocs)
-        blocks.sparkSession.createDataset(keyed.partitionBy(new SlicePartitioner(parts, first, slices)).values)
-      }
-    val out = laidOut.sortWithinPartitions(expr(s"minDoc div $bucketDocs"), $"term", $"minDoc")
-    sliceWidths.put(out, bucketDocs)
-    out
-  }
 
   /** Score the query terms' blocks: (docId, score) ordered (score DESC,
     * docId ASC), at most `k` rows — or every matching doc, unordered, for
     * `k` = [[QueryEngine.All]]. Block-max skipping is on whenever it is
     * sound, as with Lucene's TOP_SCORES: for a bounded `k` under the summed
     * combine (block bounds are no bound of a DisjunctionMax score) over
-    * [[SimScorer.impactBounded]] scorers. Several terms over [[slice]]d
-    * `blocks` score each partition's slices in place; over any other
-    * `blocks` they are cut and shuffled to `bucketDocs`-wide slices. */
+    * [[SimScorer.impactBounded]] scorers. Several terms over a [[slice]]
+    * score it in place; over any other `blocks` they shuffle to
+    * `bucketDocs`-wide buckets. */
   def topK(spark: SparkSession, blocks: Dataset[BlockRow], infos: Seq[QueryEngine.TermInfo],
            k: Int, requireAll: Boolean = false, tieBreaker: Option[Float] = None,
            bucketDocs: Long = BucketDocs,
@@ -309,22 +273,15 @@ object Wand {
     // (function values, not local defs: a task closure must not capture
     // this object)
     val toKernel = (b: BlockRow) => kernelBlock(b, slotOf(b.term), scorers(slotOf(b.term)))
-    // one run per slice of blocks arriving slice by slice; a slice buffers
-    // only its own compressed blocks and decodes (or re-packs) on its turn
-    val sliceRuns = (blocks: Iterator[KernelBlock], w: Long) => {
-      val src = blocks.buffered
-      Iterator.continually(src).takeWhile(_.hasNext).flatMap { _ =>
-        val slice = src.head.minDoc / w
-        val rows = scala.collection.mutable.ArrayBuffer.empty[KernelBlock]
-        while (src.hasNext && src.head.minDoc / w == slice) rows += src.next()
-        val bySlot = rows.groupBy(_.slot)
-        if (requireAll && bySlot.size < scorers.length) None
-        else Some(new Kernel(bySlot.toArray.sortBy(_._1).map { case (slot, bs) =>
-          new TermBlocks(scorers(slot),
-            normalizeBlocks(bs.toArray.sortBy(b => (b.minDoc, b.maxDoc)), scorers(slot)).iterator.buffered,
-            decodeCounter)
-        }, requireAll, tieBreaker))
-      }
+    // one run over ALL query-term blocks of the doc range [lo, hi),
+    // decoded (or re-packed) on its turn
+    val run = (rows: Array[KernelBlock], lo: Long, hi: Long) => {
+      val bySlot = rows.groupBy(_.slot)
+      if (requireAll && bySlot.size < scorers.length) None
+      else Some(new Kernel(bySlot.toArray.sortBy(_._1).map { case (slot, bs) =>
+        new TermBlocks(scorers(slot),
+          normalizeBlocks(bs.sortBy(b => (b.minDoc, b.maxDoc)), scorers(slot)).iterator.buffered, decodeCounter)
+      }, lo, hi, requireAll, tieBreaker))
     }
     val termBlocks = blocks.filter($"term".isin(sorted.map(_.term): _*))
     val hits =
@@ -333,17 +290,24 @@ object Wand {
         termBlocks.mapPartitions { it =>
           val src = it.map(kernelBlock(_, 0, scorers(0))).buffered
           collect(Iterator.continually(src).takeWhile(_.hasNext).map(s =>
-            new Kernel(Array(new TermBlocks(scorers(0), s, decodeCounter)), requireAll, tieBreaker)))
+            new Kernel(Array(new TermBlocks(scorers(0), s, decodeCounter)), Long.MinValue, Long.MaxValue,
+              requireAll, tieBreaker)))
         }
-      else sliceWidth(blocks) match {
-        case Some(w) => termBlocks.mapPartitions(it => collect(sliceRuns(it.map(toKernel), w)))
-        case None =>
-          termBlocks
-            .flatMap(b => gridParts(b, bucketDocs).map(p => (p.minDoc / bucketDocs, toKernel(p))))
-            .repartition($"_1")
-            // a task holds the compressed blocks of every slice sent to it
-            .mapPartitions(it => collect(sliceRuns(it.toArray.sortBy(_._1).iterator.map(_._2), bucketDocs)))
-      }
+      else if (slices.contains(blocks))
+        // the one partition holds the whole slice
+        termBlocks.mapPartitions(it => collect(run(it.map(toKernel).toArray, Long.MinValue, Long.MaxValue).iterator))
+      else
+        termBlocks
+          .flatMap { b =>
+            val kb = toKernel(b)
+            (b.minDoc / bucketDocs to b.maxDoc / bucketDocs).iterator.map(bucket => (bucket, kb))
+          }
+          .repartition($"_1")
+          // a task holds the compressed blocks of its buckets and decodes
+          // (or re-packs) one bucket at a time
+          .mapPartitions(it => collect(it.toArray.groupBy(_._1).iterator.flatMap { case (bucket, rows) =>
+            run(rows.map(_._2), bucket * bucketDocs, (bucket + 1) * bucketDocs)
+          }))
     if (k == QueryEngine.All) hits.toDF() else hits.toDF().orderBy(desc("score"), asc("docId")).limit(k)
   }
 }

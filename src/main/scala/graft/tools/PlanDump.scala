@@ -65,16 +65,16 @@ object PlanDump {
     }
 
     section("BM25 top-k (the term-scoring kernel)",
-      """Over the warmed postings cache (`OpenIndex.warm`), laid out once in
-        |doc-range slices: the term filter prunes the in-memory batches;
-        |the kernel scores each cached partition's slices in place, in
-        |ascending slice order, into one bounded heap per task, skipping
-        |blocks that cannot compete — one stage, no exchange; the final
-        |top-k is TakeOrderedAndProject — the per-task heaps merged on the
-        |driver, never a global sort. Over an unwarmed index the term
-        |filter pushes into the postings parquet scan instead, and the
-        |query terms' blocks shuffle once to their doc-range slice
-        |(PlanAuditSpec pins both shapes).""".stripMargin,
+      """Over the warmed postings cache (`OpenIndex.warm`) of an index
+        |under one doc-range slice, cached as that slice (one partition,
+        |sorted by term): the term filter prunes the in-memory batches;
+        |the kernel scores the slice in place into one bounded heap,
+        |skipping blocks that cannot compete — one stage, no exchange; the
+        |final top-k is TakeOrderedAndProject — the per-task heaps merged
+        |on the driver, never a global sort. Over an unwarmed or larger
+        |index the term filter pushes into the postings parquet scan
+        |instead, and the query terms' blocks shuffle once to their
+        |doc-range bucket (PlanAuditSpec pins both shapes).""".stripMargin,
       IndexStore.OpenIndex(spark, dir).warm(2).topK(Seq("public", "import"), 10))
 
     section("Field-sorted top-k over doc values",

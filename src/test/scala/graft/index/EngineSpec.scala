@@ -78,7 +78,7 @@ class EngineSpec extends SparkSpec {
       assert(bounded === allCutToK(blocks, termstats, terms, k, mode), s"terms=$terms mode=$mode k=$k")
       assert(bounded === OracleScorer.topK(corpusLocal, terms, k, mode), s"terms=$terms mode=$mode k=$k")
     }
-    // a small grid forces blocks cut at grid lines + many slices
+    // small bucket size forces boundary-spanning replication + many buckets
     val terms = Seq("public", "import", "return")
     val infos = QueryEngine.plan(termstats, stats, terms)
     val tiny = graft.query.Wand.topK(spark, blocks, infos, 25, requireAll = false, bucketDocs = 64)

@@ -55,8 +55,9 @@ class PlanAuditSpec extends SparkSpec {
     // shuffle; the must ⋈ should and mustNot joins broadcast
     val parsed = idx.search("+public import -handler3", 10)
     assert(exchanges(parsed) == 1, planOf(parsed))
-    // warmed: the cache is laid out in doc-range slices, so several terms
-    // score each cached partition in place — no exchange, one stage, one job
+    // warmed: an index under one grid slice is cached as that slice, so
+    // several terms score the one cached partition in place — no exchange,
+    // one stage, one job
     val warmed = IndexStore.OpenIndex(spark, dir).warm(2)
     warmed.topK(two, 10).collect(): Unit // cache the postings, fill the df memo
     for (df <- Seq(() => warmed.topK(two, 10), () => warmed.topK(two, 10, And))) {

@@ -8,17 +8,15 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-/** The doc-sliced postings cache ([[Wand.slice]], `OpenIndex.warm`): a
-  * multi-term request over the sliced blocks scores each partition's
-  * slices in place, with the same ranks and float bits as the unwarmed
-  * index and the brute-force oracle, and the sliced blocks stay a valid
-  * postings table for every other reader. A 64-docId grid cuts the
-  * 600-doc index into 10 slices over 3 cached partitions. */
+/** The one-slice postings cache ([[Wand.slice]], `OpenIndex.warm`): an
+  * index under one slice of the kernel's grid is cached as one partition,
+  * uncut, and a multi-term request scores it in place, with the same ranks
+  * and float bits as the unwarmed index and the brute-force oracle; the
+  * cached blocks stay a valid postings table for every other reader. */
 class SlicedCacheSpec extends SparkSpec {
   import spark.implicits._
 
   val N = 600
-  val Width = 64L
   lazy val corpusLocal: Seq[OracleScorer.Doc] =
     (0L until N).map(i => CorpusGen.genFile(i))
       .sortBy(f => (f.repo, f.path, f.commit))
@@ -32,37 +30,37 @@ class SlicedCacheSpec extends SparkSpec {
   }
   /** The unwarmed index's postings: the plain parquet scan. */
   lazy val raw: Dataset[BlockRow] = idx.blocks
-  lazy val sliced: Dataset[BlockRow] = Wand.slice(raw, 3, 0L, N.toLong, bucketDocs = Width).cache()
+  /** The same index warmed: one slice. */
+  lazy val sliced: Dataset[BlockRow] = IndexStore.OpenIndex(spark, dir).warm(2).blocks
 
   def hits(df: DataFrame): Seq[(Long, Float)] = df.collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
   def run(b: Dataset[BlockRow], req: Request): Seq[(Long, Float)] =
     hits(QueryEngine.run(spark, b, idx.termstats, idx.stats, req, idx.deletes, Some(idx.dfCache)))
-  def exchanges(df: DataFrame): Int =
-    "Exchange hashpartitioning".r.findAllIn(df.queryExecution.executedPlan.toString).size
+  def exchanges(b: Dataset[BlockRow], req: Request): Int =
+    "Exchange hashpartitioning".r.findAllIn(
+      QueryEngine.run(spark, b, idx.termstats, idx.stats, req).queryExecution.executedPlan.toString).size
 
   val multi = Seq(Seq("import", "return", "uniq_10_1"), Seq("public", "static", "void"),
     Seq("parseconfig", "handler7"), Seq("12", "buildindex", "def", "queryengine", "val"))
 
-  test("layout: whole, contiguous, ascending slices in at most n partitions; each posting once") {
-    val w = Width // a local: the closure must not capture the suite
-    val perPart = sliced.mapPartitions { it =>
-      Iterator.single(it.map(b => (b.minDoc / w, b.maxDoc / w)).toSeq)
-    }.collect().toSeq
-    assert(perPart.size === 3)
-    perPart.foreach { bs =>
-      assert(bs.forall { case (lo, hi) => lo == hi }, "a block crosses a grid line")
-      assert(bs.map(_._1) === bs.map(_._1).sorted, "slices out of order in a partition")
-    }
-    val slices = perPart.map(_.map(_._1).distinct)
-    assert(slices.flatten === (0L until (N + Width - 1) / Width), "a slice split or missing")
-    // splits add blocks but no posting: Σn = Σdf = postings, Σ sumTf = Σ dl
+  test("layout: one partition, uncut, each posting once; wider or derived input is no slice") {
+    assert(sliced.rdd.getNumPartitions === 1)
     val sums = (b: Dataset[BlockRow]) => b.agg(count(lit(1)), sum($"n"), sum($"sumTf")).head()
     val (r, s) = (sums(raw), sums(sliced))
-    assert(s.getLong(0) > r.getLong(0), "the 64-docId grid cut no block")
+    assert(s === r, "the slice added or lost a block")
     assert(s.getLong(1) === idx.termstats.agg(sum($"df")).head().getLong(0))
-    assert(s.getLong(1) === r.getLong(1))
     val sumDl = IndexStore.readManifests(dir).map("\"sumDl\":(\\d+)".r.findFirstMatchIn(_).get.group(1).toLong).sum
     assert(s.getLong(2) === sumDl)
+    // sorted by (term, minDoc), so the cache's batch stats prune by term
+    val order = sliced.select("term", "minDoc").as[(String, Long)].collect().toSeq
+    assert(order === order.sorted)
+    // docIds across two slices of a 64-docId grid: no slice
+    assert(Wand.slice(raw, 0L, N.toLong, bucketDocs = 64).isEmpty)
+    // a Dataset derived from the slice is shuffled to buckets per query
+    val req = Request(Terms(Seq("public", "import")), 10)
+    assert(exchanges(sliced, req) === 0)
+    assert(exchanges(sliced.filter($"n" > 0), req) === 1)
+    assert(run(sliced.filter($"n" > 0), req) === run(sliced, req))
   }
 
   test("Or, And, k = All, mustNot: sliced = unwarmed = oracle, bit for bit, with no exchange") {
@@ -70,7 +68,7 @@ class SlicedCacheSpec extends SparkSpec {
       val got = run(sliced, Request(Terms(terms), k, mode))
       assert(got === run(raw, Request(Terms(terms), k, mode)), s"terms=$terms mode=$mode k=$k")
       assert(got === OracleScorer.topK(corpusLocal, terms, k, mode), s"terms=$terms mode=$mode k=$k")
-      assert(exchanges(QueryEngine.run(spark, sliced, idx.termstats, idx.stats, Request(Terms(terms), k, mode))) === 0)
+      assert(exchanges(sliced, Request(Terms(terms), k, mode)) === 0)
     }
     for (terms <- multi; mode <- Seq(Or, And)) {
       val all = run(sliced, Request(Terms(terms), QueryEngine.All, mode)).sortBy { case (d, s) => (-s, d) }
@@ -84,7 +82,7 @@ class SlicedCacheSpec extends SparkSpec {
     }
   }
 
-  test("tieBreaker and runCounted across slices equal the unwarmed index") {
+  test("tieBreaker and runCounted over the slice equal the unwarmed index") {
     for (terms <- multi; tie <- Seq(0f, 0.1f); k <- Seq(3, 25)) {
       val req = Request(Terms(terms), k, tieBreaker = Some(tie))
       assert(run(sliced, req) === run(raw, req), s"terms=$terms tie=$tie k=$k")
@@ -122,27 +120,15 @@ class SlicedCacheSpec extends SparkSpec {
     }
   }
 
-  test("hash-packed (overlapping) blocks, sliced: still re-packed per slice, oracle-identical") {
+  test("hash-packed (overlapping) blocks as one slice: re-packed in the run, oracle-identical") {
     val withIds = DocIds.assign(CorpusGen.corpus(spark, N, 7).toDF(), Seq("repo", "path", "commit"), 6)
     val hash = IndexBuilder.packBlocks(spark, IndexBuilder.invert(spark, withIds), 4, strategy = "hash")
-    val hashSliced = Wand.slice(hash, 2, 0L, N.toLong, bucketDocs = Width).cache()
+    val hashSliced = Wand.slice(hash, 0L, N.toLong).get.cache()
     val ts = IndexBuilder.termStats(hashSliced)
     for (terms <- multi; mode <- Seq(Or, And); k <- Seq(1, 10, 50)) {
       val got = hits(QueryEngine.run(spark, hashSliced, ts, idx.stats, Request(Terms(terms), k, mode)))
       assert(got === OracleScorer.topK(corpusLocal, terms, k, mode), s"terms=$terms mode=$mode k=$k")
     }
     hashSliced.unpersist()
-  }
-
-  test("warm: an index under one slice is one partition, uncut, and answers as unwarmed") {
-    val warmed = IndexStore.OpenIndex(spark, dir).warm(2)
-    assert(warmed.blocks.rdd.getNumPartitions === 1)
-    assert(warmed.blocks.count() === raw.count())
-    for (terms <- multi; mode <- Seq(Or, And)) {
-      val df = warmed.topK(terms, 10, mode)
-      assert(exchanges(df) === 0, df.queryExecution.executedPlan.toString)
-      assert(hits(df) === run(raw, Request(Terms(terms), 10, mode)))
-    }
-    warmed.blocks.unpersist()
   }
 }
