@@ -140,6 +140,38 @@ class SearcherSpec extends SparkSpec {
     }
   }
 
+  test("boolean arithmetic: (float)((m0 + m1) + (s0 + s1)) in double, clause order, bit for bit") {
+    // every doc's per-term engine score, the leaves' frames
+    def scores(t: String): Map[Long, Float] = hits(idx.topK(Seq(t), 100000)).toMap
+    val Seq(pub, imp, sta, voi, ret, cls, h3) =
+      Seq("public", "import", "static", "void", "return", "class", "handler3").map(scores)
+    def bits(hs: Seq[(Long, Float)]) = hs.map { case (d, s) => (d, java.lang.Float.floatToRawIntBits(s)) }
+    // Searcher's formula over clause score maps: a doc in every must and no
+    // mustNot; the must sum and the should sum each run in clause order as
+    // double from 0.0, then add and cast
+    def boolean(must: Seq[Map[Long, Float]], should: Seq[Map[Long, Float]],
+                mustNot: Seq[Map[Long, Float]]): Seq[(Long, Float)] = {
+      val docs = (if (must.nonEmpty) must.map(_.keySet).reduce(_ intersect _)
+                  else should.map(_.keySet).reduce(_ union _)) -- mustNot.flatMap(_.keySet)
+      docs.toSeq.map { d =>
+        val m = must.foldLeft(0.0)(_ + _(d).toDouble)
+        val s = should.foldLeft(0.0)((acc, c) => c.get(d).fold(acc)(acc + _.toDouble))
+        d -> (m + s).toFloat
+      }.sortBy { case (d, s) => (-s, d) }
+    }
+    def check(q: String, want: Seq[(Long, Float)]): Unit = {
+      assert(want.nonEmpty, q)
+      assert(bits(hits(idx.search(q, 100000))) === bits(want), q)
+    }
+    check("+public +import static void -handler3", boolean(Seq(pub, imp), Seq(sta, voi), Seq(h3)))
+    // a nested should-only boolean is one must part: (float)(0.0 + s + v)
+    val sv = (sta.keySet ++ voi.keySet).map(d =>
+      d -> (sta.get(d).fold(0.0)(_.toDouble) + voi.get(d).fold(0.0)(_.toDouble)).toFloat).toMap
+    check("+(static void) +public return", boolean(Seq(sv, pub), Seq(ret), Nil))
+    // a boosted must clause: the leaf's float score times the float boost
+    check("+public^2 +import class", boolean(Seq(pub.map { case (d, s) => d -> s * 2f }, imp), Seq(cls), Nil))
+  }
+
   test("maxScore: rewrite shape and dismax score arithmetic over should clauses") {
     import Searcher.maxScoreRewrite
     // reference MaxScoreQParser.parse: SHOULD clauses -> one dismax; must/
