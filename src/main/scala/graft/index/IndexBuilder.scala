@@ -184,22 +184,14 @@ object IndexBuilder {
     statsOf(invertDocs(spark, corpus, idCol, contentCol))
 
   /** Sort-shuffle inversion + streaming block pack. Constant memory per task:
-    * the packer buffers at most 128 postings.
-    *
-    * `strategy`: "range" (default) range-partitions on (term, docId) — term-
-    * clustered output files give file-level parquet pruning, at the cost of
-    * a sampling pass; "hash" partitions by hash(term, docId) — no sampling
-    * pass and perfectly balanced reducers (hot terms scatter like salting),
-    * while sortWithinPartitions still yields tight per-row-group term ranges
-    * so row-group pruning survives. Both defuse stop-word skew.
-    */
+    * the packer buffers at most 128 postings. Range-partitioned on (term,
+    * docId): term-clustered output files give file-level parquet pruning,
+    * at the cost of a sampling pass, and a stop-word's postings spread
+    * over several reducers. */
   def packBlocks(spark: SparkSession, postings: Dataset[PostingRow],
-                 shufflePartitions: Int, strategy: String = "range"): Dataset[BlockRow] = {
+                 shufflePartitions: Int): Dataset[BlockRow] = {
     import spark.implicits._
-    packPartitions(strategy match {
-      case "hash" => postings.repartition(shufflePartitions, $"term", $"docId")
-      case _      => postings.repartitionByRange(shufflePartitions, $"term", $"docId")
-    })
+    packPartitions(postings.repartitionByRange(shufflePartitions, $"term", $"docId"))
   }
 
   /** Pack each partition as it stands, with no shuffle: a term's blocks

@@ -728,8 +728,9 @@ object IndexStore {
       * An index whose docIds lie in one slice of [[Wand]]'s grid
       * ([[Wand.BucketDocs]] docIds, a Lucene leaf slice's analogue) is
       * cached as that one slice ([[Wand.slice]]): one partition, coalesced
-      * narrowly (no shuffle), whatever `numPartitions` says, so a
-      * multi-term top-k scores it in place, in one stage with no exchange.
+      * narrowly (no shuffle), whatever `numPartitions` says. Its plan
+      * reports the one partition, so a multi-term top-k scores it (or a
+      * filter or map of it) in place, in one stage with no exchange.
       * A larger index keeps its layout, coalesced to `numPartitions` when
       * that is > 0: a small top-k query launches one task per cached
       * partition, so a file-count-sized layout (e.g. 64 build shuffle

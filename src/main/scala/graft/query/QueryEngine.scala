@@ -17,14 +17,16 @@ import org.apache.spark.sql.functions._
  *    are written term-sorted), then the [[Wand]] kernel scores the blocks
  *    doc-at-a-time.
  *  - "leaf slices" = doc-range buckets of one grid ([[Wand.BucketDocs]]
- *    docIds). `OpenIndex.warm` caches an index under one grid slice as
- *    that slice ([[Wand.slice]], one partition), so a multi-term request
- *    scores it in place, with no exchange. Every other `blocks` input (a
- *    larger or unwarmed index, one segment of a budgeted search,
- *    `WithHot`'s union with the hot rows, time-bucket and search-job
- *    blocks) is shuffled to its buckets per query, inside the kernel.
- *    Which of the two runs is a property of the `blocks` Dataset, not of
- *    the request.
+ *    docIds). A multi-term request keys its blocks to buckets, and a
+ *    bucket must sit in one task. A `blocks` input whose physical plan
+ *    reports one partition already has that: `OpenIndex.warm` caches an
+ *    index under one grid slice as that slice ([[Wand.slice]]), and a
+ *    filter or map of it keeps the one partition, so they score in place,
+ *    with no exchange. Any other input (a larger or unwarmed index, one
+ *    segment of a budgeted search, `WithHot`'s union with the hot rows,
+ *    time-bucket and search-job blocks) is shuffled on the bucket per
+ *    query, inside the kernel. Which of the two runs is read from the
+ *    `blocks` plan, not from the request.
  *  - "TopScoreDocCollector + TopDocs.merge" = the kernel's bounded
  *    [[Wand.HitQueue]] per run, merged by orderBy(score DESC, docId ASC)
  *    .limit(k) (Spark's TakeOrderedAndProject) on the driver.
@@ -63,47 +65,47 @@ object QueryEngine {
 
   final case class TermInfo(term: String, ti: Int, scorer: SimScorer)
 
-  /** Per-index term-dictionary memo: term -> Some(df) | None (term absent).
-    * Lucene keeps the term dictionary hot in memory; here each queried
-    * term's stats row is fetched once per index and every later query
-    * plans WITHOUT a Spark job — the dominant fixed cost of small top-k
-    * queries (one lookup job per query otherwise). Bounded by the number
-    * of distinct queried terms. */
-  type DfCache = scala.collection.concurrent.Map[String, Option[Long]]
+  /** Per-index term-dictionary memo: term -> Some((df, ttf)) | None (term
+    * absent). Lucene keeps the term dictionary hot in memory; here each
+    * queried term's stats row is fetched once per index and every later
+    * query plans WITHOUT a Spark job — the dominant fixed cost of small
+    * top-k queries (one lookup job per query otherwise). Bounded by the
+    * number of distinct queried terms. */
+  type DfCache = scala.collection.concurrent.Map[String, Option[(Long, Long)]]
   def newDfCache(): DfCache = scala.collection.concurrent.TrieMap.empty
 
-  /** Look up df for the terms, through the memo when one is supplied. */
-  def lookupDfs(termstats: DataFrame, terms: Seq[String],
-                dfCache: Option[DfCache]): Map[String, Long] = {
+  /** Look up (df, ttf) for the terms, through the memo when one is
+    * supplied: the one term-dictionary read. Absent terms are left out. */
+  def lookupStats(termstats: DataFrame, terms: Seq[String],
+                  dfCache: Option[DfCache]): Map[String, (Long, Long)] = {
     val qs = terms.distinct
-    val cached: Map[String, Option[Long]] =
+    val cached: Map[String, Option[(Long, Long)]] =
       dfCache.map(c => qs.flatMap(t => c.get(t).map(t -> _)).toMap).getOrElse(Map.empty)
     val missing = qs.filterNot(cached.contains)
-    val fetched: Map[String, Long] =
+    val fetched: Map[String, (Long, Long)] =
       if (missing.isEmpty) Map.empty
       else termstats.filter(col("term").isin(missing: _*))
-        .select("term", "df").collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
+        .select("term", "df", "ttf").collect()
+        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     dfCache.foreach(c => missing.foreach(t => c.update(t, fetched.get(t))))
-    cached.collect { case (t, Some(df)) => t -> df } ++ fetched
+    cached.collect { case (t, Some(st)) => t -> st } ++ fetched
   }
+
+  /** Look up df for the terms ([[lookupStats]]). */
+  def lookupDfs(termstats: DataFrame, terms: Seq[String],
+                dfCache: Option[DfCache]): Map[String, Long] =
+    lookupStats(termstats, terms, dfCache).map { case (t, (df, _)) => t -> df }
 
   /** Look up (df, ttf) for query terms and build scorers. Terms absent from
     * the index are dropped (they match nothing). `sim` picks the scoring
-    * model (default BM25); a `needsTtf` similarity (LMDirichlet's collection
-    * model) fetches (df, ttf) directly, bypassing the df-only memo. */
+    * model (default BM25). */
   def plan(termstats: DataFrame, stats: CorpusStats, terms: Seq[String],
            k1: Float = BM25.DefaultK1, b: Float = BM25.DefaultB, boost: Float = 1f,
            dfCache: Option[DfCache] = None,
            sim: Similarity = null): Seq[TermInfo] = {
     val similarity = if (sim == null) Bm25Sim(k1, b) else sim
     val qs = terms.distinct
-    val found: Map[String, (Long, Long)] =
-      if (similarity.needsTtf)
-        termstats.filter(col("term").isin(qs: _*))
-          .select("term", "df", "ttf").collect()
-          .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-      else lookupDfs(termstats, qs, dfCache).map { case (t, df) => t -> (df, 0L) }
+    val found = lookupStats(termstats, qs, dfCache)
     qs.zipWithIndex.collect { case (t, i) if found.contains(t) =>
       val (df, ttf) = found(t)
       TermInfo(t, i, similarity.scorer(boost, df, ttf, stats.docCount, stats.sumTotalTermFreq))
@@ -302,8 +304,9 @@ object QueryEngine {
 
   /** Stage 2 for term requests: the [[Wand]] kernel over the index blocks
     * — for [[WithHot]] unioned with the hot rows, packed into blocks from
-    * the postings sealHot packs, in place (no shuffle). The union is no
-    * [[Wand.slice]], so several terms shuffle it to its buckets. */
+    * the postings sealHot packs, in place (no shuffle). The union's plan
+    * reports no single partition, so several terms shuffle it to their
+    * buckets. */
   private def scoreTerms(spark: SparkSession, blocks: Dataset[BlockRow], req: Request,
                          infos: Seq[TermInfo], k: Int): DataFrame = {
     val scored = req.clauses match {

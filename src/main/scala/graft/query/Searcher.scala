@@ -19,10 +19,12 @@ import org.apache.spark.sql.functions._
  *    member term statistics; BM25Similarity sums their idfs).
  *  - Sloppy phrase / prefix / wildcard / fuzzy / range: constant score 1
  *    (MultiTermQuery CONSTANT_SCORE rewrite; sloppy kept constant-score).
- *  - Boolean: score = matching clauses' scores summed as double in clause
- *    order, cast float; DisjunctionMax runs DisjunctionMaxScorer's loop in
- *    clause order. Both are the [[QueryEngine.run]] planner's combines, so
- *    a pure-term query string (or a maxscore/XML dismax over terms) scores
+ *  - Boolean: the must clauses' scores and the should clauses' scores are
+ *    each summed as double in clause order, the two sums added and cast
+ *    float; DisjunctionMax runs DisjunctionMaxScorer's loop in clause
+ *    order. Both combine one per-doc grouping of the clauses' scores, and
+ *    both are the [[QueryEngine.run]] planner's combines, so a pure-term
+ *    query string (or a maxscore/XML dismax over terms) scores
  *    bit-identically to the matching [[QueryEngine.Request]].
  */
 object Searcher {
@@ -230,38 +232,25 @@ object Searcher {
     }.reduce(_.unionByName(_)), "ci")
 
   /**
-   * Boolean combination. Matching set: all `must` clauses AND (when must is
-   * empty) at least one `should`; minus `mustNot`. Score: must clauses
-   * joined in clause order (double adds), should contributions summed in
-   * clause order by the planner's sum combine, added when present.
+   * Boolean combination over one clause-parts grouping, as DisMax's. A doc
+   * matches with every `must` part and no `mustNot` part (with no must
+   * clause, any part left is a `should` part). Score: the must parts and
+   * the should parts each summed in clause order as double, the two sums
+   * added, cast float. The must sum starts at -0.0, the additive identity,
+   * so a lone must part keeps its bits.
    */
   private def evalBool(spark: SparkSession, ev: Query => DataFrame,
                        must: Seq[Query], should: Seq[Query],
                        mustNot: Seq[Query]): DataFrame = {
     if (must.isEmpty && should.isEmpty) return QueryEngine.noHits(spark)
-    // should-side: union of clauses, per-doc sum in clause (ci) order
-    val shouldSum: Option[DataFrame] =
-      if (should.isEmpty) None
-      else Some(clauseParts(ev, should).select(col("docId"), QueryEngine.partsSum.as("s")))
-    val core: DataFrame =
-      if (must.nonEmpty) {
-        // inner-join chain in clause order; double accumulation
-        val first = ev(must.head)
-          .select(col("docId"), col("score").cast("double").as("s"))
-        val joinedMust = must.tail.zipWithIndex.foldLeft(first) { case (acc, (q, i)) =>
-          acc.join(ev(q).select(col("docId"), col("score").as(s"__m$i")), "docId")
-            .select(col("docId"), (col("s") + col(s"__m$i").cast("double")).as("s"))
-        }
-        shouldSum match {
-          case None => joinedMust
-          case Some(ss) =>
-            joinedMust.join(ss.withColumnRenamed("s", "__ss"), Seq("docId"), "left_outer")
-              .select(col("docId"), (col("s") + coalesce(col("__ss"), lit(0.0d))).as("s"))
-        }
-      } else shouldSum.get
-    val anti = mustNot.foldLeft(core) { (acc, q) =>
-      acc.join(ev(q).select("docId"), Seq("docId"), "left_anti")
-    }
-    anti.select(col("docId"), col("s").cast("float").as("score"))
+    val (nMust, nShould) = (must.size, should.size)
+    def parts(lo: Int, hi: Int) = filter(col("parts"), p => p.getField("ci") >= lo && p.getField("ci") < hi)
+    def sum(lo: Int, hi: Int, zero: Double) =
+      aggregate(sort_array(parts(lo, hi)), lit(zero), (acc, p) => acc + p.getField("score").cast("double"))
+    val mustSum = sum(0, nMust, -0.0)
+    val score = if (should.isEmpty) mustSum else mustSum + sum(nMust, nMust + nShould, 0.0)
+    clauseParts(ev, must ++ should ++ mustNot)
+      .filter(size(parts(0, nMust)) === nMust && !exists(col("parts"), _.getField("ci") >= nMust + nShould))
+      .select(col("docId"), score.cast("float").as("score"))
   }
 }

@@ -33,10 +33,6 @@ trait SimScorer extends Serializable {
 trait Similarity extends Serializable {
   def scorer(boost: Float, docFreq: Long, totalTermFreq: Long,
              docCount: Long, sumTotalTermFreq: Long): SimScorer
-
-  /** True when [[scorer]] reads `totalTermFreq` — the engine then fetches
-    * (df, ttf) for query terms instead of the df-only cached lookup. */
-  def needsTtf: Boolean = false
 }
 
 /** BM25 (the default — exact Lucene BM25Similarity arithmetic, [[BM25]]). */
@@ -106,8 +102,6 @@ case object BooleanSim extends Similarity {
  *   clipped at 0 BEFORE the float cast; dl = byte4ToInt(normByte)
  */
 final case class LMDirichletSim(mu: Float = 2000f) extends Similarity {
-  override def needsTtf: Boolean = true
-
   private final case class Scorer(boost: Float, collProb: Double, mu0: Float)
       extends SimScorer {
     def score(freq: Float, normByte: Byte): Float = {
@@ -170,8 +164,6 @@ final case class DfrInL2Sim(c: Float = 1f) extends Similarity {
  */
 final case class DfiSim(measure: DfiSim.Measure = DfiSim.Standardized)
     extends Similarity {
-  override def needsTtf: Boolean = true
-
   private final case class Scorer(boost: Float, ttf1: Double, sumTtf1: Double,
                                   m: DfiSim.Measure) extends SimScorer {
     def score(freq: Float, normByte: Byte): Float = {
@@ -222,8 +214,6 @@ final case class IBSim(distribution: IBSim.Distribution = IBSim.SPL,
                        lambdaFrom: IBSim.Lambda = IBSim.LambdaDF,
                        normalization: IBSim.Norm = IBSim.H2,
                        c: Float = 1f) extends Similarity {
-  override def needsTtf: Boolean = true
-
   private final case class Scorer(boost: Float, lam: Float, avgdl: Double,
                                   dist: IBSim.Distribution, norm: IBSim.Norm,
                                   c0: Float) extends SimScorer {
@@ -317,13 +307,10 @@ final case class AxiomaticF2ExpSim(s: Float = 0.25f, k: Float = 0.35f)
 
 /**
  * MultiSimilarity (`MultiSimilarity.java:28-67`): the per-hit score is the
- * SUM of the sub-similarities' scores (ensemble ranking). `needsTtf` is the
- * OR of the members'.
+ * SUM of the sub-similarities' scores (ensemble ranking).
  */
 final case class MultiSim(sims: Seq[Similarity]) extends Similarity {
   require(sims.nonEmpty, "MultiSim needs at least one member")
-  override def needsTtf: Boolean = sims.exists(_.needsTtf)
-
   private final case class Scorer(subs: Seq[SimScorer]) extends SimScorer {
     def score(freq: Float, normByte: Byte): Float = {
       var sum = 0.0f
@@ -350,8 +337,6 @@ final case class MultiSim(sims: Seq[Similarity]) extends Similarity {
  */
 final case class LMJelinekMercerSim(lambda: Float = 0.1f) extends Similarity {
   require(lambda > 0f && lambda <= 1f, s"lambda must be in (0,1], got $lambda")
-  override def needsTtf: Boolean = true
-
   private final case class Scorer(boost: Float, collProb: Double, l: Float)
       extends SimScorer {
     def score(freq: Float, normByte: Byte): Float = {

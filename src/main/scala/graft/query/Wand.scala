@@ -14,18 +14,18 @@ import org.apache.spark.util.LongAccumulator
  *
  *  - One query term streams each input partition a block at a time, with
  *    no shuffle. Several terms need ALL query-term postings of a doc range
- *    in one run. Over a [[slice]] (the warmed cache of an index under one
- *    grid slice, `OpenIndex.warm`) that is the one cached partition: one
- *    run, in place, one stage, no exchange. Any other input (a larger or
- *    unwarmed index, one segment of a budgeted search, `WithHot`'s union,
- *    time-bucket or search-job blocks) re-keys its blocks to doc-range
- *    buckets of the grid per query (`bucket = minDoc / bucketDocs`; a block
- *    spanning a boundary is replicated into both and masked inside the
- *    kernel), so each bucket holds ALL query-term postings for its doc
- *    range — the Spark analogue of a Lucene leaf slice. Block bounds are
- *    computed map-side; only what the kernel reads shuffles.
- *  - Per run (a slice, a bucket, or a stretch of one term's ascending
- *    blocks):
+ *    in one run: the blocks are keyed to doc-range buckets of the grid
+ *    (`bucket = minDoc / bucketDocs`; a block spanning a boundary is
+ *    replicated into both and masked inside the kernel), so each bucket
+ *    holds ALL query-term postings for its doc range — the Spark analogue
+ *    of a Lucene leaf slice. An input whose plan reports one partition (a
+ *    [[slice]], the warmed cache of an index under one grid slice, or a
+ *    filter or map of it) holds every bucket in its one task: in place,
+ *    one stage, no exchange. Any other input (a larger or unwarmed index,
+ *    one segment of a budgeted search, `WithHot`'s union, time-bucket or
+ *    search-job blocks) is shuffled on the bucket per query. Block bounds
+ *    are computed map-side; only what the kernel reads shuffles.
+ *  - Per run (a bucket, or a stretch of one term's ascending blocks):
  *    frontier = the lowest unprocessed block per term, pivot = min
  *    frontier maxDoc. With skipping on, a window whose Σ frontier block
  *    bounds cannot beat the k-th best score θ is skipped WITHOUT decoding;
@@ -108,8 +108,8 @@ object Wand {
       b.impactFreqs.indices.map(i => scorer.score(b.impactFreqs(i).toFloat, b.impactNorms(i)))
         .foldLeft(0f)(math.max))
 
-  /** One kernel run: the matching docs of one slice or bucket (or one
-    * ascending stretch of a term's blocks) in ascending docId order.
+  /** One kernel run: the matching docs of one bucket (or one ascending
+    * stretch of a term's blocks) in ascending docId order.
     * `lo`/`hi` mask docs outside a bucket (blocks replicated across a
     * boundary must not double-count). */
   private final class Kernel(terms: Array[TermBlocks], lo: Long, hi: Long,
@@ -196,8 +196,8 @@ object Wand {
     * Hash-packed segments interleave a term's docs across partitions, so
     * their blocks overlap: re-pack those postings into disjoint blocks
     * (impacts recomputed by the codec, so the bounds stay exact). A run
-    * holds <= bucketDocs postings per term (a [[slice]] or a bucket), so
-    * the merge is small and local. */
+    * holds <= bucketDocs postings per term (one bucket), so the merge is
+    * small and local. */
   private def normalizeBlocks(sorted: Array[KernelBlock], scorer: SimScorer): Array[KernelBlock] = {
     if (sorted.indices.tail.forall(i => sorted(i - 1).maxDoc < sorted(i).minDoc)) return sorted
     // each (term, docId) lives in exactly one source partition, so the
@@ -210,37 +210,27 @@ object Wand {
       .map(b => kernelBlock(IndexBuilder.blockRow(b), sorted(0).slot, scorer)).toArray
   }
 
-  /** The Datasets laid out by [[slice]], held by identity: a Dataset
-    * derived from one (a filter, a union) is another object and reads as
-    * no slice. Weak keys, so a dropped layout goes. */
-  private val slices = java.util.Collections.synchronizedSet(
-    java.util.Collections.newSetFromMap(new java.util.WeakHashMap[Dataset[_], java.lang.Boolean]()))
-
   /** The blocks of docIds [`docLo`, `docHi`) as one doc-range slice, when
     * they lie in one slice of the grid (`bucketDocs` wide): one partition,
     * coalesced narrowly (no shuffle, no cut), sorted by (term, minDoc) so
-    * the in-memory batch stats prune by term. [[topK]] scores several
-    * terms over it in place, with no exchange. None when the docIds span
-    * several slices: one task per query would then decode more than one
-    * bucket's postings per term. Not persisted: `OpenIndex.warm` caches
-    * it. */
+    * the in-memory batch stats prune by term. Its plan reports one
+    * partition, so [[topK]] scores several terms over it in place. None
+    * when the docIds span more than one grid slice: one task per query
+    * would then decode more than one bucket's postings per term. Not
+    * persisted: `OpenIndex.warm` caches it. */
   def slice(blocks: Dataset[BlockRow], docLo: Long, docHi: Long,
             bucketDocs: Long = BucketDocs): Option[Dataset[BlockRow]] =
     if (docLo / bucketDocs != docHi / bucketDocs) None
-    else {
-      val out = blocks.coalesce(1).sortWithinPartitions("term", "minDoc")
-      slices.add(out)
-      Some(out)
-    }
+    else Some(blocks.coalesce(1).sortWithinPartitions("term", "minDoc"))
 
   /** Score the query terms' blocks: (docId, score) ordered (score DESC,
     * docId ASC), at most `k` rows — or every matching doc, unordered, for
     * `k` = [[QueryEngine.All]]. Block-max skipping is on whenever it is
     * sound, as with Lucene's TOP_SCORES: for a bounded `k` under the summed
     * combine (block bounds are no bound of a DisjunctionMax score) over
-    * [[SimScorer.impactBounded]] scorers. Several terms over a [[slice]]
-    * score it in place; over any other `blocks` they shuffle to
-    * `bucketDocs`-wide buckets. */
+    * [[SimScorer.impactBounded]] scorers. Several terms are keyed to
+    * `bucketDocs`-wide buckets, shuffled on the bucket unless the plan of
+    * `blocks` reports one partition. */
   def topK(spark: SparkSession, blocks: Dataset[BlockRow], infos: Seq[QueryEngine.TermInfo],
            k: Int, requireAll: Boolean = false, tieBreaker: Option[Float] = None,
            bucketDocs: Long = BucketDocs,
@@ -293,21 +283,23 @@ object Wand {
             new Kernel(Array(new TermBlocks(scorers(0), s, decodeCounter)), Long.MinValue, Long.MaxValue,
               requireAll, tieBreaker)))
         }
-      else if (slices.contains(blocks))
-        // the one partition holds the whole slice
-        termBlocks.mapPartitions(it => collect(run(it.map(toKernel).toArray, Long.MinValue, Long.MaxValue).iterator))
-      else
-        termBlocks
-          .flatMap { b =>
-            val kb = toKernel(b)
-            (b.minDoc / bucketDocs to b.maxDoc / bucketDocs).iterator.map(bucket => (bucket, kb))
-          }
-          .repartition($"_1")
-          // a task holds the compressed blocks of its buckets and decodes
-          // (or re-packs) one bucket at a time
-          .mapPartitions(it => collect(it.toArray.groupBy(_._1).iterator.flatMap { case (bucket, rows) =>
-            run(rows.map(_._2), bucket * bucketDocs, (bucket + 1) * bucketDocs)
-          }))
+      else {
+        val keyed = termBlocks.flatMap { b =>
+          val kb = toKernel(b)
+          (b.minDoc / bucketDocs to b.maxDoc / bucketDocs).iterator.map(bucket => (bucket, kb))
+        }
+        // a bucket must sit in one task: an input the plan reports as one
+        // partition already does (the warmed cache, a filter of it), any
+        // other is shuffled on the bucket
+        val colocated =
+          if (blocks.queryExecution.executedPlan.outputPartitioning.numPartitions == 1) keyed
+          else keyed.repartition($"_1")
+        // a task holds the compressed blocks of its buckets and decodes
+        // (or re-packs) one bucket at a time
+        colocated.mapPartitions(it => collect(it.toArray.groupBy(_._1).iterator.flatMap { case (bucket, rows) =>
+          run(rows.map(_._2), bucket * bucketDocs, (bucket + 1) * bucketDocs)
+        }))
+      }
     if (k == QueryEngine.All) hits.toDF() else hits.toDF().orderBy(desc("score"), asc("docId")).limit(k)
   }
 }

@@ -68,14 +68,29 @@ object PlanDump {
       """Over the warmed postings cache (`OpenIndex.warm`) of an index
         |under one doc-range slice, cached as that slice (one partition,
         |sorted by term): the term filter prunes the in-memory batches;
-        |the kernel scores the slice in place into one bounded heap,
-        |skipping blocks that cannot compete — one stage, no exchange; the
-        |final top-k is TakeOrderedAndProject — the per-task heaps merged
-        |on the driver, never a global sort. Over an unwarmed or larger
-        |index the term filter pushes into the postings parquet scan
-        |instead, and the query terms' blocks shuffle once to their
-        |doc-range bucket (PlanAuditSpec pins both shapes).""".stripMargin,
+        |the cache's plan reports one partition, so the kernel keys the
+        |blocks to their doc-range buckets and scores them in place into
+        |one bounded heap, skipping blocks that cannot compete — one
+        |stage, no exchange; the final top-k is TakeOrderedAndProject —
+        |the per-task heaps merged on the driver, never a global sort.
+        |Over an unwarmed or larger index the term filter pushes into the
+        |postings parquet scan instead, and the query terms' blocks
+        |shuffle once on their bucket (PlanAuditSpec pins both
+        |shapes).""".stripMargin,
       IndexStore.OpenIndex(spark, dir).warm(2).topK(Seq("public", "import"), 10))
+
+    section("Parsed boolean `+public import -handler3` (Searcher)",
+      """Each term clause is one kernel request over every doc (a
+        |streamed one-term scan of the unwarmed postings); the clauses'
+        |(docId, clause, score) rows union into ONE per-doc grouping —
+        |the one exchange, shared with DisMax — and one filter keeps a
+        |doc with every must part and no mustNot part, then sums the
+        |must and the should parts as double in clause order and casts
+        |float. No join: no broadcast, no anti-join per mustNot clause.
+        |Over the warmed one-slice cache the union keeps the one
+        |partition and the grouping needs no exchange (one job, one
+        |stage; PlanAuditSpec).""".stripMargin,
+      idx.search("+public import -handler3", 10))
 
     section("Field-sorted top-k over doc values",
       """Constant-score match -> join against ONLY the narrow docvalues

@@ -92,7 +92,7 @@ class EngineSpec extends SparkSpec {
     // hash-packed partitions, coalesced, reach one task out of docId order
     val local = (0L until 1000L).map(OracleScorer.Doc(_, "same words here"))
     val docs = local.map(d => (d.docId, d.content)).toDF("docId", "content")
-    val b = IndexBuilder.packBlocks(spark, IndexBuilder.invert(spark, docs), 4, strategy = "hash")
+    val b = IndexBuilder.packPartitions(IndexBuilder.invert(spark, docs).repartition(4, $"term", $"docId"))
       .coalesce(1).cache()
     val ts = IndexBuilder.termStats(b)
     val cs = IndexBuilder.corpusStats(IndexBuilder.docStats(spark, docs))
@@ -185,11 +185,11 @@ class EngineSpec extends SparkSpec {
   }
 
   test("WAND over hash-packed (overlapping) blocks is rank- and score-identical") {
-    // hash strategy interleaves a term's docIds across partitions, so one
-    // term's blocks OVERLAP in docId ranges — the kernel must detect and
+    // hash partitioning interleaves a term's docIds across partitions, so
+    // one term's blocks OVERLAP in docId ranges — the kernel must detect and
     // re-pack (split partial scores would otherwise corrupt multi-term sums)
-    val hashBlocks = IndexBuilder.packBlocks(
-      spark, IndexBuilder.invert(spark, withIds), 8, strategy = "hash").cache()
+    val hashBlocks = IndexBuilder.packPartitions(
+      IndexBuilder.invert(spark, withIds).repartition(8, $"term", $"docId")).cache()
     val hashTs = IndexBuilder.termStats(hashBlocks).cache()
     for ((terms, mode, neg) <- queries if neg.isEmpty; k <- Seq(1, 10, 50)) {
       val bounded = QueryEngine.run(spark, hashBlocks, hashTs, stats, Request(Terms(terms), k, mode))

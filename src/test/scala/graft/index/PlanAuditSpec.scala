@@ -51,10 +51,11 @@ class PlanAuditSpec extends SparkSpec {
     // multi-term: the kernel's doc-range bucket shuffle is the only one
     assert(exchanges(idx.topK(two, 10)) == 1, planOf(idx.topK(two, 10)))
     assert(exchanges(idx.topK(two, 10, And)) == 1, planOf(idx.topK(two, 10, And)))
-    // parsed `+a b -c`: the should clause's per-doc combine is the one
-    // shuffle; the must ⋈ should and mustNot joins broadcast
+    // parsed `+a b -c`: the clauses' one per-doc grouping is the one
+    // shuffle, with no join to broadcast
     val parsed = idx.search("+public import -handler3", 10)
     assert(exchanges(parsed) == 1, planOf(parsed))
+    assert(!planOf(parsed).contains("BroadcastExchange"), planOf(parsed))
     // warmed: an index under one grid slice is cached as that slice, so
     // several terms score the one cached partition in place — no exchange,
     // one stage, one job
@@ -64,6 +65,11 @@ class PlanAuditSpec extends SparkSpec {
       assert(exchanges(df()) == 0, planOf(df()))
       assert(countJobsAndStages(df().collect(): Unit) == ((1, 1)), planOf(df()))
     }
+    // the parsed boolean's leaves each keep the slice's one partition, so
+    // its per-doc grouping runs in the same single job
+    val warmedParsed = () => warmed.search("+public import -handler3", 10)
+    warmedParsed().collect(): Unit
+    assert(countJobsAndStages(warmedParsed().collect(): Unit) == ((1, 1)), planOf(warmedParsed()))
     warmed.blocks.unpersist()
   }
 

@@ -45,8 +45,9 @@ class SkewSpec extends SparkSpec {
   }
 }
 
-/** The "hash" pack strategy (north-star salted-repartition wording) must be
-  * query-equivalent to the default range strategy. */
+/** Blocks packed from hash-partitioned postings (a term's docs scattered
+  * over partitions, so its blocks overlap) must be query-equivalent to the
+  * range-partitioned build's. */
 class PackStrategySpec extends graft.SparkSpec {
   import spark.implicits._
   import org.apache.spark.sql.functions._
@@ -56,8 +57,8 @@ class PackStrategySpec extends graft.SparkSpec {
       col("id").as("docId"),
       concat(lit("hot common word uniq"), col("id")).as("content"))
     val posts = IndexBuilder.invert(spark, docs)
-    val range = IndexBuilder.packBlocks(spark, posts, 4, strategy = "range").cache()
-    val hash = IndexBuilder.packBlocks(spark, posts, 4, strategy = "hash").cache()
+    val range = IndexBuilder.packBlocks(spark, posts, 4).cache()
+    val hash = IndexBuilder.packPartitions(posts.repartition(4, $"term", $"docId")).cache()
     // identical term stats
     val tsR = IndexBuilder.termStats(range)
     val tsH = IndexBuilder.termStats(hash).withColumnRenamed("df", "df2").withColumnRenamed("ttf", "ttf2")

@@ -31,7 +31,8 @@ class SlicedCacheSpec extends SparkSpec {
   /** The unwarmed index's postings: the plain parquet scan. */
   lazy val raw: Dataset[BlockRow] = idx.blocks
   /** The same index warmed: one slice. */
-  lazy val sliced: Dataset[BlockRow] = IndexStore.OpenIndex(spark, dir).warm(2).blocks
+  lazy val warmed: IndexStore.OpenIndex = IndexStore.OpenIndex(spark, dir).warm(2)
+  lazy val sliced: Dataset[BlockRow] = warmed.blocks
 
   def hits(df: DataFrame): Seq[(Long, Float)] = df.collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
   def run(b: Dataset[BlockRow], req: Request): Seq[(Long, Float)] =
@@ -43,7 +44,7 @@ class SlicedCacheSpec extends SparkSpec {
   val multi = Seq(Seq("import", "return", "uniq_10_1"), Seq("public", "static", "void"),
     Seq("parseconfig", "handler7"), Seq("12", "buildindex", "def", "queryengine", "val"))
 
-  test("layout: one partition, uncut, each posting once; wider or derived input is no slice") {
+  test("layout: one partition, uncut, each posting once; a wider index is no slice, a derived one scores in place") {
     assert(sliced.rdd.getNumPartitions === 1)
     val sums = (b: Dataset[BlockRow]) => b.agg(count(lit(1)), sum($"n"), sum($"sumTf")).head()
     val (r, s) = (sums(raw), sums(sliced))
@@ -56,11 +57,21 @@ class SlicedCacheSpec extends SparkSpec {
     assert(order === order.sorted)
     // docIds across two slices of a 64-docId grid: no slice
     assert(Wand.slice(raw, 0L, N.toLong, bucketDocs = 64).isEmpty)
-    // a Dataset derived from the slice is shuffled to buckets per query
+    // a Dataset derived from the slice keeps its one partition in the plan,
+    // so it scores in place too
     val req = Request(Terms(Seq("public", "import")), 10)
     assert(exchanges(sliced, req) === 0)
-    assert(exchanges(sliced.filter($"n" > 0), req) === 1)
+    assert(exchanges(sliced.filter($"n" > 0), req) === 0)
     assert(run(sliced.filter($"n" > 0), req) === run(sliced, req))
+  }
+
+  test("a one-index MultiIndex.topK over the warmed slice scores in place, with the same hits") {
+    for (terms <- multi; mode <- Seq(Or, And)) {
+      val fed = MultiIndex.topK(Seq(warmed), terms, 10, mode)
+      assert("Exchange hashpartitioning".r.findAllIn(fed.queryExecution.executedPlan.toString).isEmpty,
+        fed.queryExecution.executedPlan.toString)
+      assert(hits(fed.select("docId", "score")) === run(raw, Request(Terms(terms), 10, mode)), s"terms=$terms mode=$mode")
+    }
   }
 
   test("Or, And, k = All, mustNot: sliced = unwarmed = oracle, bit for bit, with no exchange") {
@@ -122,7 +133,7 @@ class SlicedCacheSpec extends SparkSpec {
 
   test("hash-packed (overlapping) blocks as one slice: re-packed in the run, oracle-identical") {
     val withIds = DocIds.assign(CorpusGen.corpus(spark, N, 7).toDF(), Seq("repo", "path", "commit"), 6)
-    val hash = IndexBuilder.packBlocks(spark, IndexBuilder.invert(spark, withIds), 4, strategy = "hash")
+    val hash = IndexBuilder.packPartitions(IndexBuilder.invert(spark, withIds).repartition(4, $"term", $"docId"))
     val hashSliced = Wand.slice(hash, 0L, N.toLong).get.cache()
     val ts = IndexBuilder.termStats(hashSliced)
     for (terms <- multi; mode <- Seq(Or, And); k <- Seq(1, 10, 50)) {

@@ -297,6 +297,24 @@ class SimilaritiesSpec extends SparkSpec {
     val want = OracleScorer.topKSim(corpusLocal, queries.last, 30, sim)
     assert(got === want)
   }
+
+  test("LMDirichlet reads (df, ttf) through the df memo: a repeated request runs no termstats job") {
+    val d = java.nio.file.Files.createTempDirectory("graft-sim-memo").toString
+    graft.index.IndexStore.build(spark, withIds, d, numSegments = 1, shufflePartitions = 2)
+    val idx = graft.index.IndexStore.OpenIndex(spark, d)
+    val terms = Seq("import", "return", "uniq_10_1")
+    def plan(): Seq[QueryEngine.TermInfo] =
+      QueryEngine.plan(idx.termstats, idx.stats, terms, dfCache = Some(idx.dfCache), sim = LMDirichletSim())
+    def run(): Seq[(Long, Float)] = idx.run(QueryEngine.Request(QueryEngine.Terms(terms, LMDirichletSim()), 10))
+      .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
+    var first: Seq[(Long, Float)] = Nil
+    val firstJobs = countJobs { first = run() }
+    assert(countJobs(plan(): Unit) === 0, "the memo missed")
+    var second: Seq[(Long, Float)] = Nil
+    assert(countJobs { second = run() } < firstJobs, "the repeat ran a termstats lookup")
+    assert(second === first)
+    assert(first === OracleScorer.topKSim(corpusLocal, terms, 10, LMDirichletSim()))
+  }
 }
 
 /** A scorer that claims its impacts bound its blocks, whatever it is: forces
