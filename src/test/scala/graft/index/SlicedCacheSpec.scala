@@ -44,7 +44,7 @@ class SlicedCacheSpec extends SparkSpec {
   val multi = Seq(Seq("import", "return", "uniq_10_1"), Seq("public", "static", "void"),
     Seq("parseconfig", "handler7"), Seq("12", "buildindex", "def", "queryengine", "val"))
 
-  test("layout: one partition, uncut, each posting once; a wider index is no slice, a derived one scores in place") {
+  test("layout: one partition, uncut, each posting once; wider or derived input is no slice") {
     assert(sliced.rdd.getNumPartitions === 1)
     val sums = (b: Dataset[BlockRow]) => b.agg(count(lit(1)), sum($"n"), sum($"sumTf")).head()
     val (r, s) = (sums(raw), sums(sliced))
