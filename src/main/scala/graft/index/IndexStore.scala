@@ -736,7 +736,10 @@ object IndexStore {
       * partition, so a file-count-sized layout (e.g. 64 build shuffle
       * files) pays 64 task launches per query — pure scheduler overhead
       * for queries that read a handful of blocks. Query-heavy sessions
-      * should size this near the executor-core count. */
+      * should size this near the executor-core count. `numPartitions`
+      * = 1 on a multi-slice index is a one-partition cache too: a
+      * multi-term top-k then scores every bucket in one task per query,
+      * with no shuffle. */
     def warm(numPartitions: Int = 0): this.type = {
       val ranges = segDirs.map(segmentDocRange)
       val ds = Wand.slice(rawBlocks, ranges.map(_._1).min, ranges.map(_._2).max)

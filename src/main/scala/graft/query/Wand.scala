@@ -216,8 +216,11 @@ object Wand {
     * the in-memory batch stats prune by term. Its plan reports one
     * partition, so [[topK]] scores several terms over it in place. None
     * when the docIds span more than one grid slice: one task per query
-    * would then decode more than one bucket's postings per term. Not
-    * persisted: `OpenIndex.warm` caches it. */
+    * would then decode more than one bucket's postings per term. (Any
+    * other one-partition input, e.g. `warm(1)` of a multi-slice index,
+    * is also scored in place: one task per query holds every query-term
+    * block and scores the buckets in turn.) Not persisted:
+    * `OpenIndex.warm` caches it. */
   def slice(blocks: Dataset[BlockRow], docLo: Long, docHi: Long,
             bucketDocs: Long = BucketDocs): Option[Dataset[BlockRow]] =
     if (docLo / bucketDocs != docHi / bucketDocs) None
