@@ -287,21 +287,22 @@ object Wand {
               requireAll, tieBreaker)))
         }
       else {
-        val keyed = termBlocks.flatMap { b =>
+        val keyed = (b: BlockRow) => {
           val kb = toKernel(b)
           (b.minDoc / bucketDocs to b.maxDoc / bucketDocs).iterator.map(bucket => (bucket, kb))
         }
-        // a bucket must sit in one task: an input the plan reports as one
-        // partition already does (the warmed cache, a filter of it), any
-        // other is shuffled on the bucket
-        val colocated =
-          if (blocks.queryExecution.executedPlan.outputPartitioning.numPartitions == 1) keyed
-          else keyed.repartition($"_1")
         // a task holds the compressed blocks of its buckets and decodes
         // (or re-packs) one bucket at a time
-        colocated.mapPartitions(it => collect(it.toArray.groupBy(_._1).iterator.flatMap { case (bucket, rows) =>
-          run(rows.map(_._2), bucket * bucketDocs, (bucket + 1) * bucketDocs)
-        }))
+        val runBuckets = (it: Iterator[(Long, KernelBlock)]) =>
+          collect(it.toArray.groupBy(_._1).iterator.flatMap { case (bucket, rows) =>
+            run(rows.map(_._2), bucket * bucketDocs, (bucket + 1) * bucketDocs)
+          })
+        // a bucket must sit in one task: an input the plan reports as one
+        // partition already does (the warmed cache, a filter of it) and is
+        // keyed in that task; any other is shuffled on the bucket
+        if (blocks.queryExecution.executedPlan.outputPartitioning.numPartitions == 1)
+          termBlocks.mapPartitions(it => runBuckets(it.flatMap(keyed)))
+        else termBlocks.flatMap(keyed).repartition($"_1").mapPartitions(runBuckets)
       }
     if (k == QueryEngine.All) hits.toDF() else hits.toDF().orderBy(desc("score"), asc("docId")).limit(k)
   }
