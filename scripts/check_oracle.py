@@ -2,7 +2,7 @@
 """Local stand-in for the driver's correctness gate: run after
 `sbt "runMain graft.Verify <sfDir> <outDir>"`, compares each query's
 parquet against DuckDB running the oracle SQL on the same tables."""
-import json, sys, glob, os
+import json, sys, glob, os, time
 import duckdb
 from verify_outputs import exit_now, norm, read_output
 
@@ -40,18 +40,22 @@ for name, sql in sorted(oracle.items()):
     if only and name not in only:
         continue
     if name in skip:
-        print(f"SKIP     {name}: oracle marked infeasible at this scale")
+        print(f"SKIP     {name}: oracle marked infeasible at this scale", flush=True)
         skipped += 1
         continue
     spark_path = f"{out_dir}/{name}"
     if not os.path.isdir(spark_path):
-        print(f"MISSING  {name}: no spark output")
+        print(f"MISSING  {name}: no spark output", flush=True)
         fail += 1
         continue
+    t0 = time.monotonic()
+    # each checked query's line ends with its elapsed seconds (oracle SQL,
+    # output read and compare), printed as it finishes
+    took = lambda: f"[{time.monotonic() - t0:.1f} s]"
     try:
         duck = con.execute(sql).df()
     except Exception as e:
-        print(f"ORACLE-ERR {name}: {e}")
+        print(f"ORACLE-ERR {name}: {e} {took()}", flush=True)
         fail += 1
         continue
     spark = read_output(spark_path)
@@ -59,15 +63,17 @@ for name, sql in sorted(oracle.items()):
     sc, sr = norm(spark)
     dc, dr = norm(duck)
     if sc != dc:
-        print(f"SCHEMA   {name}: spark={sc} duck={dc}")
+        print(f"SCHEMA   {name}: spark={sc} duck={dc} {took()}", flush=True)
         fail += 1
     elif sr != dr:
-        diff_a = [r for r in sr if r not in set(dr)][:3]
-        diff_b = [r for r in dr if r not in set(sr)][:3]
-        print(f"ROWS     {name}: spark={len(sr)} duck={len(dr)} onlySpark={diff_a} onlyDuck={diff_b}")
+        sset, dset = set(sr), set(dr)
+        diff_a = [r for r in sr if r not in dset][:3]
+        diff_b = [r for r in dr if r not in sset][:3]
+        print(f"ROWS     {name}: spark={len(sr)} duck={len(dr)} onlySpark={diff_a} onlyDuck={diff_b} {took()}",
+              flush=True)
         fail += 1
     else:
-        print(f"OK       {name} ({len(sr)} rows)")
+        print(f"OK       {name} ({len(sr)} rows) {took()}", flush=True)
         ok += 1
 
 print(f"\n{ok} ok, {fail} failed, {skipped} skipped, {len(set(g.split('/')[-1] for g in glob.glob(out_dir + '/*') if os.path.isdir(g)) - set(oracle))} rows-only")

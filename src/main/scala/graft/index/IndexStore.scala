@@ -4,6 +4,7 @@ import graft.query.{QueryEngine, Wand}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import org.roaringbitmap.longlong.Roaring64Bitmap
 
 /**
  * Segmented, resumable on-disk index (Iceberg-shaped; Parquet in this
@@ -710,12 +711,19 @@ object IndexStore {
     /** Analyze query text with the index's own chain (terms only). */
     def analyzeQuery(text: String): Seq[String] = analyzer.terms(text)
 
-    /** liveDocs tombstones (None when the index has no deletes). */
-    lazy val deletes: Option[DataFrame] =
-      if (Files.exists(Paths.get(s"$dir/deletes")))
-        Some(spark.read.parquet(s"$dir/deletes")
-          .select(col("docId").cast("long").as("docId")).distinct())
-      else None
+    /** The liveDocs tombstones as one bitmap (Lucene's liveDocs bits),
+      * read by one job on first use and shipped in the task closures of
+      * the queries that test it; None, with nothing read, when the index
+      * has no deletes. */
+    lazy val tombstones: Option[Roaring64Bitmap] =
+      if (!Files.exists(Paths.get(s"$dir/deletes"))) None
+      else {
+        val dead = new Roaring64Bitmap
+        spark.read.parquet(s"$dir/deletes").select(col("docId").cast("long")).as[Long]
+          .collect().foreach(dead.addLong)
+        dead.runOptimize()
+        Some(dead)
+      }
 
     /** Per-index term-dictionary memo (see QueryEngine.DfCache): repeat
       * queries plan without a stats-lookup Spark job. */
@@ -753,10 +761,10 @@ object IndexStore {
       * postings, dictionary, collection stats and df memo, with tombstones
       * excluded inside the planner, before the limit. */
     def run(req: QueryEngine.Request): DataFrame =
-      QueryEngine.run(spark, blocks, termstats, stats, req, deletes, Some(dfCache))
+      QueryEngine.run(spark, blocks, termstats, stats, req, tombstones, Some(dfCache))
 
     /** Drop this index's tombstoned docs from a docId-keyed frame. */
-    def liveDocs(docs: DataFrame): DataFrame = QueryEngine.liveDocs(docs, deletes)
+    def liveDocs(docs: DataFrame): DataFrame = QueryEngine.liveDocs(docs, tombstones)
 
     /** BM25 (or `sim`) top-k over the query terms. `prune` and `wand` are
       * ignored — the planner turns block-max skipping on whenever it is
@@ -874,7 +882,7 @@ object IndexStore {
       for (sd <- segs if searched == 0 || System.nanoTime() < deadline) {
         val segBlocks = spark.read.parquet(s"$sd/postings").as[graft.index.BlockRow]
         val rows = QueryEngine.run(spark, segBlocks, termstats, stats,
-            QueryEngine.Request(QueryEngine.Infos(infos), k), deletes)
+            QueryEngine.Request(QueryEngine.Infos(infos), k), tombstones)
           .collect().map(r => (r.getLong(0), r.getFloat(1)))
         merged = (merged ++ rows).sortBy { case (id, s) => (-s, id) }.take(k)
         searched += 1
@@ -1673,6 +1681,6 @@ object IndexStore {
       * the engine, before the limit. */
     def synonymTopK(synonyms: Seq[String], k: Int): DataFrame =
       QueryEngine.synonymTopK(spark, blocks, termstats, stats, synonyms, k,
-        excludeDocs = deletes, dfCache = Some(dfCache))
+        tombstones = tombstones, dfCache = Some(dfCache))
   }
 }

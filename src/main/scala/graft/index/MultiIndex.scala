@@ -3,6 +3,7 @@ package graft.index
 import graft.query.QueryEngine
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.roaringbitmap.longlong.Roaring64Bitmap
 
 /**
  * Federated search over several committed indexes as ONE logical index —
@@ -53,7 +54,7 @@ object MultiIndex {
    * (score DESC, docId ASC) — the global docId tie-break equals Lucene's
    * merge tie-break (shardIndex, then local doc), because docBases are
    * monotone in shard order (TopDocs.java:34-40). Per-index tombstones are
-   * rebased and honored.
+   * rebased into one bitmap and honored.
    */
   def topK(indexes: Seq[IndexStore.OpenIndex], terms: Seq[String], k: Int,
            mode: QueryEngine.Mode = QueryEngine.Or,
@@ -61,15 +62,17 @@ object MultiIndex {
     require(indexes.nonEmpty)
     val spark = indexes.head.spark
     val bases = docBases(indexes)
-    val deletes: Option[DataFrame] = {
-      val ds = indexes.zip(bases).flatMap { case (ix, base) =>
-        ix.deletes.map(d => d.select((col("docId") + base).as("docId")))
+    val rebased = indexes.zip(bases).flatMap { case (ix, base) =>
+      ix.tombstones.map { dead =>
+        val shifted = new Roaring64Bitmap
+        dead.forEach(d => shifted.addLong(d + base))
+        shifted
       }
-      if (ds.isEmpty) None else Some(ds.reduce(_ unionByName _))
     }
+    val tombstones = rebased.reduceOption { (a, b) => a.or(b); a }
     val hits = QueryEngine.run(spark, rebasedBlocks(indexes),
       mergedTermstats(indexes), mergedStats(indexes),
-      QueryEngine.Request(QueryEngine.Terms(terms), k, mode, mustNot), deletes)
+      QueryEngine.Request(QueryEngine.Terms(terms), k, mode, mustNot), tombstones)
     // map global ids back to (shard, localDocId) — bases are a tiny literal
     val shardExpr = bases.zipWithIndex.tail.foldLeft(lit(0)) { case (acc, (b, i)) =>
       when(col("docId") >= b, lit(i)).otherwise(acc)

@@ -72,14 +72,37 @@ object Dedup {
 
   /** Cap via hash-aggregated min-k (no sort shuffle). `banded` must be
     * exactly (idCol, keyCols...); output column order matches. */
+  /** How many entries each memo below keeps: the least recently used one
+    * beyond it is dropped (and unpersisted, when persisted). */
+  private[operators] val MemoCapacity = 16
+
+  /** A bounded LRU memo: past [[MemoCapacity]] entries the least recently
+    * used one is dropped and handed to `evicted`. */
+  private final class LruMemo[K, V](evicted: V => Unit) {
+    private val entries = new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean = {
+        val evict = size() > MemoCapacity
+        if (evict) evicted(e.getValue)
+        evict
+      }
+    }
+    def getOrElseUpdate(key: K, make: => V): V = synchronized {
+      val hit = entries.get(key)
+      if (hit != null) hit else { val v = make; entries.put(key, v); v }
+    }
+    def clear(): Unit = synchronized { entries.values.forEach(evicted(_)); entries.clear() }
+  }
+
   /** Memoized persist for candidate-generation intermediates (signature /
     * chunk / sketch tables): repeated dedup calls over the same input reuse
     * ONE cached copy instead of stacking a new orphaned RDD per call (the
     * signIndex pattern from [[Similarity]]; on a cluster a written bucketed
     * table plays this role). Keyed by the canonicalized analyzed plan, so
-    * parameters baked into the frame distinguish entries. */
-  private val persistMemo = scala.collection.concurrent.TrieMap
-    .empty[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame]
+    * parameters baked into the frame distinguish entries. An evicted
+    * entry is unpersisted, so many distinct inputs cannot pile up cached
+    * blocks. */
+  private val persistMemo = new LruMemo[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame](
+    _.unpersist(blocking = false))
 
   private def memoPersist(df: DataFrame): DataFrame =
     persistMemo.getOrElseUpdate(df.queryExecution.analyzed.canonicalized,
@@ -90,19 +113,18 @@ object Dedup {
     * two calls with identical inputs would build UNEQUAL plans and defeat
     * [[memoPersist]]. So the derivation itself is memoized on (input plan,
     * parameter key): repeated identical calls return the SAME Dataset
-    * instance, whose plan then hits the persist memo. */
-  private val derivedMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String), DataFrame]
+    * instance, whose plan then hits the persist memo. Its frames are not
+    * persisted themselves, so eviction only forgets them. */
+  private val derivedMemo =
+    new LruMemo[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String), DataFrame](_ => ())
 
   private def memoDerived(src: DataFrame, key: String)(make: => DataFrame): DataFrame =
     derivedMemo.getOrElseUpdate((src.queryExecution.analyzed.canonicalized, key), make)
 
   /** Session-lifecycle hygiene: unpersist every memoized dedup intermediate.
-    * Callers running many dedup passes over DIFFERENT corpora should call
-    * this between corpora; within one corpus the memo is what prevents
-    * per-call cache growth. */
+    * The memos are bounded, so this is only needed to release the cache
+    * early, e.g. between corpora. */
   def clearCaches(): Unit = {
-    persistMemo.values.foreach(_.unpersist())
     persistMemo.clear()
     derivedMemo.clear()
   }

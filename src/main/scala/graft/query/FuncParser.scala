@@ -429,7 +429,7 @@ object FuncParser {
       case ("sumtotaltermfreq" | "sttf", List(_)) => lit(idx.stats.sumTotalTermFreq)
       case ("maxdoc", Nil) => lit(idx.stats.docCount)
       case ("numdocs", Nil) =>
-        lit(idx.stats.docCount - idx.deletes.map(_.count()).getOrElse(0L))
+        lit(idx.stats.docCount - idx.tombstones.map(_.getLongCardinality).getOrElse(0L))
       case ("norm", List(_)) =>
         // SmallFloat-decoded doc length, the scorer's own norm byte
         // (NormValueSource reads the same byte) — decoded through a

@@ -4,6 +4,7 @@ import graft.index.{BlockRow, CorpusStats, IndexBuilder, PostingRow}
 import graft.codec.PostingsCodec
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.roaringbitmap.longlong.Roaring64Bitmap
 
 /**
  * BM25 top-k query execution over the packed postings table, mirroring the
@@ -39,13 +40,17 @@ import org.apache.spark.sql.functions._
  * IndexSearcher.search(Query, Collector): query type, paging, filters and
  * deletes are request fields, not separate search methods. The planner's
  * stages, each written once:
- *  1. term infos — through [[plan]], from blended dfs, caller-built, or with
- *     the hot tier's stats merged in;
+ *  1. slots — one [[TermInfo]] per term clause, with its occurrence and
+ *     boost: through [[plan]], from blended dfs, caller-built, or with the
+ *     hot tier's stats merged in; mustNot terms are unscored slots;
  *  2. scores — term requests through the [[Wand]] kernel (the ti-ordered
- *     double sum or DisjunctionMax, And's all-terms rule, top k or every
- *     doc); [[Expanded]] and [[Scored]] frames as they come;
- *  3. exclusions — mustNot, filter DocSet, tombstones, the `after` cursor,
- *     all after scoring (the kernel then emits every doc);
+ *     must and should double sums or DisjunctionMax, top k or every doc),
+ *     which also tests mustNot, tombstones and the `after` cursor before a
+ *     doc reaches its top-k queue; [[Expanded]] and [[Scored]] frames as
+ *     they come;
+ *  3. exclusions — an fq DocSet joins after scoring (the kernel then emits
+ *     every doc); [[Expanded]] and [[Scored]] frames take mustNot, the fq,
+ *     tombstones and the cursor here, in SQL;
  *  4. output — orderBy(score DESC, docId ASC).limit(k), the unbounded score
  *     frame, or the one-job bounded heap + count.
  *
@@ -59,11 +64,27 @@ object QueryEngine {
   case object Or extends Mode
   case object And extends Mode
 
+  /** A slot's occurrence (Lucene BooleanClause.Occur). */
+  sealed trait Occur
+  case object Must extends Occur
+  case object Should extends Occur
+  case object MustNot extends Occur
+
   /** BooleanQuery.maxClauseCount / IndexSearcher default (reference
     * search/IndexSearcher.java getMaxClauseCount). */
   val MaxClauseCount = 1024
 
-  final case class TermInfo(term: String, ti: Int, scorer: SimScorer)
+  /** One slot of a term request: a term clause with its scorer, its
+    * occurrence and its boost (the part is the float score times the
+    * float boost); `ti` orders the combine. A mustNot slot is matched,
+    * never scored ([[NotScored]]). */
+  final case class TermInfo(term: String, ti: Int, scorer: SimScorer, occur: Occur = Should,
+                            boost: Float = 1f)
+
+  /** The scorer of a mustNot slot, which is never called. */
+  object NotScored extends SimScorer {
+    def score(freq: Float, normByte: Byte): Float = 0f
+  }
 
   /** Per-index term-dictionary memo: term -> Some((df, ttf)) | None (term
     * absent). Lucene keeps the term dictionary hot in memory; here each
@@ -137,19 +158,26 @@ object QueryEngine {
   def noHits(spark: SparkSession): DataFrame =
     spark.range(0).select(col("id").as("docId"), lit(0f).as("score"))
 
-  /** liveDocs: drop the tombstoned docIds (first column of `dead`). Lucene
-    * liveDocs semantics — deleted docs leave the results, but collection
-    * and term stats still count them until a merge reclaims, so surviving
-    * docs' scores are UNCHANGED by a delete. */
-  def liveDocs(docs: DataFrame, dead: Option[DataFrame]): DataFrame = dead match {
-    case Some(d) => docs.join(d.select(col(d.columns.head).cast("long").as("docId")), Seq("docId"), "left_anti")
-    case None => docs
+  /** liveDocs: drop the docIds in the tombstone bitmap `dead` from a
+    * docId-keyed frame. Lucene liveDocs semantics — deleted docs leave the
+    * results, but collection and term stats still count them until a
+    * merge reclaims, so surviving docs' scores are UNCHANGED by a delete. */
+  def liveDocs(docs: DataFrame, dead: Option[Roaring64Bitmap]): DataFrame = dead.fold(docs) { bm =>
+    docs.filter(udf((d: Long) => !bm.contains(d)).apply(col("docId")))
   }
 
   /** Where a request's per-doc scores come from (planner stage 1). */
   sealed trait Clauses
-  /** Query terms scored through [[plan]] (df memo; `sim` null = BM25). */
+  /** Query terms scored through [[plan]] (df memo; `sim` null = BM25):
+    * should slots under [[Or]], must slots under [[And]]. */
   final case class Terms(terms: Seq[String], sim: Similarity = null) extends Clauses
+  /** A flat BooleanQuery of BM25 term clauses, each (term, boost) one slot
+    * in clause order: every `must` clause required, `should` clauses
+    * optional (one needed when there is no must); the request's `mustNot`
+    * excludes. Its score is the must parts' double sum from -0.0 plus the
+    * should parts' from 0.0, cast float ([[Searcher]]'s lowering of a
+    * term-leaf boolean). */
+  final case class Bool(must: Seq[(String, Float)], should: Seq[(String, Float)]) extends Clauses
   /** BlendedTermQuery (reference lucene/core search/BlendedTermQuery.java:
     * 265-295): the present terms score AS IF they shared one document
     * frequency — df = max over their dfs, ttf = sum (:273-281,
@@ -185,6 +213,9 @@ object QueryEngine {
    * One scored query. How it is executed (block-max skipping, where the
    * top-k heap sits) is the planner's choice, not a field.
    *
+   * @param mode       [[Terms]] only: should ([[Or]]) or must ([[And]]) slots
+   * @param mustNot    terms whose docs are excluded (mustNot slots of a
+   *                   term request, an anti-join for a frame)
    * @param tieBreaker DisjunctionMax combine with this tie (reference
    *                   search/DisjunctionMaxScorer.java:58-70); None sums
    * @param filter     Solr `fq` DocSet (docId): restricts the match set
@@ -201,19 +232,19 @@ object QueryEngine {
 
   /** Run a request: (docId LONG, score FLOAT) ordered (score DESC, docId
     * ASC), at most `k` rows — or the unordered frame of every match when
-    * `k` is [[All]]. `excludeDocs` are live-docs tombstones; `dfCache` the
+    * `k` is [[All]]. `tombstones` are the live-docs bitmap; `dfCache` the
     * index's term-dictionary memo. */
   def run(spark: SparkSession, blocks: Dataset[BlockRow], termstats: DataFrame, stats: CorpusStats,
-          req: Request, excludeDocs: Option[DataFrame] = None,
+          req: Request, tombstones: Option[Roaring64Bitmap] = None,
           dfCache: Option[DfCache] = None): DataFrame =
     termInfos(termstats, stats, req, dfCache) match {
       case None => noHits(spark)
-      // a term request with nothing removed after scoring: the kernel's
-      // own heap is the top-k
-      case Some(infos) if infos.nonEmpty && removesNone(req, excludeDocs) =>
-        scoreTerms(spark, blocks, req, infos, req.k)
+      // a term request with no fq DocSet: the kernel's own heap is the
+      // top-k, and it tests mustNot, tombstones and the cursor itself
+      case Some(infos) if infos.nonEmpty && req.filter.isEmpty =>
+        scoreTerms(spark, blocks, req, infos, tombstones, req.k)
       case Some(infos) =>
-        val docs = liveScores(spark, blocks, termstats, req, infos, excludeDocs)
+        val docs = liveScores(spark, blocks, termstats, req, infos, tombstones)
         if (req.k == All) docs else docs.orderBy(desc("score"), asc("docId")).limit(req.k)
     }
 
@@ -244,7 +275,7 @@ object QueryEngine {
       case Some(infos) =>
         import spark.implicits._
         val k = req.k
-        val partials = liveScores(spark, blocks, termstats, req, infos, excludeDocs = None)
+        val partials = liveScores(spark, blocks, termstats, req, infos, tombstones = None)
           .as[Wand.Hit]
           .mapPartitions { it =>
             val q = new Wand.HitQueue(k)
@@ -261,12 +292,20 @@ object QueryEngine {
     }
   }
 
-  /** Stage 1: the request's term infos — None when it can match nothing,
+  /** Stage 1: the request's slots — None when it can match nothing,
     * empty for clauses that carry no term infos. */
   private def termInfos(termstats: DataFrame, stats: CorpusStats, req: Request,
                         dfCache: Option[DfCache]): Option[Seq[TermInfo]] = {
-    val (infos, required) = req.clauses match {
-      case Terms(ts, sim) => (plan(termstats, stats, ts, dfCache = dfCache, sim = sim), ts.distinct.size)
+    val (scoring, required) = req.clauses match {
+      case Terms(ts, sim) =>
+        val infos = plan(termstats, stats, ts, dfCache = dfCache, sim = sim)
+        if (req.mode == And) (infos.map(_.copy(occur = Must)), ts.distinct.size) else (infos, 0)
+      case Bool(must, should) =>
+        val scorers = plan(termstats, stats, (must ++ should).map(_._1), dfCache = dfCache)
+          .map(i => i.term -> i.scorer).toMap
+        ((must.map((_, Must)) ++ should.map((_, Should))).zipWithIndex.collect {
+          case (((t, boost), occur), i) if scorers.contains(t) => TermInfo(t, i, scorers(t), occur, boost)
+        }, must.size)
       case Blended(ts) =>
         val found = lookupDfs(termstats, ts.map(_._1), dfCache)
         val present = ts.filter { case (t, _) => found.getOrElse(t, 0L) > 0L }
@@ -290,71 +329,64 @@ object QueryEngine {
         (qs.zipWithIndex.collect { case (t, i) if mainDf.contains(t) || hotDf.contains(t) =>
           val df = mainDf.getOrElse(t, 0L) + hotDf.getOrElse(t, 0L)
           TermInfo(t, i, BM25.termScorer(1f, BM25.DefaultK1, BM25.DefaultB, df, docCount, sumTtf))
-        }, qs.size)
+        }, 0)
       case _: Expanded | _: Scored => return Some(Nil)
     }
-    if (infos.isEmpty || (req.mode == And && infos.size < required)) None else Some(infos)
+    if (scoring.isEmpty || scoring.count(_.occur == Must) < required) None
+    else {
+      val next = scoring.map(_.ti).max + 1
+      Some(scoring ++ req.mustNot.distinct.zipWithIndex.map { case (t, i) =>
+        TermInfo(t, next + i, NotScored, MustNot)
+      })
+    }
   }
-
-  /** Nothing leaves the scored set after scoring: no mustNot, filter
-    * DocSet, tombstones or cursor. Otherwise a top-k taken while scoring
-    * could keep fewer than k survivors. */
-  private def removesNone(req: Request, excludeDocs: Option[DataFrame]): Boolean =
-    req.mustNot.isEmpty && req.filter.isEmpty && req.after.isEmpty && excludeDocs.isEmpty
 
   /** Stage 2 for term requests: the [[Wand]] kernel over the index blocks
     * — for [[WithHot]] unioned with the hot rows, packed into blocks from
     * the postings sealHot packs, in place (no shuffle). The union's plan
-    * reports no single partition, so several terms shuffle it to their
+    * reports no single partition, so several slots shuffle it to their
     * buckets. */
   private def scoreTerms(spark: SparkSession, blocks: Dataset[BlockRow], req: Request,
-                         infos: Seq[TermInfo], k: Int): DataFrame = {
+                         infos: Seq[TermInfo], tombstones: Option[Roaring64Bitmap], k: Int): DataFrame = {
     val scored = req.clauses match {
       case WithHot(_, hot) =>
         val rows = IndexBuilder.hotPostingRows(hot.filter(col("term").isin(infos.map(_.term): _*)))
         blocks.unionByName(IndexBuilder.packPartitions(rows))
       case _ => blocks
     }
-    Wand.topK(spark, scored, infos, k, requireAll = req.mode == And, req.tieBreaker)
+    Wand.topK(spark, scored, infos, k, req.tieBreaker, tombstones, req.after)
   }
 
   /** Stages 2-3: every match's score, then the exclusions. */
   private def liveScores(spark: SparkSession, blocks: Dataset[BlockRow], termstats: DataFrame,
                          req: Request, infos: Seq[TermInfo],
-                         excludeDocs: Option[DataFrame]): DataFrame = {
+                         tombstones: Option[Roaring64Bitmap]): DataFrame = {
     import spark.implicits._
+    def filtered(docs: DataFrame) = req.filter.fold(docs)(fq => docs.join(fq, Seq("docId")))
     val combined = req.clauses match {
       case Scored(frame) => frame
       case Expanded(termPred) =>
         matchingDocs(spark, blocks, expand(termstats, termPred)).withColumn("score", lit(1f))
-      case _ => scoreTerms(spark, blocks, req, infos, All)
+      // the kernel tests mustNot, tombstones and the cursor itself
+      case _ => return filtered(scoreTerms(spark, blocks, req, infos, tombstones, All))
     }
     val kept =
       if (req.mustNot.isEmpty) combined
       else combined.join(matchingDocs(spark, blocks, req.mustNot), Seq("docId"), "left_anti")
-    val filtered = req.filter.fold(kept)(fq => kept.join(fq, Seq("docId")))
     // tombstones and the cursor apply BEFORE the limit: afterwards, pages
     // over an index with deletes would under-fill k
-    val live = liveDocs(filtered, excludeDocs)
+    val live = liveDocs(filtered(kept), tombstones)
     req.after.fold(live) { case (score, docId) =>
       live.filter($"score" < score || ($"score" === score && $"docId" > docId))
     }
   }
 
   /** The composed-query grouping ([[Searcher]]): each doc's (`order`,
-    * score) parts as one `parts` list, for [[partsSum]] or [[disMaxScore]]
-    * to combine in `order` — the SQL twins of the kernel's combines. */
+    * score) parts as one `parts` list, for Searcher's boolean sums or
+    * [[disMaxScore]] to combine in `order` — the SQL twins of the kernel's
+    * combines. */
   private[query] def collectParts(scored: DataFrame, order: String): DataFrame =
     scored.groupBy("docId").agg(collect_list(struct(col(order), col("score"))).as("parts"))
-
-  /** The per-doc sum combine: float parts summed in order as double
-    * (DisjunctionSumScorer), not yet cast. */
-  private[query] def partsSum: Column =
-    aggregate(
-      sort_array(col("parts")),
-      lit(0.0d),
-      (acc, x) => acc + x.getField("score").cast("double")
-    )
 
   /** DisjunctionMaxScorer.score over the ordered parts: a running float
     * max; the displaced max and every non-max sub-score accumulate into a
@@ -448,7 +480,7 @@ object QueryEngine {
    */
   def synonymTopK(spark: SparkSession, blocks: Dataset[BlockRow], termstats: DataFrame,
                   stats: CorpusStats, synonyms: Seq[String], k: Int,
-                  boost: Float = 1f, excludeDocs: Option[DataFrame] = None,
+                  boost: Float = 1f, tombstones: Option[Roaring64Bitmap] = None,
                   dfCache: Option[DfCache] = None): DataFrame = {
     import spark.implicits._
     val qs = synonyms.distinct
@@ -460,7 +492,7 @@ object QueryEngine {
     val grouped = postingRows(blocks.filter($"term".isin(found.keys.toSeq: _*))).groupBy("docId")
       .agg(sum($"tf").cast("int").as("syn_tf"), first($"normByte").as("normByte"))
     // tombstones excluded before the limit (liveDocs; stats unchanged)
-    liveDocs(grouped, excludeDocs)
+    liveDocs(grouped, tombstones)
       .select($"docId", $"syn_tf",
         graft.functions.Bm25Score($"syn_tf", $"normByte".cast("byte"),
           scorer.weight, scorer.cache).as("score"))

@@ -20,12 +20,18 @@ import org.apache.spark.sql.functions._
  *  - Sloppy phrase / prefix / wildcard / fuzzy / range: constant score 1
  *    (MultiTermQuery CONSTANT_SCORE rewrite; sloppy kept constant-score).
  *  - Boolean: the must clauses' scores and the should clauses' scores are
- *    each summed as double in clause order, the two sums added and cast
- *    float; DisjunctionMax runs DisjunctionMaxScorer's loop in clause
- *    order. Both combine one per-doc grouping of the clauses' scores, and
- *    both are the [[QueryEngine.run]] planner's combines, so a pure-term
- *    query string (or a maxscore/XML dismax over terms) scores
- *    bit-identically to the matching [[QueryEngine.Request]].
+ *    each summed as double in clause order (the must sum from -0.0), the
+ *    two sums added and cast float; DisjunctionMax runs
+ *    DisjunctionMaxScorer's loop in clause order.
+ *  - Term-leaf booleans are lowered: a term, a boosted term, or a boolean
+ *    whose clauses are only those is ONE [[QueryEngine.Bool]] request on
+ *    the [[Wand]] kernel (top k at the top level, every match nested),
+ *    mustNot and tombstones tested inside it, as Lucene's BooleanQuery
+ *    scores term clauses in one scorer tree. Any other boolean, and
+ *    DisMax, combine one per-doc grouping of their clauses' frames with
+ *    the kernel's arithmetic, so a pure-term query string (or a
+ *    maxscore/XML dismax over terms) scores bit-identically to the
+ *    matching [[QueryEngine.Request]] either way.
  */
 object Searcher {
 
@@ -50,11 +56,33 @@ object Searcher {
   /** Parse + rank: top-k (docId, score) with tombstones excluded before
     * the limit. */
   def search(idx: OpenIndex, query: String, k: Int): DataFrame =
-    rank(idx, eval(idx, QueryParser.parse(query)), k)
+    rank(idx, QueryParser.parse(query), k)()
 
-  /** The planner's exclusion + output stages over an evaluated query. */
-  private def rank(idx: OpenIndex, scored: DataFrame, k: Int): DataFrame =
-    idx.run(QueryEngine.Request(QueryEngine.Scored(scored), k))
+  /** The top k of a query over `idx`: a term-leaf boolean as one kernel
+    * request, any other query through the planner's exclusion and output
+    * stages over its frame, composed over the leaves `leaf` resolves. */
+  private def rank(idx: OpenIndex, q: Query, k: Int)(leaf: Query => DataFrame = this.leaf(idx, _)): DataFrame =
+    idx.run(termRequest(q, k).getOrElse(QueryEngine.Request(QueryEngine.Scored(compose(idx, q)(leaf)), k)))
+
+  /** A term, a boosted term, or a boolean of only those, as one
+    * [[QueryEngine.Bool]] request for `k`; None for any other query. */
+  private def termRequest(q: Query, k: Int): Option[QueryEngine.Request] = {
+    def termLeaf(c: Query): Option[(String, Float)] = c match {
+      case TermQ(t) => Some((t, 1f))
+      case BoostQ(b, TermQ(t)) => Some((t, b))
+      case _ => None
+    }
+    def termLeaves(cs: Seq[Query]): Option[Seq[(String, Float)]] = {
+      val ls = cs.flatMap(termLeaf)
+      if (ls.size == cs.size) Some(ls) else None
+    }
+    q match {
+      case BoolQ(must, should, mustNot) =>
+        for (m <- termLeaves(must); s <- termLeaves(should); n <- termLeaves(mustNot))
+          yield QueryEngine.Request(QueryEngine.Bool(m, s), k, mustNot = n.map(_._1))
+      case leaf => termLeaf(leaf).map(l => QueryEngine.Request(QueryEngine.Bool(Nil, Seq(l)), k))
+    }
+  }
 
   /** MaxScoreQParser rewrite (reference solr/core/src/java/org/apache/solr/
     * search/MaxScoreQParser.java:34-78): parse exactly like the classic
@@ -73,7 +101,7 @@ object Searcher {
 
   /** Parse + rank under the MaxScore rewrite (Solr `{!maxscore tie=...}`). */
   def searchMaxScore(idx: OpenIndex, query: String, k: Int, tie: Float = 0f): DataFrame =
-    rank(idx, eval(idx, maxScoreRewrite(QueryParser.parse(query), tie)), k)
+    rank(idx, maxScoreRewrite(QueryParser.parse(query), tie), k)()
 
   /** GraphTermsQParser (reference solr/core/src/java/org/apache/solr/search/
     * GraphTermsQParserPlugin.java:73-155): constant-score disjunction over
@@ -93,14 +121,14 @@ object Searcher {
     * rank like [[search]]. Span-rooted documents are rejected here — they
     * evaluate over a text column via [[graft.operators.Spans]]. */
   def searchXml(idx: OpenIndex, xml: String, k: Int): DataFrame =
-    rank(idx, eval(idx, XmlParser.parseScored(xml)), k)
+    rank(idx, XmlParser.parseScored(xml), k)()
 
   /** [[SimpleQueryParser]] dialect search — the lenient end-user surface
     * (never throws on malformed syntax). */
   def searchSimple(idx: OpenIndex, query: String, k: Int,
                    flags: Int = SimpleQueryParser.AllOperators,
                    defaultOperator: String = "should"): DataFrame =
-    rank(idx, eval(idx, SimpleQueryParser.parse(query, flags, defaultOperator)), k)
+    rank(idx, SimpleQueryParser.parse(query, flags, defaultOperator), k)()
 
   /**
    * Multi-field search (Lucene per-field inverted indexes): `field:`-scoped
@@ -120,24 +148,30 @@ object Searcher {
                        ast: Query, k: Int): DataFrame = {
     val default = idxs.getOrElse(defaultField,
       throw new IllegalArgumentException(s"no index for default field '$defaultField'"))
-    rank(default, compose(default.spark, ast) {
+    rank(default, ast, k) {
       case FieldQ(f, inner) =>
         idxs.get(f).map(eval(_, inner)).getOrElse(QueryEngine.noHits(default.spark))
       case q => leaf(default, q)
-    }, k)
+    }
   }
 
   /** All matching docs of the parsed query: (docId LONG, score FLOAT). */
-  def eval(idx: OpenIndex, q: Query): DataFrame = compose(idx.spark, q)(leaf(idx, _))
+  def eval(idx: OpenIndex, q: Query): DataFrame = compose(idx, q)(leaf(idx, _))
 
-  /** The one AST walk: Boost, Bool, DisMax and Const compose the frames
-    * of the leaves that `leaf` resolves. */
-  private def compose(spark: SparkSession, q: Query)(leaf: Query => DataFrame): DataFrame = {
-    def ev(q: Query): DataFrame = q match {
+  /** The one AST walk: term-leaf booleans run as one kernel request over
+    * `idx` (every match, unranked; tombstones and the limit apply once, at
+    * the top); Boost, Bool, DisMax and Const compose the frames of the
+    * other leaves, which `leaf` resolves. */
+  private def compose(idx: OpenIndex, q: Query)(leaf: Query => DataFrame): DataFrame = {
+    def ev(q: Query): DataFrame = termRequest(q, QueryEngine.All) match {
+      case Some(req) => scoreAll(idx, req)
+      case None => composite(q)
+    }
+    def composite(q: Query): DataFrame = q match {
       // boost multiplies the child's float scores (classic setBoost)
       case BoostQ(b, inner) => ev(inner)
         .select(col("docId"), (col("score") * lit(b)).cast("float").as("score"))
-      case BoolQ(must, should, mustNot) => evalBool(spark, ev, must, should, mustNot)
+      case BoolQ(must, should, mustNot) => evalBool(idx.spark, ev, must, should, mustNot)
       // DisjunctionMaxQuery (reference search/DisjunctionMaxQuery.java)
       case DisMaxQ(clauses, tie) =>
         require(clauses.nonEmpty, "DisMaxQ needs >= 1 clause")
@@ -149,14 +183,14 @@ object Searcher {
     ev(q)
   }
 
-  /** A leaf over one index; every match is scored, and tombstones and the
-    * limit apply once, at the top. */
+  /** A leaf over one index (a term leaf is a kernel request of
+    * [[compose]]); every match is scored, and tombstones and the limit
+    * apply once, at the top. */
   private def leaf(idx: OpenIndex, q: Query): DataFrame = q match {
     // single-index search: a field prefix can only mean the one field
     case FieldQ(_, inner) => eval(idx, inner)
     case MatchAllQ =>
       idx.docstats.select(col("docId")).withColumn("score", lit(1f))
-    case TermQ(t) => scoreAll(idx, QueryEngine.Terms(Seq(t)))
     case PhraseQ(terms, 0) => phraseScores(idx, terms)
     case PhraseQ(terms, slop) => sloppyDocs(idx, terms, slop)
     case PrefixQ(p) =>
@@ -176,12 +210,11 @@ object Searcher {
   }
 
   /** Every match of a planner request over the index, unranked. */
-  private def scoreAll(idx: OpenIndex, clauses: QueryEngine.Clauses): DataFrame =
-    QueryEngine.run(idx.spark, idx.blocks, idx.termstats, idx.stats,
-      QueryEngine.Request(clauses, QueryEngine.All), dfCache = Some(idx.dfCache))
+  private def scoreAll(idx: OpenIndex, req: QueryEngine.Request): DataFrame =
+    QueryEngine.run(idx.spark, idx.blocks, idx.termstats, idx.stats, req, dfCache = Some(idx.dfCache))
 
   private def constScore(idx: OpenIndex, termPred: org.apache.spark.sql.Column): DataFrame =
-    scoreAll(idx, QueryEngine.Expanded(termPred))
+    scoreAll(idx, QueryEngine.Request(QueryEngine.Expanded(termPred), QueryEngine.All))
 
   /** Exact phrase, BM25-scored with tf = phrase freq; weight = (float) sum
     * of distinct member-term idfs (double accumulation in first-occurrence

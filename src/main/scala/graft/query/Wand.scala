@@ -5,16 +5,22 @@ import graft.index.{BlockRow, IndexBuilder}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
+import org.roaringbitmap.longlong.Roaring64Bitmap
 
 /**
  * The one term-scoring kernel, with block-max WAND skipping (reference
  * search/WANDScorer.java:45, MaxScoreCache.java:61-105, ImpactsDISI.java:
  * 75-108) — the one hand-fused physical operator of the engine (SURVEY.md
- * §4.3). It scores every `Terms`, `Blended`, `Infos` and `WithHot` request:
+ * §4.3). It scores every `Terms`, `Bool`, `Blended`, `Infos` and `WithHot`
+ * request, and [[Searcher]] lowers term-leaf booleans onto it.
  *
- *  - One query term streams each input partition a block at a time, with
- *    no shuffle. Several terms need ALL query-term postings of a doc range
- *    in one run: the blocks are keyed to doc-range buckets of the grid
+ * A request is a list of slots ([[QueryEngine.TermInfo]]): a term, its
+ * occurrence (must, should or mustNot), its boost and its scorer, in the
+ * combine order (`ti`). Two clauses on one term are two slots.
+ *
+ *  - One slot streams each input partition a block at a time, with no
+ *    shuffle. Several slots need ALL their postings of a doc range in one
+ *    run: the blocks are keyed to doc-range buckets of the grid
  *    (`bucket = minDoc / bucketDocs`; a block spanning a boundary is
  *    replicated into both and masked inside the kernel), so each bucket
  *    holds ALL query-term postings for its doc range — the Spark analogue
@@ -25,23 +31,36 @@ import org.apache.spark.util.LongAccumulator
  *    one segment of a budgeted search, `WithHot`'s union, time-bucket or
  *    search-job blocks) is shuffled on the bucket per query. Block bounds
  *    are computed map-side; only what the kernel reads shuffles.
- *  - Per run (a bucket, or a stretch of one term's ascending blocks):
- *    frontier = the lowest unprocessed block per term, pivot = min
- *    frontier maxDoc. With skipping on, a window whose Σ frontier block
- *    bounds cannot beat the k-th best score θ is skipped WITHOUT decoding;
- *    otherwise its blocks are decoded and docs ≤ pivot scored doc-at-a-time.
+ *  - Per run (a bucket, or a stretch of one slot's ascending blocks):
+ *    frontier = the lowest unprocessed block per scoring (must or should)
+ *    slot, pivot = min frontier maxDoc. A bucket, or a window, below some
+ *    must slot's frontier block has no hit and is skipped WITHOUT decoding
+ *    (block-range intersection; Lucene's ConjunctionDISI). With skipping
+ *    on, a window whose Σ frontier block bounds cannot beat the k-th best
+ *    score θ is skipped undecoded too; otherwise its blocks are decoded
+ *    and docs ≤ pivot scored doc-at-a-time. mustNot slots sit in the same
+ *    buckets but add nothing to a pivot or a bound: a mustNot block is
+ *    decoded only when a candidate doc falls inside it (ReqExclScorer).
+ *  - Accept test: a candidate that is tombstoned, or not after the
+ *    searchAfter cursor, never reaches the queue (Lucene's acceptDocs and
+ *    PagingTopScoreDocCollector), so θ comes only from accepted docs.
  *  - Output: one [[HitQueue]] per task, fed by all its runs, merged by the
  *    driver-side orderBy(score DESC, docId ASC).limit(k)
- *    (TakeOrderedAndProject); or every matching doc for `k` =
+ *    (TakeOrderedAndProject); or every accepted doc for `k` =
  *    [[QueryEngine.All]]. θ is that queue's k-th best score: a doc outside
  *    its task's top k is outside the global top k, so ranks stay identical.
  *
- * Combines: per-term float scores summed in query-term order as double,
- * cast float (DisjunctionSumScorer), or DisjunctionMaxScorer's ordered
- * running max for a tie-breaker; `requireAll` keeps docs matching every
- * term (And). Skipping is the kernel's own choice ([[topK]]).
+ * Combines: a doc matches with every must slot, at least one scoring slot
+ * and no mustNot slot. Each part is the slot's float score times its float
+ * boost. The must parts are summed in slot order as double from -0.0 (the
+ * additive identity, so a lone part keeps its bits), the should parts
+ * likewise from 0.0; the two sums are added and cast float (BooleanQuery
+ * over DisjunctionSumScorer). With a tie-breaker, DisjunctionMaxScorer's
+ * ordered running max replaces the sums. Skipping is the kernel's own
+ * choice ([[topK]]).
  */
 object Wand {
+  import QueryEngine.{Must, MustNot, TermInfo}
 
   /** The doc-range grid's width in docIds: bucket `b` holds docIds
     * [b * BucketDocs, (b + 1) * BucketDocs). */
@@ -50,9 +69,10 @@ object Wand {
   /** One scored hit emitted by the kernel. */
   final case class Hit(docId: Long, score: Float)
 
-  /** A postings block as the kernel reads it: `slot` is the term's position
-    * in the ti-ordered query and `bound` the block's score bound from its
-    * competitive impacts (the impact arrays stay map-side). */
+  /** A postings block as the kernel reads it: `slot` is its slot's position
+    * in the ti-ordered request and `bound` the block's score bound from its
+    * competitive impacts (the impact arrays stay map-side; 0 for a mustNot
+    * slot). */
   final case class KernelBlock(slot: Int, minDoc: Long, maxDoc: Long, n: Int, wDocs: Int, wFreqs: Int,
                                docGaps: Array[Byte], freqs: Array[Byte], norms: Array[Byte], bound: Float)
 
@@ -73,12 +93,16 @@ object Wand {
     def hits: Array[Hit] = heap.clone().dequeueAll.reverse.toArray
   }
 
-  /** One term's blocks in one kernel run: the longest prefix of `blocks`
+  /** One slot's blocks in one kernel run: the longest prefix of `blocks`
     * that ascends in disjoint docId ranges (a partition over several files,
     * or of hash-packed blocks, is several runs), read one at a time and
     * decoded lazily. */
-  private final class TermBlocks(val scorer: SimScorer, blocks: BufferedIterator[KernelBlock],
+  private final class TermBlocks(slot: TermInfo, blocks: BufferedIterator[KernelBlock],
                                  decodeCounter: Option[LongAccumulator]) {
+    val scorer: SimScorer = slot.scorer
+    val boost: Float = slot.boost
+    val must: Boolean = slot.occur == Must
+    val mustNot: Boolean = slot.occur == MustNot
     /** The frontier block; null once exhausted. */
     var cur: KernelBlock = null
     // decoded state for the current block
@@ -99,27 +123,46 @@ object Wand {
       cur = if (blocks.hasNext && (cur == null || blocks.head.minDoc > cur.maxDoc)) blocks.next() else null
       docs = null; tfs = null; pos = 0
     }
+    /** Whether these postings hold doc `d`, asked for ascending `d`: blocks
+      * ending before `d` are passed undecoded, the one covering it decoded. */
+    def holds(d: Long): Boolean = {
+      while (cur != null && cur.maxDoc < d) advance()
+      if (cur == null || cur.minDoc > d) false
+      else {
+        decodeCur()
+        while (pos < docs.length && docs(pos) < d) pos += 1
+        pos < docs.length && docs(pos) == d
+      }
+    }
   }
 
-  /** A block with its score bound: the best score over its competitive
-    * impacts, an upper bound of every doc in it for an impact-bounded scorer. */
-  private def kernelBlock(b: BlockRow, slot: Int, scorer: SimScorer): KernelBlock =
+  /** A block of slot `slot` with its score bound: the best part over its
+    * competitive impacts (the float score times the slot's boost), an
+    * upper bound of every doc in it for an impact-bounded scorer and a
+    * boost >= 0. A mustNot slot is never scored: bound 0. */
+  private def kernelBlock(b: BlockRow, slot: Int, info: TermInfo): KernelBlock =
     KernelBlock(slot, b.minDoc, b.maxDoc, b.n, b.wDocs, b.wFreqs, b.docGaps, b.freqs, b.norms,
-      b.impactFreqs.indices.map(i => scorer.score(b.impactFreqs(i).toFloat, b.impactNorms(i)))
+      if (info.occur == MustNot) 0f
+      else b.impactFreqs.indices.map(i => info.scorer.score(b.impactFreqs(i).toFloat, b.impactNorms(i)) * info.boost)
         .foldLeft(0f)(math.max))
 
-  /** One kernel run: the matching docs of one bucket (or one ascending
-    * stretch of a term's blocks) in ascending docId order.
+  /** One kernel run: the accepted-before-test hits of one bucket (or one
+    * ascending stretch of a slot's blocks) in ascending docId order.
     * `lo`/`hi` mask docs outside a bucket (blocks replicated across a
     * boundary must not double-count). */
-  private final class Kernel(terms: Array[TermBlocks], lo: Long, hi: Long,
-                             requireAll: Boolean, tieBreaker: Option[Float]) extends Iterator[Hit] {
+  private final class Kernel(slots: Array[TermBlocks], lo: Long, hi: Long,
+                             tieBreaker: Option[Float]) extends Iterator[Hit] {
     /** Lucene's setMinCompetitiveScore: a window whose summed block bounds
       * fall below it is skipped undecoded. */
     var minCompetitive: Double = Double.NegativeInfinity
+    private val scoring = slots.filterNot(_.mustNot)
+    private val musts = scoring.filter(_.must)
+    private val excluded = slots.filter(_.mustNot)
     /** No hit of the run has a lower docId. */
-    val start: Long = terms.iterator.filterNot(_.exhausted).map(_.cur.minDoc).foldLeft(hi)(math.min) max lo
-    private val nTerms = terms.length
+    val start: Long = scoring.iterator.filterNot(_.exhausted).map(_.cur.minDoc).foldLeft(hi)(math.min) max lo
+    private val nScoring = scoring.length
+    private val nMust = musts.length
+    private val nShould = nScoring - nMust
     private val disMax = tieBreaker.isDefined
     private val tie = tieBreaker.getOrElse(0f).toDouble
     private var open = false
@@ -130,7 +173,7 @@ object Wand {
       while (pending == null && (open || openWindow())) {
         var d = Long.MaxValue
         var t = 0
-        while (t < nTerms) { d = math.min(d, terms(t).doc); t += 1 }
+        while (t < nScoring) { d = math.min(d, scoring(t).doc); t += 1 }
         if (d > pivot) closeWindow() else pending = scoreDoc(d)
       }
       pending != null
@@ -138,21 +181,27 @@ object Wand {
 
     def next(): Hit = { hasNext; val h = pending; pending = null; h }
 
-    /** Open the next window whose bound is competitive and decode its
-      * covering blocks; false once every term is exhausted. */
+    /** Open the next window that can hold a competitive hit and decode its
+      * covering blocks; false once no doc is left that can match. */
     private def openWindow(): Boolean = {
-      while (terms.exists(!_.exhausted)) {
-        val live = terms.filterNot(_.exhausted)
+      while (!musts.exists(_.exhausted) && scoring.exists(!_.exhausted)) {
+        val live = scoring.filterNot(_.exhausted)
         pivot = live.iterator.map(_.cur.maxDoc).min
-        val covering = live.filter(_.cur.minDoc <= pivot)
-        val boundSum = covering.foldLeft(0.0)(_ + _.cur.bound)
-        // skip: no doc <= pivot can beat theta; advance every frontier block
-        // that ends at or before the pivot — never decoded
-        if (boundSum < minCompetitive) live.filter(_.cur.maxDoc <= pivot).foreach(_.advance())
+        // a doc below some must slot's frontier block lacks that slot:
+        // every block ending before the highest such block is passed undecoded
+        val need = musts.iterator.map(_.cur.minDoc).foldLeft(Long.MinValue)(math.max)
+        if (need > pivot) live.filter(_.cur.maxDoc < need).foreach(_.advance())
         else {
-          covering.foreach(_.decodeCur())
-          open = true
-          return true
+          val covering = live.filter(_.cur.minDoc <= pivot)
+          val boundSum = covering.foldLeft(0.0)(_ + _.cur.bound)
+          // skip: no doc <= pivot can beat theta; advance every frontier
+          // block that ends at or before the pivot — never decoded
+          if (boundSum < minCompetitive) live.filter(_.cur.maxDoc <= pivot).foreach(_.advance())
+          else {
+            covering.foreach(_.decodeCur())
+            open = true
+            return true
+          }
         }
       }
       false
@@ -160,45 +209,58 @@ object Wand {
 
     /** Advance the frontier blocks the window consumed. */
     private def closeWindow(): Unit = {
-      terms.foreach { tb =>
+      scoring.foreach { tb =>
         if (!tb.exhausted && ((tb.docs != null && tb.pos >= tb.docs.length) || tb.cur.maxDoc <= pivot))
           tb.advance()
       }
       open = false
     }
 
-    /** Score doc `d` from every term positioned on it, in query-term (ti)
-      * order: the double sum, or DisjunctionMaxScorer's running float max
-      * with the displaced max and every non-max part summed as double,
-      * (float)(max + others * tie). Null when `d` is not a hit. */
+    /** Whether some mustNot slot holds doc `d`. */
+    private def isExcluded(d: Long): Boolean = {
+      var t = 0
+      while (t < excluded.length) { if (excluded(t).holds(d)) return true; t += 1 }
+      false
+    }
+
+    /** Score doc `d` from every scoring slot positioned on it, in slot (ti)
+      * order: the must and should double sums, or DisjunctionMaxScorer's
+      * running float max with the displaced max and every non-max part
+      * summed as double, (float)(max + others * tie). Null when `d` is not
+      * a hit. Candidates ascend, as [[TermBlocks.holds]] needs. */
     private def scoreDoc(d: Long): Hit = {
-      var sum = 0.0
+      var must = -0.0
+      var should = 0.0
       var mx = 0f
       var matched = 0
       var t = 0
-      while (t < nTerms) {
-        val tb = terms(t)
+      while (t < nScoring) {
+        val tb = scoring(t)
         if (tb.doc == d) {
-          val s = tb.scorer.score(tb.tfs(tb.pos).toFloat, tb.cur.norms(tb.pos))
-          if (!disMax || s < mx) sum += s
-          else { sum += mx; mx = s }
-          matched += 1
+          val s = tb.scorer.score(tb.tfs(tb.pos).toFloat, tb.cur.norms(tb.pos)) * tb.boost
+          if (tb.must) matched += 1
+          if (disMax) { if (s < mx) should += s else { should += mx; mx = s } }
+          else if (tb.must) must += s
+          else should += s
           tb.pos += 1
         }
         t += 1
       }
-      if (d < lo || d >= hi || (requireAll && matched < nTerms)) null
-      else Hit(d, if (disMax) (mx.toDouble + sum * tie).toFloat else sum.toFloat)
+      if (d < lo || d >= hi || matched < nMust || isExcluded(d)) null
+      else Hit(d,
+        if (disMax) (mx.toDouble + should * tie).toFloat
+        else if (nShould == 0) must.toFloat
+        else (must + should).toFloat)
     }
   }
 
-  /** A term's blocks in one run must have disjoint docId ranges.
+  /** A slot's blocks in one run must have disjoint docId ranges.
     * Hash-packed segments interleave a term's docs across partitions, so
     * their blocks overlap: re-pack those postings into disjoint blocks
     * (impacts recomputed by the codec, so the bounds stay exact). A run
-    * holds <= bucketDocs postings per term (one bucket), so the merge is
+    * holds <= bucketDocs postings per slot (one bucket), so the merge is
     * small and local. */
-  private def normalizeBlocks(sorted: Array[KernelBlock], scorer: SimScorer): Array[KernelBlock] = {
+  private def normalizeBlocks(sorted: Array[KernelBlock], info: TermInfo): Array[KernelBlock] = {
     if (sorted.indices.tail.forall(i => sorted(i - 1).maxDoc < sorted(i).minDoc)) return sorted
     // each (term, docId) lives in exactly one source partition, so the
     // merged (doc, tf, norm) triples have no duplicates
@@ -207,14 +269,14 @@ object Wand {
       d.indices.map(j => (d(j), f(j), b.norms(j)))
     }.sortBy(_._1)
     PostingsCodec.encodeTerm("", postings.map(_._1), postings.map(_._2), postings.map(_._3))
-      .map(b => kernelBlock(IndexBuilder.blockRow(b), sorted(0).slot, scorer)).toArray
+      .map(b => kernelBlock(IndexBuilder.blockRow(b), sorted(0).slot, info)).toArray
   }
 
   /** The blocks of docIds [`docLo`, `docHi`) as one doc-range slice, when
     * they lie in one slice of the grid (`bucketDocs` wide): one partition,
     * coalesced narrowly (no shuffle, no cut), sorted by (term, minDoc) so
     * the in-memory batch stats prune by term. Its plan reports one
-    * partition, so [[topK]] scores several terms over it in place. None
+    * partition, so [[topK]] scores several slots over it in place. None
     * when the docIds span more than one grid slice: one task per query
     * would then decode more than one bucket's postings per term. (Any
     * other one-partition input, e.g. `warm(1)` of a multi-slice index,
@@ -226,27 +288,36 @@ object Wand {
     if (docLo / bucketDocs != docHi / bucketDocs) None
     else Some(blocks.coalesce(1).sortWithinPartitions("term", "minDoc"))
 
-  /** Score the query terms' blocks: (docId, score) ordered (score DESC,
-    * docId ASC), at most `k` rows — or every matching doc, unordered, for
-    * `k` = [[QueryEngine.All]]. Block-max skipping is on whenever it is
-    * sound, as with Lucene's TOP_SCORES: for a bounded `k` under the summed
-    * combine (block bounds are no bound of a DisjunctionMax score) over
-    * [[SimScorer.impactBounded]] scorers. Several terms are keyed to
-    * `bucketDocs`-wide buckets, shuffled on the bucket unless the plan of
-    * `blocks` reports one partition. */
-  def topK(spark: SparkSession, blocks: Dataset[BlockRow], infos: Seq[QueryEngine.TermInfo],
-           k: Int, requireAll: Boolean = false, tieBreaker: Option[Float] = None,
+  /** Score the slots' blocks: (docId, score) ordered (score DESC, docId
+    * ASC), at most `k` rows — or every matching doc, unordered, for `k` =
+    * [[QueryEngine.All]]. A doc in `tombstones`, or not after the `after`
+    * cursor (score, docId), is not accepted. Block-max skipping is on
+    * whenever it is sound, as with Lucene's TOP_SCORES: for a bounded `k`
+    * under the summed combine (block bounds are no bound of a
+    * DisjunctionMax score) over [[SimScorer.impactBounded]] scorers with
+    * finite boosts >= 0. Several slots are keyed to `bucketDocs`-wide
+    * buckets, shuffled on the bucket unless the plan of `blocks` reports
+    * one partition. */
+  def topK(spark: SparkSession, blocks: Dataset[BlockRow], infos: Seq[TermInfo],
+           k: Int, tieBreaker: Option[Float] = None,
+           tombstones: Option[Roaring64Bitmap] = None, after: Option[(Float, Long)] = None,
            bucketDocs: Long = BucketDocs,
            decodeCounter: Option[LongAccumulator] = None): DataFrame = {
     import spark.implicits._
-    if (infos.isEmpty || k <= 0) return QueryEngine.noHits(spark)
-    val sorted = infos.sortBy(_.ti)
-    val slotOf = sorted.map(_.term).zipWithIndex.toMap
-    val scorers = sorted.map(_.scorer).toArray
-    val skip = k != QueryEngine.All && tieBreaker.isEmpty && scorers.forall(_.impactBounded)
+    val slots = infos.sortBy(_.ti).toArray
+    val scoring = slots.indices.filter(slots(_).occur != MustNot).toArray
+    if (scoring.isEmpty || k <= 0) return QueryEngine.noHits(spark)
+    val musts = scoring.filter(slots(_).occur == Must)
+    val slotsOf = slots.indices.groupBy(slots(_).term).map { case (t, is) => t -> is.toArray }
+    val skip = k != QueryEngine.All && tieBreaker.isEmpty && scoring.forall { i =>
+      slots(i).scorer.impactBounded && slots(i).boost >= 0f && !slots(i).boost.isInfinite
+    }
+    // Lucene's acceptDocs and the paging collector's cursor test
+    val accept = (h: Hit) => !tombstones.exists(_.contains(h.docId)) &&
+      after.forall { case (score, docId) => h.score < score || (h.score == score && h.docId > docId) }
     // a task's runs, in turn, into one queue (or straight out for k = All)
     def collect(runs: Iterator[Kernel]): Iterator[Hit] = {
-      if (k == QueryEngine.All) return runs.flatten
+      if (k == QueryEngine.All) return runs.flatten.filter(accept)
       val q = new HitQueue(k)
       var top = Long.MinValue // the highest docId offered so far
       runs.foreach { kernel =>
@@ -259,36 +330,37 @@ object Wand {
         def raise(): Unit = if (skip && q.full) kernel.minCompetitive =
           if (tieLoses) Math.nextUp(q.bottom.toDouble) else Math.nextDown(q.bottom).toDouble
         raise()
-        kernel.foreach { h => q.offer(h); top = math.max(top, h.docId); raise() }
+        kernel.foreach { h => if (accept(h)) { q.offer(h); top = math.max(top, h.docId); raise() } }
       }
       q.hits.iterator
     }
     // (function values, not local defs: a task closure must not capture
     // this object)
-    val toKernel = (b: BlockRow) => kernelBlock(b, slotOf(b.term), scorers(slotOf(b.term)))
-    // one run over ALL query-term blocks of the doc range [lo, hi),
-    // decoded (or re-packed) on its turn
+    val toKernel = (b: BlockRow, slot: Int) => kernelBlock(b, slot, slots(slot))
+    // one run over ALL slots' blocks of the doc range [lo, hi), decoded (or
+    // re-packed) on its turn; a bucket without a block of some must slot,
+    // or of any scoring slot, holds no hit
     val run = (rows: Array[KernelBlock], lo: Long, hi: Long) => {
       val bySlot = rows.groupBy(_.slot)
-      if (requireAll && bySlot.size < scorers.length) None
+      if (musts.exists(!bySlot.contains(_)) || !scoring.exists(bySlot.contains)) None
       else Some(new Kernel(bySlot.toArray.sortBy(_._1).map { case (slot, bs) =>
-        new TermBlocks(scorers(slot),
-          normalizeBlocks(bs.sortBy(b => (b.minDoc, b.maxDoc)), scorers(slot)).iterator.buffered, decodeCounter)
-      }, lo, hi, requireAll, tieBreaker))
+        new TermBlocks(slots(slot),
+          normalizeBlocks(bs.sortBy(b => (b.minDoc, b.maxDoc)), slots(slot)).iterator.buffered, decodeCounter)
+      }, lo, hi, tieBreaker))
     }
-    val termBlocks = blocks.filter($"term".isin(sorted.map(_.term): _*))
+    val termBlocks = blocks.filter($"term".isin(slots.map(_.term).distinct: _*))
     val hits =
-      if (scorers.length == 1)
+      if (slots.length == 1)
         // streamed: one block at a time
         termBlocks.mapPartitions { it =>
-          val src = it.map(kernelBlock(_, 0, scorers(0))).buffered
+          val src = it.map(toKernel(_, 0)).buffered
           collect(Iterator.continually(src).takeWhile(_.hasNext).map(s =>
-            new Kernel(Array(new TermBlocks(scorers(0), s, decodeCounter)), Long.MinValue, Long.MaxValue,
-              requireAll, tieBreaker)))
+            new Kernel(Array(new TermBlocks(slots(0), s, decodeCounter)), Long.MinValue, Long.MaxValue,
+              tieBreaker)))
         }
       else {
-        val keyed = (b: BlockRow) => {
-          val kb = toKernel(b)
+        val keyed = (b: BlockRow) => slotsOf(b.term).iterator.flatMap { slot =>
+          val kb = toKernel(b, slot)
           (b.minDoc / bucketDocs to b.maxDoc / bucketDocs).iterator.map(bucket => (bucket, kb))
         }
         // a task holds the compressed blocks of its buckets and decodes

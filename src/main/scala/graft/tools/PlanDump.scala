@@ -80,16 +80,15 @@ object PlanDump {
       IndexStore.OpenIndex(spark, dir).warm(2).topK(Seq("public", "import"), 10))
 
     section("Parsed boolean `+public import -handler3` (Searcher)",
-      """Each term clause is one kernel request over every doc (a
-        |streamed one-term scan of the unwarmed postings); the clauses'
-        |(docId, clause, score) rows union into ONE per-doc grouping —
-        |the one exchange, shared with DisMax — and one filter keeps a
-        |doc with every must part and no mustNot part, then sums the
-        |must and the should parts as double in clause order and casts
-        |float. No join: no broadcast, no anti-join per mustNot clause.
-        |Over the warmed one-slice cache the union keeps the one
-        |partition and the grouping needs no exchange (one job, one
-        |stage; PlanAuditSpec).""".stripMargin,
+      """A term-leaf boolean is ONE kernel request with a must, a
+        |should and a mustNot slot: the three terms' blocks are keyed to
+        |doc-range buckets, and the bucket shuffle of the unwarmed
+        |postings is the one exchange. The kernel skips a window with no
+        |`public` block undecoded, decodes a `handler3` block only when a
+        |candidate falls inside it, and tests tombstones before its top-k
+        |queue. No per-doc grouping, no join. Over the warmed one-slice
+        |cache it is the Or query's plan: no exchange, one job, one stage
+        |(PlanAuditSpec).""".stripMargin,
       idx.search("+public import -handler3", 10))
 
     section("Field-sorted top-k over doc values",

@@ -78,7 +78,7 @@ class AddIndexesSpec extends SparkSpec {
     assert(split.stats.docCount == f("docCount"))
     assert(split.stats.docCount < full.stats.docCount)
     // only in-range tombstones carried over
-    val dead = split.deletes.get.collect().map(_.getLong(0)).toSet
+    val dead = split.tombstones.get.toArray.toSet
     assert(dead.forall(d => d >= lo && d <= hi) && dead.nonEmpty)
     assert(!dead.contains(80L))
     // split scores with its own (smaller) collection stats: a term's df
@@ -103,7 +103,7 @@ class AddIndexesSpec extends SparkSpec {
     IndexStore.delete(spark, dirB, Seq(3L))
     IndexStore.addIndexes(spark, dirA, dirB)
     val merged = IndexStore.OpenIndex(spark, dirA)
-    assert(merged.deletes.get.collect().map(_.getLong(0)).toSet == Set(63L))
+    assert(merged.tombstones.get.toArray.toSet == Set(63L))
     val ids = merged.topK(Seq("public"), 1000).collect().map(_.getLong(0)).toSet
     assert(!ids.contains(63L))
 

@@ -155,7 +155,7 @@ class CommitPathsSpec extends SparkSpec {
     IndexStore.delete(spark, src, Seq(10L, 30L, 70L))
     IndexStore.splitSegments(spark, src, dst, Seq(0))
     assertClean(dst)
-    val dead = IndexStore.OpenIndex(spark, dst).deletes.get.collect().map(_.getLong(0)).toSet
+    val dead = IndexStore.OpenIndex(spark, dst).tombstones.get.toArray.toSet
     assert(dead == Set(10L))
     graft.util.Fs.rmTree(src); graft.util.Fs.rmTree(dst)
   }

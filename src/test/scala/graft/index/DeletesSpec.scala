@@ -58,7 +58,7 @@ class DeletesSpec extends SparkSpec {
     assert(j.filter($"df" =!= $"df2" || $"ttf" =!= $"ttf2").count() === 0)
     assert(compacted.termstats.count() === directTs.count())
     // no tombstones carried to the compacted index
-    assert(compacted.deletes.isEmpty)
+    assert(compacted.tombstones.isEmpty)
     graft.util.Fs.rmTree(freshDir)
   }
 

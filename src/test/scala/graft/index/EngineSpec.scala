@@ -81,7 +81,7 @@ class EngineSpec extends SparkSpec {
     // small bucket size forces boundary-spanning replication + many buckets
     val terms = Seq("public", "import", "return")
     val infos = QueryEngine.plan(termstats, stats, terms)
-    val tiny = graft.query.Wand.topK(spark, blocks, infos, 25, requireAll = false, bucketDocs = 64)
+    val tiny = graft.query.Wand.topK(spark, blocks, infos, 25, bucketDocs = 64)
       .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
     assert(tiny === allCutToK(blocks, termstats, terms, 25, QueryEngine.Or))
     assert(tiny === OracleScorer.topK(corpusLocal, terms, 25))
@@ -244,6 +244,28 @@ class EngineSpec extends SparkSpec {
     val page3 = QueryEngine.run(spark, blocks, termstats, stats, Request(Terms(terms), 10, after = Some((s2, d2))))
       .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
     assert(page1 ++ page2 ++ page3 === full)
+  }
+
+  test("searchAfter paging over tombstones: pages concatenate to the k = All cut") {
+    val dead = new org.roaringbitmap.longlong.Roaring64Bitmap
+    // tombstone some of the best docs of the Or query, so every page moves
+    val top = engineTopK(Seq("public", "import", "class"), 40)
+    Seq(0, 3, 4, 11, 25).foreach(i => dead.addLong(top(i)._1))
+    val cases = Seq((Seq("public", "import", "class"), QueryEngine.Or, Nil),
+      (Seq("public", "import", "class"), QueryEngine.Or, Seq("handler3")),
+      (Seq("import", "public"), QueryEngine.And, Nil))
+    for ((terms, mode, neg) <- cases) {
+      def run(k: Int, after: Option[(Float, Long)]) =
+        QueryEngine.run(spark, blocks, termstats, stats, Request(Terms(terms), k, mode, neg, after = after),
+          Some(dead)).collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
+      val all = run(QueryEngine.All, None).sortBy { case (id, s) => (-s, id) }
+      // tombstones leave the stats and the surviving scores as they are
+      assert(all === OracleScorer.topK(corpusLocal, terms, QueryEngine.All, mode, neg).filterNot(h => dead.contains(h._1)))
+      val pages = Iterator.iterate(run(10, None))(p => if (p.isEmpty) p else run(10, Some((p.last._2, p.last._1))))
+        .take(4).toSeq
+      assert(pages.flatten === all.take(pages.flatten.size), s"terms=$terms mode=$mode neg=$neg")
+      assert(pages.flatten.size === math.min(40, all.size), s"terms=$terms mode=$mode neg=$neg")
+    }
   }
 
   test("explain: per-term components sum to the exact topK score") {

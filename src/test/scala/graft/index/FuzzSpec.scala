@@ -2,6 +2,7 @@ package graft.index
 
 import graft.SparkSpec
 import graft.query.{OracleScorer, QueryEngine, Wand}
+import java.nio.file.Files
 
 /** Randomized engine-vs-oracle equivalence (the RandomPostingsTester /
   * CheckHits analogue): random corpora with adversarial shapes — empty
@@ -62,6 +63,68 @@ class FuzzSpec extends SparkSpec {
       }
       blocks.unpersist(); termstats.unpersist()
     }
+  }
+
+  test("random flat term booleans: one kernel request equals the oracle and evalBool, bit for bit") {
+    val rnd = new scala.util.Random(4242)
+    val n = 150
+    val vocab = (0 until 10).map(i => s"w$i")
+    val contents = (0 until n).map { i =>
+      val len = if (rnd.nextInt(4) == 0) 1 else 1 + rnd.nextInt(40)
+      "everydoc " + Seq.fill(len)(vocab(rnd.nextInt(vocab.size))).mkString(" ") +
+        (if (i == 7) " hugetf" * 200 else "")
+    }
+    val corpus = contents.zipWithIndex.map { case (c, i) => OracleScorer.Doc(i.toLong, c) }
+    val dir = Files.createTempDirectory("graft-fuzz-bool").toString
+    IndexStore.build(spark, contents.zipWithIndex.map { case (c, i) => (i.toLong, c) }.toDF("docId", "content"),
+      dir, numSegments = 2, shufflePartitions = 3)
+    def term(): String = rnd.nextInt(8) match {
+      case 0 => "absentterm"
+      case 1 => "everydoc"
+      case 2 => "hugetf"
+      case _ => vocab(rnd.nextInt(vocab.size))
+    }
+    def boost(): Float = Seq(1f, 1f, 2f, 0.5f)(rnd.nextInt(4))
+    // (must, should, mustNot, boosts of must ++ should): a mustNot-only
+    // query, a term in two clauses, then random clause lists
+    val queries = Seq((Nil, Nil, Seq(term()), Nil), (Seq("w1"), Seq("w1", "w2"), Seq("w3"), Seq(1f, 2f, 1f))) ++
+      (0 until 6).map { _ =>
+        val must = Seq.fill(rnd.nextInt(3))(term())
+        val should = Seq.fill(if (must.isEmpty) 1 + rnd.nextInt(3) else rnd.nextInt(3))(term())
+        (must, should, Seq.fill(rnd.nextInt(3))(term()), Seq.fill(must.size + should.size)(boost()))
+      }
+    // the query string; `field` wraps each leaf in a field prefix, which
+    // the lowering does not match, so the clauses run through evalBool
+    def text(must: Seq[String], should: Seq[String], mustNot: Seq[String], boosts: Seq[Float],
+             field: Boolean): String = {
+      def leaf(t: String, b: Float) = (if (field) s"content:$t" else t) + (if (b == 1f) "" else s"^$b")
+      (must.zip(boosts).map { case (t, b) => "+" + leaf(t, b) } ++
+        should.zip(boosts.drop(must.size)).map { case (t, b) => leaf(t, b) } ++
+        mustNot.map(t => "-" + leaf(t, 1f))).mkString(" ")
+    }
+    def bits(hs: Seq[(Long, Float)]) = hs.map { case (d, s) => (d, java.lang.Float.floatToRawIntBits(s)) }
+    def check(dead: Set[Long]): Unit = for (warm <- Seq(false, true)) {
+      val idx = IndexStore.OpenIndex(spark, dir)
+      if (warm) idx.warm(2)
+      for ((must, should, mustNot, boosts) <- queries; k <- Seq(1, 10, 100, QueryEngine.All)) {
+        // tombstones leave the stats as they are: the oracle ranks every doc
+        val want = OracleScorer.topKBool(corpus, must, should, mustNot, boosts, QueryEngine.All)
+          .filterNot(h => dead(h._1)).take(k)
+        def got(field: Boolean) = bits(idx.search(text(must, should, mustNot, boosts, field), k)
+          .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq.sortBy { case (id, s) => (-s, id) })
+        val clue = s"${text(must, should, mustNot, boosts, field = false)} k=$k warm=$warm dead=$dead"
+        assert(got(field = false) === bits(want), clue)
+        assert(got(field = true) === bits(want), clue)
+      }
+      if (warm) idx.blocks.unpersist()
+    }
+    check(Set.empty)
+    // one tombstone: the best doc of the random query with the most hits
+    val (m, sh, mn, bs) = queries.maxBy { case (m, sh, mn, bs) => OracleScorer.topKBool(corpus, m, sh, mn, bs, n).size }
+    val victim = OracleScorer.topKBool(corpus, m, sh, mn, bs, 1).head._1
+    IndexStore.delete(spark, dir, Seq(victim))
+    check(Set(victim))
+    graft.util.Fs.rmTree(dir)
   }
 
   test("random corpora: synonym and dismax scoring match their local oracles") {

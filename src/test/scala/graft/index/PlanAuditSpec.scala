@@ -51,8 +51,8 @@ class PlanAuditSpec extends SparkSpec {
     // multi-term: the kernel's doc-range bucket shuffle is the only one
     assert(exchanges(idx.topK(two, 10)) == 1, planOf(idx.topK(two, 10)))
     assert(exchanges(idx.topK(two, 10, And)) == 1, planOf(idx.topK(two, 10, And)))
-    // parsed `+a b -c`: the clauses' one per-doc grouping is the one
-    // shuffle, with no join to broadcast
+    // parsed `+a b -c`: one kernel request, so the kernel's bucket
+    // shuffle is the one shuffle, with no join to broadcast
     val parsed = idx.search("+public import -handler3", 10)
     assert(exchanges(parsed) == 1, planOf(parsed))
     assert(!planOf(parsed).contains("BroadcastExchange"), planOf(parsed))
@@ -65,12 +65,53 @@ class PlanAuditSpec extends SparkSpec {
       assert(exchanges(df()) == 0, planOf(df()))
       assert(countJobsAndStages(df().collect(): Unit) == ((1, 1)), planOf(df()))
     }
-    // the parsed boolean's leaves each keep the slice's one partition, so
-    // its per-doc grouping runs in the same single job
+    // the parsed boolean is one kernel request over the slice: the same
+    // single job
     val warmedParsed = () => warmed.search("+public import -handler3", 10)
     warmedParsed().collect(): Unit
     assert(countJobsAndStages(warmedParsed().collect(): Unit) == ((1, 1)), planOf(warmedParsed()))
     warmed.blocks.unpersist()
+  }
+
+  test("warmed top-k over an index with one tombstone: tested in the kernel, 1 job and 1 stage") {
+    import graft.query.QueryEngine.{And, Must, MustNot, NotScored, Should, TermInfo}
+    def exchanges(df: DataFrame): Int = "Exchange".r.findAllIn(planOf(df)).size
+    // 2,000 docs: one grid slice, with enough blocks per term to skip some
+    val d = Files.createTempDirectory("graft-plan-del").toString
+    val withIds = DocIds.assign(CorpusGen.corpus(spark, 2000, 4).toDF(), Seq("repo", "path", "commit"), 4)
+    IndexStore.build(spark, withIds, d, numSegments = 1, shufflePartitions = 4)
+    val two = Seq("public", "import")
+    val victim = IndexStore.OpenIndex(spark, d).topK(two, 1).collect().head.getLong(0)
+    IndexStore.delete(spark, d, Seq(victim))
+    val warmed = IndexStore.OpenIndex(spark, d).warm(2)
+    val parsed = "+public import -handler3"
+    val queries = Seq(() => warmed.topK(two, 10), () => warmed.topK(two, 10, And), () => warmed.search(parsed, 10))
+    // the first run loads the tombstone bitmap, caches the postings and
+    // fills the df memo
+    queries.foreach(q => assert(!q().collect().map(_.getLong(0)).contains(victim)))
+    for (q <- queries) {
+      assert(exchanges(q()) == 0, planOf(q()))
+      assert(countJobsAndStages(q().collect(): Unit) == ((1, 1)), planOf(q()))
+    }
+    // the parsed boolean is the Or query's plan over one more term: no
+    // per-doc grouping
+    def operators(df: DataFrame) = df.queryExecution.executedPlan.collect { case p => p.nodeName }
+    assert(!operators(warmed.search(parsed, 10)).exists(_.contains("Aggregate")), planOf(warmed.search(parsed, 10)))
+    assert(operators(warmed.search(parsed, 10)) === operators(warmed.topK(two, 10)))
+    // and the kernel still skips blocks with the tombstone and the mustNot
+    // slot in the request (checked on the same query's top 1)
+    val scorers = graft.query.QueryEngine.plan(warmed.termstats, warmed.stats, two).map(_.scorer)
+    val slots = Seq(TermInfo("public", 0, scorers(0), Must), TermInfo("import", 1, scorers(1), Should),
+      TermInfo("handler3", 2, NotScored, MustNot))
+    val ctr = spark.sparkContext.longAccumulator("decoded")
+    val top = graft.query.Wand.topK(spark, warmed.blocks, slots, 1, tombstones = warmed.tombstones,
+      decodeCounter = Some(ctr)).collect()
+    assert(top.map(r => (r.getLong(0), r.getFloat(1))).toSeq ===
+      warmed.search(parsed, 1).collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq)
+    val total = warmed.blocks.filter($"term".isin("public", "import", "handler3")).count()
+    assert(ctr.value < total, s"decoded ${ctr.value} of $total blocks")
+    warmed.blocks.unpersist()
+    graft.util.Fs.rmTree(d)
   }
 
   test("topK's ignored prune flag: same plan and job count as the plain Or query") {

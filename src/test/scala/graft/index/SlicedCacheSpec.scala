@@ -36,7 +36,7 @@ class SlicedCacheSpec extends SparkSpec {
 
   def hits(df: DataFrame): Seq[(Long, Float)] = df.collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
   def run(b: Dataset[BlockRow], req: Request): Seq[(Long, Float)] =
-    hits(QueryEngine.run(spark, b, idx.termstats, idx.stats, req, idx.deletes, Some(idx.dfCache)))
+    hits(QueryEngine.run(spark, b, idx.termstats, idx.stats, req, idx.tombstones, Some(idx.dfCache)))
   def exchanges(b: Dataset[BlockRow], req: Request): Int =
     "Exchange hashpartitioning".r.findAllIn(
       QueryEngine.run(spark, b, idx.termstats, idx.stats, req).queryExecution.executedPlan.toString).size

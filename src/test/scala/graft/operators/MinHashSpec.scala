@@ -118,4 +118,18 @@ class MinHashSpec extends SparkSpec {
     Dedup.clearCaches()
     assert(persisted === base)
   }
+
+  test("the persist memo is a bounded LRU: distinct inputs past its capacity unpersist the eldest") {
+    def persisted = spark.sparkContext.getPersistentRDDs.size
+    Dedup.clearCaches()
+    val base = persisted
+    // each input is a distinct plan, so each call persists one signature table
+    for (i <- 0 until Dedup.MemoCapacity + 4) {
+      Dedup.minHashCandidates(Dedup.minHashSignatures(docs.filter($"doc_id" =!= i.toLong), "doc_id", "text", 16),
+        "doc_id", bands = 4, rowsPerBand = 4, threshold = 0.3).count()
+      assert(persisted - base === math.min(i + 1, Dedup.MemoCapacity), s"after ${i + 1} distinct inputs")
+    }
+    Dedup.clearCaches()
+    assert(persisted === base)
+  }
 }
